@@ -20,9 +20,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from wnv_etl_lab2_spark.operators.cdf import read_change_data
+from wnv_etl_lab2_spark.sources.table_paths import file_key, manifest_path
 from wnv_etl_lab2_spark.sources.versioned import (
     _commit_dml_rewrite,
-    _norm_uri,
     _read_manifest,
     _resolve_files,
     create_table,
@@ -44,7 +44,7 @@ def _mk4(spark, path, **kw):
 
 
 def _norm_files(spark, path, version):
-    return {_norm_uri(f) for f in _resolve_files(spark, path, version)}
+    return {file_key(f) for f in _resolve_files(spark, path, version)}
 
 
 def test_delete_rewrites_only_touched_files(spark, tmp_path):
@@ -106,7 +106,9 @@ def test_dv_interaction_no_resurrection(spark, tmp_path):
     got = sorted(r.id for r in read_table(spark, path).collect())
     assert got == [i for i in range(30) if i != 5]  # id=5 stays deleted
     # the kept file's DV row survives; the doomed file's row is gone
-    dv_counts = {_norm_uri(f): n for f, n in m2.get("dv_counts", {}).items()}
+    dv_counts = {
+        file_key(manifest_path(f)): n for f, n in m2.get("dv_counts", {}).items()
+    }
     assert sum(dv_counts.values()) == 1
     live = _norm_files(spark, path, 2)
     assert all(f in live for f in dv_counts)
@@ -229,6 +231,11 @@ def test_partition_only_predicate_skips_witness_scan(spark, tmp_path, monkeypatc
     assert V._partition_predicate_files(spark, files, m, "p IS NULL") == []
     # data-column reference: falls back (returns None)
     assert V._partition_predicate_files(spark, files, m, "p = 1 AND x > 0") is None
+    # nondeterministic predicate: must see every row, falls back too
+    assert (
+        V._partition_predicate_files(spark, files, m, "p = 1 OR rand() < 0.5")
+        is None
+    )
     # end-to-end: the partition-scoped delete takes the path-decided
     # fast route (non-None from _partition_predicate_files), so
     # _find_touched_files never runs its witness scan

@@ -36,6 +36,7 @@ from wnv_etl_lab2_spark.sources.versioned import (
     rename_column,
     update_table,
 )
+from wnv_etl_lab2_spark.sources.table_paths import partition_values
 
 
 @pytest.fixture()
@@ -53,6 +54,24 @@ def _mkdf(spark, n=30):
         [(i, ["de", "fr", "es"][i % 3], float(i)) for i in range(n)],
         "id long, lang string, score double",
     )
+
+
+def _drain(spark, tbl: str, ck: str, **opts) -> list:
+    """Every row the versioned_table stream source yields, drained to
+    completion with checkpoint dir ``ck``."""
+    got = []
+    reader = spark.readStream.format("versioned_table").option("path", tbl)
+    for k, v in opts.items():
+        reader = reader.option(k, v)
+    q = (
+        reader.load()
+        .writeStream.foreachBatch(lambda df, _b: got.extend(df.collect()))
+        .option("checkpointLocation", ck)
+        .start()
+    )
+    q.processAllAvailable()
+    q.stop()
+    return got
 
 
 def test_partition_pruned_read_lists_only_matching_files(spark, tmp_path):
@@ -137,23 +156,8 @@ def test_streaming_source_fills_and_prunes_partitions(registered, tmp_path):
     )
 
     def drain(opts: dict, ck: str):
-        got = []
-        reader = spark.readStream.format("versioned_table").option("path", tbl)
-        for k, v in opts.items():
-            reader = reader.option(k, v)
-        q = (
-            reader.load()
-            .writeStream.foreachBatch(
-                lambda df, _b: got.extend(
-                    (r.id, r.lang, r.score) for r in df.collect()
-                )
-            )
-            .option("checkpointLocation", str(tmp_path / ck))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        return sorted(got)
+        rows = _drain(spark, tbl, str(tmp_path / ck), **opts)
+        return sorted((r.id, r.lang, r.score) for r in rows)
 
     # partition columns fill from the hive paths (they are not in the
     # data files), typed per the declared schema
@@ -448,3 +452,213 @@ def test_partition_scoped_optimize_sql_and_guards(spark, tmp_path):
     create_table(spark.createDataFrame([(1,)], "id long"), flat)
     with _pytest.raises(ValueError, match="partitioned table"):
         optimize_table(spark, flat, partition_filter={"id": "1"})
+
+
+# --- adversarial partition values: every reader and DML route decodes
+#     the hive path the way Spark's own partition discovery does -------
+
+_ADVERSARIAL = ["a+b", "e%f", "g/h", "x y", "q=r", "u:v", "k'l", "m#n", "c,d", "ü", None]
+_ADV_SCHEMA = "id long, p string, s double"
+
+
+def _adv_rows():
+    """Two rows per partition value: ids i and i + 100."""
+    return [
+        (i + k, v, float(i + k)) for i, v in enumerate(_ADVERSARIAL) for k in (0, 100)
+    ]
+
+
+def _adv_table(spark, path):
+    create_table(
+        spark.createDataFrame(_adv_rows(), _ADV_SCHEMA), path, partition_by=("p",)
+    )
+
+
+def _rows(df):
+    return sorted((r.id, r.p, r.s) for r in df.collect())
+
+
+def _p_in(values) -> str:
+    """A partition-only predicate matching exactly ``values``."""
+    lits = [
+        "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        for v in values
+        if v is not None
+    ]
+    cond = f"p IN ({', '.join(lits)})"
+    return f"({cond} OR p IS NULL)" if None in values else cond
+
+
+def _ids_in(values, offsets=(0, 100)) -> str:
+    """A data-column predicate matching the rows of ``values``."""
+    ids = [_ADVERSARIAL.index(v) + k for v in values for k in offsets]
+    return f"id IN ({', '.join(map(str, ids))})"
+
+
+def test_adversarial_partition_values_read_like_spark(spark, tmp_path):
+    import posixpath
+
+    tbl = str(tmp_path / "t")
+    _adv_table(spark, tbl)
+    files = _resolve_files(spark, tbl, 0)
+    # Spark's own hive partition discovery over the same files
+    base = posixpath.dirname(posixpath.dirname(files[0]))
+    spark_rows = _rows(
+        spark.read.schema(_ADV_SCHEMA).option("basePath", base).parquet(*files)
+    )
+    assert _rows(read_table(spark, tbl)) == spark_rows == sorted(
+        _adv_rows(), key=lambda r: r[0]
+    )
+    from wnv_etl_lab2_spark.sources.versioned import table_partitions
+
+    assert {r.p for r in table_partitions(spark, tbl).collect()} == set(_ADVERSARIAL)
+    for v in _ADVERSARIAL:
+        got = _rows(read_table(spark, tbl, partition_filter={"p": v}))
+        assert got == [r for r in spark_rows if r[1] == v], v
+
+
+def test_adversarial_partition_values_dml_routes_agree(spark, tmp_path):
+    import wnv_etl_lab2_spark.sources.versioned as V
+
+    part, wit = str(tmp_path / "part"), str(tmp_path / "wit")
+    _adv_table(spark, part)
+    _adv_table(spark, wit)
+    doomed, bumped = _ADVERSARIAL[::2], _ADVERSARIAL[1::2]
+    m, files = _read_manifest(spark, part, 0), _resolve_files(spark, part, 0)
+    # the partition-only predicates take the path-decided route, the
+    # data-column ones the witness scan
+    for vs in (doomed, bumped):
+        got = V._partition_predicate_files(spark, files, m, _p_in(vs))
+        assert got is not None and len(got) < len(files)
+        assert V._partition_predicate_files(spark, files, m, _ids_in(vs)) is None
+    delete_from_table(spark, part, _p_in(doomed))
+    delete_from_table(spark, wit, _ids_in(doomed))
+    update_table(spark, part, {"s": "s + 1000"}, _p_in(bumped))
+    update_table(spark, wit, {"s": "s + 1000"}, _ids_in(bumped))
+    want = sorted(
+        (i, p, s + 1000) for i, p, s in _adv_rows() if p not in doomed
+    )
+    assert _rows(read_table(spark, part)) == want
+    assert _rows(read_table(spark, wit)) == want
+
+
+def test_adversarial_partition_values_merge_on_read_then_purge(spark, tmp_path):
+    tbl = str(tmp_path / "t")
+    _adv_table(spark, tbl)
+    delete_from_table(spark, tbl, "id < 100", mode="merge_on_read")
+    kept = [r for r in _adv_rows() if r[0] >= 100]
+    assert _rows(read_table(spark, tbl)) == sorted(kept)
+    # a witness-route UPDATE of DV-bearing files rewrites them
+    bumped = _ADVERSARIAL[1::2]
+    update_table(spark, tbl, {"s": "-s"}, _ids_in(bumped, offsets=(100,)))
+    kept = [(i, p, -s if p in bumped else s) for i, p, s in kept]
+    assert _rows(read_table(spark, tbl)) == sorted(kept)
+    # every file still carrying deleted rows is rewritten by the purge
+    before = set(_resolve_files(spark, tbl, latest_version(spark, tbl)))
+    v = purge_deletion_vectors(spark, tbl, max_deleted_fraction=0)
+    assert v is not None
+    m = _read_manifest(spark, tbl, v)
+    assert not m.get("dv") and not m.get("dv_counts")
+    rewritten = before - set(_resolve_files(spark, tbl, v))
+    assert {partition_values(f, ["p"])["p"] for f in rewritten} == {
+        p for p in _ADVERSARIAL if p not in bumped
+    }
+    assert _rows(read_table(spark, tbl)) == sorted(kept)
+
+
+def test_adversarial_partition_values_stream(registered, tmp_path):
+    spark = registered
+    tbl = str(tmp_path / "t")
+    _adv_table(spark, tbl)
+
+    snap = _drain(spark, tbl, str(tmp_path / "ck_snap"))
+    assert sorted((r.id, r.p, r.s) for r in snap) == sorted(_adv_rows())
+    # the change feed of a merge-on-read delete opens the DV-named files
+    delete_from_table(spark, tbl, "id < 100", mode="merge_on_read")
+    feed = _drain(
+        spark, tbl, str(tmp_path / "ck_cdf"), readChangeFeed="true", startingVersion="0"
+    )
+    assert sorted((r.id, r.p, r._change_type) for r in feed) == sorted(
+        (i, p, "delete") for i, p, _s in _adv_rows() if i < 100
+    )
+
+
+def test_timestamp_partition_round_trips(registered, tmp_path):
+    import datetime as dt
+
+    spark = registered
+    tbl = str(tmp_path / "t")
+    stamps = [dt.datetime(2024, 1, 2), dt.datetime(2024, 3, 4, 5, 6, 7)]
+    create_table(
+        spark.createDataFrame(
+            [(i, ts) for i, ts in enumerate(stamps)], "id long, ts timestamp"
+        ),
+        tbl,
+        partition_by=("ts",),
+    )
+    got = sorted((r.id, r.ts) for r in read_table(spark, tbl).collect())
+    assert got == list(enumerate(stamps))
+    one = read_table(spark, tbl, partition_filter={"ts": stamps[1]}).collect()
+    assert [(r.id, r.ts) for r in one] == [(1, stamps[1])]
+    # the streaming source types the path value the same way
+    got = _drain(spark, tbl, str(tmp_path / "ck"))
+    assert sorted((r.id, r.ts) for r in got) == list(enumerate(stamps))
+
+
+def test_table_under_uri_special_directory(spark, tmp_path):
+    """A ``#`` or ``?`` in the table directory is part of the path, not
+    a URI fragment or query: partition-scoped OPTIMIZE and a DV purge
+    rewrite only their own partition and every other partition's files
+    survive."""
+    tbl = str(tmp_path / "a#b?c" / "t")
+    create_table(_mkdf(spark), tbl, partition_by=("lang",))
+    append_table(_mkdf(spark).withColumn("id", F.col("id") + 100), tbl)
+    content = sorted(tuple(r) for r in read_table(spark, tbl).collect())
+    assert len(content) == 60
+
+    def by_lang(v):
+        files = _resolve_files(spark, tbl, v)
+        return {
+            lang: sorted(f for f in files if f"/lang={lang}/" in f)
+            for lang in ("de", "fr", "es")
+        }
+
+    before = by_lang(latest_version(spark, tbl))
+    v = optimize_table(spark, tbl, partition_filter={"lang": "de"})
+    after = by_lang(v)
+    assert len(after["de"]) == 1 and not set(after["de"]) & set(before["de"])
+    assert after["fr"] == before["fr"] and after["es"] == before["es"]
+    assert sorted(tuple(r) for r in read_table(spark, tbl).collect()) == content
+
+    delete_from_table(spark, tbl, "lang = 'fr' AND id < 10", mode="merge_on_read")
+    content = [r for r in content if not (r[1] == "fr" and r[0] < 10)]
+    assert sorted(tuple(r) for r in read_table(spark, tbl).collect()) == content
+    v = purge_deletion_vectors(spark, tbl, max_deleted_fraction=0)
+    assert v is not None and not _read_manifest(spark, tbl, v).get("dv")
+    purged = by_lang(v)
+    assert purged["de"] == after["de"] and purged["es"] == after["es"]
+    assert set(after["fr"]) - set(purged["fr"])  # the DV-bearing files
+    assert sorted(tuple(r) for r in read_table(spark, tbl).collect()) == content
+
+
+def test_stream_timestamp_partition_value_ignores_host_zone(monkeypatch):
+    """The streaming source reads a TIMESTAMP path value in the pinned
+    UTC session zone, not the worker host's local zone."""
+    import datetime as dt
+    import time
+
+    from pyspark.sql.types import TimestampNTZType, TimestampType
+
+    from wnv_etl_lab2_spark.sources.versioned_stream import _py_convert_pv
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        got = _py_convert_pv("2024-01-02 03:04:05", TimestampType())
+        utc = dt.datetime(2024, 1, 2, 3, 4, 5, tzinfo=dt.timezone.utc)
+        assert TimestampType().toInternal(got) == TimestampType().toInternal(utc)
+        ntz = _py_convert_pv("2024-01-02 03:04:05", TimestampNTZType())
+        assert ntz == dt.datetime(2024, 1, 2, 3, 4, 5) and ntz.tzinfo is None
+    finally:
+        monkeypatch.undo()
+        time.tzset()

@@ -325,3 +325,39 @@ def test_bpe_training_matches_python_reference(
     freqs = Counter(w for t in texts for w in t.split(" ") if w)
     want = reference_bpe(dict(freqs), n_merges)
     assert got == want
+
+
+# --- Partition-value codec: Spark's own hive escape + the Hadoop URI
+#     spelling, decoded by the Python and SQL forms of one codec -----
+
+_PART_VALUE = st.text(
+    alphabet=st.characters(codec="utf-8", exclude_characters="\x00"),
+    min_size=1,
+    max_size=24,
+)
+
+
+@SLOW
+@given(st.lists(_PART_VALUE, min_size=1, max_size=16))
+def test_partition_value_codec_inverts_spark_escaping(spark, values):
+    from wnv_etl_lab2_spark.sources.table_paths import (
+        manifest_path,
+        partition_value_sql,
+        partition_values,
+    )
+
+    jvm = spark._jvm
+    escape = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
+    rows = []
+    for i, s in enumerate(values):
+        path = jvm.org.apache.hadoop.fs.Path(f"file:/t/p={escape(s)}/part-0.parquet")
+        manifest, uri = path.toString(), path.toUri().toString()
+        assert manifest_path(uri) == manifest, s
+        assert partition_values(manifest, ["p"]) == {"p": s}
+        rows.append((i, uri))
+    got = (
+        spark.createDataFrame(rows, "i long, u string")
+        .selectExpr("i", f"{partition_value_sql('u', 'p')} AS v")
+        .collect()
+    )
+    assert {r.i: r.v for r in got} == dict(enumerate(values))

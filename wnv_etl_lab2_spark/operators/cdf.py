@@ -167,9 +167,8 @@ def table_appends(
     history, so 'rows added' is no longer the change set — use
     `table_changes` there instead; analyze is metadata-only and
     skipped)."""
+    from wnv_etl_lab2_spark.sources.table_paths import file_key
     from wnv_etl_lab2_spark.sources.versioned import (
-        _fs,
-        _qualify,
         _read_manifest,
         _resolve_files,
         latest_version,
@@ -194,18 +193,16 @@ def table_appends(
         else:
             # pre-round-9 append manifest: no log-structured "add"
             # list, just the full snapshot "files" — recover the added
-            # set as this version's files minus the parent's, qualified
-            # on both sides so scheme-less legacy entries compare with
-            # qualified ones (round-10 advisory fix: an upgraded
+            # set as this version's files minus the parent's, keyed
+            # scheme-insensitively so scheme-less legacy entries compare
+            # with qualified ones (round-10 advisory fix: an upgraded
             # table's old history must stay consumable)
-            fs, jvm = _fs(spark, table_path)
             parent = {
-                _qualify(fs, jvm, f)
-                for f in _resolve_files(spark, table_path, v - 1)
+                file_key(f) for f in _resolve_files(spark, table_path, v - 1)
             }
             files.extend(
                 f for f in _resolve_files(spark, table_path, v)
-                if _qualify(fs, jvm, f) not in parent
+                if file_key(f) not in parent
             )
     if not files:
         # empty change set with the table's schema

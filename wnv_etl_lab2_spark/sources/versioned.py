@@ -72,6 +72,15 @@ import posixpath
 
 from pyspark.sql import DataFrame, SparkSession
 
+from wnv_etl_lab2_spark.sources.table_paths import (
+    file_key,
+    filter_str,
+    local_path,
+    manifest_path,
+    partition_value_sql,
+    partition_values,
+)
+
 _LOG_DIR = "_log"
 _DATA_DIR = "data"
 _CHANGES_DIR = "_changes"
@@ -104,26 +113,9 @@ def _fs(spark: SparkSession, path: str):
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
 
 
-def _local_path(path: str) -> str | None:
-    """OS path for a local-FS location (bare ``/a/b`` or Hadoop's
-    qualified ``file:/a/b`` / ``file:///a/b`` forms), else None. The
-    protocol's metadata helpers use it to bypass the JVM FileSystem —
-    every py4j FS call is a ~10-30 ms socket round trip, and a single
-    DML verb makes dozens of them (measured ~0.8 s of a 1.3 s warm
-    UPDATE at sf0.1 was driver-side metadata chatter). Non-local
-    stores keep the Hadoop path untouched."""
-    if path.startswith("file:"):
-        from urllib.parse import urlparse
-
-        return urlparse(path).path
-    if "://" in path or path.startswith(("hdfs:", "s3:", "s3a:", "abfs:")):
-        return None
-    return path
-
-
 def _list_versions(spark: SparkSession, table_path: str) -> list[int]:
     log_dir = posixpath.join(table_path, _LOG_DIR)
-    lp = _local_path(log_dir)
+    lp = local_path(log_dir)
     if lp is not None:
         import os as _os
 
@@ -284,7 +276,7 @@ def _write_file_list(
     rows = [
         (
             f,
-            _hive_partition_values(f, partition_by) if partition_by else None,
+            partition_values(f, partition_by) if partition_by else None,
         )
         for f in sorted(set(files))
     ]
@@ -532,7 +524,7 @@ def _resolve_files_pruned(
             f"partition filter on non-partition columns: {unknown} "
             f"(table is partitioned by {list(partition_by)})"
         )
-    want = {c: _partition_filter_str(v) for c, v in partition_filter.items()}
+    want = {c: filter_str(v) for c, v in partition_filter.items()}
 
     def _prune(files: list[str]) -> list[str]:
         return _prune_partition_files(files, partition_by, partition_filter)
@@ -664,7 +656,7 @@ _MANIFEST_TEXT_CACHE_MAX = 2048
 
 def _read_manifest(spark: SparkSession, table_path: str, version: int) -> dict:
     mpath = posixpath.join(table_path, _LOG_DIR, f"{version:08d}.json")
-    lp = _local_path(mpath)
+    lp = local_path(mpath)
     if lp is not None:
         import os as _os
 
@@ -857,9 +849,9 @@ def _data_files(spark: SparkSession, version_dir: str) -> list[str]:
     re-resolve against whatever the READER's default filesystem is,
     silently breaking the protocol the moment table and reader live on
     different stores (round-9 advisory fix; manifests written before
-    this round carry scheme-less paths, which every consumer qualifies
-    on read via `_qualify`)."""
-    lp = _local_path(version_dir)
+    this round carry scheme-less paths; file identity compares both
+    spellings through `table_paths.file_key`)."""
+    lp = local_path(version_dir)
     if lp is not None:
         import os as _os
 
@@ -900,7 +892,7 @@ def _footer_row_count(files: list[str]) -> int | None:
 
     total = 0
     for f in files:
-        lp = _local_path(f)
+        lp = local_path(f)
         if lp is None:
             return None
         total += pq.ParquetFile(lp).metadata.num_rows
@@ -979,38 +971,6 @@ def _safe_widening(src, dst) -> bool:
     return False
 
 
-def _hive_partition_values(path: str, partition_by) -> dict:
-    """Parse a data file's hive-style ``col=value`` path segments into
-    {col: decoded string or None} (round 13 — partitioned tables). The
-    PATH is the partition metadata: manifests stay O(files-listed) with
-    zero extra bytes per file, appends stay O(batch), and any reader —
-    JVM scan, driver pruning, the Python streaming source — recovers
-    the values without consulting anything but the file list. Decoding
-    matches what Spark's hive-style writer produces: percent-escapes
-    and the ``__HIVE_DEFAULT_PARTITION__`` null sentinel."""
-    from urllib.parse import unquote
-
-    want = set(partition_by)
-    out: dict = {}
-    for seg in path.split("/")[:-1]:
-        if "=" in seg:
-            k, _, v = seg.partition("=")
-            if k in want:
-                out[k] = (
-                    None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
-                )
-    return out
-
-
-def _partition_filter_str(value) -> str | None:
-    """A partition-filter value in the string form hive paths use."""
-    if value is None:
-        return None
-    if isinstance(value, bool):
-        return "true" if value else "false"
-    return str(value)
-
-
 def _prune_partition_files(
     files: list[str], partition_by, partition_filter: dict
 ) -> list[str]:
@@ -1026,10 +986,10 @@ def _prune_partition_files(
             f"partition filter on non-partition columns: {unknown} "
             f"(table is partitioned by {list(partition_by)})"
         )
-    want = {c: _partition_filter_str(v) for c, v in partition_filter.items()}
+    want = {c: filter_str(v) for c, v in partition_filter.items()}
     out = []
     for f in files:
-        vals = _hive_partition_values(f, partition_by)
+        vals = partition_values(f, partition_by)
         if all(vals.get(c) == w for c, w in want.items()):
             out.append(f)
     return out
@@ -1095,9 +1055,10 @@ def _scan_snapshot_files(
 
     - mergeSchema union of the physical files (evolution);
     - hive partition columns re-attached from the file paths via a
-      pure JVM projection (``_metadata.file_path`` regexp + url_decode
-      + cast — partitioned tables' data files do not store them; zero
-      shuffle, zero Python, works at any scale);
+      pure JVM projection (`table_paths.partition_value_sql` over
+      ``_metadata.file_path``, then a cast — partitioned tables' data
+      files do not store them; zero shuffle, zero Python, works at any
+      scale);
     - deletion vectors subtracted when the manifest carries them;
     - physical -> logical projection through the column map (metadata
       renames) and onto the manifest schema in declared order, with
@@ -1107,8 +1068,6 @@ def _scan_snapshot_files(
     ``extra_cols`` keeps per-row bookkeeping columns (``_change_type``)
     through the projection; ``keep_meta`` keeps ``_f``/``_ri``
     (file path / row index) for callers that need row positions."""
-    import re as _re
-
     from pyspark.sql import functions as F
     from pyspark.sql.types import StringType, StructField, StructType
 
@@ -1182,18 +1141,8 @@ def _scan_snapshot_files(
     present = set(df.columns)
     for field in schema.fields:
         if field.name in partition_by:
-            pat = "(?:^|/)" + _re.escape(field.name) + "=([^/]*)/"
-            # the regex rides inside a SQL single-quoted literal:
-            # double the backslashes (SQL-literal escaping applies
-            # before the regex sees the string) and refuse a quote in
-            # the name loudly rather than mis-quote it
-            if "'" in pat:
-                raise ValueError(f"unsupported partition column {field.name!r}")
-            sql_pat = pat.replace("\\", "\\\\")
-            raw = f"regexp_extract({fpath}, '{sql_pat}', 1)"
             exprs.append(
-                f"CAST(CASE WHEN {raw} = '__HIVE_DEFAULT_PARTITION__' "
-                f"THEN NULL ELSE url_decode({raw}) END "
+                f"CAST({partition_value_sql(fpath, field.name)} "
                 f"AS {types[field.name].simpleString()}) AS {q(field.name)}"
             )
             continue
@@ -1459,12 +1408,12 @@ def _advance_identity(
 
     cols = sorted(identity)
     extremes: dict | None = None
-    if files and all(_local_path(f) is not None for f in files):
+    if files and all(local_path(f) is not None for f in files):
         import pyarrow.parquet as pq
 
         extremes = {c: None for c in cols}
         for f in files:
-            md = pq.ParquetFile(_local_path(f)).metadata
+            md = pq.ParquetFile(local_path(f)).metadata
             idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
             for c in cols:
                 phys = cmap.get(c, c)
@@ -2643,16 +2592,14 @@ def _dv_row_count(dv_files: list[str]) -> int | None:
     """Total deleted positions across ``dv_files`` from the parquet
     FOOTERS alone (metadata-only). None when the files are not
     local-FS (unknown size -> caller keeps the default strategy)."""
-    from urllib.parse import urlparse
-
     import pyarrow.parquet as pq
 
     total = 0
     for f in dv_files:
-        parsed = urlparse(f)
-        if parsed.scheme not in ("", "file"):
+        lp = local_path(f)
+        if lp is None:
             return None
-        total += pq.ParquetFile(parsed.path if parsed.scheme else f).metadata.num_rows
+        total += pq.ParquetFile(lp).metadata.num_rows
     return total
 
 
@@ -2906,22 +2853,6 @@ def _delete_merge_on_read(
     return cur + 1
 
 
-def _norm_uri(path: str) -> str:
-    """Scheme-insensitive normal form for file-identity comparison:
-    Hadoop qualifies local paths as ``file:/a/b``, Spark's
-    ``_metadata.file_path`` reports ``file:///a/b`` — same file, three
-    spellings. Local-FS forms normalize to the bare OS path; other
-    schemes keep scheme + authority + path."""
-    from urllib.parse import urlparse
-
-    if path.startswith("file:") or "://" not in path:
-        lp = _local_path(path)
-        if lp is not None:
-            return lp
-    p = urlparse(path)
-    return f"{p.scheme}://{p.netloc}{p.path}"
-
-
 def _partition_predicate_files(
     spark: SparkSession, files: list[str], m: dict, condition: str
 ) -> list[str] | None:
@@ -2933,12 +2864,14 @@ def _partition_predicate_files(
     and the witness scan is skipped entirely — a partition-scoped
     UPDATE/DELETE of a 100 TB table goes straight to rewriting that
     partition with zero read of any other. The predicate is evaluated
-    once per DISTINCT partition tuple over a LocalRelation, with the
-    same url-decode + cast the snapshot reader applies, so semantics
-    (incl. null partitions and type coercion) match the witness scan
-    bit-for-bit. Returns None when the predicate references any data
-    column (analysis fails on the partition-only frame) or the table
-    is unpartitioned — callers fall back to the witness scan."""
+    once per DISTINCT partition tuple over a LocalRelation: the tuple's
+    values are decoded by the same codec as the snapshot reader
+    (`table_paths`), written as binary literals, and cast to the
+    declared types, so null partitions and type coercion behave as in
+    the witness scan. Returns None when the predicate references any
+    data column (analysis fails on the partition-only frame), is
+    nondeterministic (it must see each row), or the table is
+    unpartitioned — callers fall back to the witness scan."""
     import re as _re
 
     from pyspark.sql.types import StructType
@@ -2971,26 +2904,21 @@ def _partition_predicate_files(
         return None
     by_tuple: dict[tuple, list[str]] = {}
     for f in files:
-        vals = _hive_partition_values(f, part_by)
+        vals = partition_values(f, part_by)
         by_tuple.setdefault(tuple(vals.get(c) for c in part_by), []).append(f)
     keys = list(by_tuple)
-    # values with characters outside this set would need SQL-literal
-    # escaping whose rules vary with parser flags — not worth the
-    # drift risk for exotic partition values; the witness scan handles
-    # them correctly
-    safe = _re.compile(r"^[-A-Za-z0-9_ .:+@%]*$")
-    if any(v is not None and not safe.match(v) for k in keys for v in k):
-        return None
     # an inline VALUES relation (NOT createDataFrame, which builds a
     # parallelized LogicalRDD and turns this probe into a real
     # 32-partition job — measured 0.27 s): Catalyst's
     # ConvertToLocalRelation constant-folds the filter over a true
-    # LocalRelation, so the collect returns driver-side with ZERO jobs
+    # LocalRelation, so the collect returns driver-side with ZERO jobs.
+    # Each value is a UTF-8 binary literal cast to STRING: nothing to
+    # quote, whatever the value or the parser's escaping flags.
     def lit(v: str | None) -> str:
-        return "NULL" if v is None else f"'{v}'"
+        return "NULL" if v is None else f"CAST(X'{v.encode().hex()}' AS STRING)"
 
     rows_sql = ", ".join(
-        f"({i}, " + ", ".join(lit(v) for v in k) + ")" for i, k in enumerate(keys)
+        f"({i}, " + ", ".join(map(lit, k)) + ")" for i, k in enumerate(keys)
     )
     cast_cols = ", ".join(
         f"CAST(`{c}` AS {types[c].simpleString()}) AS `{c}`" for c in part_by
@@ -3002,7 +2930,10 @@ def _partition_predicate_files(
         f"WHERE coalesce(CAST(({condition}) AS BOOLEAN), false)"
     )
     try:
-        matched = [r["_pt_i"] for r in spark.sql(q).collect()]
+        probe = spark.sql(q)
+        if not probe._jdf.queryExecution().analyzed().deterministic():
+            return None
+        matched = [r["_pt_i"] for r in probe.collect()]
     except Exception:
         return None  # references data columns (or uncastable values)
     return [f for i in matched for f in by_tuple[keys[i]]]
@@ -3032,13 +2963,90 @@ def _find_touched_files(
     scan = _scan_snapshot_files(spark, files, m, keep_meta=True)
     hit = F.coalesce(F.expr(condition).cast("boolean"), F.lit(False))
     touched = {
-        _norm_uri(r["_f"])
+        file_key(manifest_path(r["_f"]))
         for r in scan.where(hit).select("_f").distinct().collect()
     }
-    doomed = [f for f in files if _norm_uri(f) in touched]
+    doomed = [f for f in files if file_key(f) in touched]
     if len(doomed) == len(files):
         return None  # nothing prunable: the full-rewrite path is cheaper
     return doomed
+
+
+def _carry_file_metadata(
+    spark: SparkSession,
+    table_path: str,
+    m: dict,
+    manifest: dict,
+    gone: set[str],
+    new_files: list[str],
+) -> None:
+    """Per-file bookkeeping of a PARTIAL rewrite, shared by the DML and
+    maintenance committers: ``manifest`` (version ``manifest["version"]``)
+    replaces the files whose `file_key` is in ``gone`` with
+    ``new_files`` and carries every other file of ``m``.
+
+    - deletion vectors: positions of rewritten files were materialized
+      by the rewrite and drop; when none of them carries a position the
+      sidecar is still exact and carries by reference, otherwise the
+      kept files' positions re-consolidate into one fresh DV file;
+    - footer stats: kept files' entries carry, new files get theirs
+      from their footers; a stats sidecar carries by reference (stale
+      rows for removed paths match nothing — paths are never reused);
+    - blooms: kept files' bitmaps carry into a fresh sidecar."""
+    import uuid as _uuid
+
+    from pyspark.sql import functions as F
+
+    version = manifest["version"]
+    dv_files = m.get("dv") or []
+    per_file: dict[str, int] = {}
+    if dv_files and gone:
+        dv = spark.read.parquet(*dv_files)
+        per_file = {
+            r["file"]: int(r["count"]) for r in dv.groupBy("file").count().collect()
+        }
+    doomed_dv = [k for k in per_file if file_key(manifest_path(k)) in gone]
+    if not doomed_dv:
+        if dv_files:
+            manifest["dv"] = list(dv_files)
+        if m.get("dv_counts"):
+            manifest["dv_counts"] = dict(m["dv_counts"])
+    else:
+        kept_counts = {k: n for k, n in per_file.items() if k not in doomed_dv}
+        if kept_counts:
+            new_dv_dir = posixpath.join(
+                table_path, _DV_DIR, f"v{version}-{_uuid.uuid4().hex[:8]}"
+            )
+            dv.where(~F.col("file").isin(*doomed_dv)).coalesce(1).write.mode(
+                "error"
+            ).parquet(new_dv_dir)
+            manifest["dv"] = _data_files(spark, new_dv_dir)
+            manifest["dv_counts"] = kept_counts
+    if m.get("stats_ref"):
+        manifest["stats_ref"] = dict(m["stats_ref"])
+    kept_stats = {
+        f: v for f, v in m.get("stats", {}).items() if file_key(f) not in gone
+    }
+    if m.get("stats_cols"):
+        manifest["stats_cols"] = m["stats_cols"]
+        cmap = m.get("column_map", {})
+        kept_stats.update(
+            _footer_stats(new_files, [cmap.get(c, c) for c in m["stats_cols"]])
+        )
+    if kept_stats:
+        manifest["stats"] = kept_stats
+    old_blooms = _load_blooms(spark, m)
+    if old_blooms:
+        pruned = {
+            f: v
+            for f, v in old_blooms.get("files", {}).items()
+            if file_key(f) not in gone
+        }
+        if pruned:
+            manifest["blooms_ref"] = _write_bloom_sidecar(
+                spark, table_path, version, pruned,
+                old_blooms["m_bits"], old_blooms["k"],
+            )
 
 
 def _commit_dml_rewrite(
@@ -3055,21 +3063,17 @@ def _commit_dml_rewrite(
     """Commit a TOUCHED-FILES-ONLY DML rewrite (round 17): ``live_sub``
     (the post-DML logical rows of exactly the ``doomed`` files)
     replaces those files; every other file carries by reference with
-    its per-file stats/bloom metadata — the same partial-rewrite
-    bookkeeping `_commit_subset_rewrite` pins for OPTIMIZE/DV-purge,
+    its per-file stats/bloom/DV metadata (`_carry_file_metadata`, the
+    bookkeeping `_commit_subset_rewrite` shares for OPTIMIZE/DV-purge),
     with DML op stamping and row-count accounting. Write cost is
     O(touched files), never O(snapshot). Constraints ride the subset
     write (kept files' rows already passed them at their own write);
     identity marks cannot advance (DML never allocates); ``widened``
     carries (kept files retain their narrower physical types)."""
-    import uuid as _uuid
-
-    from pyspark.sql import functions as F
-
     version = cur + 1
     files = _resolve_files(spark, table_path, cur)
-    doomed_norm = {_norm_uri(f) for f in doomed}
-    kept = [f for f in files if _norm_uri(f) not in doomed_norm]
+    gone = {file_key(f) for f in doomed}
+    kept = [f for f in files if file_key(f) not in gone]
     constraints = m.get("constraints", {})
     live_sub, check = _enforce_constraints(
         live_sub, constraints, f"{op} -> {table_path}"
@@ -3093,15 +3097,14 @@ def _commit_dml_rewrite(
     # their DV-deleted positions) leave, the written files' rows enter.
     n_rows = int(m["n_rows"])
     if not row_preserving:
-        dv_counts = {
-            _norm_uri(f): int(n) for f, n in (m.get("dv_counts") or {}).items()
-        }
         doomed_phys = _footer_row_count(doomed)
         if doomed_phys is None:
             doomed_logical = _scan_snapshot_files(spark, doomed, m).count()
         else:
             doomed_logical = doomed_phys - sum(
-                dv_counts.get(_norm_uri(f), 0) for f in doomed
+                int(n)
+                for f, n in (m.get("dv_counts") or {}).items()
+                if file_key(manifest_path(f)) in gone
             )
         written = _footer_row_count(new_files) if new_files else 0
         if written is None:
@@ -3122,70 +3125,7 @@ def _commit_dml_rewrite(
     ):
         if key in m:
             manifest[key] = m[key]
-    # deletion vectors: doomed files' positions materialized into the
-    # rewrite; kept files' positions re-consolidate (same policy as
-    # _commit_subset_rewrite)
-    dv_files = m.get("dv") or []
-    if dv_files:
-        dv = spark.read.parquet(*dv_files)
-        # match DV rows to doomed files SCHEME-INSENSITIVELY (r17
-        # ADVICE): DV 'file' values come from _metadata.file_path
-        # (file:///…) while manifest entries may be qualified
-        # (file:/…) or scheme-less (pre-round-9 writers) — normalize
-        # both sides via _norm_uri over the DV's distinct file keys (a
-        # tiny set: one per file carrying deletions), then filter on
-        # the exact spellings that matched.
-        dv_keys = [r["file"] for r in dv.select("file").distinct().collect()]
-        doomed_dv = [k for k in dv_keys if _norm_uri(k) in doomed_norm]
-        if not doomed_dv:
-            # no doomed file carries a DV row: the sidecar is still
-            # exact for the kept files — carry it by reference (the
-            # MoR/RESTORE policy) instead of rewriting it
-            manifest["dv"] = list(dv_files)
-            if m.get("dv_counts"):
-                manifest["dv_counts"] = dict(m["dv_counts"])
-        else:
-            remaining = dv.where(~F.col("file").isin(*doomed_dv))
-            n_remaining = remaining.count()
-            if n_remaining:
-                new_dv_dir = posixpath.join(
-                    table_path, _DV_DIR, f"v{version}-{_uuid.uuid4().hex[:8]}"
-                )
-                remaining.coalesce(1).write.mode("error").parquet(new_dv_dir)
-                manifest["dv"] = _data_files(spark, new_dv_dir)
-                manifest["dv_counts"] = {
-                    r["file"]: int(r["n"])
-                    for r in remaining.groupBy("file")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .collect()
-                }
-    if m.get("stats_ref"):
-        manifest["stats_ref"] = dict(m["stats_ref"])
-    kept_stats = {
-        f: v
-        for f, v in m.get("stats", {}).items()
-        if _norm_uri(f) not in doomed_norm
-    }
-    if m.get("stats_cols"):
-        manifest["stats_cols"] = m["stats_cols"]
-        _cmap = m.get("column_map", {})
-        kept_stats.update(
-            _footer_stats(new_files, [_cmap.get(c, c) for c in m["stats_cols"]])
-        )
-    if kept_stats:
-        manifest["stats"] = kept_stats
-    old_blooms = _load_blooms(spark, m)
-    if old_blooms:
-        pruned = {
-            f: v
-            for f, v in old_blooms.get("files", {}).items()
-            if _norm_uri(f) not in doomed_norm
-        }
-        if pruned:
-            manifest["blooms_ref"] = _write_bloom_sidecar(
-                spark, table_path, version, pruned,
-                old_blooms["m_bits"], old_blooms["k"],
-            )
+    _carry_file_metadata(spark, table_path, m, manifest, gone, new_files)
     if latest_version(spark, table_path) != cur:
         raise ValueError(
             f"optimistic concurrency check failed: expected latest={cur} "
@@ -4111,23 +4051,14 @@ def _commit_subset_rewrite(
 ) -> int:
     """Commit a PARTIAL rewrite as ``op=optimize`` (data-neutral):
     ``live_df`` replaces exactly the ``doomed`` files; every other
-    file is carried untouched WITH its per-file metadata — stats and
-    bloom entries survive for kept files (rewritten files scan until
-    the next ANALYZE), and DV positions belonging to doomed files are
-    dropped (the rewrite materialized their deletions) while kept
-    files' positions re-consolidate into one fresh DV file. Shared by
+    file is carried untouched WITH its per-file stats/bloom/DV metadata
+    (`_carry_file_metadata`). Shared by
     `purge_deletion_vectors` and partition-scoped `optimize_table` —
     the two maintenance verbs whose whole point at 100 TB is rewriting
     O(selected files), never the snapshot."""
-    import uuid as _uuid
-
-    from pyspark.sql import functions as F
-
     version = cur + 1
     files = _resolve_files(spark, table_path, cur)
-    fs, jvm = _fs(spark, table_path)
-    qualified = {f: _qualify(fs, jvm, f) for f in files}
-    doomed_q = {qualified[f] for f in doomed} | set(doomed)
+    gone = {file_key(f) for f in doomed}
     vdir = _attempt_dir(table_path, version)
     writer = _to_physical(live_df, m.get("column_map", {})).write.mode("error")
     if m.get("partition_by"):
@@ -4137,70 +4068,19 @@ def _commit_subset_rewrite(
     rewritten_files = [new_files]  # 1-slot cell: the rebase helper
     # updates it after renaming the attempt dir, so a SECOND rebase
     # iteration sees the current paths
-    kept = [f for f in files if f not in doomed]
     manifest = {
         "version": version,
         "op": "optimize",
-        "files": kept + new_files,
+        "files": [f for f in files if file_key(f) not in gone] + new_files,
         "n_rows": int(m["n_rows"]),
     }
-    dv_files = m.get("dv") or []
-    if dv_files:
-        dv = spark.read.parquet(*dv_files)
-        remaining = dv.where(~F.col("file").isin(*sorted(doomed_q)))
-        n_remaining = remaining.count()
-        if n_remaining:
-            new_dv_dir = posixpath.join(
-                table_path, _DV_DIR, f"v{version}-{_uuid.uuid4().hex[:8]}"
-            )
-            remaining.coalesce(1).write.mode("error").parquet(new_dv_dir)
-            manifest["dv"] = _data_files(spark, new_dv_dir)
-            manifest["dv_counts"] = {
-                r["file"]: int(r["n"])
-                for r in remaining.groupBy("file")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
     for key in (
         "schema", "constraints", "generated", "identity", "properties", "defaults", "partition_by", "column_map",
         "dropped_physical", "widened",
     ):
         if key in m:
             manifest[key] = m[key]
-    if m.get("stats_ref"):
-        # sidecar'd stats carry BY REFERENCE (round 17): the doomed
-        # files' rows go STALE rather than rewritten — pruning always
-        # intersects with the resolved file list, so a stale row for a
-        # path no longer in the snapshot matches nothing, and paths are
-        # never reused (fresh attempt-dir token per commit). O(batch)
-        # per rewrite; stale rows purge at the next `_commit`
-        # consolidation.
-        manifest["stats_ref"] = dict(m["stats_ref"])
-    kept_stats = {
-        f: v for f, v in m.get("stats", {}).items() if f not in doomed_q
-    }
-    if m.get("stats_cols"):
-        manifest["stats_cols"] = m["stats_cols"]
-        _cmap = m.get("column_map", {})
-        kept_stats.update(
-            _footer_stats(
-                new_files, [_cmap.get(c, c) for c in m["stats_cols"]]
-            )
-        )
-    if kept_stats:
-        manifest["stats"] = kept_stats
-    old_blooms = _load_blooms(spark, m)
-    if old_blooms:
-        pruned = {
-            f: v
-            for f, v in old_blooms.get("files", {}).items()
-            if f not in doomed_q
-        }
-        if pruned:
-            manifest["blooms_ref"] = _write_bloom_sidecar(
-                spark, table_path, version, pruned,
-                old_blooms["m_bits"], old_blooms["k"],
-            )
+    _carry_file_metadata(spark, table_path, m, manifest, gone, new_files)
 
     def _rebase_after_lost_race(staged: dict):
         """Conflict-matrix row 2 (round 14): a SUBSET rewrite — it
@@ -4260,10 +4140,10 @@ def _commit_subset_rewrite(
         m2 = dict(staged)
         m2.pop("ts_ms", None)  # fresh visibility stamp (see append rebase)
         m2["version"] = nv
-        m2["files"] = [f for f in tip_files if f not in doomed_q] + nf
+        m2["files"] = [f for f in tip_files if file_key(f) not in gone] + nf
         m2["n_rows"] = int(tip["n_rows"])
         stats2 = {
-            f: s for f, s in tip.get("stats", {}).items() if f not in doomed_q
+            f: s for f, s in tip.get("stats", {}).items() if file_key(f) not in gone
         }
         if m.get("stats_cols"):
             _cm = m.get("column_map", {})
@@ -4316,8 +4196,6 @@ def purge_deletion_vectors(
     threshold (no commit — purge is idempotent and free to call on a
     schedule). Old DV files the new manifest no longer references are
     reclaimed by `vacuum_table` once the older versions drop."""
-    from urllib.parse import urlparse
-
     import pyarrow.parquet as pq
 
     cur = latest_version(spark, table_path)
@@ -4333,27 +4211,24 @@ def purge_deletion_vectors(
         # pre-r12 DV manifest: recover the counts from the DV files
         # themselves (O(deleted rows), driver-side)
         for dvf in dv_files:
-            parsed = urlparse(dvf)
-            t = pq.read_table(parsed.path if parsed.scheme == "file" else dvf)
+            t = pq.read_table(local_path(dvf) or dvf)
             for f in t.column("file").to_pylist():
                 counts[f] = counts.get(f, 0) + 1
 
     def _nrows(f: str) -> int:
-        parsed = urlparse(f)
-        if parsed.scheme not in ("", "file"):
+        lp = local_path(f)
+        if lp is None:
             raise NotImplementedError(
                 f"purge_deletion_vectors is local-FS-only here: {f}"
             )
-        return pq.ParquetFile(parsed.path if parsed.scheme else f).metadata.num_rows
+        return pq.ParquetFile(lp).metadata.num_rows
 
-    fs, jvm = _fs(spark, table_path)
-    qualified = {f: _qualify(fs, jvm, f) for f in files}
+    deleted = {file_key(manifest_path(k)): n for k, n in counts.items()}
     doomed = [
         f
         for f in files
-        if counts.get(qualified[f], counts.get(f, 0)) > 0
-        and counts.get(qualified[f], counts.get(f, 0)) / _nrows(f)
-        > max_deleted_fraction
+        if deleted.get(file_key(f), 0) > 0
+        and deleted[file_key(f)] / _nrows(f) > max_deleted_fraction
     ]
     if not doomed:
         return None
@@ -4577,18 +4452,16 @@ def _footer_stats(files: list[str], stat_cols: list[str]) -> dict:
     manifests are unwrapped); on a cluster these stats are computed by
     the writing executors at commit time — footer reads here are the
     single-node honest equivalent."""
-    from urllib.parse import urlparse
-
     import pyarrow.parquet as pq
 
     out: dict[str, dict[str, list]] = {}
     for f in files:
-        parsed = urlparse(f)
-        if parsed.scheme not in ("", "file"):
+        lp = local_path(f)
+        if lp is None:
             raise NotImplementedError(
                 f"footer stats are local-FS-only in this environment: {f}"
             )
-        md = pq.ParquetFile(parsed.path if parsed.scheme else f).metadata
+        md = pq.ParquetFile(lp).metadata
         idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
         per: dict[str, list] = {}
         for col in stat_cols:
@@ -4698,18 +4571,16 @@ def _load_blooms(spark: SparkSession, manifest: dict) -> dict:
     ref = manifest.get("blooms_ref")
     if not ref:
         return {}
-    from urllib.parse import urlparse
-
     import pyarrow.parquet as pq
 
     files: dict = {}
     for f in ref["files"]:
-        parsed = urlparse(f)
-        if parsed.scheme not in ("", "file"):
+        lp = local_path(f)
+        if lp is None:
             raise NotImplementedError(
                 f"bloom sidecar reads are local-FS-only here: {f}"
             )
-        t = pq.read_table(parsed.path if parsed.scheme else f)
+        t = pq.read_table(lp)
         for file, col, word, bits in zip(
             t.column("file").to_pylist(),
             t.column("col").to_pylist(),
@@ -4838,7 +4709,7 @@ def collect_blooms(
             .collect()
         )
         for r in agg:
-            blooms.setdefault(r["_file"], {}).setdefault(col, {})[str(r["_word"])] = int(
+            blooms.setdefault(manifest_path(r["_file"]), {}).setdefault(col, {})[str(r["_word"])] = int(
                 r["_bits"]
             )
     manifest = {
@@ -5015,7 +4886,7 @@ def table_partitions(
         raise ValueError(f"table is not partitioned: {table_path}")
     counts: dict[tuple, int] = {}
     for f in _resolve_files(spark, table_path, version):
-        vals = _hive_partition_values(f, pby)
+        vals = partition_values(f, pby)
         key = tuple(vals.get(c) for c in pby)
         counts[key] = counts.get(key, 0) + 1
     rows = [

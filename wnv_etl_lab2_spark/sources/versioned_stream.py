@@ -73,9 +73,15 @@ from __future__ import annotations
 
 import json
 import os
-from urllib.parse import urlparse
 
 from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
+
+from wnv_etl_lab2_spark.sources.table_paths import (
+    filter_str,
+    local_path,
+    manifest_path,
+    partition_values,
+)
 
 _LOG_DIR = "_log"
 
@@ -85,9 +91,9 @@ _FROM_FILE = "__from_file__"
 
 
 def _local(path: str) -> str:
-    parsed = urlparse(path)
-    if parsed.scheme in ("", "file"):
-        return parsed.path if parsed.scheme else path
+    lp = local_path(path)
+    if lp is not None:
+        return lp
     raise NotImplementedError(
         f"versioned_table streaming source is local-FS-only here: {path}"
     )
@@ -221,33 +227,8 @@ def _py_dv_map(m: dict) -> dict[str, set[int]]:
         for f, ri in zip(
             t.column("file").to_pylist(), t.column("row_index").to_pylist()
         ):
-            out.setdefault(_local(f), set()).add(int(ri))
+            out.setdefault(_local(manifest_path(f)), set()).add(int(ri))
     return out
-
-
-def _py_partition_values(path: str, partition_by) -> dict:
-    """Python twin of `versioned._hive_partition_values` (the reader
-    runs in workers without a JVM session): a data file's hive-path
-    ``col=value`` segments as {col: decoded string or None}."""
-    from urllib.parse import unquote
-
-    want = set(partition_by)
-    out: dict = {}
-    for seg in path.split("/")[:-1]:
-        if "=" in seg:
-            k, _, v = seg.partition("=")
-            if k in want:
-                out[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
-    return out
-
-
-def _py_filter_str(value) -> str | None:
-    """A partitionFilter value in the string form hive paths use."""
-    if value is None:
-        return None
-    if isinstance(value, bool):
-        return "true" if value else "false"
-    return str(value)
 
 
 def _py_convert_pv(s, dtype):
@@ -265,6 +246,14 @@ def _py_convert_pv(s, dtype):
         import datetime
 
         return datetime.date.fromisoformat(s)
+    if t in ("timestamp", "timestamp_ntz"):
+        import datetime
+
+        ts = datetime.datetime.fromisoformat(s)
+        # a TIMESTAMP path value is written in the session time zone,
+        # which the engine pins to UTC; a naive value would be read as
+        # the worker host's local time
+        return ts.replace(tzinfo=datetime.timezone.utc) if t == "timestamp" else ts
     if t.startswith("decimal"):
         from decimal import Decimal
 
@@ -693,7 +682,7 @@ class VersionedTableStreamReader(DataSourceStreamReader):
             cols = cols[:-2]  # _change_type/_commit_version are synthesized
         parts: list[_FilePartition] = []
         want = {
-            c: _py_filter_str(w) for c, w in (self._pfilter or {}).items()
+            c: filter_str(w) for c, w in (self._pfilter or {}).items()
         }
         vstart = 0
         lo, lo_k = int(start["version"]), start.get("files")
@@ -712,7 +701,7 @@ class VersionedTableStreamReader(DataSourceStreamReader):
             for p in fresh:
                 p.column_map = cmap
                 if pby and p.change_type != _FROM_FILE:
-                    p.partition_values = _py_partition_values(p.path, pby)
+                    p.partition_values = partition_values(p.path, pby)
                     if want and not all(
                         p.partition_values.get(c) == w for c, w in want.items()
                     ):
@@ -781,7 +770,9 @@ class VersionedTableStreamReader(DataSourceStreamReader):
                             t.column("file").to_pylist(),
                             t.column("row_index").to_pylist(),
                         ):
-                            by_file.setdefault(_local(f), []).append(int(ri))
+                            by_file.setdefault(
+                                _local(manifest_path(f)), []
+                            ).append(int(ri))
                     parts.extend(
                         _FilePartition(
                             f, cols, "delete", v, row_indices=sorted(ris)
@@ -930,13 +921,13 @@ class VersionedTableStreamReader(DataSourceStreamReader):
             # partitionFilter rows-filter here (change files carry the
             # partition columns as data; they are not path-addressable)
             want = {
-                c: _py_filter_str(w) for c, w in (self._pfilter or {}).items()
+                c: filter_str(w) for c, w in (self._pfilter or {}).items()
             }
             wanted = [src[c] for c in partition.columns if src[c] in file_cols]
             rows = pf.read(columns=wanted + ["_change_type"]).to_pylist()
             for r in rows:
                 if want and not all(
-                    _py_filter_str(r.get(src.get(c, c))) == w
+                    filter_str(r.get(src.get(c, c))) == w
                     for c, w in want.items()
                 ):
                     continue
