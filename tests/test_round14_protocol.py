@@ -14,16 +14,24 @@ import os
 import pytest
 
 from wnv_etl_lab2_spark.sources.delta_sql import DeltaSql
+from wnv_etl_lab2_spark.sources.table_manifest import (
+    DECLARATIONS,
+    FILE_LIST,
+    FILE_METADATA,
+)
 from wnv_etl_lab2_spark.sources.versioned import (
+    _FEATURE_KEYS,
     SUPPORTED_FEATURES,
     _read_manifest,
     alter_column_type,
     append_table,
     clone_table,
+    column_defaults,
     create_table,
     latest_version,
     read_table,
     replace_table,
+    set_column_default,
     table_schema,
     vacuum_table,
 )
@@ -92,6 +100,20 @@ def test_feature_gate_legacy_manifest_reads(spark, tmp_path):
 
 
 # --------------------------------------------------------------- widening
+
+
+def test_every_feature_key_has_one_inheritance_class():
+    """A protocol key is inherited by one rule (`table_manifest`): every
+    key that gates a table feature belongs to exactly one of the
+    declaration, per-file metadata and file-list classes, so a new key
+    cannot land without deciding how commits inherit it."""
+    classes = (DECLARATIONS, FILE_METADATA, FILE_LIST)
+    keys = [k for ks, _ in _FEATURE_KEYS for k in ks]
+    assert keys
+    for k in keys:
+        assert sum(k in c for c in classes) == 1, k
+    every = [k for c in classes for k in c]
+    assert len(every) == len(set(every))
 
 
 def test_type_widening_is_metadata_only(spark, tmp_path):
@@ -270,7 +292,12 @@ def test_deep_clone_carries_declarations_and_identity_mark(spark, tmp_path):
         "CREATE TABLE src (rid BIGINT GENERATED ALWAYS AS IDENTITY, v STRING)"
     )
     append_table(spark.createDataFrame([("a",), ("b",)], "v string"), src)
+    set_column_default(spark, src, "v", "'x'")
     clone_table(spark, src, dst, deep=True)
+    # column defaults are a declaration like the others
+    assert column_defaults(spark, dst) == column_defaults(spark, src) == {
+        "v": "'x'"
+    }
     # allocation continues PAST the source's mark — no collisions
     append_table(spark.createDataFrame([("c",)], "v string"), dst)
     assert sorted(r.rid for r in read_table(spark, dst).collect()) == [1, 2, 3]

@@ -1,7 +1,8 @@
 """Round-15 protocol fixes (the r14 ADVICE list): bloom invalidation
 on type widening, widened-table bloom collection, stream refusal on
 stale-schema widening, MERGE identity fill vs supplied-value
-collisions, and dv_counts carried by appends/rebases."""
+collisions, and dv_counts carried by appends/rebases and every
+same-files commit."""
 
 from __future__ import annotations
 
@@ -12,14 +13,22 @@ from wnv_etl_lab2_spark.sources.versioned import (
     _assign_identity,
     _load_blooms,
     _read_manifest,
+    add_check_constraint,
     alter_column_type,
     append_table,
+    clone_table,
     collect_blooms,
+    collect_stats,
     create_table,
     delete_from_table,
+    drop_check_constraint,
+    drop_not_null,
     latest_version,
     read_table,
     read_table_bloom_pruned,
+    restore_table,
+    set_not_null,
+    table_detail,
 )
 
 
@@ -252,6 +261,51 @@ def test_append_rebase_carries_dv_counts(spark, tmp_path):
     assert sorted(r.x for r in read_table(spark, path).collect()) == [
         3, 4, 5, 6, 7, 8, 9, 200, 300,
     ]
+
+
+# every SAME-FILES commit: {name: verb(spark, table, mor_version)}
+_SAME_FILES_VERBS = {
+    "add_check_constraint": lambda sp, t, v: add_check_constraint(
+        sp, t, "pos", "id >= 0"
+    ),
+    "drop_check_constraint": lambda sp, t, v: drop_check_constraint(sp, t, "pos"),
+    "set_not_null": lambda sp, t, v: set_not_null(sp, t, "id"),
+    "drop_not_null": lambda sp, t, v: drop_not_null(sp, t, "id"),
+    "collect_stats": lambda sp, t, v: collect_stats(sp, t, ["id"]),
+    "collect_blooms": lambda sp, t, v: collect_blooms(sp, t, ["id"]),
+    "restore_table": lambda sp, t, v: restore_table(sp, t, v),
+    "shallow_clone": lambda sp, t, v: clone_table(sp, t, t + "_clone"),
+}
+
+
+@pytest.mark.parametrize("verb", sorted(_SAME_FILES_VERBS))
+def test_same_files_commit_keeps_dv_counts_for_row_count(spark, tmp_path, verb):
+    """Every SAME-FILES commit inherits the per-file metadata class,
+    dv_counts included: a later touched-files DELETE of a file with
+    deleted positions subtracts them, so DESCRIBE DETAIL's row count
+    stays the snapshot's (a verb dropping dv_counts left 89 vs 91)."""
+    path = str(tmp_path / "t")
+    create_table(
+        spark.createDataFrame(
+            [(i, i % 4) for i in range(100)], "id long, p long"
+        ),
+        path,
+        partition_by=["p"],
+    )
+    if verb == "drop_check_constraint":
+        add_check_constraint(spark, path, "pos", "id >= 0")
+    if verb == "drop_not_null":
+        set_not_null(spark, path, "id")
+    v = delete_from_table(spark, path, "id < 8", mode="merge_on_read")
+    counts = _read_manifest(spark, path, v)["dv_counts"]
+    _SAME_FILES_VERBS[verb](spark, path, v)
+    target = path + "_clone" if verb == "shallow_clone" else path
+    tip = _read_manifest(spark, target, latest_version(spark, target))
+    delete_from_table(spark, target, "id = 9")  # rewrites p=1 only
+    n = read_table(spark, target).count()
+    assert n == 91
+    assert table_detail(spark, target).collect()[0]["num_rows"] == n
+    assert tip.get("dv_counts") == counts
 
 
 # ------------------------------------------------- in-place adoption

@@ -18,6 +18,7 @@ from wnv_etl_lab2_spark.sources.transactions import (
     read_outcome,
 )
 from wnv_etl_lab2_spark.sources.versioned import (
+    _read_manifest,
     append_table,
     create_table,
     latest_version,
@@ -53,6 +54,27 @@ def test_two_table_atomic_commit(spark, tmp_path):
     # history intact: both tables time-travel to their pre-txn state
     assert {r.id for r in read_table(spark, a, 0).collect()} == {0}
     assert {r.id for r in read_table(spark, b, 0).collect()} == {0}
+
+
+def test_transactional_writes_keep_stats_maintenance(spark, tmp_path):
+    """A transactional overwrite is a full rewrite: it inherits the
+    declared stats_cols and records footer stats for its new files,
+    like `overwrite_table`; a transactional append adds its files'
+    stats to the inherited ones."""
+    t, log = str(tmp_path / "t"), str(tmp_path / "txn")
+    create_table(_df(spark, [(0, "a")]), t, stats_cols=["id"])
+    commit_transaction(
+        spark, log, [TxnWrite(_df(spark, [(5, "b"), (7, "c")]).coalesce(1), t, "overwrite")]
+    )
+    m = _read_manifest(spark, t, latest_version(spark, t))
+    assert m["stats_cols"] == ["id"]
+    assert m["stats"] == {m["files"][0]: {"id": [5, 7]}}
+    commit_transaction(
+        spark, log, [TxnWrite(_df(spark, [(9, "d")]).coalesce(1), t, "append")]
+    )
+    m2 = _read_manifest(spark, t, latest_version(spark, t))
+    assert m2["stats_cols"] == ["id"]
+    assert m2["stats"] == {**m["stats"], m2["add"][0]: {"id": [9, 9]}}
 
 
 def test_crash_mid_transaction_leaves_prior_versions(spark, tmp_path, monkeypatch):

@@ -56,6 +56,12 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from wnv_etl_lab2_spark.sources.table_manifest import (
+    DECLARATIONS,
+    FILE_METADATA,
+    inherit,
+    put,
+)
 from wnv_etl_lab2_spark.sources.versioned import (
     _footer_row_count,
     _attempt_dir,
@@ -63,6 +69,7 @@ from wnv_etl_lab2_spark.sources.versioned import (
     _data_files,
     _fs,
     _list_versions,
+    _maintain_stats,
     _merge_schemas,
     _qualify,
     _read_manifest,
@@ -443,63 +450,42 @@ def _stage(spark: SparkSession, w: TxnWrite, txn_id: str, txn_log: str):
             n_new = spark.read.parquet(vdir).count()
     if identity and files:
         identity = _advance_identity(identity, spark, vdir, cmap, files=files)
-    prev = prev0
     if w.op == "append":
+        # an append inherits the declarations and the per-file metadata
+        # like the single-table append (round 13; dropping the metadata
+        # silently resurrected MoR-deleted rows and reset stats/bloom
+        # skipping after a transactional append)
         manifest = {
+            **inherit(prev0, DECLARATIONS, FILE_METADATA),
             "version": version,
             "op": "append",
             "parent": cur,
             "add": files,
-            "n_rows": int(prev["n_rows"]) + n_new,
-            "schema": evolved,
+            "n_rows": int(prev0["n_rows"]) + n_new,
         }
     else:
         # a CHAIN commits as an overwrite (the composed result IS the
         # new snapshot — every consumer's rewrite semantics apply
-        # unchanged); the step ops are recorded for history forensics
+        # unchanged); the step ops are recorded for history forensics.
+        # A full rewrite inherits the declarations except `widened`
+        # (every file is freshly written at the declared types).
         manifest = {
+            **inherit(prev0, DECLARATIONS, skip=("widened",)),
             "version": version,
             "op": "overwrite",
             "files": files,
             "n_rows": n_new,
-            "schema": evolved,
         }
         if w.op == "chain":
             manifest["txn_ops"] = [step["op"] for step in w.chain]
-    if partition_by:
-        manifest["partition_by"] = list(partition_by)
-    _nonid = {k: v for k, v in cmap.items() if k != v}
-    if _nonid:
-        manifest["column_map"] = _nonid
-    if dropped:
-        manifest["dropped_physical"] = dropped
-    if w.op == "append":
-        # appends preserve the old files, so per-file metadata stays
-        # valid — carry it like the single-table append does (round 13;
-        # dropping it silently resurrected MoR-deleted rows and reset
-        # stats/bloom skipping after a transactional append)
-        for key in (
-            "dv", "dv_counts", "stats", "stats_ref", "stats_cols", "blooms", "blooms_ref",
-            "widened",
-        ):
-            if prev.get(key):
-                manifest[key] = prev[key]
+    manifest["schema"] = evolved
+    put(manifest, "column_map", {k: v for k, v in cmap.items() if k != v})
+    put(manifest, "identity", identity)
+    _maintain_stats(manifest, files)
     if w.batch_id is not None:
         manifest["batch_id"] = int(w.batch_id)
         if w.writer_id is not None:
             manifest["writer_id"] = w.writer_id
-    if constraints:
-        manifest["constraints"] = constraints
-    if generated:
-        manifest["generated"] = generated
-    if identity:
-        manifest["identity"] = identity
-    if prev0.get("properties"):
-        manifest["properties"] = prev0["properties"]
-    if prev0.get("defaults"):
-        # column DEFAULTS are a declaration like properties: they ride
-        # every transactional stage (round 15)
-        manifest["defaults"] = prev0["defaults"]
     manifest["txn"] = {"id": txn_id, "log": txn_log}
     return version, manifest
 

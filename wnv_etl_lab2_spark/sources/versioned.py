@@ -72,6 +72,13 @@ import posixpath
 
 from pyspark.sql import DataFrame, SparkSession
 
+from wnv_etl_lab2_spark.sources.table_manifest import (
+    DECLARATIONS,
+    FILE_METADATA,
+    STATS,
+    inherit,
+    put,
+)
 from wnv_etl_lab2_spark.sources.table_paths import (
     file_key,
     filter_str,
@@ -1534,39 +1541,36 @@ def _write_version(
     dropped: list = []
     declared_types: dict = {}
     if current is not None and not replace:
-        m_prev = _read_manifest(spark, table_path, current)
-        constraints = m_prev.get("constraints", {})
-        properties = m_prev.get("properties")
-        if partition_by is None:
-            partition_by = m_prev.get("partition_by")
-        if generated is None:
-            generated = m_prev.get("generated")
-        if identity is None:
-            identity = m_prev.get("identity")
-        if defaults is None:
-            defaults = m_prev.get("defaults")
-        cmap = dict(m_prev.get("column_map", {}))
-        dropped = list(m_prev.get("dropped_physical", []))
-        # `widened` is deliberately NOT carried: a _write_version commit
-        # is a FULL rewrite, so every surviving file is freshly written
-        # with the declared (post-widening) types — the narrow-file
-        # marker normalizes away. Subset rewrites / metadata commits
-        # carry it (_commit_subset_rewrite, _metadata_ddl_manifest).
-        if "schema" in m_prev:
+        # a FULL rewrite inherits the parent's DECLARATIONS except
+        # `widened`: every surviving file is freshly written with the
+        # declared (post-widening) types, so the narrow-file marker
+        # normalizes away (`table_manifest`). The written frame defines
+        # the schema; only a column DDL's rewrite path passes its own
+        # stats_cols. Per-file stats are recomputed for the new files
+        # from stats_cols (WRITE-TIME stats maintenance, round 12 —
+        # Delta's indexed-columns contract), so file skipping never goes
+        # stale behind a write.
+        prev = inherit(
+            _read_manifest(spark, table_path, current), DECLARATIONS,
+            skip=("widened",),
+        )
+        constraints = prev.get("constraints", {})
+        properties = prev.get("properties")
+        partition_by = prev.get("partition_by")
+        generated = prev.get("generated")
+        identity = prev.get("identity")
+        defaults = prev.get("defaults")
+        cmap = dict(prev.get("column_map", {}))
+        dropped = list(prev.get("dropped_physical", []))
+        if "schema" in prev:
             from pyspark.sql.types import StructType as _ST
 
             declared_types = {
                 f.name: f.dataType
-                for f in _ST.fromJson(json.loads(m_prev["schema"])).fields
+                for f in _ST.fromJson(json.loads(prev["schema"])).fields
             }
         if stats_cols is None:
-            # WRITE-TIME stats maintenance (round 12 — Delta's
-            # indexed-columns contract): once declared (create or
-            # ANALYZE), every rewrite re-records per-file min/max for
-            # the declared columns, so file skipping never goes stale
-            # behind a write. Footer reads here are the single-node
-            # equivalent of executors reporting stats at commit.
-            stats_cols = m_prev.get("stats_cols")
+            stats_cols = prev.get("stats_cols")
     elif generated:
         # creation declares the invariant once; every later write
         # enforces it through the ordinary constraint machinery
@@ -1639,13 +1643,9 @@ def _write_version(
         "n_rows": n_rows,
         "schema": logical_schema_json,
     }
-    if partition_by:
-        manifest["partition_by"] = partition_by
-    nonid = {k: v for k, v in cmap.items() if k != v}
-    if nonid:
-        manifest["column_map"] = nonid
-    if dropped:
-        manifest["dropped_physical"] = dropped
+    put(manifest, "partition_by", partition_by)
+    put(manifest, "column_map", {k: v for k, v in cmap.items() if k != v})
+    put(manifest, "dropped_physical", dropped)
     if batch_id is not None:
         manifest["batch_id"] = int(batch_id)
     if stamp is not None:
@@ -1654,23 +1654,13 @@ def _write_version(
         manifest["writer_id"] = writer_id
     if changes_files is not None:
         manifest["changes"] = changes_files
-    if constraints:
-        manifest["constraints"] = constraints
-    if generated:
-        manifest["generated"] = generated
-    if identity:
-        manifest["identity"] = identity
-    if properties:
-        manifest["properties"] = properties
-    if defaults:
-        manifest["defaults"] = defaults
-    if stats_cols:
-        manifest["stats_cols"] = list(stats_cols)
-        stats = _footer_stats(
-            files, [cmap.get(c, c) for c in stats_cols]
-        )
-        if stats:
-            manifest["stats"] = stats
+    put(manifest, "constraints", constraints)
+    put(manifest, "generated", generated)
+    put(manifest, "identity", identity)
+    put(manifest, "properties", properties)
+    put(manifest, "defaults", defaults)
+    put(manifest, "stats_cols", list(stats_cols or []))
+    _maintain_stats(manifest, files)
     if txn is not None:
         manifest["txn"] = dict(txn)
     _commit(spark, table_path, version, manifest)
@@ -1981,11 +1971,8 @@ def convert_to_versioned(
         manifest["properties"] = {
             str(k): str(v) for k, v in properties.items()
         }
-    if stats_cols:
-        manifest["stats_cols"] = list(stats_cols)
-        stats = _footer_stats(files, list(stats_cols))
-        if stats:
-            manifest["stats"] = stats
+    put(manifest, "stats_cols", list(stats_cols or []))
+    _maintain_stats(manifest, files)
     _commit(spark, table_path, 0, manifest)
     return 0
 
@@ -2144,7 +2131,15 @@ def append_table(
             n_new = spark.read.parquet(vdir).count()
     if identity and new_files:
         identity = _advance_identity(identity, spark, vdir, cmap, files=new_files)
+    # an append keeps every old file: it inherits the declarations and
+    # the per-file metadata (stats/blooms/DVs stay valid — files are
+    # immutable; appended files simply have no entry and always scan)
+    # and states only what it changes — dropping per-file metadata cost
+    # the next collect_stats/collect_blooms a whole-table rescan, and
+    # dropping dv_counts degraded purge_deletion_vectors' fraction
+    # heuristic (rounds 12 and 15)
     manifest = {
+        **inherit(prev, DECLARATIONS, FILE_METADATA),
         "version": version,
         "op": "append",
         "parent": cur,
@@ -2152,55 +2147,13 @@ def append_table(
         "n_rows": int(prev["n_rows"]) + n_new,
         "schema": evolved,
     }
-    if partition_by:
-        manifest["partition_by"] = list(partition_by)
-    nonid = {k: v for k, v in cmap.items() if k != v}
-    if nonid:
-        manifest["column_map"] = nonid
-    if dropped:
-        manifest["dropped_physical"] = dropped
+    put(manifest, "column_map", {k: v for k, v in cmap.items() if k != v})
+    put(manifest, "identity", identity)
     if batch_id is not None:
         manifest["batch_id"] = int(batch_id)
         if writer_id is not None:
             manifest["writer_id"] = writer_id
-    if constraints:
-        manifest["constraints"] = constraints
-    if generated:
-        manifest["generated"] = generated
-    if identity:
-        manifest["identity"] = identity
-    if prev.get("properties"):
-        manifest["properties"] = prev["properties"]
-    if prev.get("defaults"):
-        manifest["defaults"] = prev["defaults"]
-    if prev.get("widened"):
-        # old files keep their narrower physical types; appends never
-        # rewrite them, so the widened-read marker must survive
-        manifest["widened"] = prev["widened"]
-    if m_prev_dv := prev.get("dv"):
-        manifest["dv"] = m_prev_dv  # appends never touch old rows
-        if prev.get("dv_counts"):
-            # the per-file deleted-row tallies ride with the vectors
-            # (round 15, r14 advisory fix: dropping them degraded
-            # purge_deletion_vectors' fraction heuristic after appends)
-            manifest["dv_counts"] = prev["dv_counts"]
-    # stats/blooms are PER-FILE and files are immutable, so an append
-    # invalidates nothing: carry them forward (appended files simply
-    # have no entry and always scan) — otherwise the next
-    # collect_stats/collect_blooms finds no prior metadata and rescans
-    # the whole table instead of O(new files) (round-12 advisory fix)
-    for key in ("stats", "stats_ref", "blooms", "blooms_ref"):
-        if prev.get(key):
-            manifest[key] = prev[key]
-    # declared-column stats MAINTENANCE (round 12): stat only the new
-    # files and merge — O(batch) footer reads, write-time skipping
-    if prev.get("stats_cols"):
-        manifest["stats_cols"] = prev["stats_cols"]
-        new_stats = _footer_stats(
-            new_files, [cmap.get(c, c) for c in prev["stats_cols"]]
-        )
-        if new_stats:
-            manifest["stats"] = {**manifest.get("stats", {}), **new_stats}
+    _maintain_stats(manifest, new_files)
     if extra_manifest:
         clash = set(extra_manifest) & set(manifest)
         if clash:
@@ -2267,13 +2220,8 @@ def append_table(
                 # skips (the sink's exactly-once contract)
                 return None
         tip = _read_manifest(spark, table_path, new_cur)
-        for key in (
-            "schema", "constraints", "partition_by", "column_map",
-            "dropped_physical", "generated", "identity", "properties", "defaults",
-            "widened", "stats_cols",
-        ):
-            if tip.get(key) != prev.get(key):
-                return None
+        if inherit(tip, DECLARATIONS) != inherit(prev, DECLARATIONS):
+            return None
         new_version = new_cur + 1
         files = staged["add"]
         if files:
@@ -2284,26 +2232,22 @@ def append_table(
                 return None  # dir gone (racing vacuum): re-run rewrites
             vdir = new_vdir
             files = _data_files(spark, new_vdir)
-        m2 = dict(staged)
-        m2.pop("ts_ms", None)  # the failed attempt stamped its own
-        # time; the rebased commit must stamp when IT becomes visible,
-        # or TIMESTAMP AS OF would resolve to a version stamped before
-        # its predecessor (r14 review fix)
+        # the tip's per-file metadata replaces the staged parent's; the
+        # failed attempt's `ts_ms` goes too — the rebased commit must
+        # stamp when IT becomes visible, or TIMESTAMP AS OF would
+        # resolve to a version stamped before its predecessor (r14
+        # review fix)
+        m2 = {
+            k: v
+            for k, v in staged.items()
+            if k not in FILE_METADATA and k != "ts_ms"
+        }
+        m2.update(inherit(tip, FILE_METADATA))
         m2["version"] = new_version
         m2["parent"] = new_cur
         m2["add"] = files
         m2["n_rows"] = int(tip["n_rows"]) + n_new
-        for key in ("dv", "dv_counts", "stats", "stats_ref", "blooms", "blooms_ref"):
-            if tip.get(key):
-                m2[key] = tip[key]
-            else:
-                m2.pop(key, None)
-        if prev.get("stats_cols") and files:
-            ns = _footer_stats(
-                files, [cmap.get(c, c) for c in prev["stats_cols"]]
-            )
-            if ns:
-                m2["stats"] = {**m2.get("stats", {}), **ns}
+        _maintain_stats(m2, files)
         return new_version, m2
 
     rebases = 0
@@ -2825,26 +2769,19 @@ def _delete_merge_on_read(
             cur + 1,
             column_map=m_prev.get("column_map"),
         )
-    manifest = {
-        "version": cur + 1,
-        "op": "delete",
-        "n_rows": int(m_prev["n_rows"]) - int(n_del),
-        "dv": prev_dv + dv_add,
-        "dv_add": dv_add,
-        "dv_counts": dv_counts,
-    }
-    # file list unchanged: per-file stats/blooms stay valid (deletes
-    # only make them conservative — false positives prune less, never
-    # wrong), so carry them; dropping them cost every post-MoR-delete
+    # same data files as the parent snapshot: per-file stats/blooms stay
+    # valid (deletes only make them conservative — false positives
+    # prune less, never wrong); dropping them cost every post-MoR-delete
     # read its min/max and bloom skipping (round-12 advisory fix)
-    for key in (
-        "schema", "constraints", "generated", "identity", "properties", "defaults", "stats", "stats_ref", "stats_cols", "blooms", "blooms_ref",
-        "partition_by", "column_map", "dropped_physical", "widened",
-    ):
-        if key in m_prev:
-            manifest[key] = m_prev[key]
-    # same data files as the parent snapshot: share its sidecar ref
-    _carry_snapshot_files(spark, table_path, cur, m_prev, manifest)
+    manifest = _same_files_manifest(
+        spark, table_path, cur, m_prev,
+        version=cur + 1,
+        op="delete",
+        n_rows=int(m_prev["n_rows"]) - int(n_del),
+        dv=prev_dv + dv_add,
+        dv_add=dv_add,
+        dv_counts=dv_counts,
+    )
     if changes_files is not None:
         manifest["changes"] = changes_files
     if txn is not None:
@@ -2980,10 +2917,12 @@ def _carry_file_metadata(
     gone: set[str],
     new_files: list[str],
 ) -> None:
-    """Per-file bookkeeping of a PARTIAL rewrite, shared by the DML and
-    maintenance committers: ``manifest`` (version ``manifest["version"]``)
-    replaces the files whose `file_key` is in ``gone`` with
-    ``new_files`` and carries every other file of ``m``.
+    """The PER-FILE METADATA (`table_manifest.FILE_METADATA`) of a
+    PARTIAL rewrite, shared by the DML and maintenance committers, which
+    inherit only the declarations wholesale: ``manifest`` (version
+    ``manifest["version"]``) replaces the files whose `file_key` is in
+    ``gone`` with ``new_files`` and carries every other file of ``m``,
+    file by file.
 
     - deletion vectors: positions of rewritten files were materialized
       by the rewrite and drop; when none of them carries a position the
@@ -3024,17 +2963,10 @@ def _carry_file_metadata(
             manifest["dv_counts"] = kept_counts
     if m.get("stats_ref"):
         manifest["stats_ref"] = dict(m["stats_ref"])
-    kept_stats = {
+    put(manifest, "stats", {
         f: v for f, v in m.get("stats", {}).items() if file_key(f) not in gone
-    }
-    if m.get("stats_cols"):
-        manifest["stats_cols"] = m["stats_cols"]
-        cmap = m.get("column_map", {})
-        kept_stats.update(
-            _footer_stats(new_files, [cmap.get(c, c) for c in m["stats_cols"]])
-        )
-    if kept_stats:
-        manifest["stats"] = kept_stats
+    })
+    _maintain_stats(manifest, new_files)
     old_blooms = _load_blooms(spark, m)
     if old_blooms:
         pruned = {
@@ -3062,14 +2994,16 @@ def _commit_dml_rewrite(
 ) -> int:
     """Commit a TOUCHED-FILES-ONLY DML rewrite (round 17): ``live_sub``
     (the post-DML logical rows of exactly the ``doomed`` files)
-    replaces those files; every other file carries by reference with
-    its per-file stats/bloom/DV metadata (`_carry_file_metadata`, the
-    bookkeeping `_commit_subset_rewrite` shares for OPTIMIZE/DV-purge),
-    with DML op stamping and row-count accounting. Write cost is
-    O(touched files), never O(snapshot). Constraints ride the subset
-    write (kept files' rows already passed them at their own write);
-    identity marks cannot advance (DML never allocates); ``widened``
-    carries (kept files retain their narrower physical types)."""
+    replaces those files; every other file carries by reference. A
+    partial rewrite inherits the DECLARATIONS class wholesale
+    (`table_manifest`) — ``widened`` included, since kept files retain
+    their narrower physical types — and the PER-FILE METADATA class
+    file by file (`_carry_file_metadata`, shared with
+    `_commit_subset_rewrite` for OPTIMIZE/DV-purge), with DML op
+    stamping and row-count accounting. Write cost is O(touched files),
+    never O(snapshot). Constraints ride the subset write (kept files'
+    rows already passed them at their own write); identity marks cannot
+    advance (DML never allocates)."""
     version = cur + 1
     files = _resolve_files(spark, table_path, cur)
     gone = {file_key(f) for f in doomed}
@@ -3111,6 +3045,7 @@ def _commit_dml_rewrite(
             written = spark.read.parquet(vdir).count()
         n_rows = n_rows - doomed_logical + written
     manifest = {
+        **inherit(m, DECLARATIONS),
         "version": version,
         "op": op,
         "files": kept + new_files,
@@ -3118,13 +3053,6 @@ def _commit_dml_rewrite(
     }
     if changes_files is not None:
         manifest["changes"] = changes_files
-    for key in (
-        "schema", "constraints", "generated", "identity", "properties",
-        "defaults", "partition_by", "column_map", "dropped_physical",
-        "widened",
-    ):
-        if key in m:
-            manifest[key] = m[key]
     _carry_file_metadata(spark, table_path, m, manifest, gone, new_files)
     if latest_version(spark, table_path) != cur:
         raise ValueError(
@@ -4051,8 +3979,9 @@ def _commit_subset_rewrite(
 ) -> int:
     """Commit a PARTIAL rewrite as ``op=optimize`` (data-neutral):
     ``live_df`` replaces exactly the ``doomed`` files; every other
-    file is carried untouched WITH its per-file stats/bloom/DV metadata
-    (`_carry_file_metadata`). Shared by
+    file is carried untouched. Like `_commit_dml_rewrite` it inherits
+    the DECLARATIONS class wholesale and the PER-FILE METADATA class
+    file by file (`table_manifest`, `_carry_file_metadata`). Shared by
     `purge_deletion_vectors` and partition-scoped `optimize_table` —
     the two maintenance verbs whose whole point at 100 TB is rewriting
     O(selected files), never the snapshot."""
@@ -4069,17 +3998,12 @@ def _commit_subset_rewrite(
     # updates it after renaming the attempt dir, so a SECOND rebase
     # iteration sees the current paths
     manifest = {
+        **inherit(m, DECLARATIONS),
         "version": version,
         "op": "optimize",
         "files": [f for f in files if file_key(f) not in gone] + new_files,
         "n_rows": int(m["n_rows"]),
     }
-    for key in (
-        "schema", "constraints", "generated", "identity", "properties", "defaults", "partition_by", "column_map",
-        "dropped_physical", "widened",
-    ):
-        if key in m:
-            manifest[key] = m[key]
     _carry_file_metadata(spark, table_path, m, manifest, gone, new_files)
 
     def _rebase_after_lost_race(staged: dict):
@@ -4115,14 +4039,12 @@ def _commit_subset_rewrite(
             if not _txn_visible(spark, w) or w.get("op") != "append":
                 return None
         tip = _read_manifest(spark, table_path, new_cur)
-        for key in (
-            "schema", "constraints", "partition_by", "column_map",
-            "dropped_physical", "generated", "identity", "properties", "defaults",
-            "widened", "stats_cols", "dv", "dv_counts", "blooms",
-            "blooms_ref",
+        # the rebase recomputes the stats below; every other inherited
+        # key must be the one this rewrite was staged against
+        if inherit(tip, DECLARATIONS, FILE_METADATA, skip=STATS) != inherit(
+            m, DECLARATIONS, FILE_METADATA, skip=STATS
         ):
-            if tip.get(key) != m.get(key):
-                return None
+            return None
         nv = new_cur + 1
         nf = rewritten_files[0]  # this attempt's new files (tracked —
         # NOT a positional slice of staged["files"], which goes stale
@@ -4142,22 +4064,11 @@ def _commit_subset_rewrite(
         m2["version"] = nv
         m2["files"] = [f for f in tip_files if file_key(f) not in gone] + nf
         m2["n_rows"] = int(tip["n_rows"])
-        stats2 = {
+        put(m2, "stats", {
             f: s for f, s in tip.get("stats", {}).items() if file_key(f) not in gone
-        }
-        if m.get("stats_cols"):
-            _cm = m.get("column_map", {})
-            stats2.update(
-                _footer_stats(nf, [_cm.get(c, c) for c in m["stats_cols"]])
-            )
-        if stats2:
-            m2["stats"] = stats2
-        else:
-            m2.pop("stats", None)
-        if tip.get("stats_ref"):
-            m2["stats_ref"] = dict(tip["stats_ref"])
-        else:
-            m2.pop("stats_ref", None)
+        })
+        _maintain_stats(m2, nf)
+        put(m2, "stats_ref", dict(tip.get("stats_ref") or {}))
         return nv, m2
 
     rebases = 0
@@ -4491,6 +4402,21 @@ def _footer_stats(files: list[str], stat_cols: list[str]) -> dict:
     return out
 
 
+def _maintain_stats(manifest: dict, new_files: list[str]) -> None:
+    """WRITE-TIME stats maintenance (round 12): merge the footer
+    min/max of ``new_files`` for the manifest's declared
+    ``stats_cols`` into its per-file ``stats`` — O(new files) footer
+    reads, so a write never leaves file skipping stale. Stats are keyed
+    by the PHYSICAL column names (round 13)."""
+    cols = manifest.get("stats_cols")
+    if not cols or not new_files:
+        return
+    cmap = manifest.get("column_map", {})
+    new = _footer_stats(new_files, [cmap.get(c, c) for c in cols])
+    if new:
+        manifest["stats"] = {**manifest.get("stats", {}), **new}
+
+
 def collect_stats(spark: SparkSession, table_path: str, stat_cols: list[str]) -> int:
     """ANALYZE: stamp the LATEST version's manifest copy with per-file
     column stats as a new metadata-only version (op=analyze, same
@@ -4503,34 +4429,16 @@ def collect_stats(spark: SparkSession, table_path: str, stat_cols: list[str]) ->
     m = _read_manifest(spark, table_path, cur)
     files = _resolve_files(spark, table_path, cur)
     cmap = m.get("column_map", {})
-    manifest = {
-        "version": cur + 1,
-        "op": "analyze",
-        "n_rows": m["n_rows"],
+    manifest = _same_files_manifest(
+        spark, table_path, cur, m,
+        version=cur + 1,
+        op="analyze",
         # stats are keyed by the PHYSICAL (in-file) column names —
         # stable across metadata renames; lookups translate (round 13)
-        "stats": _footer_stats(files, [cmap.get(c, c) for c in stat_cols]),
-        "stats_cols": list(stat_cols),
-    }
-    if "schema" in m:  # metadata-only version: snapshot schema unchanged
-        manifest["schema"] = m["schema"]
-    if m.get("constraints"):
-        manifest["constraints"] = m["constraints"]
-    if m.get("generated"):
-        manifest["generated"] = m["generated"]
-    if m.get("identity"):
-        manifest["identity"] = m["identity"]
-    if m.get("properties"):
-        manifest["properties"] = m["properties"]
-    if m.get("dv"):
-        manifest["dv"] = m["dv"]
-    for key in (
-        "blooms", "blooms_ref", "generated", "identity", "properties", "defaults",
-        "partition_by", "column_map", "dropped_physical", "widened",
-    ):
-        if m.get(key):
-            manifest[key] = m[key]
-    _carry_snapshot_files(spark, table_path, cur, m, manifest)
+        stats=_footer_stats(files, [cmap.get(c, c) for c in stat_cols]),
+        stats_cols=list(stat_cols),
+    )
+    manifest.pop("stats_ref", None)  # the fresh stats replace the sidecar
     _commit(spark, table_path, cur + 1, manifest)
     return cur + 1
 
@@ -4712,24 +4620,18 @@ def collect_blooms(
             blooms.setdefault(manifest_path(r["_file"]), {}).setdefault(col, {})[str(r["_word"])] = int(
                 r["_bits"]
             )
-    manifest = {
-        "version": cur + 1,
-        "op": "analyze",
-        "n_rows": m["n_rows"],
+    manifest = _same_files_manifest(
+        spark, table_path, cur, m,
+        version=cur + 1,
+        op="analyze",
         # round 12 (r11 verdict #5): the bitmaps live in a parquet
         # SIDECAR; the manifest carries only this O(1) pointer, so
         # manifest bytes stay flat as the table grows files
-        "blooms_ref": _write_bloom_sidecar(
+        blooms_ref=_write_bloom_sidecar(
             spark, table_path, cur + 1, blooms, m_bits, k
         ),
-    }
-    for key in (
-        "schema", "constraints", "generated", "identity", "properties", "defaults", "stats", "stats_ref", "stats_cols", "dv",
-        "partition_by", "column_map", "dropped_physical", "widened",
-    ):
-        if m.get(key):
-            manifest[key] = m[key]
-    _carry_snapshot_files(spark, table_path, cur, m, manifest)
+    )
+    manifest.pop("blooms", None)  # the fresh sidecar replaces them
     _commit(spark, table_path, cur + 1, manifest)
     return cur + 1
 
@@ -4977,18 +4879,12 @@ def fsck_repair_table(
     gone = set(missing)
     keep = [f for f in files if f not in gone]
     manifest = {
+        **inherit(m, DECLARATIONS, FILE_METADATA),
         "version": cur + 1,
         "op": "fsck",
         "files": keep,
         "fsck_removed": sorted(missing),
     }
-    for key in (
-        "schema", "constraints", "generated", "identity", "properties", "defaults",
-        "stats_cols", "dv", "blooms", "blooms_ref", "stats_ref",
-        "partition_by", "column_map", "dropped_physical", "widened",
-    ):
-        if key in m:
-            manifest[key] = m[key]
     if blooms_gone:
         manifest.pop("blooms", None)
         manifest.pop("blooms_ref", None)
@@ -4996,16 +4892,12 @@ def fsck_repair_table(
         manifest.pop("stats_ref", None)
     # per-file metadata of the lost files goes with them; surviving
     # files' entries stay valid (files are immutable)
-    if m.get("stats"):
-        kept_stats = {f: s for f, s in m["stats"].items() if f not in gone}
-        if kept_stats:
-            manifest["stats"] = kept_stats
-    if m.get("dv_counts"):
-        kept_counts = {
-            f: c for f, c in m["dv_counts"].items() if f not in gone
-        }
-        if kept_counts:
-            manifest["dv_counts"] = kept_counts
+    put(manifest, "stats", {
+        f: s for f, s in m.get("stats", {}).items() if f not in gone
+    })
+    put(manifest, "dv_counts", {
+        f: c for f, c in m.get("dv_counts", {}).items() if f not in gone
+    })
     # honest logical row count of the repaired snapshot (DV-aware via
     # the shared scan; parquet count() is footer-metadata-only)
     manifest["n_rows"] = (
@@ -5040,23 +4932,14 @@ def restore_table(spark: SparkSession, table_path: str, version: int) -> int:
     m = _read_manifest(spark, table_path, version)
     if not _txn_visible(spark, m):
         raise ValueError(f"version {version} belongs to an uncommitted transaction")
-    manifest = {
-        "version": cur + 1,
-        "op": "restore",
-        "restored_from": version,
-        "n_rows": m["n_rows"],
-    }
-    # the restored snapshot's file list is the TARGET version's — its
-    # sidecar (same table) is shared by reference like any same-files
-    # commit; inline lists re-resolve through the chain
-    _carry_snapshot_files(spark, table_path, version, m, manifest)
-    for key in (
-        "schema", "constraints", "generated", "identity", "properties", "defaults", "stats", "stats_ref", "stats_cols", "dv",
-        "blooms", "blooms_ref",
-        "partition_by", "column_map", "dropped_physical", "widened",
-    ):
-        if key in m:
-            manifest[key] = m[key]
+    # a same-files commit over the TARGET version: its file list (a
+    # sidecar shared by reference), declarations and per-file metadata
+    manifest = _same_files_manifest(
+        spark, table_path, version, m,
+        version=cur + 1,
+        op="restore",
+        restored_from=version,
+    )
     _commit(spark, table_path, cur + 1, manifest)
     return cur + 1
 
@@ -5111,33 +4994,30 @@ def clone_table(
     m = _read_manifest(spark, source_path, src_v)
     if deep:
         df = read_table(spark, source_path, src_v)
-        v = _write_version(
+        # a full rewrite: the frame defines the schema and is written
+        # at logical names and declared types, so the column map, its
+        # tombstones and `widened` normalize away; every other
+        # declaration is the source's, passed as the creating call's own
+        return _write_version(
             df, target_path, new_v,
             "create" if new_v == 0 else "replace",
             expect_latest=tgt_cur,
-            stats_cols=m.get("stats_cols"),
-            partition_by=m.get("partition_by"),
-            generated=m.get("generated"),
-            identity=m.get("identity"),
-            properties=m.get("properties"),
             replace=new_v > 0,
-            constraints=m.get("constraints"),
+            **inherit(
+                m, DECLARATIONS,
+                skip=("schema", "column_map", "dropped_physical", "widened"),
+            ),
         )
-        return v
-    manifest = {
-        "version": new_v,
-        "op": "create" if new_v == 0 else "replace",
-        "cloned_from": {"path": source_path, "version": src_v},
-        "files": _resolve_files(spark, source_path, src_v),
-        "n_rows": m["n_rows"],
-    }
-    for key in (
-        "schema", "constraints", "generated", "identity", "properties", "defaults", "stats", "stats_ref", "stats_cols", "dv",
-        "blooms", "blooms_ref",
-        "partition_by", "column_map", "dropped_physical", "widened",
-    ):
-        if key in m:
-            manifest[key] = m[key]
+    manifest = _same_files_manifest(
+        spark, source_path, src_v, m,
+        version=new_v,
+        op="create" if new_v == 0 else "replace",
+        cloned_from={"path": source_path, "version": src_v},
+    )
+    if manifest.pop("files_ref", None):
+        # the clone owns its file list: never the source's sidecar,
+        # which the source's vacuum reference-counts on its own
+        manifest["files"] = _resolve_files(spark, source_path, src_v)
     _commit(spark, target_path, new_v, manifest)
     return new_v
 
@@ -5248,27 +5128,12 @@ def add_check_constraint(
             f"CHECK ({expr})"
         )
     cons[name] = expr
-    manifest = {
-        "version": cur + 1,
-        "op": "analyze",  # the generic metadata-only op: same files
-        "n_rows": m["n_rows"],
-        "constraints": cons,
-    }
-    _carry_snapshot_files(spark, table_path, cur, m, manifest)
-    if "schema" in m:
-        manifest["schema"] = m["schema"]
-    for key in ("stats", "stats_ref", "stats_cols"):
-        if key in m:
-            manifest[key] = m[key]
-    if m.get("dv"):
-        manifest["dv"] = m["dv"]
-    for key in (
-        "blooms", "blooms_ref", "generated", "identity", "properties", "defaults",
-        "partition_by", "column_map", "dropped_physical", "widened",
-    ):
-        if m.get(key):
-            manifest[key] = m[key]
-    _carry_snapshot_files(spark, table_path, cur, m, manifest)
+    manifest = _same_files_manifest(
+        spark, table_path, cur, m,
+        version=cur + 1,
+        op="analyze",  # the generic metadata-only op: same files
+        constraints=cons,
+    )
     _commit(spark, table_path, cur + 1, manifest)
     return cur + 1
 
@@ -5291,27 +5156,12 @@ def drop_check_constraint(spark: SparkSession, table_path: str, name: str) -> in
             "generation expression is declared"
         )
     del cons[name]
-    manifest = {
-        "version": cur + 1,
-        "op": "analyze",
-        "n_rows": m["n_rows"],
-        "constraints": cons,
-    }
-    _carry_snapshot_files(spark, table_path, cur, m, manifest)
-    if "schema" in m:
-        manifest["schema"] = m["schema"]
-    for key in ("stats", "stats_ref", "stats_cols"):
-        if key in m:
-            manifest[key] = m[key]
-    if m.get("dv"):
-        manifest["dv"] = m["dv"]
-    for key in (
-        "blooms", "blooms_ref", "generated", "identity", "properties", "defaults",
-        "partition_by", "column_map", "dropped_physical", "widened",
-    ):
-        if m.get(key):
-            manifest[key] = m[key]
-    _carry_snapshot_files(spark, table_path, cur, m, manifest)
+    manifest = _same_files_manifest(
+        spark, table_path, cur, m,
+        version=cur + 1,
+        op="analyze",
+        constraints=cons,
+    )
     _commit(spark, table_path, cur + 1, manifest)
     return cur + 1
 
@@ -5357,12 +5207,13 @@ def set_table_properties(
     if cur is None:
         raise ValueError(f"not a versioned table (no log): {table_path}")
     m = _read_manifest(spark, table_path, cur)
-    manifest = _metadata_ddl_manifest(m, cur, "analyze")
+    manifest = _same_files_manifest(
+        spark, table_path, cur, m, version=cur + 1, op="analyze"
+    )
     manifest["properties"] = {
         **m.get("properties", {}),
         **{str(k): str(v) for k, v in props.items()},
     }
-    _carry_snapshot_files(spark, table_path, cur, m, manifest)
     _commit(spark, table_path, cur + 1, manifest)
     return cur + 1
 
@@ -5383,12 +5234,10 @@ def unset_table_properties(
         raise ValueError(f"properties not set: {missing}")
     for k in keys:
         del props[k]
-    manifest = _metadata_ddl_manifest(m, cur, "analyze")
-    if props:
-        manifest["properties"] = props
-    else:
-        manifest.pop("properties", None)
-    _carry_snapshot_files(spark, table_path, cur, m, manifest)
+    manifest = _same_files_manifest(
+        spark, table_path, cur, m, version=cur + 1, op="analyze"
+    )
+    put(manifest, "properties", props)
     _commit(spark, table_path, cur + 1, manifest)
     return cur + 1
 
@@ -5426,21 +5275,13 @@ def set_not_null(spark: SparkSession, table_path: str, col: str) -> int:
             f"cannot set NOT NULL on {col!r}: {n_null} existing rows are null"
         )
     cons[name] = f"{col} IS NOT NULL"
-    manifest = {
-        "version": cur + 1,
-        "op": "analyze",
-        "n_rows": m["n_rows"],
-        "constraints": cons,
-        "schema": new_schema,
-    }
-    _carry_snapshot_files(spark, table_path, cur, m, manifest)
-    for key in (
-        "stats", "stats_ref", "stats_cols", "dv", "blooms", "blooms_ref", "generated",
-        "identity", "properties", "defaults", "partition_by", "column_map",
-        "dropped_physical", "widened",
-    ):
-        if m.get(key):
-            manifest[key] = m[key]
+    manifest = _same_files_manifest(
+        spark, table_path, cur, m,
+        version=cur + 1,
+        op="analyze",
+        constraints=cons,
+        schema=new_schema,
+    )
     _commit(spark, table_path, cur + 1, manifest)
     return cur + 1
 
@@ -5458,22 +5299,13 @@ def drop_not_null(spark: SparkSession, table_path: str, col: str) -> int:
     if name not in cons:
         raise ValueError(f"column {col!r} is not declared NOT NULL")
     del cons[name]
-    manifest = {
-        "version": cur + 1,
-        "op": "analyze",
-        "n_rows": m["n_rows"],
-        "schema": _flip_nullability(m["schema"], col, True),
-    }
-    _carry_snapshot_files(spark, table_path, cur, m, manifest)
-    if cons:
-        manifest["constraints"] = cons
-    for key in (
-        "stats", "stats_ref", "stats_cols", "dv", "blooms", "blooms_ref", "generated",
-        "identity", "properties", "defaults", "partition_by", "column_map",
-        "dropped_physical", "widened",
-    ):
-        if m.get(key):
-            manifest[key] = m[key]
+    manifest = _same_files_manifest(
+        spark, table_path, cur, m,
+        version=cur + 1,
+        op="analyze",
+        schema=_flip_nullability(m["schema"], col, True),
+    )
+    put(manifest, "constraints", cons)
     _commit(spark, table_path, cur + 1, manifest)
     return cur + 1
 
@@ -5514,8 +5346,9 @@ def set_column_default(
     _check_defaults(
         spark, {name: expr}, schema, m.get("generated"), m.get("identity")
     )
-    manifest = _metadata_ddl_manifest(m, cur, "set_default")
-    _carry_snapshot_files(spark, table_path, cur, m, manifest)
+    manifest = _same_files_manifest(
+        spark, table_path, cur, m, version=cur + 1, op="set_default"
+    )
     defaults = dict(m.get("defaults", {}))
     defaults[name] = expr
     manifest["defaults"] = defaults
@@ -5537,12 +5370,10 @@ def drop_column_default(
     if name not in defaults:
         raise ValueError(f"column {name!r} has no declared DEFAULT")
     del defaults[name]
-    manifest = _metadata_ddl_manifest(m, cur, "drop_default")
-    _carry_snapshot_files(spark, table_path, cur, m, manifest)
-    if defaults:
-        manifest["defaults"] = defaults
-    else:
-        manifest.pop("defaults", None)
+    manifest = _same_files_manifest(
+        spark, table_path, cur, m, version=cur + 1, op="drop_default"
+    )
+    put(manifest, "defaults", defaults)
     _commit(spark, table_path, cur + 1, manifest)
     return cur + 1
 
@@ -5663,43 +5494,29 @@ def read_table_pruned(
     )
 
 
-def _carry_snapshot_files(
-    spark: SparkSession, table_path: str, cur: int, m: dict, manifest: dict
-) -> None:
-    """Carry the UNCHANGED snapshot file list into a same-files commit
-    (metadata DDL, ANALYZE, MoR deletes): a sidecar-backed list is
-    shared BY REFERENCE — O(1) per metadata commit, vacuum
-    reference-counts the sidecar across kept manifests — while an
-    inline list re-resolves through the chain (append tips included;
-    `_commit` re-swaps it to a fresh sidecar if it crosses the
-    threshold)."""
-    if "files_ref" in m:
-        manifest["files_ref"] = dict(m["files_ref"])
-        manifest.pop("files", None)
-    else:
-        manifest["files"] = _resolve_files(spark, table_path, cur)
-
-
-def _metadata_ddl_manifest(m: dict, cur: int, op: str) -> dict:
-    """Skeleton for a METADATA-ONLY column-DDL commit: same files, same
-    rows, every protocol feature carried; the caller mutates schema /
-    column_map / stats_cols before committing."""
+def _same_files_manifest(
+    spark: SparkSession, table_path: str, snapshot: int, m: dict, **fields
+) -> dict:
+    """The manifest of a SAME-FILES commit (metadata DDL, ANALYZE,
+    merge-on-read DELETE, RESTORE, shallow CLONE) over ``m``, the
+    manifest of ``table_path`` at version ``snapshot``: it inherits the
+    declarations, the per-file metadata and the file list
+    (`table_manifest`), and ``fields`` (at least ``version`` and
+    ``op``) state what the commit changes; the row count defaults to
+    ``m``'s. A sidecar-backed file list is shared BY REFERENCE — O(1)
+    per metadata commit, vacuum reference-counts the sidecar across
+    kept manifests — while an inline list re-resolves through the chain
+    (append tips included; `_commit` re-swaps it to a fresh sidecar if
+    it crosses the threshold)."""
     manifest = {
-        "version": cur + 1,
-        "op": op,
+        **inherit(m, DECLARATIONS, FILE_METADATA),
         "n_rows": m["n_rows"],
+        **fields,
     }
     if "files_ref" in m:
         manifest["files_ref"] = dict(m["files_ref"])
     else:
-        manifest["files"] = list(m.get("files", []))
-    for key in (
-        "schema", "constraints", "generated", "identity", "properties", "defaults", "stats", "stats_ref", "stats_cols", "dv", "dv_counts",
-        "blooms", "blooms_ref", "partition_by", "column_map",
-        "dropped_physical", "widened",
-    ):
-        if key in m:
-            manifest[key] = m[key]
+        manifest["files"] = _resolve_files(spark, table_path, snapshot)
     return manifest
 
 
@@ -5780,7 +5597,9 @@ def drop_column(
             f"cannot drop partition column {name!r} (the hive layout is "
             "the partition metadata; repartition via a rewrite instead)"
         )
-    manifest = _metadata_ddl_manifest(m, cur, "drop_column")
+    manifest = _same_files_manifest(
+        spark, table_path, cur, m, version=cur + 1, op="drop_column"
+    )
     manifest["schema"] = StructType(
         [f for f in schema.fields if f.name != name]
     ).json()
@@ -5788,32 +5607,20 @@ def drop_column(
     cons.pop(f"nn_{name}", None)  # a dropped column's NOT NULL goes with it
     if name in gen:
         del gen[name]
-        if gen:
-            manifest["generated"] = gen
-        else:
-            manifest.pop("generated", None)
+        put(manifest, "generated", gen)
         cons.pop(f"gen_{name}", None)
     ident = dict(m.get("identity") or {})
     if name in ident:  # a dropped column's identity declaration too
         del ident[name]
-        if ident:
-            manifest["identity"] = ident
-        else:
-            manifest.pop("identity", None)
-    if cons:
-        manifest["constraints"] = cons
-    else:
-        manifest.pop("constraints", None)
+        put(manifest, "identity", ident)
+    put(manifest, "constraints", cons)
     cmap = dict(m.get("column_map", {}))
     phys = cmap.pop(name, name)
     dropped = list(m.get("dropped_physical", []))
     if phys not in dropped:
         dropped.append(phys)
     manifest["dropped_physical"] = dropped
-    if cmap:
-        manifest["column_map"] = cmap
-    else:
-        manifest.pop("column_map", None)
+    put(manifest, "column_map", cmap)
     if m.get("stats_cols"):
         manifest["stats_cols"] = [c for c in m["stats_cols"] if c != name]
     dflt = dict(m.get("defaults", {}))
@@ -5821,12 +5628,7 @@ def drop_column(
         # (round 15 review fix: a lingering entry would resurrect on a
         # later re-add of the same logical name)
         del dflt[name]
-        if dflt:
-            manifest["defaults"] = dflt
-        else:
-            manifest.pop("defaults", None)
-    # files unchanged — resolve through the chain for append tips
-    _carry_snapshot_files(spark, table_path, cur, m, manifest)
+        put(manifest, "defaults", dflt)
     _commit(spark, table_path, cur + 1, manifest)
     return cur + 1
 
@@ -5892,7 +5694,9 @@ def rename_column(
             f"cannot rename partition column {old!r} (hive paths carry "
             "the physical name; rewrite the table to repartition)"
         )
-    manifest = _metadata_ddl_manifest(m, cur, "rename_column")
+    manifest = _same_files_manifest(
+        spark, table_path, cur, m, version=cur + 1, op="rename_column"
+    )
     manifest["schema"] = StructType(
         [
             StructField(new, f.dataType, f.nullable, f.metadata)
@@ -5904,9 +5708,7 @@ def rename_column(
     cmap = dict(m.get("column_map", {}))
     phys = cmap.pop(old, old)
     cmap[new] = phys  # the physical name never changes — that's the point
-    manifest["column_map"] = {k: v for k, v in cmap.items() if k != v}
-    if not manifest["column_map"]:
-        manifest.pop("column_map")
+    put(manifest, "column_map", {k: v for k, v in cmap.items() if k != v})
     if m.get("stats_cols"):
         manifest["stats_cols"] = [
             new if c == old else c for c in m["stats_cols"]
@@ -5916,7 +5718,6 @@ def rename_column(
         # (round 15 review fix: a stale key would orphan the default)
         dflt[new] = dflt.pop(old)
         manifest["defaults"] = dflt
-    _carry_snapshot_files(spark, table_path, cur, m, manifest)
     _commit(spark, table_path, cur + 1, manifest)
     return cur + 1
 
@@ -5947,7 +5748,9 @@ def add_column(
     if name in schema.names:
         raise ValueError(f"column already exists: {name!r}")
     dtype = _parse_datatype_string(sql_type)
-    manifest = _metadata_ddl_manifest(m, cur, "add_column")
+    manifest = _same_files_manifest(
+        spark, table_path, cur, m, version=cur + 1, op="add_column"
+    )
     manifest["schema"] = StructType(
         list(schema.fields) + [StructField(name, dtype, True)]
     ).json()
@@ -5956,12 +5759,7 @@ def add_column(
         dict(m.get("column_map", {})),
         list(m.get("dropped_physical", [])),
     )
-    nonid = {k: v for k, v in cmap.items() if k != v}
-    if nonid:
-        manifest["column_map"] = nonid
-    else:
-        manifest.pop("column_map", None)
-    _carry_snapshot_files(spark, table_path, cur, m, manifest)
+    put(manifest, "column_map", {k: v for k, v in cmap.items() if k != v})
     _commit(spark, table_path, cur + 1, manifest)
     return cur + 1
 
@@ -6017,7 +5815,9 @@ def alter_column_type(
             "growth) are metadata-only; anything else needs an explicit "
             "copy-on-write migration"
         )
-    manifest = _metadata_ddl_manifest(m, cur, "alter_column_type")
+    manifest = _same_files_manifest(
+        spark, table_path, cur, m, version=cur + 1, op="alter_column_type"
+    )
     manifest["schema"] = StructType(
         [
             StructField(name, new_t, f.nullable, f.metadata)
@@ -6031,7 +5831,6 @@ def alter_column_type(
     # (int -> long after short -> int) keeps the original origin
     widened.setdefault(name, old_t.simpleString())
     manifest["widened"] = widened
-    _carry_snapshot_files(spark, table_path, cur, m, manifest)
     if "blooms" in manifest or "blooms_ref" in manifest:
         # BLOOM INVALIDATION (round 15, r14 advisory fix — the high
         # one): bitmaps were built by hashing values at the OLD
