@@ -2,7 +2,7 @@
 DELETE/UPDATE runs ONE witness scan that attributes matching rows to
 their data files (`_find_touched_files`), rewrites exactly those files,
 and carries every other file by reference with its stats/bloom/DV
-bookkeeping (`_commit_dml_rewrite`) — O(touched) write IO instead of
+bookkeeping (`_commit_partial_rewrite`) — O(touched) write IO instead of
 O(snapshot), Delta's find-touched-files contract. These tests pin the
 sharp edges the round-17 verdict listed as untested: kept-file
 identity, DV interaction (no resurrection, doomed-file DV rows
@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from wnv_etl_lab2_spark.operators.cdf import read_change_data
 from wnv_etl_lab2_spark.sources.table_paths import file_key, manifest_path
 from wnv_etl_lab2_spark.sources.versioned import (
-    _commit_dml_rewrite,
+    _commit_partial_rewrite,
     _read_manifest,
     _resolve_files,
     create_table,
@@ -168,14 +168,11 @@ def test_dml_rewrite_concurrency_check(spark, tmp_path):
     path = str(tmp_path / "t")
     _mk4(spark, path)
     m0 = _read_manifest(spark, path, 0)
-    doomed = [_resolve_files(spark, path, 0)[0]]
+    files = _resolve_files(spark, path, 0)
     live = read_table(spark, path).where(F.lit(False))
     append_table(spark.range(40, 45).selectExpr("id", "CAST(id AS DOUBLE) AS x"), path)
     with pytest.raises(ValueError, match="concurrency"):
-        _commit_dml_rewrite(
-            spark, path, 0, m0, doomed, live,
-            op="delete", row_preserving=False, changes_files=None,
-        )
+        _commit_partial_rewrite(spark, path, 0, m0, files, files[:1], live, "delete")
 
 
 def test_dv_spelling_insensitive_drop(spark, tmp_path):
@@ -231,11 +228,6 @@ def test_partition_only_predicate_skips_witness_scan(spark, tmp_path, monkeypatc
     assert V._partition_predicate_files(spark, files, m, "p IS NULL") == []
     # data-column reference: falls back (returns None)
     assert V._partition_predicate_files(spark, files, m, "p = 1 AND x > 0") is None
-    # nondeterministic predicate: must see every row, falls back too
-    assert (
-        V._partition_predicate_files(spark, files, m, "p = 1 OR rand() < 0.5")
-        is None
-    )
     # end-to-end: the partition-scoped delete takes the path-decided
     # fast route (non-None from _partition_predicate_files), so
     # _find_touched_files never runs its witness scan
@@ -252,4 +244,65 @@ def test_partition_only_predicate_skips_witness_scan(spark, tmp_path, monkeypatc
     assert seen["r"] and all("p=3" in f for f in seen["r"])
     assert sorted(r.id for r in read_table(spark, path).collect()) == [
         i for i in range(40) if i % 4 != 3
+    ]
+
+
+def test_nondeterministic_dml_is_refused(spark, tmp_path):
+    """A nondeterministic DELETE/UPDATE condition or SET expression is
+    refused in every mode, as Spark's analyzer refuses it
+    (INVALID_NON_DETERMINISTIC_EXPRESSIONS): the witness scan, the
+    rewrite and the change feed would each draw their own values. The
+    error names the expression, and nothing commits."""
+    from wnv_etl_lab2_spark.sources.transactions import TxnWrite, commit_transaction
+
+    path = str(tmp_path / "t")
+    df = (
+        spark.range(40)
+        .selectExpr("id", "CAST(id % 4 AS INT) AS p", "CAST(id AS DOUBLE) AS x")
+        .repartition(4, "id")
+    )
+    create_table(df, path, partition_by=["p"])
+    want = sorted(tuple(r) for r in read_table(spark, path).collect())
+    cases = [
+        ("rand() < 0.5", lambda: delete_from_table(
+            spark, path, "x >= 0 AND rand() < 0.5", change_data=True)),
+        # a partition-only predicate would otherwise be decided per
+        # partition from the paths
+        ("rand() < 0.5", lambda: delete_from_table(
+            spark, path, "p = 1 OR rand() < 0.5")),
+        ("rand() < 0.5", lambda: delete_from_table(
+            spark, path, "rand() < 0.5", mode="merge_on_read")),
+        ("rand() < 0.5", lambda: update_table(
+            spark, path, {"x": "0.0"}, "rand() < 0.5")),
+        ("SET id", lambda: update_table(
+            spark, path, {"id": "CAST(rand() * 100 AS BIGINT)"}, "p = 2")),
+        ("rand() < 0.5", lambda: commit_transaction(
+            spark, str(tmp_path / "_txn"),
+            [TxnWrite(df=None, table_path=path, op="delete",
+                      condition="rand() < 0.5")])),
+        ("SET x", lambda: commit_transaction(
+            spark, str(tmp_path / "_txn"),
+            [TxnWrite(df=None, table_path=path, op="chain", chain=(
+                {"op": "delete", "condition": "id = 0"},
+                {"op": "update", "set_exprs": {"x": "rand()"},
+                 "condition": "true"},
+            ))])),
+    ]
+    for named, run in cases:
+        with pytest.raises(ValueError, match="nondeterministic") as err:
+            run()
+        assert named in str(err.value)
+        assert latest_version(spark, path) == 0
+        assert sorted(tuple(r) for r in read_table(spark, path).collect()) == want
+    # rows appended from rand() inside a chain are data, not a DML
+    # expression: a deterministic DELETE over them still composes
+    commit_transaction(spark, str(tmp_path / "_txn"), [
+        TxnWrite(df=None, table_path=path, op="chain", chain=(
+            {"op": "append", "df": spark.range(1).selectExpr(
+                "100 AS id", "1 AS p", "rand() AS x")},
+            {"op": "delete", "condition": "id < 10"},
+        )),
+    ])
+    assert sorted(r.id for r in read_table(spark, path).collect()) == [
+        *range(10, 40), 100
     ]

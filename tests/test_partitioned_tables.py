@@ -34,6 +34,7 @@ from wnv_etl_lab2_spark.sources.versioned import (
     purge_deletion_vectors,
     read_table,
     rename_column,
+    table_detail,
     update_table,
 )
 from wnv_etl_lab2_spark.sources.table_paths import partition_values
@@ -518,28 +519,89 @@ def test_adversarial_partition_values_read_like_spark(spark, tmp_path):
 
 
 def test_adversarial_partition_values_dml_routes_agree(spark, tmp_path):
-    import wnv_etl_lab2_spark.sources.versioned as V
+    """One DELETE and one UPDATE through every DML route over the
+    adversarial partition values — partition path, witness scan, full
+    rewrite (predicates that touch every file) and a transaction —
+    after a merge-on-read delete, so deletion vectors ride each route.
+    All routes give the same rows, the recorded row counts match the
+    data, and each version's change rows are its row diff."""
+    from collections import Counter
 
-    part, wit = str(tmp_path / "part"), str(tmp_path / "wit")
-    _adv_table(spark, part)
-    _adv_table(spark, wit)
-    doomed, bumped = _ADVERSARIAL[::2], _ADVERSARIAL[1::2]
-    m, files = _read_manifest(spark, part, 0), _resolve_files(spark, part, 0)
+    import wnv_etl_lab2_spark.sources.versioned as V
+    from wnv_etl_lab2_spark.operators.cdf import read_change_data
+    from wnv_etl_lab2_spark.sources.transactions import (
+        TxnWrite,
+        commit_transaction,
+    )
+
+    t = {r: str(tmp_path / r) for r in ("part", "wit", "full", "txn")}
+    for r in ("part", "wit", "txn"):
+        _adv_table(spark, t[r])
+    # one file per partition, each with a sentinel row (id >= 200) the
+    # full-rewrite DELETE also removes, so its predicate touches every file
+    sentinels = [(200 + i, v, 0.0) for i, v in enumerate(_ADVERSARIAL)]
+    create_table(
+        spark.createDataFrame(_adv_rows() + sentinels, _ADV_SCHEMA).repartition(1),
+        t["full"],
+        partition_by=("p",),
+    )
+    doomed, bumped = _ADVERSARIAL[::2], _ADVERSARIAL[1::4]
+    m, files = _read_manifest(spark, t["part"], 0), _resolve_files(spark, t["part"], 0)
     # the partition-only predicates take the path-decided route, the
     # data-column ones the witness scan
     for vs in (doomed, bumped):
         got = V._partition_predicate_files(spark, files, m, _p_in(vs))
         assert got is not None and len(got) < len(files)
         assert V._partition_predicate_files(spark, files, m, _ids_in(vs)) is None
-    delete_from_table(spark, part, _p_in(doomed))
-    delete_from_table(spark, wit, _ids_in(doomed))
-    update_table(spark, part, {"s": "s + 1000"}, _p_in(bumped))
-    update_table(spark, wit, {"s": "s + 1000"}, _ids_in(bumped))
-    want = sorted(
-        (i, p, s + 1000) for i, p, s in _adv_rows() if p not in doomed
+    mor = "id >= 100 AND id < 200 AND id % 3 = 0"  # one row of p[2], p[5], p[8]
+    bump = {"s": "s + 1000"}
+    for r in t:
+        delete_from_table(spark, t[r], mor, change_data=True, mode="merge_on_read")
+    delete_from_table(spark, t["part"], _p_in(doomed), change_data=True)
+    delete_from_table(spark, t["wit"], _ids_in(doomed), change_data=True)
+    delete_from_table(
+        spark, t["full"], f"{_ids_in(doomed)} OR id >= 200", change_data=True
     )
-    assert _rows(read_table(spark, part)) == want
-    assert _rows(read_table(spark, wit)) == want
+    update_table(spark, t["part"], bump, _p_in(bumped), change_data=True)
+    update_table(spark, t["wit"], bump, _ids_in(bumped), change_data=True)
+    update_table(
+        spark, t["full"], {"s": f"IF({_ids_in(bumped)}, s + 1000, s)"}, "true",
+        change_data=True,
+    )
+    # transactional DML records no change files (TxnWrite carries none)
+    for w in (
+        TxnWrite(df=None, table_path=t["txn"], op="delete", condition=_p_in(doomed)),
+        TxnWrite(
+            df=None, table_path=t["txn"], op="update",
+            set_exprs=bump, condition=_ids_in(bumped),
+        ),
+    ):
+        commit_transaction(spark, str(tmp_path / "_txn"), [w])
+    want = sorted(
+        (i, p, s + 1000 if p in bumped else s)
+        for i, p, s in _adv_rows()
+        if p not in doomed and i not in (102, 105, 108)
+    )
+    for r, path in t.items():
+        assert _rows(read_table(spark, path)) == want, r
+        assert table_detail(spark, path).first().num_rows == len(want), r
+        for v in (1, 2, 3):
+            prev = Counter(_rows(read_table(spark, path, v - 1)))
+            cur = Counter(_rows(read_table(spark, path, v)))
+            assert _read_manifest(spark, path, v)["n_rows"] == sum(cur.values())
+            carried = set(_resolve_files(spark, path, v - 1)) & set(
+                _resolve_files(spark, path, v)
+            )
+            # the full route rewrites every file; the others carry some
+            assert bool(carried) == (r != "full" or v == 1), (r, v)
+            if r == "txn" and v > 1:
+                continue
+            out, into = Counter(), Counter()
+            for c in read_change_data(spark, path, v - 1, v).collect():
+                side = into if c._change_type in ("insert", "update_postimage") else out
+                side[(c.id, c.p, c.s)] += 1
+            # an UPDATE's unchanged matched rows emit equal pre/post images
+            assert (out - into, into - out) == (prev - cur, cur - prev), (r, v)
 
 
 def test_adversarial_partition_values_merge_on_read_then_purge(spark, tmp_path):

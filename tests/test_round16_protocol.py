@@ -457,3 +457,71 @@ def test_txn_chain_on_partitioned_table_with_evolution(spark, tmp_path):
     pruned = read_table(spark, t, partition_filter={"p": 1})
     assert sorted(r.id for r in pruned.collect()) == [3, 5, 100]
     spark.catalog.dropTempView("_r16_chain_wave")
+
+
+def test_txn_dml_carries_untouched_files(spark, tmp_path, monkeypatch):
+    """Transactional DELETE and UPDATE take the plain verbs'
+    touched-files route: only the files holding matching rows are
+    rewritten, every other file carries by reference. Readers see v0
+    while the pending manifests are published and the new rows once the
+    outcome marker commits; an aborted transaction leaves v0 readable
+    with every file present."""
+    import os
+
+    import wnv_etl_lab2_spark.sources.transactions as T
+    from wnv_etl_lab2_spark.sources.table_paths import local_path
+    from wnv_etl_lab2_spark.sources.versioned import _resolve_files
+
+    def mk(path):
+        create_table(
+            spark.range(200)
+            .selectExpr("id", "CAST(id % 4 AS INT) AS p", "CAST(id AS DOUBLE) AS x")
+            .repartition(4, "id"),
+            path,
+            partition_by=["p"],
+        )
+
+    t1, t2, log = str(tmp_path / "a"), str(tmp_path / "b"), str(tmp_path / "_txn")
+    mk(t1)
+    mk(t2)
+    f1, f2 = set(_resolve_files(spark, t1, 0)), set(_resolve_files(spark, t2, 0))
+    assert len(f1) == len(f2) == 16
+    v0 = {t: sorted(tuple(r) for r in read_table(spark, t).collect()) for t in (t1, t2)}
+    delete = TxnWrite(df=None, table_path=t1, op="delete", condition="id = 5")
+    update = TxnWrite(
+        df=None, table_path=t2, op="update", set_exprs={"x": "-x"}, condition="p = 2"
+    )
+
+    # aborted: the UPDATE fails validation after the DELETE published
+    with pytest.raises(ValueError, match="unknown columns"):
+        commit_transaction(spark, log, [
+            delete,
+            TxnWrite(df=None, table_path=t2, op="update",
+                     set_exprs={"nope": "1"}, condition="p = 2"),
+        ])
+    for t, files in ((t1, f1), (t2, f2)):
+        assert latest_version(spark, t) == 0
+        assert sorted(tuple(r) for r in read_table(spark, t).collect()) == v0[t]
+        assert all(os.path.exists(local_path(f)) for f in files)
+
+    seen = {}
+    decide = T.resolve_outcome
+
+    def observe(spark_, txn_log, txn_id, outcome):
+        # every pending manifest is published; the marker is not yet
+        seen.update({t: (latest_version(spark, t), _ids(spark, t)) for t in (t1, t2)})
+        return decide(spark_, txn_log, txn_id, outcome)
+
+    monkeypatch.setattr(T, "resolve_outcome", observe)
+    got = commit_transaction(spark, log, [delete, update])
+    assert got == {t1: 1, t2: 1}
+    assert seen == {t: (0, list(range(200))) for t in (t1, t2)}
+    # the DELETE rewrote one file, the UPDATE the p=2 partition's four
+    g1, g2 = set(_resolve_files(spark, t1, 1)), set(_resolve_files(spark, t2, 1))
+    assert len(f1 & g1) == 15
+    assert f2 & g2 == {f for f in f2 if "/p=2/" not in f} and len(f2 & g2) == 12
+    assert _ids(spark, t1) == [i for i in range(200) if i != 5]
+    assert sorted(tuple(r) for r in read_table(spark, t2).collect()) == sorted(
+        (i, p, -x if p == 2 else x) for i, p, x in v0[t2]
+    )
+    assert _read_manifest(spark, t1, 1)["n_rows"] == 199

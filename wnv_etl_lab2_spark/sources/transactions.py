@@ -93,7 +93,11 @@ class TxnWrite:
     verb stages its rewrite and publishes a PENDING (txn-stamped)
     manifest that no reader sees until the transaction's single
     outcome marker decides "committed" — so `DELETE FROM corpus` +
-    `INSERT INTO audit` land atomically, or neither does. For ``df``:
+    `INSERT INTO audit` land atomically, or neither does. A DELETE or
+    UPDATE takes the plain verb's touched-files route (`versioned._dml`):
+    only the files holding matching rows are rewritten, through the one
+    partial-rewrite committer (`versioned._commit_partial_rewrite`), and
+    every other file carries by reference. For ``df``:
     plain writes carry the rows to write; "merge"/"merge_upsert"
     carry the SOURCE frame; "delete"/"update" carry None."""
 
@@ -132,24 +136,23 @@ def _compose_chain(
     """The chain's composed result frame over the committed snapshot —
     sequential statement semantics as ONE lazy plan (Catalyst fuses
     the filters/projections; the corpus is scanned once at stage
-    time). Generated columns are dropped for recompute; UPDATE steps
-    use the same CASE-WHEN pre-update-read semantics as
-    `update_table`; MERGE steps (round 17) apply the shared clause
-    matrix (`versioned._merge_result`) over the composed view with the
-    cardinality check run EAGERLY at stage time — an Observation
-    riding the final write could silently never fire if a later step
-    filtered or discarded the merged frame, and sequential-statement
-    semantics demand the ambiguity raise regardless."""
-    from pyspark.sql import functions as F
-
+    time). Generated columns are dropped for recompute. DELETE and
+    UPDATE steps apply the verbs' own row transform
+    (`versioned._dml_rows`: keep-predicate, SET validation, CASE-WHEN
+    projection, nondeterminism refusal); MERGE steps (round 17) apply
+    the shared clause matrix (`versioned._merge_result`) over the
+    composed view with the cardinality check run EAGERLY at stage time
+    — an Observation riding the final write could silently never fire
+    if a later step filtered or discarded the merged frame, and
+    sequential-statement semantics demand the ambiguity raise
+    regardless."""
     from wnv_etl_lab2_spark.sources.versioned import (
+        _dml_rows,
         _merge_result,
-        _merge_schemas,
         read_table,
     )
 
     generated = prev0.get("generated") or {}
-    identity = prev0.get("identity") or {}
     # pin the base to the CAS'd version: a concurrent commit landing
     # between the version check and this read must lose at OUR publish
     # (slot taken), never silently become the chain's base
@@ -160,36 +163,9 @@ def _compose_chain(
             view = view.unionByName(step["df"], allowMissingColumns=True)
         elif op == "overwrite":
             view = step["df"]
-        elif op == "delete":
-            view = view.where(
-                ~F.coalesce(F.expr(step["condition"]), F.lit(False))
-            )
-        elif op == "update":
-            set_exprs = step["set_exprs"]
-            unknown = [c for c in set_exprs if c not in view.columns]
-            if unknown:
-                raise ValueError(
-                    f"UPDATE SET targets unknown columns: {unknown}"
-                )
-            bad = sorted(set(set_exprs) & (set(generated) | set(identity)))
-            if bad:
-                raise ValueError(
-                    f"UPDATE SET targets generated/identity column(s) "
-                    f"{bad} — engine-managed, not assignable"
-                )
-            hit = F.coalesce(
-                F.expr(step["condition"]).cast("boolean"), F.lit(False)
-            )
-            types = {f.name: f.dataType for f in view.schema.fields}
-            view = view.select(
-                *[
-                    F.when(
-                        hit, F.expr(set_exprs[c]).cast(types[c])
-                    ).otherwise(F.col(c)).alias(c)
-                    if c in set_exprs
-                    else F.col(c)
-                    for c in view.columns
-                ]
+        elif op in ("delete", "update"):
+            view = _dml_rows(
+                view, prev0, op, step["condition"], step.get("set_exprs")
             )
         elif op == "merge_upsert":
             from wnv_etl_lab2_spark.operators.scd import merge_upsert
@@ -204,29 +180,11 @@ def _compose_chain(
                     "with no per-statement change files; run it as the "
                     "table's only statement or outside the transaction"
                 )
-            src = step["df"]
-            if kw.pop("schema_evolution", False):
-                # the same additive-union evolution the standalone path
-                # applies (versioned.merge_into_table): source-only
-                # columns extend the composed view as NULL, and the
-                # chain's overwrite commit records the evolved schema
-                import json as _json
-
-                from pyspark.sql.types import StructType as _ST
-
-                evolved_st = _ST.fromJson(
-                    _json.loads(_merge_schemas(view.schema.json(), src.schema))
-                )
-                for f in evolved_st.fields:
-                    if f.name not in view.columns:
-                        view = view.withColumn(
-                            f.name, F.lit(None).cast(f.dataType)
-                        )
             view = _merge_result(
-                spark, view, src, kw.pop("on"),
+                spark, view, step["df"], kw.pop("on"),
                 kw.pop("matched", None), kw.pop("not_matched", None),
                 kw.pop("not_matched_by_source", None),
-                gen_cols=generated, ident_specs=identity,
+                gen_cols=generated, ident_specs=prev0.get("identity") or {},
                 dflt=prev0.get("defaults") or {},
                 eager_general_check=True,
                 **kw,

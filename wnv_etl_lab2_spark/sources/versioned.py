@@ -2648,21 +2648,7 @@ def read_table(
                 )
     else:
         files = _resolve_files(spark, table_path, version)
-    if not files:
-        # a legitimately EMPTY snapshot (explicit-schema CREATE TABLE,
-        # or an empty hive write): zero rows under the declared schema.
-        # Tables predating schema recording have nothing to type an
-        # empty frame with — those still refuse.
-        if "schema" not in m:
-            raise ValueError(
-                f"version {version} lists no files and records no schema"
-            )
-        from pyspark.sql.types import StructType
-
-        return spark.createDataFrame(
-            [], StructType.fromJson(json.loads(m["schema"]))
-        )
-    return _scan_snapshot_files(spark, files, m)
+    return _snapshot_frame(spark, files, m)
 
 
 def table_schema(spark: SparkSession, table_path: str, version: int | None = None):
@@ -2716,9 +2702,12 @@ def read_table_as_of_timestamp(
 def _delete_merge_on_read(
     spark: SparkSession,
     table_path: str,
+    cur: int,
+    m_prev: dict,
+    files: list[str],
     condition: str,
     change_data: bool,
-    txn: dict | None = None,
+    txn: dict | None,
 ) -> int:
     """DELETE as DELETION VECTORS (Delta DV, round 11): instead of
     rewriting every file (copy-on-write scans AND rewrites the whole
@@ -2730,23 +2719,22 @@ def _delete_merge_on_read(
     merge / update / optimize / CoW delete) materializes through
     `read_table` and RESETS the DV — Delta's compaction contract.
     ``dv_add`` records this version's own DV files so the change-feed
-    stream can emit exactly the deleted rows."""
+    stream can emit exactly the deleted rows. ``m_prev`` and ``files``
+    are the manifest and file list of version ``cur``, read once by
+    `_dml`."""
     import uuid
 
     from pyspark.sql import functions as F
 
-    cur = latest_version(spark, table_path)
-    if cur is None:
-        raise ValueError(f"not a versioned table (no log): {table_path}")
-    m_prev = _read_manifest(spark, table_path, cur)
-    files = _resolve_files(spark, table_path, cur)
     prev_dv = list(m_prev.get("dv", []))
     # the shared snapshot scan (round 13) already subtracts the prior
     # DVs, re-attaches partition columns from the paths, and projects
     # physical -> logical, so the condition evaluates against the
     # table's LOGICAL schema while _f/_ri keep the physical positions
     raw = _scan_snapshot_files(spark, files, m_prev, keep_meta=True)
-    doomed = raw.where(F.coalesce(F.expr(condition), F.lit(False))).localCheckpoint()
+    doomed = raw.where(_dml_hit(condition))
+    _refuse_nondeterministic(raw, doomed, "DELETE", {"WHERE": condition})
+    doomed = doomed.localCheckpoint()
     n_del = doomed.count()
     dv_dir = posixpath.join(table_path, _DV_DIR, f"v{cur + 1}-{uuid.uuid4().hex[:8]}")
     doomed.select(
@@ -2806,9 +2794,10 @@ def _partition_predicate_files(
     (`table_paths`), written as binary literals, and cast to the
     declared types, so null partitions and type coercion behave as in
     the witness scan. Returns None when the predicate references any
-    data column (analysis fails on the partition-only frame), is
-    nondeterministic (it must see each row), or the table is
-    unpartitioned — callers fall back to the witness scan."""
+    data column (analysis fails on the partition-only frame) or the
+    table is unpartitioned — callers fall back to the witness scan. A
+    nondeterministic predicate is refused by the DML route's row
+    transform (`_dml_rows`) before anything is written."""
     import re as _re
 
     from pyspark.sql.types import StructType
@@ -2867,10 +2856,7 @@ def _partition_predicate_files(
         f"WHERE coalesce(CAST(({condition}) AS BOOLEAN), false)"
     )
     try:
-        probe = spark.sql(q)
-        if not probe._jdf.queryExecution().analyzed().deterministic():
-            return None
-        matched = [r["_pt_i"] for r in probe.collect()]
+        matched = [r["_pt_i"] for r in spark.sql(q).collect()]
     except Exception:
         return None  # references data columns (or uncastable values)
     return [f for i in matched for f in by_tuple[keys[i]]]
@@ -2890,23 +2876,198 @@ def _find_touched_files(
     pushes into the parquet scan (footer/row-group stats prune
     non-matching files to metadata reads), while the old full-snapshot
     rewrite paid a write of every byte the table owns."""
-    from pyspark.sql import functions as F
-
     if len(files) <= 1:
         return None
     doomed = _partition_predicate_files(spark, files, m, condition)
     if doomed is not None:
         return doomed if len(doomed) < len(files) else None
     scan = _scan_snapshot_files(spark, files, m, keep_meta=True)
-    hit = F.coalesce(F.expr(condition).cast("boolean"), F.lit(False))
     touched = {
         file_key(manifest_path(r["_f"]))
-        for r in scan.where(hit).select("_f").distinct().collect()
+        for r in scan.where(_dml_hit(condition)).select("_f").distinct().collect()
     }
     doomed = [f for f in files if file_key(f) in touched]
     if len(doomed) == len(files):
         return None  # nothing prunable: the full-rewrite path is cheaper
     return doomed
+
+
+def _dml_hit(condition: str):
+    """The rows a DML ``condition`` selects, in SQL three-valued logic:
+    a NULL-valued condition selects nothing (a bare ``where(~cond)``
+    would drop the row — ~NULL is NULL; round-9 advisory fix)."""
+    from pyspark.sql import functions as F
+
+    return F.coalesce(F.expr(condition).cast("boolean"), F.lit(False))
+
+
+def _refuse_nondeterministic(
+    base: DataFrame, out: DataFrame, verb: str, exprs: dict[str, str]
+) -> None:
+    """Refuse nondeterministic DML ``exprs`` ({clause: SQL text}) as
+    Spark's analyzer does: the witness scan, the rewrite and the change
+    feed would each draw their own values. ``out`` is ``base`` with the
+    expressions applied; its plan is already analyzed. Only when it is
+    nondeterministic is each expression analyzed alone, to name the
+    culprit — or none, when ``base`` itself is (a chain over rows
+    appended from ``rand()``)."""
+    from pyspark.sql import functions as F
+
+    if out._jdf.queryExecution().analyzed().deterministic():
+        return
+    for clause, text in exprs.items():
+        probe = base.select(F.expr(text).alias("_e"))._jdf.queryExecution()
+        if not probe.analyzed().expressions().apply(0).deterministic():
+            raise ValueError(
+                f"{verb} {clause} is nondeterministic: {text!r} — a DML "
+                "condition or SET expression must be deterministic, as "
+                "in Spark (INVALID_NON_DETERMINISTIC_EXPRESSIONS)"
+            )
+
+
+def _dml_rows(
+    frame: DataFrame,
+    m: dict,
+    op: str,
+    condition: str,
+    set_exprs: dict[str, str] | None = None,
+) -> DataFrame:
+    """The one definition of DML row semantics over ``frame`` (rows of
+    the table whose manifest is ``m``), for `_dml` and transaction
+    chains: DELETE keeps the rows ``condition`` does not select; UPDATE
+    is one CASE-WHEN projection — SET expressions see the OLD row and
+    cast to the column type — then generated columns recompute over the
+    post-SET row (the gen_ CHECK invariant riding the write holds).
+    SET may not target unknown, GENERATED or IDENTITY columns."""
+    from pyspark.sql import functions as F
+
+    hit = _dml_hit(condition)
+    if op == "delete":
+        out = frame.where(~hit)
+        _refuse_nondeterministic(frame, out, "DELETE", {"WHERE": condition})
+        return out
+    missing = [c for c in set_exprs if c not in frame.columns]
+    if missing:
+        raise ValueError(f"UPDATE SET targets unknown columns: {missing}")
+    gen = m.get("generated") or {}
+    direct = sorted(set(set_exprs) & set(gen))
+    if direct:
+        raise ValueError(
+            f"UPDATE SET targets GENERATED column(s) {direct} — generated "
+            "values derive from their expression; update the base columns "
+            "and the engine recomputes"
+        )
+    ident_hit = sorted(set(set_exprs) & set(m.get("identity") or {}))
+    if ident_hit:
+        raise ValueError(
+            f"UPDATE SET targets IDENTITY column(s) {ident_hit} — identity "
+            "values are engine-allocated and immutable"
+        )
+    types = {f.name: f.dataType for f in frame.schema.fields}
+    out = frame.select(
+        *[
+            F.when(hit, F.expr(set_exprs[c]).cast(types[c]))
+            .otherwise(F.col(c))
+            .alias(c)
+            if c in set_exprs
+            else F.col(c)
+            for c in frame.columns
+        ]
+    )
+    if gen:
+        out = out.select(
+            *[
+                F.expr(gen[c]).cast(types[c]).alias(c) if c in gen else F.col(c)
+                for c in out.columns
+            ]
+        )
+    _refuse_nondeterministic(
+        frame, out, "UPDATE",
+        {"WHERE": condition, **{f"SET {c}": e for c, e in set_exprs.items()}},
+    )
+    return out
+
+
+def _snapshot_frame(spark: SparkSession, files: list[str], m: dict) -> DataFrame:
+    """The logical rows of ``files`` under manifest ``m``; an EMPTY
+    snapshot (explicit-schema CREATE TABLE, empty hive write) is zero
+    rows under the declared schema — tables predating schema recording
+    have nothing to type it with and refuse."""
+    if files:
+        return _scan_snapshot_files(spark, files, m)
+    if "schema" not in m:
+        raise ValueError(
+            f"version {m.get('version')} lists no files and records no schema"
+        )
+    from pyspark.sql.types import StructType
+
+    return spark.createDataFrame([], StructType.fromJson(json.loads(m["schema"])))
+
+
+def _dml(
+    spark: SparkSession,
+    table_path: str,
+    op: str,
+    condition: str,
+    set_exprs: dict[str, str] | None = None,
+    change_data: bool = False,
+    txn: dict | None = None,
+    merge_on_read: bool = False,
+) -> int:
+    """The one route of a versioned-table DELETE or UPDATE: the Python
+    verbs, the SQL surface and transactional DML (``txn``) all arrive
+    here. It reads the latest manifest and file list once, decides the
+    touched files (`_find_touched_files`: partition paths, else one
+    witness scan, else None = every file), applies the row transform
+    (`_dml_rows`) to just those files — or the snapshot — and builds
+    the change rows from that same frame. A partial rewrite commits
+    through `_commit_partial_rewrite`, O(touched) write IO (no file
+    touched: a metadata-only version); the full route through
+    `_write_version`. A merge-on-read DELETE keeps its deletion-vector
+    strategy (`_delete_merge_on_read`) over the same reads."""
+    from pyspark.sql import functions as F
+
+    cur = latest_version(spark, table_path)
+    if cur is None:
+        raise ValueError(f"not a versioned table (no log): {table_path}")
+    m = _read_manifest(spark, table_path, cur)
+    files = _resolve_files(spark, table_path, cur)
+    if merge_on_read:
+        return _delete_merge_on_read(
+            spark, table_path, cur, m, files, condition, change_data, txn
+        )
+    doomed = _find_touched_files(spark, files, m, condition)
+    frame = _snapshot_frame(spark, doomed or files, m)
+    if doomed == []:  # no file holds a matching row: metadata-only
+        frame = frame.where(F.lit(False))
+    live = _dml_rows(frame, m, op, condition, set_exprs)
+    changes_files = None
+    if change_data:
+        # Delta CDF vocabulary: a DELETE retracts each selected row; an
+        # UPDATE emits its pre- and post-image (round-12 advisory fix)
+        hits = frame.where(_dml_hit(condition))
+        if op == "delete":
+            changes = hits.withColumn("_change_type", F.lit("delete"))
+        else:
+            changes = hits.withColumn(
+                "_change_type", F.lit("update_preimage")
+            ).unionByName(
+                _dml_rows(hits, m, op, condition, set_exprs).withColumn(
+                    "_change_type", F.lit("update_postimage")
+                )
+            )
+        changes_files = _write_change_data(
+            changes, table_path, cur + 1, column_map=m.get("column_map")
+        )
+    if doomed is None:
+        return _write_version(
+            live, table_path, cur + 1, op, expect_latest=cur,
+            changes_files=changes_files, txn=txn,
+        )
+    return _commit_partial_rewrite(
+        spark, table_path, cur, m, files, doomed, live, op,
+        changes_files=changes_files, txn=txn,
+    )
 
 
 def _carry_file_metadata(
@@ -2918,8 +3079,8 @@ def _carry_file_metadata(
     new_files: list[str],
 ) -> None:
     """The PER-FILE METADATA (`table_manifest.FILE_METADATA`) of a
-    PARTIAL rewrite, shared by the DML and maintenance committers, which
-    inherit only the declarations wholesale: ``manifest`` (version
+    PARTIAL rewrite, for `_commit_partial_rewrite` (DML and maintenance
+    alike), which inherits only the declarations wholesale: ``manifest`` (version
     ``manifest["version"]``) replaces the files whose `file_key` is in
     ``gone`` with ``new_files`` and carries every other file of ``m``,
     file by file.
@@ -2981,41 +3142,40 @@ def _carry_file_metadata(
             )
 
 
-def _commit_dml_rewrite(
+def _commit_partial_rewrite(
     spark: SparkSession,
     table_path: str,
     cur: int,
     m: dict,
+    files: list[str],
     doomed: list[str],
-    live_sub: DataFrame,
+    live: DataFrame,
     op: str,
-    row_preserving: bool,
-    changes_files: list[str] | None,
+    changes_files: list[str] | None = None,
+    txn: dict | None = None,
 ) -> int:
-    """Commit a TOUCHED-FILES-ONLY DML rewrite (round 17): ``live_sub``
-    (the post-DML logical rows of exactly the ``doomed`` files)
-    replaces those files; every other file carries by reference. A
-    partial rewrite inherits the DECLARATIONS class wholesale
-    (`table_manifest`) — ``widened`` included, since kept files retain
-    their narrower physical types — and the PER-FILE METADATA class
-    file by file (`_carry_file_metadata`, shared with
-    `_commit_subset_rewrite` for OPTIMIZE/DV-purge), with DML op
-    stamping and row-count accounting. Write cost is O(touched files),
-    never O(snapshot). Constraints ride the subset write (kept files'
-    rows already passed them at their own write); identity marks cannot
-    advance (DML never allocates)."""
+    """Commit a PARTIAL rewrite of version ``cur`` (manifest ``m``, file
+    list ``files``): ``live``, the post-op rows of exactly the
+    ``doomed`` files, replaces them; every other file carries by
+    reference. The one committer for touched-files DML (``op`` delete /
+    update, `_dml`) and the data-neutral ``optimize`` rewrites
+    (partition-scoped `optimize_table`, `purge_deletion_vectors`). It
+    inherits the DECLARATIONS wholesale — ``widened`` included, kept
+    files keep their narrow types — and the PER-FILE METADATA file by
+    file (`_carry_file_metadata`). CHECK constraints ride the write;
+    only a DELETE recounts rows (doomed files' logical rows leave, the
+    written rows enter); ``txn`` stamps the manifest pending. A DML
+    refuses a commit that landed after ``cur``; OPTIMIZE rebases past
+    winning appends instead."""
     version = cur + 1
-    files = _resolve_files(spark, table_path, cur)
     gone = {file_key(f) for f in doomed}
-    kept = [f for f in files if file_key(f) not in gone]
-    constraints = m.get("constraints", {})
-    live_sub, check = _enforce_constraints(
-        live_sub, constraints, f"{op} -> {table_path}"
+    live, check = _enforce_constraints(
+        live, m.get("constraints", {}), f"{op} -> {table_path}"
     )
     vdir = _attempt_dir(table_path, version)
     new_files: list[str] = []
     if doomed:
-        writer = _to_physical(live_sub, m.get("column_map", {})).write.mode("error")
+        writer = _to_physical(live, m.get("column_map", {})).write.mode("error")
         if m.get("partition_by"):
             writer = writer.partitionBy(*m["partition_by"])
         writer.parquet(vdir)
@@ -3026,11 +3186,8 @@ def _commit_dml_rewrite(
             fs.delete(jvm.org.apache.hadoop.fs.Path(vdir), True)
             raise
         new_files = _data_files(spark, vdir)
-    # row accounting: UPDATE preserves cardinality; DELETE recounts the
-    # rewritten slice only — doomed files' LOGICAL rows (physical minus
-    # their DV-deleted positions) leave, the written files' rows enter.
     n_rows = int(m["n_rows"])
-    if not row_preserving:
+    if op == "delete" and doomed:
         doomed_phys = _footer_row_count(doomed)
         if doomed_phys is None:
             doomed_logical = _scan_snapshot_files(spark, doomed, m).count()
@@ -3048,18 +3205,105 @@ def _commit_dml_rewrite(
         **inherit(m, DECLARATIONS),
         "version": version,
         "op": op,
-        "files": kept + new_files,
+        "files": [f for f in files if file_key(f) not in gone] + new_files,
         "n_rows": int(n_rows),
     }
     if changes_files is not None:
         manifest["changes"] = changes_files
+    if txn is not None:
+        manifest["txn"] = dict(txn)
     _carry_file_metadata(spark, table_path, m, manifest, gone, new_files)
-    if latest_version(spark, table_path) != cur:
-        raise ValueError(
-            f"optimistic concurrency check failed: expected latest={cur} "
-            "— re-read and retry"
-        )
-    _commit(spark, table_path, version, manifest)
+    if op != "optimize":
+        if latest_version(spark, table_path) != cur:
+            raise ValueError(
+                f"optimistic concurrency check failed: expected latest={cur} "
+                "— re-read and retry"
+            )
+        _commit(spark, table_path, version, manifest)
+        return version
+    rewritten_files = [new_files]  # 1-slot cell: the rebase helper
+    # updates it after renaming the attempt dir, so a SECOND rebase
+    # iteration sees the current paths
+
+    def _rebase_after_lost_race(staged: dict):
+        """Conflict-matrix row 2 (round 14): a SUBSET rewrite — it
+        touches exactly the ``doomed`` files — COMMUTES with pure
+        appends (they only add files), so losing the commit race to an
+        append chain re-commits against the new tip: kept files = tip
+        files minus doomed, row count = the tip's (the rewrite is
+        row-neutral), stats = tip's minus doomed plus the new files'.
+        This is Delta's OPTIMIZE-vs-append no-conflict rule — at 100 TB
+        compaction always races ingest, and re-running the compaction
+        scan per lost race would make maintenance starve under load.
+        Falls back to the closure re-run when any winner is not a
+        plain visible append, changed any declaration, or when this
+        rewrite consolidated DV / bloom sidecars (their version-named
+        artifacts would need re-staging — the rare case serializes)."""
+        nonlocal vdir
+        if staged.get("dv") != m.get("dv") or (
+            staged.get("blooms_ref") != m.get("blooms_ref")
+        ):
+            return None
+        new_cur = latest_version(spark, table_path)
+        all_vs = _list_versions(spark, table_path)
+        if (
+            new_cur is None
+            or not all_vs
+            or max(all_vs) != new_cur
+            or new_cur <= cur
+        ):
+            return None
+        for v in range(cur + 1, new_cur + 1):
+            w = _read_manifest(spark, table_path, v)
+            if not _txn_visible(spark, w) or w.get("op") != "append":
+                return None
+        tip = _read_manifest(spark, table_path, new_cur)
+        # the rebase recomputes the stats below; every other inherited
+        # key must be the one this rewrite was staged against
+        if inherit(tip, DECLARATIONS, FILE_METADATA, skip=STATS) != inherit(
+            m, DECLARATIONS, FILE_METADATA, skip=STATS
+        ):
+            return None
+        nv = new_cur + 1
+        nf = rewritten_files[0]  # this attempt's new files (tracked —
+        # NOT a positional slice of staged["files"], which goes stale
+        # after the first rebase iteration)
+        if nf:
+            new_vdir = _attempt_dir(table_path, nv)
+            fs2, jvm2 = _fs(spark, table_path)
+            jp = jvm2.org.apache.hadoop.fs.Path
+            if not fs2.rename(jp(vdir), jp(new_vdir)):
+                return None  # racing vacuum collected it: re-run rewrites
+            vdir = new_vdir
+            nf = _data_files(spark, new_vdir)
+            rewritten_files[0] = nf
+        tip_files = _resolve_files(spark, table_path, new_cur)
+        m2 = dict(staged)
+        m2.pop("ts_ms", None)  # fresh visibility stamp (see append rebase)
+        m2["version"] = nv
+        m2["files"] = [f for f in tip_files if file_key(f) not in gone] + nf
+        m2["n_rows"] = int(tip["n_rows"])
+        put(m2, "stats", {
+            f: s for f, s in tip.get("stats", {}).items() if file_key(f) not in gone
+        })
+        _maintain_stats(m2, nf)
+        put(m2, "stats_ref", dict(tip.get("stats_ref") or {}))
+        return nv, m2
+
+    rebases = 0
+    while True:
+        try:
+            _commit(spark, table_path, version, manifest)
+            break
+        except Exception:
+            vs_now = _list_versions(spark, table_path)
+            rebases += 1
+            if not vs_now or max(vs_now) < version or rebases >= 5:
+                raise
+            rebased = _rebase_after_lost_race(manifest)
+            if rebased is None:
+                raise  # caller's with_retries closure re-runs
+            version, manifest = rebased
     return version
 
 
@@ -3072,87 +3316,28 @@ def delete_from_table(
     txn: dict | None = None,
 ) -> int:
     """DELETE: commit a new version without the rows matching
-    ``condition`` (a SQL boolean expression). Decomposed as
-    filter-and-rewrite of the latest snapshot — the simplest honest
-    form (real formats optimize to touched-files-only rewrites using
-    per-file stats; without per-file column stats in this manifest
-    subset, every file is potentially touched, so the rewrite is
-    full-snapshot and says so). SQL DELETE semantics: only rows where
-    the condition is TRUE are removed — a NULL-valued condition (e.g.
-    ``score >= 100`` on a NULL score) KEEPS the row, which a bare
-    ``where(~cond)`` would silently drop (three-valued logic: ~NULL is
-    NULL, and filters drop NULL), so the keep-predicate coalesces the
-    condition to FALSE first (round-9 advisory fix).
+    ``condition`` (a SQL boolean expression; a NULL-valued condition
+    KEEPS the row) through the one DML route, `_dml` — only the files
+    holding matching rows are rewritten. A nondeterministic condition
+    is refused, as in Spark.
 
     ``change_data=True`` additionally persists the DELETED rows as a
     row-level change file (``_change_type='delete'``) inside the same
-    commit — O(deleted rows), computed from the predicate the delete
-    already evaluates — so change-feed readers pay O(changed rows)
-    instead of reconstructing O(rewritten files) from the file diff
-    (round 11; Delta's enableChangeDataFeed write path).
+    commit — O(deleted rows) — so change-feed readers need not
+    reconstruct O(rewritten files) from the file diff (round 11;
+    Delta's enableChangeDataFeed write path).
 
-    ``mode="merge_on_read"`` (round 11) switches the physical strategy
-    to DELETION VECTORS: no data file is rewritten — the doomed rows'
-    positions are recorded and subtracted at read time
-    (`_delete_merge_on_read`). Same logical result, O(deleted rows)
-    write cost instead of O(snapshot) — the right trade when deletes
-    are sparse; compaction (OPTIMIZE or any full-rewrite op) folds the
-    vectors back in."""
-    if mode == "merge_on_read":
-        return _delete_merge_on_read(
-            spark, table_path, condition, change_data, txn=txn
-        )
-    if mode != "copy_on_write":
+    ``mode="merge_on_read"`` (round 11) records the doomed rows'
+    positions as DELETION VECTORS subtracted at read time instead of
+    rewriting any file (`_delete_merge_on_read`) — O(deleted rows)
+    write cost, the right trade when deletes are sparse; compaction
+    folds the vectors back in. ``txn`` (round 16) stamps the commit
+    pending inside a cross-table transaction; the route is the same."""
+    if mode not in ("copy_on_write", "merge_on_read"):
         raise ValueError(f"mode must be copy_on_write|merge_on_read, got {mode!r}")
-    cur = latest_version(spark, table_path)
-    if cur is None:
-        raise ValueError(f"not a versioned table (no log): {table_path}")
-    from pyspark.sql import functions as F
-
-    m_cur = _read_manifest(spark, table_path, cur)
-    changes_files = None
-    if change_data:
-        deleted = read_table(spark, table_path, cur).where(
-            F.coalesce(F.expr(condition), F.lit(False))
-        )
-        changes_files = _write_change_data(
-            deleted.withColumn("_change_type", F.lit("delete")),
-            table_path,
-            cur + 1,
-            column_map=m_cur.get("column_map"),
-        )
-    if txn is None:
-        # TOUCHED-FILES-ONLY rewrite (round 17): one witness scan finds
-        # the files that actually hold matching rows; only those are
-        # rewritten, the rest carry by reference — O(touched) write IO
-        # instead of O(snapshot). A predicate over only partition
-        # columns skips even the witness scan (round 18 — the files
-        # are decided from their hive paths). Transactional deletes
-        # keep the full rewrite (their staging composes whole-snapshot
-        # chains). The full-snapshot plan is built ONLY on the paths
-        # that consume it — never as dead plan-construction work on
-        # the touched-files route.
-        files_cur = _resolve_files(spark, table_path, cur)
-        doomed = _find_touched_files(spark, files_cur, m_cur, condition)
-        if doomed is not None:
-            if doomed:
-                live_sub = _scan_snapshot_files(spark, doomed, m_cur).where(
-                    ~F.coalesce(F.expr(condition), F.lit(False))
-                )
-            else:
-                # no file holds a matching row: metadata-only version
-                live_sub = read_table(spark, table_path, cur).where(F.lit(False))
-            return _commit_dml_rewrite(
-                spark, table_path, cur, m_cur, doomed, live_sub,
-                op="delete", row_preserving=False,
-                changes_files=changes_files,
-            )
-    remaining = read_table(spark, table_path, cur).where(
-        ~F.coalesce(F.expr(condition), F.lit(False))
-    )
-    return _write_version(
-        remaining, table_path, cur + 1, "delete", expect_latest=cur,
-        changes_files=changes_files, txn=txn,
+    return _dml(
+        spark, table_path, "delete", condition, change_data=change_data,
+        txn=txn, merge_on_read=(mode == "merge_on_read"),
     )
 
 
@@ -3169,10 +3354,10 @@ def update_table(
     version where rows matching ``condition`` have each ``set_exprs``
     column replaced by its expression (evaluated against the OLD row,
     standard UPDATE semantics — all assignments see pre-update
-    values). SQL three-valued logic: a NULL condition leaves the row
-    unmodified, exactly like DELETE's keep-rule. Decomposed as one
-    CASE-WHEN projection over the latest snapshot — a single scan,
-    pure map, committed as a rewrite version.
+    values; a NULL condition leaves the row unmodified). One CASE-WHEN
+    projection (`_dml_rows`) over only the files holding matching rows,
+    through the one DML route, `_dml`; nondeterministic conditions and
+    SET expressions are refused, as in Spark.
 
     ``change_data=True`` persists the row-level change set in the same
     commit: each updated row's pre-image retracts
@@ -3181,107 +3366,9 @@ def update_table(
     the snapshot-diff `cdf.table_changes` API (round-12 advisory fix)
     — O(updated rows), so the change feed streams a 1-row UPDATE as
     2 rows."""
-    from pyspark.sql import functions as F
-
-    cur = latest_version(spark, table_path)
-    if cur is None:
-        raise ValueError(f"not a versioned table (no log): {table_path}")
-    snapshot = read_table(spark, table_path, cur)
-    missing = [c for c in set_exprs if c not in snapshot.columns]
-    if missing:
-        raise ValueError(f"UPDATE SET targets unknown columns: {missing}")
-    m_cur = _read_manifest(spark, table_path, cur)
-    gen = m_cur.get("generated") or {}
-    direct = sorted(set(set_exprs) & set(gen))
-    if direct:
-        raise ValueError(
-            f"UPDATE SET targets GENERATED column(s) {direct} — generated "
-            "values derive from their expression; update the base columns "
-            "and the engine recomputes"
-        )
-    ident_hit = sorted(set(set_exprs) & set(m_cur.get("identity") or {}))
-    if ident_hit:
-        raise ValueError(
-            f"UPDATE SET targets IDENTITY column(s) {ident_hit} — identity "
-            "values are engine-allocated and immutable"
-        )
-    hit = F.coalesce(F.expr(condition).cast("boolean"), F.lit(False))
-
-    def _post(c: str):
-        # the post-update value of column c (assignments see PRE-update
-        # values; generated columns recompute over the POST-SET row)
-        if c in set_exprs:
-            return F.expr(set_exprs[c]).cast(snapshot.schema[c].dataType)
-        return F.col(c)
-
-    def _apply_update(frame: DataFrame) -> DataFrame:
-        out = frame.select(
-            *[
-                F.when(hit, _post(c)).otherwise(F.col(c)).alias(c)
-                for c in frame.columns
-            ]
-        )
-        if gen:
-            # recompute generated columns from the post-SET row so the
-            # gen_ CHECK invariant riding the rewrite stays satisfiable
-            # (untouched rows recompute to their identical stored value)
-            out = out.select(
-                *[
-                    F.expr(gen[c]).cast(snapshot.schema[c].dataType).alias(c)
-                    if c in gen
-                    else F.col(c)
-                    for c in out.columns
-                ]
-            )
-        return out
-
-    changes_files = None
-    if change_data:
-        pre = snapshot.where(hit).withColumn(
-            "_change_type", F.lit("update_preimage")
-        )
-        post = snapshot.where(hit).select(
-            *[_post(c).alias(c) for c in snapshot.columns]
-        )
-        if gen:
-            post = post.select(
-                *[
-                    F.expr(gen[c]).cast(snapshot.schema[c].dataType).alias(c)
-                    if c in gen
-                    else F.col(c)
-                    for c in post.columns
-                ]
-            )
-        post = post.withColumn("_change_type", F.lit("update_postimage"))
-        changes_files = _write_change_data(
-            pre.unionByName(post), table_path, cur + 1,
-            column_map=_read_manifest(spark, table_path, cur).get("column_map"),
-        )
-    if txn is None:
-        # TOUCHED-FILES-ONLY rewrite (round 17; see delete_from_table):
-        # UPDATE is row-preserving, so only the files holding matching
-        # rows rewrite — a partition-scoped UPDATE of a 100 TB table
-        # writes one partition, not the snapshot (and a partition-only
-        # predicate decides the files from their paths, round 18). The
-        # full-snapshot CASE-WHEN plan is built only on the paths that
-        # consume it.
-        files_cur = _resolve_files(spark, table_path, cur)
-        doomed = _find_touched_files(spark, files_cur, m_cur, condition)
-        if doomed is not None:
-            if doomed:
-                live_sub = _apply_update(
-                    _scan_snapshot_files(spark, doomed, m_cur)
-                )
-            else:
-                live_sub = _apply_update(snapshot).where(F.lit(False))
-            return _commit_dml_rewrite(
-                spark, table_path, cur, m_cur, doomed, live_sub,
-                op="update", row_preserving=True,
-                changes_files=changes_files,
-            )
-    return _write_version(
-        _apply_update(snapshot), table_path, cur + 1, "update",
-        expect_latest=cur, changes_files=changes_files, txn=txn,
+    return _dml(
+        spark, table_path, "update", condition, set_exprs=set_exprs,
+        change_data=change_data, txn=txn,
     )
 
 
@@ -3408,6 +3495,7 @@ def _merge_result(
     ident_specs: dict,
     dflt: dict,
     eager_general_check: bool = False,
+    schema_evolution: bool = False,
 ) -> dict:
     """The MERGE clause matrix as a pure FRAME-LEVEL transform of
     (base, source) — shared by `merge_into_table` (base = the committed
@@ -3432,10 +3520,26 @@ def _merge_result(
     inner-join probe at stage time (one extra join over the composed
     view, the documented price of composing a general-ON MERGE into a
     chain; sequential-statement semantics demand the ambiguity still
-    raise even if a later step discards the merge)."""
+    raise even if a later step discards the merge).
+
+    ``schema_evolution=True`` is MERGE WITH SCHEMA EVOLUTION (round 13 —
+    Delta's autoMerge): source-only columns extend ``base`` via the SAME
+    additive-union rule appends use (`_merge_schemas` — type changes
+    still refuse loudly); existing target rows read the new columns as
+    NULL, and the * forms then assign/insert them by name. The caller's
+    commit records the evolved schema: the result's schema IS it."""
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
+    if schema_evolution:
+        from pyspark.sql.types import StructType
+
+        evolved = StructType.fromJson(
+            json.loads(_merge_schemas(base.schema.json(), source.schema))
+        )
+        for f in evolved.fields:
+            if f.name not in base.columns:
+                base = base.withColumn(f.name, F.lit(None).cast(f.dataType))
     matched = matched or []
     not_matched = not_matched or []
     not_matched_by_source = not_matched_by_source or []
@@ -3756,22 +3860,6 @@ def merge_into_table(
     if cur is None:
         raise ValueError(f"not a versioned table (no log): {table_path}")
     base = read_table(spark, table_path, cur)
-    if schema_evolution:
-        # MERGE WITH SCHEMA EVOLUTION (round 13 — Delta's autoMerge):
-        # source-only columns extend the target schema via the SAME
-        # additive-union rule appends use (`_merge_schemas` — type
-        # changes still refuse loudly); existing target rows read the
-        # new columns as NULL, and the * forms then assign/insert them
-        # by name. The evolution is part of this one commit: the
-        # rewritten snapshot's schema IS the evolved schema.
-        from pyspark.sql.types import StructType
-
-        evolved = StructType.fromJson(
-            json.loads(_merge_schemas(base.schema.json(), source.schema))
-        )
-        for f in evolved.fields:
-            if f.name not in base.columns:
-                base = base.withColumn(f.name, F.lit(None).cast(f.dataType))
     # GENERATED / IDENTITY interplay (round 14): generated columns are
     # never assignable through MERGE — every surviving row's value is
     # RECOMPUTED from its expression after the clause matrix (so the
@@ -3791,7 +3879,7 @@ def merge_into_table(
     mr = _merge_result(
         spark, base, source, on, matched, not_matched,
         not_matched_by_source, gen_cols=gen_cols, ident_specs=ident_specs,
-        dflt=dflt,
+        dflt=dflt, schema_evolution=schema_evolution,
     )
     result = mr["result"]
     pre_commit_check = mr["pre_commit_check"]
@@ -3961,131 +4049,12 @@ def optimize_table(
             return None
         live = _scan_snapshot_files(spark, target, m)
         compacted = _compact_frame(live, partition_by, zorder_by, target_files)
-        return _commit_subset_rewrite(
-            spark, table_path, cur, m, target, compacted
+        return _commit_partial_rewrite(
+            spark, table_path, cur, m, files, target, compacted, "optimize"
         )
     base = read_table(spark, table_path, cur)
     compacted = _compact_frame(base, partition_by, zorder_by, target_files)
     return _write_version(compacted, table_path, cur + 1, "optimize", expect_latest=cur)
-
-
-def _commit_subset_rewrite(
-    spark: SparkSession,
-    table_path: str,
-    cur: int,
-    m: dict,
-    doomed: list[str],
-    live_df: DataFrame,
-) -> int:
-    """Commit a PARTIAL rewrite as ``op=optimize`` (data-neutral):
-    ``live_df`` replaces exactly the ``doomed`` files; every other
-    file is carried untouched. Like `_commit_dml_rewrite` it inherits
-    the DECLARATIONS class wholesale and the PER-FILE METADATA class
-    file by file (`table_manifest`, `_carry_file_metadata`). Shared by
-    `purge_deletion_vectors` and partition-scoped `optimize_table` —
-    the two maintenance verbs whose whole point at 100 TB is rewriting
-    O(selected files), never the snapshot."""
-    version = cur + 1
-    files = _resolve_files(spark, table_path, cur)
-    gone = {file_key(f) for f in doomed}
-    vdir = _attempt_dir(table_path, version)
-    writer = _to_physical(live_df, m.get("column_map", {})).write.mode("error")
-    if m.get("partition_by"):
-        writer = writer.partitionBy(*m["partition_by"])
-    writer.parquet(vdir)
-    new_files = _data_files(spark, vdir)
-    rewritten_files = [new_files]  # 1-slot cell: the rebase helper
-    # updates it after renaming the attempt dir, so a SECOND rebase
-    # iteration sees the current paths
-    manifest = {
-        **inherit(m, DECLARATIONS),
-        "version": version,
-        "op": "optimize",
-        "files": [f for f in files if file_key(f) not in gone] + new_files,
-        "n_rows": int(m["n_rows"]),
-    }
-    _carry_file_metadata(spark, table_path, m, manifest, gone, new_files)
-
-    def _rebase_after_lost_race(staged: dict):
-        """Conflict-matrix row 2 (round 14): a SUBSET rewrite — it
-        touches exactly the ``doomed`` files — COMMUTES with pure
-        appends (they only add files), so losing the commit race to an
-        append chain re-commits against the new tip: kept files = tip
-        files minus doomed, row count = the tip's (the rewrite is
-        row-neutral), stats = tip's minus doomed plus the new files'.
-        This is Delta's OPTIMIZE-vs-append no-conflict rule — at 100 TB
-        compaction always races ingest, and re-running the compaction
-        scan per lost race would make maintenance starve under load.
-        Falls back to the closure re-run when any winner is not a
-        plain visible append, changed any declaration, or when this
-        rewrite consolidated DV / bloom sidecars (their version-named
-        artifacts would need re-staging — the rare case serializes)."""
-        nonlocal vdir
-        if staged.get("dv") != m.get("dv") or (
-            staged.get("blooms_ref") != m.get("blooms_ref")
-        ):
-            return None
-        new_cur = latest_version(spark, table_path)
-        all_vs = _list_versions(spark, table_path)
-        if (
-            new_cur is None
-            or not all_vs
-            or max(all_vs) != new_cur
-            or new_cur <= cur
-        ):
-            return None
-        for v in range(cur + 1, new_cur + 1):
-            w = _read_manifest(spark, table_path, v)
-            if not _txn_visible(spark, w) or w.get("op") != "append":
-                return None
-        tip = _read_manifest(spark, table_path, new_cur)
-        # the rebase recomputes the stats below; every other inherited
-        # key must be the one this rewrite was staged against
-        if inherit(tip, DECLARATIONS, FILE_METADATA, skip=STATS) != inherit(
-            m, DECLARATIONS, FILE_METADATA, skip=STATS
-        ):
-            return None
-        nv = new_cur + 1
-        nf = rewritten_files[0]  # this attempt's new files (tracked —
-        # NOT a positional slice of staged["files"], which goes stale
-        # after the first rebase iteration)
-        if nf:
-            new_vdir = _attempt_dir(table_path, nv)
-            fs2, jvm2 = _fs(spark, table_path)
-            jp = jvm2.org.apache.hadoop.fs.Path
-            if not fs2.rename(jp(vdir), jp(new_vdir)):
-                return None  # racing vacuum collected it: re-run rewrites
-            vdir = new_vdir
-            nf = _data_files(spark, new_vdir)
-            rewritten_files[0] = nf
-        tip_files = _resolve_files(spark, table_path, new_cur)
-        m2 = dict(staged)
-        m2.pop("ts_ms", None)  # fresh visibility stamp (see append rebase)
-        m2["version"] = nv
-        m2["files"] = [f for f in tip_files if file_key(f) not in gone] + nf
-        m2["n_rows"] = int(tip["n_rows"])
-        put(m2, "stats", {
-            f: s for f, s in tip.get("stats", {}).items() if file_key(f) not in gone
-        })
-        _maintain_stats(m2, nf)
-        put(m2, "stats_ref", dict(tip.get("stats_ref") or {}))
-        return nv, m2
-
-    rebases = 0
-    while True:
-        try:
-            _commit(spark, table_path, version, manifest)
-            break
-        except Exception:
-            vs_now = _list_versions(spark, table_path)
-            rebases += 1
-            if not vs_now or max(vs_now) < version or rebases >= 5:
-                raise
-            rebased = _rebase_after_lost_race(manifest)
-            if rebased is None:
-                raise  # caller's with_retries closure re-runs
-            version, manifest = rebased
-    return version
 
 
 def purge_deletion_vectors(
@@ -4148,9 +4117,11 @@ def purge_deletion_vectors(
     # from the paths and rewritten files land back under their hive
     # dirs, and column-mapped tables write the stable physical names;
     # manifest assembly (kept-file stats/blooms, DV re-consolidation)
-    # is the shared partial-rewrite commit
+    # is the one partial-rewrite committer
     live = _scan_snapshot_files(spark, doomed, m)
-    return _commit_subset_rewrite(spark, table_path, cur, m, doomed, live)
+    return _commit_partial_rewrite(
+        spark, table_path, cur, m, files, doomed, live, "optimize"
+    )
 
 
 def vacuum_table(
