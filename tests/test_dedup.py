@@ -119,6 +119,91 @@ def test_simhash_near_pairs_finds_planted_dup(spark):
     assert any((r.doc_a, r.doc_b) == (1, 2) for r in pairs)
 
 
+def _simhash_jvm_reference(docs, id_col="doc_id", text_col="text"):
+    """The SQL formula simhash_signatures used to run on the JVM, kept
+    as the slow path its Arrow kernel is tested against: split on ' ',
+    drop empty tokens, md5 each token, parse hex chars 1-8 / 9-16 as
+    the high / low word, then (here in plain Python) the per-bit +/-1
+    sums and the >0 bit assembly."""
+    tok = f"filter(split({text_col}, ' '), t -> t <> '')"
+    words = (
+        docs.where(F.expr(f"exists(split({text_col}, ' '), t -> t <> '')"))
+        .selectExpr(id_col, f"transform({tok}, t -> md5(t)) AS _m")
+        .selectExpr(
+            id_col,
+            "transform(_m, m -> CAST(conv(substring(m, 1, 8), 16, 10) AS BIGINT)) AS _hhi",
+            "transform(_m, m -> CAST(conv(substring(m, 9, 8), 16, 10) AS BIGINT)) AS _hlo",
+        )
+    )
+
+    def word(hashes):
+        sums = [0] * 32
+        for h in hashes:
+            for j in range(32):
+                sums[j] += 1 if (h >> j) & 1 else -1
+        return sum(1 << j for j in range(32) if sums[j] > 0)
+
+    return {(r[0], word(r[1]), word(r[2])) for r in words.collect()}
+
+
+def test_simhash_kernel_equals_jvm_formula(spark):
+    """Differential test of the Arrow kernel against the retired JVM
+    formula on the inputs where a re-implemented split/md5 can differ:
+    runs of spaces, empty and all-space texts, NULL, tabs and newlines
+    inside tokens (the split is on ' ' only), multi-byte UTF-8, a
+    one-token document, and a 40,000-token document whose bit sums
+    overflow an int8/int16 accumulator. One-row batches make batches
+    in which every document is dropped; string ids check the id
+    pass-through; large Arrow string types are read too. Several
+    batches per partition in every setting."""
+    import random
+
+    rng = random.Random(7)
+    vocab = ["a", "spark", "ü", "漢字", "😀", "x\ty", "line\nbreak", "tok"]
+    rows = [
+        (1, "  a  spark   a  "),
+        (2, ""),
+        (3, "    "),
+        (4, None),
+        (5, "x\ty z\nw\t \n"),
+        (6, "ü 漢字 😀 ü"),
+        (7, "solo"),
+        # 20,001 x's against 19,999 y's: bits where the two md5 words
+        # agree sum to +/-40,000
+        (8, "x " * 20_001 + "y " * 19_999),
+    ] + [
+        (i, " ".join(rng.choice(vocab) for _ in range(rng.randint(1, 30))))
+        for i in range(9, 70)
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    want = _simhash_jvm_reference(docs)
+    assert len(want) == len(rows) - 3  # '', all spaces and NULL give no row
+    str_docs = docs.selectExpr("CAST(doc_id AS STRING) AS key", "text AS body")
+    str_want = {(str(i), hi, lo) for i, hi, lo in want}
+
+    keys = (
+        "spark.sql.execution.arrow.maxRecordsPerBatch",
+        "spark.sql.execution.arrow.useLargeVarTypes",
+    )
+    prev = [spark.conf.get(k) for k in keys]
+    try:
+        for setting in (("1", "false"), ("3", "true")):
+            for k, v in zip(keys, setting):
+                spark.conf.set(k, v)
+            got = simhash_signatures(docs)
+            assert {tuple(r) for r in got.collect()} == want
+            got = simhash_signatures(str_docs, id_col="key", text_col="body")
+            assert {tuple(r) for r in got.collect()} == str_want
+    finally:
+        for k, v in zip(keys, prev):
+            spark.conf.set(k, v)
+
+    plan = simhash_signatures(docs)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1
+    assert "MapInPandas" not in plan and "EvalPython" not in plan
+    assert "Generate" not in plan and "HashAggregate" not in plan
+
+
 def test_lsh_ann_recall_vs_bruteforce(spark, sf_dir):
     """Hyperplane-LSH top-10 must overlap the exact top-10 — the
     recall floor that makes the approximate path useful."""
@@ -223,6 +308,29 @@ def test_connected_components_chain(spark):
         for r in connected_components(edges, driver_max_edges=0).collect()
     }
     assert got_dist == want
+
+
+def test_connected_components_probe_leaves_conf_and_runs_fixed_jobs(spark):
+    """The driver-route probe over a shuffled 16-partition edge list
+    leaves the session conf exactly as it found it and runs 2 jobs,
+    as many as it ran under the spark.sql.limit.initialNumPartitions
+    override it used to set: toArrow does not take incrementally."""
+    from wnv_etl_lab2_spark.operators.dedup import connected_components
+
+    edges = spark.range(0, 200, 1, 4).selectExpr(
+        "id AS doc_a", "id + 1 AS doc_b"
+    ).repartition(16, "doc_a")
+    sc = spark.sparkContext
+    before = dict(spark.conf.getAll)
+    sc.setJobGroup("cc_probe", "connected_components probe")
+    try:
+        comp = connected_components(edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert dict(spark.conf.getAll) == before
+    assert len(sc.statusTracker().getJobIdsForGroup("cc_probe")) == 2
+    assert {r.comp_id for r in comp.collect()} == {0}
 
 
 def test_semantic_dedup_prunes_planted_duplicates(spark):

@@ -433,24 +433,11 @@ def connected_components(
     # materialization pass; the distributed route below checkpoints
     # before its iterations instead (one acceptable re-execution on
     # the rare big-graph path).
-    # CollectLimit defaults to INCREMENTAL job submission (1 partition,
-    # then 4x more per round, spark.sql.limit.scaleUpFactor) — correct
-    # when the limit is tiny relative to the data, but this probe's
-    # bound is far above the expected edge count, so every round comes
-    # back short and a 32-partition edge list pays FOUR sequential
-    # job launches (measured ~0.85 s of the 1.87 s wall at sf0.1, each
-    # re-running only the final stage but paying full scheduling).
-    # Submitting over every partition at once turns the probe into ONE
-    # job; at scale a genuinely huge edge list stops at the same bound
-    # either way (round 18, guide §1/§5 driver-side latency).
-    sess = edges.sparkSession
-    _k = "spark.sql.limit.initialNumPartitions"
-    prev = sess.conf.get(_k, None)
-    sess.conf.set(_k, str(max(1, sess.sparkContext.defaultParallelism)))
-    try:
-        probe_tbl = edges.limit(driver_max_edges + 1).toArrow()
-    finally:
-        sess.conf.set(_k, prev) if prev is not None else sess.conf.unset(_k)
+    # toArrow executes the CollectLimit over every partition at once,
+    # not as collect()'s incremental take, so
+    # spark.sql.limit.initialNumPartitions does not change its job
+    # count (measured on every caller); the probe sets no session conf.
+    probe_tbl = edges.limit(driver_max_edges + 1).toArrow()
     probe = list(zip(probe_tbl.column(0).to_pylist(), probe_tbl.column(1).to_pylist()))
 
     # SIZE-ADAPTIVE ROUTING (same policy as the near-dup pair kernels,
@@ -548,101 +535,120 @@ def connected_components(
 def simhash_signatures(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """64-bit SimHash per document over whitespace tokens.
+    """64-bit SimHash per document over the non-empty tokens of
+    ``split(text, ' ')``.
 
-    The 64 token-hash bits are two 32-bit words parsed from the md5
-    hex digest (chars 1-8 -> high word, 9-16 -> low word) rather than
-    xxhash64: md5 is the one hash both Spark and DuckDB implement
-    bit-identically, which makes the whole signature SQL-expressible
-    and lets the driver verify it against an exact oracle (the
-    engine-portability trick the exact-dedup queries already rely
-    on). Bit j of the signature is set iff the sum of (+1/-1)
-    contributions of bit j across tokens is positive.
+    The 64 token-hash bits are two 32-bit words read big-endian from
+    the first 8 bytes of the token's md5 digest (hex chars 1-8 -> high
+    word, 9-16 -> low word) rather than xxhash64: md5 is the one hash
+    both Spark and DuckDB implement bit-identically, which keeps the
+    signature SQL-expressible and lets the driver verify it against an
+    exact oracle (the DuckDB twin in queries/similarity_q.py). Bit j
+    of the signature is set iff the sum of (+1/-1) contributions of
+    bit j across tokens is positive. The signature comes back as two
+    non-negative 32-bit halves (simhash_hi, simhash_lo), so neither
+    overflows a signed bigint. Null texts and texts with no non-empty
+    token produce no row.
 
-    Shape: a PURE MAP over each partition — the token hashes are
-    computed in-row on the JVM (md5 is C-side and cheap), and the
-    per-bit counts + bit assembly run in an Arrow-vectorized
-    mapInPandas kernel (numpy unpackbits + segmented reduce). No
-    explode, no groupBy; the only exchange is a row-level spreading
-    repartition that is SKIPPED whenever the input already has
-    adequate parallelism — at 100 TB a parquet scan arrives in
-    thousands of splits and nothing crosses the wire; locally a
-    single-file scan (1 partition) is spread once so all 32 cores
-    hash. The md5 digest array is projected in its OWN select and the
-    hi/lo word parses reference it from the next select: the digest
-    is referenced twice, so CollapseProject keeps the binding and md5
-    runs ONCE per token (measured 2.24 s -> 1.40 s at x16 vs the
-    per-word double-md5 form).
-    History (SCALE_SMOKE.md): the previous 64-per-bit-SUM codegen
-    aggregate form emitted one row per TOKEN into a groupBy and grew
-    6.6x wall at 16x input — per-token work was rows x 64 aggregate
-    updates; an in-row SQL fold was 5x slower still (interpreted
-    lambda). The numpy kernel does the same arithmetic at ~1 byte-op
-    per token-bit. Signature returned as two 32-bit halves (hi, lo)
-    to avoid signed-64 overflow in the bit assembly.
-    """
+    Shape: ONE mapInArrow kernel over (id, text), a pure map with no
+    explode and no groupBy. Per Arrow batch it
+      1. tokenizes with Arrow C++ (split on ' ', parent indices, empty
+         tokens dropped);
+      2. dictionary-encodes the tokens and runs md5 once per DISTINCT
+         token of the batch — a token that repeats within a batch is
+         hashed once, not once per occurrence;
+      3. sums the +/-1 bits per document: per 4-bit nibble of the
+         two words, one bincount over (document, nibble value) times a
+         16x4 bit table (no tokens x 64 bit matrix is materialized;
+         counts are exact at any document length);
+      4. packs the set bits into the (hi, lo) words.
+    The only exchange is a row-level spreading repartition that is
+    SKIPPED whenever the input already has adequate parallelism — at
+    100 TB a parquet scan arrives in thousands of splits and nothing
+    crosses the wire; locally a single-file scan is spread once, to
+    ~128 KiB of input per task (catalog.scan_width).
+    tests/test_dedup.py keeps the former JVM formula (split, filter,
+    md5, conv(substring), per-bit sums) as the kernel's differential
+    reference."""
+    import hashlib
+
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    tok = f"filter(split({text_col}, ' '), t -> t <> '')"
-    # NOT width-right-sized (round 18): the per-token md5 + conv map
-    # feeding the Arrow kernel is CPU-bound out of all proportion to
-    # input bytes (same class as winnow_fingerprints) — the derived
-    # width starved cores (A/B at 32 cores: full 0.35-0.46 s vs
-    # derived 0.46-0.50 s, and the r18 bench regressed it +0.13 s)
-    nparts = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    # Spread only under-parallel inputs (single-file local scans);
-    # getNumPartitions is a plan inspection, not a job.
+    from wnv_etl_lab2_spark.sources.catalog import scan_width
+
+    # Spread only under-parallel inputs (single-file local scans), to
+    # the byte-derived width like the other per-row text maps: on 4
+    # cores the derived width beat full width (sf0.01 0.44 vs 0.52 s at
+    # 4 shuffle partitions; sf0.1 0.64 vs 0.79 s at 8). getNumPartitions
+    # is a plan inspection, not a job.
+    nparts = scan_width(
+        docs, int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    )
     if docs.rdd.getNumPartitions() < nparts:
         docs = docs.repartition(nparts, id_col)
-    base = (
-        docs.where(F.expr(f"exists(split({text_col}, ' '), t -> t <> '')"))
-        .selectExpr(id_col, f"transform({tok}, t -> md5(t)) AS _m")
-        .selectExpr(
-            id_col,
-            "transform(_m, m -> CAST(conv(substring(m, 1, 8), 16, 10) AS BIGINT)) AS _hhi",
-            "transform(_m, m -> CAST(conv(substring(m, 9, 8), 16, 10) AS BIGINT)) AS _hlo",
-        )
-    )
     id_dt = docs.schema[id_col].dataType.simpleString()
+    # nibble_bits[v, k] = bit k (LSB first) of nibble value v
+    nibble_bits = np.unpackbits(
+        np.arange(16, dtype=np.uint8)[:, None], axis=1, bitorder="little"
+    )[:, :4].astype(np.float64)
+    # digest bytes in little-endian word order: bytes 0-3 are the
+    # big-endian high word, 4-7 the low word, so signature bit 8*i + k
+    # is bit k of digest byte word_bytes[i]
+    word_bytes = [3, 2, 1, 0, 7, 6, 5, 4]
 
     def _kernel(batches):
-        shifts = np.arange(32, dtype=np.uint64)
-        for pdf in batches:
-            if len(pdf) == 0:
+        for batch in batches:
+            n = batch.num_rows
+            # as binary: the split and md5 run on the UTF-8 bytes, which
+            # is what Spark's md5(string) hashes
+            toks = pc.split_pattern(batch.column(1).cast(pa.large_binary()), b" ")
+            flat = pc.list_flatten(toks)
+            keep = pc.not_equal(flat, b"")
+            flat = flat.filter(keep)
+            doc = pc.list_parent_indices(toks).filter(keep).to_numpy()
+            lens = np.bincount(doc, minlength=n)
+            rows = np.flatnonzero(lens)
+            if len(rows) == 0:
                 continue
-            lens = pdf["_hhi"].map(len).to_numpy()
-            offsets = np.zeros(len(lens), dtype=np.int64)
-            np.cumsum(lens[:-1], out=offsets[1:])
-            out = {}
-            for col, name in (("_hhi", "simhash_hi"), ("_hlo", "simhash_lo")):
-                allh = np.concatenate(pdf[col].to_numpy()).astype(np.uint32)
-                # little-endian uint32 -> 4 bytes LSB-first; column k
-                # of the unpacked matrix is bit k of the word
-                bits = np.unpackbits(
-                    allh.view(np.uint8).reshape(-1, 4), axis=1, bitorder="little"
-                ).astype(np.int64)
-                counts = np.add.reduceat(bits, offsets, axis=0)
-                set_bits = (2 * counts - lens[:, None]) > 0
-                out[name] = (set_bits.astype(np.uint64) << shifts).sum(
-                    axis=1
-                ).astype(np.int64)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "simhash_hi": out["simhash_hi"], "simhash_lo": out["simhash_lo"]}
+            enc = pc.dictionary_encode(flat)
+            vocab = enc.dictionary
+            # slice the tokens out of the dictionary's data buffer:
+            # cheaper than materializing them with to_pylist
+            bounds = np.frombuffer(vocab.buffers()[1], np.int64)[vocab.offset :]
+            bounds = bounds[: len(vocab) + 1].tolist()
+            data = vocab.buffers()[2].to_pybytes()
+            digests = b"".join(
+                [hashlib.md5(data[a:b]).digest() for a, b in zip(bounds, bounds[1:])]
+            )
+            tok_bytes = np.frombuffer(digests, np.uint8).reshape(-1, 16)[:, word_bytes][
+                enc.indices.to_numpy()
+            ]
+            # signature bits 4i..4i+3 are nibble i: the low (even i) or
+            # high (odd i) half of word byte i // 2
+            # float64 so the 16x4 product runs in BLAS; the counts stay
+            # exact integers (below 2**53)
+            key = doc.astype(np.int64) * 16
+            counts = np.empty((n, 64))
+            for i in range(16):
+                nibble = (tok_bytes[:, i // 2] >> (4 * (i % 2))) & 15
+                per_value = np.bincount(key + nibble, minlength=n * 16)
+                counts[:, 4 * i : 4 * i + 4] = per_value.reshape(n, 16) @ nibble_bits
+            set_bits = 2 * counts[rows] > lens[rows, None]
+            words = np.packbits(set_bits, axis=1, bitorder="little").view("<u4")
+            yield pa.record_batch(
+                [
+                    batch.column(0).take(pa.array(rows)),
+                    pa.array(words[:, 0].astype(np.int64)),
+                    pa.array(words[:, 1].astype(np.int64)),
+                ],
+                names=[id_col, "simhash_hi", "simhash_lo"],
             )
 
-    return base.mapInPandas(
-        _kernel, schema=f"{id_col} {id_dt}, simhash_hi bigint, simhash_lo bigint"
+    return docs.select(id_col, text_col).mapInArrow(
+        _kernel, f"`{id_col}` {id_dt}, simhash_hi bigint, simhash_lo bigint"
     )
-
-
-def sum_bits_expr(lo_bit: int, hi_bit: int) -> str:
-    """SQL expression assembling bits [lo_bit, hi_bit) into a long."""
-    terms = [
-        f"(CASE WHEN s{j} > 0 THEN CAST({1 << (j - lo_bit)} AS BIGINT) ELSE 0 END)"
-        for j in range(lo_bit, hi_bit)
-    ]
-    return " + ".join(terms)
 
 
 def simhash_near_pairs(

@@ -413,10 +413,12 @@ def dedup_components(spark, sf_dir):
 
 
 def _simhash_oracle() -> str:
-    """DuckDB twin of operators/dedup.simhash_signatures: same md5
-    word split, same per-bit (+1/-1) sums, same >0 bit assembly. The
-    64 sum expressions are generated, not hand-typed, so the bit
-    layout cannot drift from the Spark side's generated aggregates."""
+    """DuckDB twin of operators/dedup.simhash_signatures: same split on
+    ' ', same md5 words (hex chars 1-8 high, 9-16 low), same per-bit
+    (+1/-1) sums, same >0 bit assembly, computed as SQL aggregates
+    independently of the Spark side's Arrow kernel. The 64 sum
+    expressions are generated, not hand-typed, so one bit's term
+    cannot differ from the others."""
     def bit(j: int) -> str:
         return f"(hlo >> {j}) & 1" if j < 32 else f"(hhi >> {j - 32}) & 1"
 
