@@ -15,13 +15,20 @@ import pandas as pd
 from wnv_etl_lab2_spark.sources.catalog import TABLES
 
 
+def table_source(path: str) -> str:
+    """The DuckDB source of one table: a single parquet file, or a
+    directory of part files read through a glob (the rule
+    `perfbench/checks.table_source` applies to staged inputs)."""
+    return f"read_parquet('{path}/*.parquet')" if os.path.isdir(path) else f"'{path}'"
+
+
 def run_oracle(sql: str, sf_dir: str) -> pd.DataFrame:
     con = duckdb.connect()
     for t in TABLES:
         path = os.path.join(sf_dir, t + ".parquet")
         if not os.path.exists(path):
             continue  # synthetic fixture dirs stage only the tables they use
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM {table_source(path)}")
     return con.sql(sql).df()
 
 

@@ -248,3 +248,29 @@ def test_append_commit_survives_checkpoint_failure(spark, tmp_path, monkeypatch)
     assert {r.id for r in vsn.read_table(spark, tbl).collect()} == set(
         range(vsn.CHECKPOINT_EVERY + 1)
     )
+
+
+def test_upsert_change_data_skips_unchanged_rows(spark, tbl):
+    """An upsert writes the MERGE change vocabulary: a matched row whose
+    values do not change emits no update_preimage/update_postimage
+    pair."""
+    from wnv_etl_lab2_spark.operators.cdf import read_change_data
+
+    merge_upsert_table(
+        spark.createDataFrame(
+            [(0, "v0", 0), (1, "V1", 10), (100, "new", 5)],
+            "id long, name string, score long",
+        ),
+        tbl,
+        "id",
+        change_data=True,
+    )
+    ch = sorted(
+        (r._change_type, r.id, r.name)
+        for r in read_change_data(spark, tbl, 0).collect()
+    )
+    assert ch == [
+        ("insert", 100, "new"),
+        ("update_postimage", 1, "V1"),
+        ("update_preimage", 1, "v1"),
+    ]

@@ -391,7 +391,7 @@ def test_sql_general_merge_clause_matrix(spark, tmp_path):
         (2, "b+upd", 25), (3, "c", 30), (4, "d", 40), (9, "new", 90)
     }
 
-    # legacy fast form still routes through merge_upsert_table
+    # the upsert form is the same clause matrix (UPDATE SET * / INSERT *)
     ups = spark.createDataFrame([(2, "Z", 0), (7, "q", 7)], schema)
     ups.createOrReplaceTempView("ups")
     sql.run(
@@ -764,3 +764,25 @@ def test_sql_transaction_failure_leaves_both_tables_untouched(spark, tmp_path):
     assert read_table(spark, a).count() == 0
     assert read_table(spark, b).count() == 0
     assert latest_version(spark, a) == 0 and latest_version(spark, b) == 1
+
+
+def test_sql_upsert_merge_checks_cardinality(spark, tmp_path):
+    """The upsert spelling runs the same cardinality check as every
+    other MERGE: a source key matching one target row twice raises and
+    commits nothing; the same statement with a clause condition agrees."""
+    tbl = str(tmp_path / "t")
+    create_table(spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string"), tbl)
+    spark.createDataFrame(
+        [(2, "x"), (2, "y")], "id long, v string"
+    ).createOrReplaceTempView("dup")
+    sql = DeltaSql(spark, {"t": tbl})
+    for matched in ("WHEN MATCHED", "WHEN MATCHED AND true"):
+        with pytest.raises(ValueError, match="cardinality"):
+            sql.run(
+                f"MERGE INTO t USING dup ON t.id = dup.id {matched} THEN "
+                "UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+            )
+        assert latest_version(spark, tbl) == 0
+    assert sorted(tuple(r) for r in read_table(spark, tbl).collect()) == [
+        (1, "a"), (2, "b"),
+    ]

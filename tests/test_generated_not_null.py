@@ -187,3 +187,25 @@ def test_not_null_sql_surface(spark, nn_table):
 def test_not_null_on_unknown_column_refuses(spark, nn_table):
     with pytest.raises(ValueError, match="no such column"):
         set_not_null(spark, nn_table, "ghost")
+
+
+def test_merge_star_validates_supplied_generated(spark, gen_table):
+    """Under the * forms a generated value the source carries is
+    written and checked, on a matched and on an inserted row; a source
+    without the column recomputes it."""
+    from wnv_etl_lab2_spark.sources.versioned import (
+        _upsert_clauses,
+        merge_into_table,
+    )
+
+    v0 = latest_version(spark, gen_table)
+    for key in (1, 3):
+        bad = spark.createDataFrame([(key, 7, 999)], "id long, amount long, total long")
+        with pytest.raises(ValueError, match="gen_total"):
+            merge_into_table(spark, gen_table, bad, **_upsert_clauses("id"))
+    assert latest_version(spark, gen_table) == v0
+    omitted = spark.createDataFrame([(1, 7), (3, 9)], "id long, amount long")
+    merge_into_table(spark, gen_table, omitted, **_upsert_clauses("id"))
+    assert _content(read_table(spark, gen_table)) == {
+        (7, 1, 14), (20, 2, 40), (9, 3, 18),
+    }

@@ -79,3 +79,30 @@ def test_cms_estimates_within_bounds(spark, sf_dir):
         .count()
     )
     assert (out.est_cnt - out.exact_cnt <= 0.001 * n_tokens + 1).all()
+
+
+def test_oracle_reads_part_file_directories(sf_dir, tmp_path):
+    """A table staged as a directory of part files gives the oracle the
+    same frame as the single file it was split from."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    single, parts = tmp_path / "single", tmp_path / "parts"
+    single.mkdir()
+    parts.mkdir()
+    for t in ("nation", "region"):
+        src = os.path.join(sf_dir, t + ".parquet")
+        os.symlink(src, single / f"{t}.parquet")
+        table = pq.read_table(src)
+        half = table.num_rows // 2
+        (parts / f"{t}.parquet").mkdir()
+        pq.write_table(table.slice(0, half), parts / f"{t}.parquet" / "part-0.parquet")
+        pq.write_table(table.slice(half), parts / f"{t}.parquet" / "part-1.parquet")
+    sql = (
+        "SELECT r_name, count(*) AS n_nations, sum(n_nationkey) AS key_sum "
+        "FROM nation JOIN region ON n_regionkey = r_regionkey GROUP BY r_name"
+    )
+    want = run_oracle(sql, str(single))
+    assert len(want) > 0
+    compare(run_oracle(sql, str(parts)), want, "part_file_views")

@@ -604,6 +604,76 @@ def test_adversarial_partition_values_dml_routes_agree(spark, tmp_path):
             assert (out - into, into - out) == (prev - cur, cur - prev), (r, v)
 
 
+def test_adversarial_partition_values_merge_surfaces_agree(spark, tmp_path):
+    """One upsert through every MERGE surface — `merge_upsert_table`,
+    `merge_into_table` with the same clauses, the SQL upsert statement
+    and a transaction — over the adversarial partition values, after a
+    merge-on-read delete so deletion vectors ride along. The upsert
+    changes a value, moves a row between partitions (and into the NULL
+    one), re-inserts a deleted id, inserts new ids and repeats one row
+    unchanged. All surfaces give the same rows, the recorded row counts
+    match the data, and each version's change rows are its row diff."""
+    from collections import Counter
+
+    import wnv_etl_lab2_spark.sources.versioned as V
+    from wnv_etl_lab2_spark.operators.cdf import read_change_data
+    from wnv_etl_lab2_spark.sources.delta_sql import DeltaSql
+    from wnv_etl_lab2_spark.sources.transactions import (
+        TxnWrite,
+        commit_transaction,
+    )
+
+    ups = [
+        (0, "a+b", 0.0),  # unchanged
+        (1, "e%f", 501.0),
+        (3, "m#n", 3.0),  # x y -> m#n
+        (4, None, 4.0),  # q=r -> NULL partition
+        (110, None, 7.0),
+        (102, "g/h", 9.0),  # deleted by the merge-on-read delete
+        (300, "k'l", 1.5),
+        (301, None, 2.5),
+    ]
+    src = spark.createDataFrame(ups, _ADV_SCHEMA)
+    src.createOrReplaceTempView("adv_ups")
+    clauses = V._upsert_clauses("id")
+    t = {r: str(tmp_path / r) for r in ("upsert", "into", "sql", "txn")}
+    for r, path in t.items():
+        _adv_table(spark, path)
+        delete_from_table(
+            spark, path, "id >= 100 AND id < 200 AND id % 3 = 0",
+            change_data=True, mode="merge_on_read",
+        )
+    merge_upsert_table(src, t["upsert"], "id", change_data=True)
+    V.merge_into_table(spark, t["into"], src, change_data=True, **clauses)
+    DeltaSql(spark, {"t": t["sql"]}).run(
+        "MERGE INTO t USING adv_ups ON t.id = adv_ups.id "
+        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+    )
+    commit_transaction(spark, str(tmp_path / "_txn"), [
+        TxnWrite(
+            df=src, table_path=t["txn"], op="merge",
+            merge_kwargs={**clauses, "change_data": True},
+        )
+    ])
+    by_id = {i: (i, p, s) for i, p, s in _adv_rows() if i not in (102, 105, 108)}
+    by_id.update({i: (i, p, s) for i, p, s in ups})
+    want = sorted(by_id.values(), key=lambda r: r[0])
+    for r, path in t.items():
+        assert _rows(read_table(spark, path)) == want, r
+        assert table_detail(spark, path).first().num_rows == len(want), r
+        for v in (1, 2):
+            prev = Counter(_rows(read_table(spark, path, v - 1)))
+            cur = Counter(_rows(read_table(spark, path, v)))
+            assert _read_manifest(spark, path, v)["n_rows"] == sum(cur.values())
+            if r == "sql" and v == 2:
+                continue  # the SQL statement writes no change files
+            out, into = Counter(), Counter()
+            for c in read_change_data(spark, path, v - 1, v).collect():
+                side = into if c._change_type in ("insert", "update_postimage") else out
+                side[(c.id, c.p, c.s)] += 1
+            assert (out, into) == (prev - cur, cur - prev), (r, v)
+
+
 def test_adversarial_partition_values_merge_on_read_then_purge(spark, tmp_path):
     tbl = str(tmp_path / "t")
     _adv_table(spark, tbl)

@@ -14,6 +14,7 @@ from wnv_etl_lab2_spark.sources.transactions import (
 )
 from wnv_etl_lab2_spark.sources.versioned import (
     _read_manifest,
+    _upsert_clauses,
     create_table,
     delete_from_table,
     latest_version,
@@ -116,11 +117,11 @@ def test_chain_merge_upsert_then_insert(spark, tmp_path):
                 df=None, table_path=t, op="chain",
                 chain=(
                     {
-                        "op": "merge_upsert",
+                        "op": "merge",
                         "df": spark.createDataFrame(
                             [(2, 99)], "id long, v int"
                         ),
-                        "merge_key": "id",
+                        "merge_kwargs": _upsert_clauses("id"),
                     },
                     {
                         "op": "append",
@@ -316,11 +317,8 @@ def test_sql_merge_then_delete_in_txn(spark, tmp_path):
     assert _rows(spark, t) == [(1, 10), (3, 30)]
     assert _rows(spark, audit) == [(0,), (1,)]
     assert latest_version(spark, t) == 1
-    # the UPDATE SET * / INSERT * shape routes through the SCD-1
-    # upsert fast path; either op spelling is the same composition
-    assert _read_manifest(spark, t, 1)["txn_ops"] == [
-        "merge_upsert", "delete",
-    ]
+    # the UPDATE SET * / INSERT * shape is an ordinary MERGE step
+    assert _read_manifest(spark, t, 1)["txn_ops"] == ["merge", "delete"]
 
 
 def test_sql_update_then_merge_upsert_in_txn_rollback(spark, tmp_path):

@@ -1489,11 +1489,10 @@ def test_merge_into_full_clause_matrix(spark, tmp_path):
 
 
 def test_merge_equi_cardinality_check_plan(spark, tmp_path, monkeypatch):
-    """Round 13 (r12 verdict #8): a pure equi-ON MERGE plans NO window
-    for the Delta cardinality check — the check runs as digest-sized
-    key aggregates BEFORE any write — while a general ON keeps the
-    window (evaluated pre-publish via the Observation). Pinned by
-    capturing the frame MERGE hands to _write_version."""
+    """The Delta cardinality check plans NO window for either ON shape:
+    it is one count identity whose counts ride the write (evaluated
+    pre-publish). Pinned by capturing the frame MERGE hands to
+    _write_version."""
     import wnv_etl_lab2_spark.sources.versioned as V
 
     tbl = str(tmp_path / "tbl")
@@ -1516,18 +1515,9 @@ def test_merge_equi_cardinality_check_plan(spark, tmp_path, monkeypatch):
         spark, tbl, src, on="abs(t.id) = abs(s.id)",
         matched=[(None, "update", "*")],
     )
-    assert "Window" in captured["plan"]
+    assert "Window" not in captured["plan"]
 
-    # the ON-shape detector: only pure t/s equi-conjunctions qualify,
-    # and it only ever downgrades to the general path
-    assert V._equi_on_pairs("t.id = s.id") == [("id", "id")]
-    assert V._equi_on_pairs("s.a = t.b AND t.c = s.d") == [("b", "a"), ("c", "d")]
-    assert V._equi_on_pairs("t.id = s.id AND s.op = 'x AND y'") is None
-    assert V._equi_on_pairs("abs(t.id) = s.id") is None
-    assert V._equi_on_pairs("t.id = s.id OR t.v = s.v") is None
-    assert V._equi_on_pairs("t.id = t.id") is None
-
-    # unknown ON columns raise loudly on the equi path
+    # unknown ON columns raise loudly
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="unknown columns"):
@@ -1535,6 +1525,78 @@ def test_merge_equi_cardinality_check_plan(spark, tmp_path, monkeypatch):
             spark, tbl, src, on="t.nope = s.id",
             matched=[(None, "update", "*")],
         )
+
+
+def test_merge_cardinality_identity_edges(spark, tmp_path):
+    """The one cardinality identity (join rows carrying a target row vs
+    target rows) neither hangs nor fires wrongly where a join side is
+    empty, where only the source or only the target side repeats, when
+    change files are written before the data, when every row is
+    deleted, and in a transaction chain whose later step overwrites the
+    merged view — and still fires on a real multi-match there."""
+    from wnv_etl_lab2_spark.operators.cdf import read_change_data
+    from wnv_etl_lab2_spark.sources.delta_sql import DeltaSql
+    from wnv_etl_lab2_spark.sources.transactions import (
+        TxnWrite,
+        commit_transaction,
+    )
+    from wnv_etl_lab2_spark.sources.versioned import (
+        _upsert_clauses,
+        merge_into_table,
+    )
+
+    schema = "id long, v string"
+
+    def src(rows):
+        return spark.createDataFrame(rows, schema)
+
+    def rows(path):
+        return sorted(tuple(r) for r in read_table(spark, path).collect())
+
+    tbl = str(tmp_path / "t")
+    create_table(src([(1, "a"), (2, "b")]), tbl)
+    merge_upsert_table(src([]), tbl, "id")  # empty source
+    assert rows(tbl) == [(1, "a"), (2, "b")]
+    merge_upsert_table(src([(5, "n")]), tbl, "id")  # only new keys
+    merge_upsert_table(src([(7, "p"), (7, "q")]), tbl, "id")  # duplicate new keys
+    assert rows(tbl) == [(1, "a"), (2, "b"), (5, "n"), (7, "p"), (7, "q")]
+    # one source row matching two target rows is not ambiguous
+    merge_into_table(
+        spark, tbl, src([(7, "z")]), on="abs(t.id) = abs(s.id)",
+        matched=[(None, "update", "*")],
+    )
+    assert rows(tbl) == [(1, "a"), (2, "b"), (5, "n"), (7, "z"), (7, "z")]
+    v = merge_upsert_table(src([(1, "A"), (9, "i")]), tbl, "id", change_data=True)
+    assert sorted(
+        (r._change_type, r.id, r.v) for r in read_change_data(spark, tbl, v - 1, v).collect()
+    ) == [("insert", 9, "i"), ("update_postimage", 1, "A"), ("update_preimage", 1, "a")]
+    merge_into_table(
+        spark, tbl, src([]), on="t.id = s.id",
+        not_matched_by_source=[(None, "delete", None)],
+    )
+    assert rows(tbl) == []
+
+    empty = str(tmp_path / "e")
+    DeltaSql(spark, {"e": empty}).run("CREATE TABLE e (id BIGINT, v STRING)")
+    merge_upsert_table(src([]), empty, "id")
+    merge_upsert_table(src([(3, "x"), (3, "y")]), empty, "id")
+    assert rows(empty) == [(3, "x"), (3, "y")]
+
+    def chain(path, merge_rows):
+        commit_transaction(spark, str(tmp_path / "_txn"), [
+            TxnWrite(df=None, table_path=path, op="chain", chain=(
+                {"op": "merge", "df": src(merge_rows),
+                 "merge_kwargs": _upsert_clauses("id")},
+                {"op": "overwrite", "df": src([(0, "o")])},
+            )),
+        ])
+
+    v0 = latest_version(spark, empty)
+    with pytest.raises(ValueError, match="cardinality"):
+        chain(empty, [(3, "z"), (3, "w")])
+    assert latest_version(spark, empty) == v0
+    chain(empty, [(3, "z"), (4, "w")])
+    assert rows(empty) == [(0, "o")]
 
 
 def test_merge_into_change_data_vocabulary(spark, tmp_path):

@@ -100,7 +100,6 @@ from wnv_etl_lab2_spark.sources.versioned import (
     drop_check_constraint,
     drop_column,
     merge_into_table,
-    merge_upsert_table,
     optimize_table,
     purge_deletion_vectors,
     read_table,
@@ -327,10 +326,6 @@ class DeltaSql:
             return {
                 "op": "merge", "df": w.df, "merge_kwargs": w.merge_kwargs,
             }
-        if w.op == "merge_upsert":
-            return {
-                "op": "merge_upsert", "df": w.df, "merge_key": w.merge_key,
-            }
         raise ValueError(f"unsupported staged statement op: {w.op!r}")
 
     def _txn_chain_step(self, i: int, path: str, step: dict) -> None:
@@ -370,15 +365,10 @@ class DeltaSql:
                     "set_exprs": kw.get("set_exprs"),
                     "condition": kw.get("condition") or "true",
                 }
-            elif op == "merge":
+            else:
                 step = {
                     "op": "merge", "df": kw.get("df"),
                     "merge_kwargs": kw.get("merge_kwargs"),
-                }
-            else:
-                step = {
-                    "op": "merge_upsert", "df": kw.get("df"),
-                    "merge_key": kw.get("merge_key"),
                 }
             self._txn_chain_step(i, path, step)
             return
@@ -1182,7 +1172,7 @@ class DeltaSql:
         if head == "UPDATE":
             return self._update(s, sql)
         if head == "MERGE":
-            return self._merge(s, sql)
+            return self._merge_general(s, sql)
         raise ValueError(f"unsupported statement: {sql!r}")
 
     def _create_with_columns(
@@ -1579,57 +1569,12 @@ class DeltaSql:
             return None  # staged: nothing visible until COMMIT
         return update_table(self.spark, path, set_exprs, cond)
 
-    def _merge(self, s: str, sql: str) -> int:
-        """The SCD-1 upsert form only — the shape merge_upsert_table
-        implements: UPDATE SET * on match, INSERT * otherwise, equi-ON
-        over one key column. ``USING`` accepts a registered table name
-        or any session temp view."""
-        m = re.fullmatch(
-            rf"MERGE\s+INTO\s+({_IDENT})(?:\s+(?:AS\s+)?({_IDENT}))?"
-            rf"\s+USING\s+({_IDENT})(?:\s+(?:AS\s+)?({_IDENT}))?"
-            rf"\s+ON\s+({_IDENT})\s*\.\s*({_IDENT})\s*=\s*({_IDENT})\s*\.\s*({_IDENT})"
-            r"\s+WHEN\s+MATCHED\s+THEN\s+UPDATE\s+SET\s+\*"
-            r"\s+WHEN\s+NOT\s+MATCHED\s+THEN\s+INSERT\s+\*",
-            s,
-            re.IGNORECASE,
-        )
-        if not m:
-            return self._merge_general(s, sql)
-        target, t_alias, source, s_alias = m.group(1), m.group(2), m.group(3), m.group(4)
-        l_tbl, l_col, r_tbl, r_col = m.group(5), m.group(6), m.group(7), m.group(8)
-        names = {target: target, source: source}
-        if t_alias:
-            names[t_alias] = target
-        if s_alias:
-            names[s_alias] = source
-        if names.get(l_tbl) == target and names.get(r_tbl) == source:
-            t_key, s_key = l_col, r_col
-        elif names.get(l_tbl) == source and names.get(r_tbl) == target:
-            t_key, s_key = r_col, l_col
-        else:
-            raise ValueError(f"MERGE ON must join target and source: {sql!r}")
-        if t_key != s_key:
-            raise ValueError(
-                f"MERGE upsert form needs the same key name on both sides, "
-                f"got {t_key!r} vs {s_key!r}"
-            )
-        if source in self.tables:
-            updates = read_table(self.spark, self.tables[source])
-        elif source in self._views:
-            updates = self._view_df(source)
-        else:
-            updates = self.spark.table(source)  # session temp view
-        if self._txn is not None:
-            self._txn_add_dml(
-                self._path(target), "merge_upsert", df=updates,
-                merge_key=t_key,
-            )
-            return None  # staged: nothing visible until COMMIT
-        return merge_upsert_table(updates, self._path(target), key=t_key)
-
     def _merge_general(self, s: str, sql: str) -> int:
-        """The full Delta MERGE clause matrix, routed onto
-        `merge_into_table`:
+        """Every MERGE statement: the full Delta clause matrix, routed
+        onto `merge_into_table` (inside a transaction, staged as a
+        "merge" write or chain step). No spelling picks its own plan or
+        check — the upsert form (UPDATE SET * / INSERT *) is just these
+        clauses:
 
             MERGE INTO t [AS a] USING src [AS b] ON <cond>
             WHEN MATCHED [AND <cond>] THEN UPDATE SET * | UPDATE SET

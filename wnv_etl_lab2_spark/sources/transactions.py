@@ -80,26 +80,26 @@ from wnv_etl_lab2_spark.sources.versioned import (
 @dataclass(frozen=True)
 class TxnWrite:
     """One table's write inside a transaction. ``op`` is "append" or
-    "overwrite" — or, since round 16 (transactional DML, r15 verdict
-    "what's missing" #1), "delete" / "update" / "merge" /
-    "merge_upsert", carrying the statement's payload in the fields
+    "overwrite" — or, since round 16 (transactional DML), "delete" /
+    "update" / "merge", carrying the statement's payload in the fields
     below. ``expect_latest`` makes a plain write a CAS on a version
     the caller pinned (read-modify-write arms, e.g. a matview state
     derived from a read — same contract as `overwrite_table`'s).
 
     DML writes route through the SAME single-table verbs
-    (`delete_from_table` / `update_table` / `merge_into_table` /
-    `merge_upsert_table`) with the transaction stamp passed down: the
-    verb stages its rewrite and publishes a PENDING (txn-stamped)
-    manifest that no reader sees until the transaction's single
-    outcome marker decides "committed" — so `DELETE FROM corpus` +
-    `INSERT INTO audit` land atomically, or neither does. A DELETE or
-    UPDATE takes the plain verb's touched-files route (`versioned._dml`):
-    only the files holding matching rows are rewritten, through the one
-    partial-rewrite committer (`versioned._commit_partial_rewrite`), and
-    every other file carries by reference. For ``df``:
-    plain writes carry the rows to write; "merge"/"merge_upsert"
-    carry the SOURCE frame; "delete"/"update" carry None."""
+    (`delete_from_table` / `update_table` / `merge_into_table`) with
+    the transaction stamp passed down: the verb stages its rewrite and
+    publishes a PENDING (txn-stamped) manifest that no reader sees
+    until the transaction's single outcome marker decides "committed"
+    — so `DELETE FROM corpus` + `INSERT INTO audit` land atomically,
+    or neither does. A DELETE or UPDATE takes the plain verb's
+    touched-files route (`versioned._dml`): only the files holding
+    matching rows are rewritten, through the one partial-rewrite
+    committer (`versioned._commit_partial_rewrite`), and every other
+    file carries by reference. A MERGE is `merge_into_table`'s clause
+    matrix — an upsert is its clauses from `versioned._upsert_clauses`.
+    For ``df``: plain writes carry the rows to write; "merge" carries
+    the SOURCE frame; "delete"/"update" carry None."""
 
     df: DataFrame | None
     table_path: str
@@ -111,23 +111,21 @@ class TxnWrite:
     set_exprs: dict | None = None  # update SET
     delete_mode: str = "copy_on_write"
     merge_kwargs: dict | None = None  # merge_into_table clause matrix
-    merge_key: str | None = None  # merge_upsert key
     # op="chain" (round 16): an ORDERED same-table statement sequence
     # — steps of {"op": "append"|"overwrite", "df": DataFrame} or
     # {"op": "delete", "condition": str} or {"op": "update",
-    # "set_exprs": dict, "condition": str} or, since round 17 (the r16
-    # verdict's last composition gap), {"op": "merge", "df": source,
-    # "merge_kwargs": clause matrix} / {"op": "merge_upsert", "df":
-    # source, "merge_key": key} — composed as one logical plan over
-    # the committed snapshot (each step sees the previous steps'
-    # effects) and committed as ONE overwrite-shaped version. This is
-    # what makes `DELETE old partition; INSERT new rows` — and now
-    # `MERGE upserts; DELETE stale` — on one table atomic inside a
-    # transaction, one scan + one rewrite.
+    # "set_exprs": dict, "condition": str} or, since round 17,
+    # {"op": "merge", "df": source, "merge_kwargs": clause matrix} —
+    # composed as one logical plan over the committed snapshot (each
+    # step sees the previous steps' effects) and committed as ONE
+    # overwrite-shaped version. This is what makes `DELETE old
+    # partition; INSERT new rows` — and `MERGE upserts; DELETE stale`
+    # — on one table atomic inside a transaction, one scan + one
+    # rewrite.
     chain: tuple = ()
 
 
-_DML_OPS = frozenset({"delete", "update", "merge", "merge_upsert"})
+_DML_OPS = frozenset({"delete", "update", "merge"})
 
 
 def _compose_chain(
@@ -141,11 +139,11 @@ def _compose_chain(
     (`versioned._dml_rows`: keep-predicate, SET validation, CASE-WHEN
     projection, nondeterminism refusal); MERGE steps (round 17) apply
     the shared clause matrix (`versioned._merge_result`) over the
-    composed view with the cardinality check run EAGERLY at stage time
-    — an Observation riding the final write could silently never fire
-    if a later step filtered or discarded the merged frame, and
-    sequential-statement semantics demand the ambiguity raise
-    regardless."""
+    composed view, and its one cardinality identity is evaluated
+    EAGERLY at stage time (one aggregate job over the step's join): a
+    count riding the final write could silently never fire if a later
+    step filtered or discarded the merged frame, and sequential-
+    statement semantics demand the ambiguity raise regardless."""
     from wnv_etl_lab2_spark.sources.versioned import (
         _dml_rows,
         _merge_result,
@@ -167,10 +165,6 @@ def _compose_chain(
             view = _dml_rows(
                 view, prev0, op, step["condition"], step.get("set_exprs")
             )
-        elif op == "merge_upsert":
-            from wnv_etl_lab2_spark.operators.scd import merge_upsert
-
-            view = merge_upsert(view, step["df"], step["merge_key"])
         elif op == "merge":
             kw = dict(step.get("merge_kwargs") or {})
             if kw.pop("change_data", False):
@@ -180,15 +174,16 @@ def _compose_chain(
                     "with no per-statement change files; run it as the "
                     "table's only statement or outside the transaction"
                 )
-            view = _merge_result(
+            mr = _merge_result(
                 spark, view, step["df"], kw.pop("on"),
                 kw.pop("matched", None), kw.pop("not_matched", None),
                 kw.pop("not_matched_by_source", None),
                 gen_cols=generated, ident_specs=prev0.get("identity") or {},
                 dflt=prev0.get("defaults") or {},
-                eager_general_check=True,
                 **kw,
-            )["result"]
+            )
+            mr["check_now"]()
+            view = mr["result"]
         else:
             raise ValueError(f"unsupported chain step op: {op!r}")
     # generated columns recompute from the composed row (update/merge
@@ -205,7 +200,6 @@ def _run_dml(spark: SparkSession, w: TxnWrite, txn: dict) -> int:
     from wnv_etl_lab2_spark.sources.versioned import (
         delete_from_table,
         merge_into_table,
-        merge_upsert_table,
         update_table,
     )
 
@@ -217,11 +211,9 @@ def _run_dml(spark: SparkSession, w: TxnWrite, txn: dict) -> int:
         return update_table(
             spark, w.table_path, w.set_exprs, w.condition or "true", txn=txn
         )
-    if w.op == "merge":
-        return merge_into_table(
-            spark, w.table_path, w.df, txn=txn, **(w.merge_kwargs or {})
-        )
-    return merge_upsert_table(w.df, w.table_path, key=w.merge_key, txn=txn)
+    return merge_into_table(
+        spark, w.table_path, w.df, txn=txn, **(w.merge_kwargs or {})
+    )
 
 
 def _marker(jvm, txn_log: str, txn_id: str):

@@ -22,9 +22,9 @@ protocol below is the minimal honest subset:
   manifest is KBs — file paths and counts, never data) and scan ONLY
   those files, so an old snapshot stays readable and byte-stable no
   matter how many newer versions landed;
-- MERGE reuses the engine's own SCD-1 decomposition
-  (`operators/scd.merge_upsert`: broadcast-able anti-join + union) to
-  build the new snapshot from the latest one;
+- MERGE is one full-outer join plus the Delta clause matrix
+  (`merge_into_table`; the upsert is its UPDATE SET * / INSERT *
+  clauses) building the new snapshot from the latest one;
 - OPTIMIZE is content-identical compaction as a new version — the
   maintenance story (`sources/maintenance.py`) with history kept.
 
@@ -60,9 +60,9 @@ manifest-only commits over stable physical names — `rename_column` /
 `drop_column` default ``mode="metadata"``, `add_column` null-backfills;
 tombstoned physical names prevent dropped bytes from ever resurfacing),
 plus MERGE schema evolution (``merge_into_table(schema_evolution=)``)
-and a pre-publish MERGE cardinality check (equi-ON: digest-sized key
-aggregates before any write; general ON: the staged attempt aborts
-before its manifest publishes — no commit-then-restore window).
+and a pre-publish MERGE cardinality check (one count identity riding
+the write: the staged attempt aborts before its manifest publishes —
+no commit-then-restore window).
 """
 
 from __future__ import annotations
@@ -3372,6 +3372,17 @@ def update_table(
     )
 
 
+def _upsert_clauses(key: str) -> dict:
+    """The SCD-1 upsert as MERGE clauses over ``key``: a matched target
+    row takes the source row (UPDATE SET *), an unmatched source row
+    inserts (INSERT *)."""
+    return {
+        "on": f"t.`{key}` = s.`{key}`",
+        "matched": [(None, "update", "*")],
+        "not_matched": [(None, "*")],
+    }
+
+
 def merge_upsert_table(
     updates: DataFrame,
     table_path: str,
@@ -3380,106 +3391,15 @@ def merge_upsert_table(
     txn: dict | None = None,
 ) -> int:
     """MERGE: upsert ``updates`` by ``key`` into the latest snapshot,
-    committing the result as a new version — the engine's SCD-1
-    decomposition (anti-join + union) with snapshot history kept.
-
-    ``change_data=True`` persists the row-level change set inside the
-    same commit (round 11): MATCHED keys' pre-images retract as
-    ``'update_preimage'`` and their update rows apply as
-    ``'update_postimage'``; NOT-MATCHED keys' rows apply as
-    ``'insert'`` — the Delta CDF MERGE vocabulary, agreeing with the
-    snapshot-diff `cdf.table_changes` API (round-12 advisory fix) —
-    exactly the multiset delta between the two snapshots, O(updates)
-    rows via key joins against the base (never a snapshot diff).
-    Change-feed readers then stream a 1-row MERGE on a multi-file
-    table as 2 change rows instead of every row of the rewritten
-    files."""
-    from pyspark.sql import functions as F
-
-    from wnv_etl_lab2_spark.operators.scd import merge_upsert
-
-    spark = updates.sparkSession
-    cur = latest_version(spark, table_path)
-    if cur is None:
-        raise ValueError(f"not a versioned table (no log): {table_path}")
-    base = read_table(spark, table_path, cur)
-    merged = merge_upsert(base, updates, key)
-    changes_files = None
-    if change_data:
-        # post-state of a touched key = its update rows; pre-state =
-        # its base rows. Retract all pre-images of touched keys, apply
-        # all update rows — multiset-exact for new keys (no pre-image)
-        # and for multi-row update keys alike.
-        touched = updates.select(key).distinct()
-        existing = base.select(key).distinct()
-        pre = base.join(touched, key, "semi").withColumn(
-            "_change_type", F.lit("update_preimage")
-        )
-        post = updates.select(*base.columns).join(
-            existing, key, "semi"
-        ).withColumn("_change_type", F.lit("update_postimage")).unionByName(
-            updates.select(*base.columns)
-            .join(existing, key, "anti")
-            .withColumn("_change_type", F.lit("insert"))
-        )
-        changes_files = _write_change_data(
-            pre.unionByName(post), table_path, cur + 1,
-            column_map=_read_manifest(spark, table_path, cur).get("column_map"),
-        )
-    return _write_version(
-        merged, table_path, cur + 1, "merge", expect_latest=cur,
-        changes_files=changes_files, txn=txn,
+    committing the result as a new version — `merge_into_table` with
+    the upsert clauses (`_upsert_clauses`), so it has MERGE's
+    semantics: the cardinality check, ``*`` null-fill and generated-
+    column validation, and the Delta CDF change rows with
+    ``change_data=True``."""
+    return merge_into_table(
+        updates.sparkSession, table_path, updates,
+        change_data=change_data, txn=txn, **_upsert_clauses(key),
     )
-
-
-def _equi_on_pairs(on: str) -> list[tuple[str, str]] | None:
-    """Parse a MERGE ``on`` predicate as a pure equi-conjunction over
-    the t/s aliases — ``t.a = s.b [AND t.c = s.d ...]`` (either side
-    order) — returning [(t_col, s_col), ...], or None when any
-    top-level conjunct is not that shape (general predicate). Quote-
-    and paren-aware split, so literals/subexpressions containing
-    ``AND`` never confuse it. The detector only ever DOWNGRADES to the
-    general (window-based) cardinality check, never mis-claims equi."""
-    import re
-
-    conjuncts: list[str] = []
-    depth, start, quote = 0, 0, None
-    i = 0
-    while i < len(on):
-        ch = on[i]
-        if quote:
-            if ch == quote:
-                quote = None
-        elif ch in "'\"":
-            quote = ch
-        elif ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif depth == 0 and on[i:i + 3].upper() == "AND":
-            before_ok = i == 0 or not (on[i - 1].isalnum() or on[i - 1] == "_")
-            after = on[i + 3:i + 4]
-            after_ok = after == "" or not (after.isalnum() or after == "_")
-            if before_ok and after_ok:
-                conjuncts.append(on[start:i])
-                start = i + 3
-                i += 3
-                continue
-        i += 1
-    conjuncts.append(on[start:])
-    ident = r"[A-Za-z_][A-Za-z0-9_]*"
-    pairs: list[tuple[str, str]] = []
-    for c in conjuncts:
-        m = re.fullmatch(
-            rf"\s*([ts])\s*\.\s*({ident})\s*=\s*([ts])\s*\.\s*({ident})\s*", c
-        )
-        if not m or {m.group(1), m.group(3)} != {"t", "s"}:
-            return None
-        if m.group(1) == "t":
-            pairs.append((m.group(2), m.group(4)))
-        else:
-            pairs.append((m.group(4), m.group(2)))
-    return pairs or None
 
 
 def _merge_result(
@@ -3494,41 +3414,43 @@ def _merge_result(
     gen_cols: dict,
     ident_specs: dict,
     dflt: dict,
-    eager_general_check: bool = False,
     schema_evolution: bool = False,
 ) -> dict:
     """The MERGE clause matrix as a pure FRAME-LEVEL transform of
     (base, source) — shared by `merge_into_table` (base = the committed
     snapshot) and a transaction's same-table statement chain
-    (`transactions._compose_chain`, round 17 — base = the composed
-    view), so the two paths can never drift on clause semantics,
-    validation, or the cardinality contract.
+    (`transactions._compose_chain`, base = the composed view), so the
+    two can never drift on clause semantics, validation, or the
+    cardinality contract.
 
-    Returns {"result", "pre_commit_check", "join", "out", "types",
-    "t_cols"}; ``result`` applies the clause matrix WITHOUT the
-    generated-column recompute (each caller recomputes at its own
-    boundary — merge_into_table right here, a chain once over the
-    final composed frame).
+    Returns {"result", "changes", "check", "check_now"}. ``result`` is
+    the new rows, generated columns recomputed: a ``*`` clause whose
+    source carries a generated column writes the source value (the
+    gen_ CHECK riding the write refuses a wrong one); every other row
+    recomputes from its expression. ``changes()`` builds the Delta CDF
+    change set.
 
-    The Delta cardinality check keeps its two strategies: pure equi-ON
-    checks eagerly via digest-sized key aggregates (both callers);
-    general ON defaults to the Observation riding the result plan
-    (``pre_commit_check`` evaluated after staging), or — with
-    ``eager_general_check=True``, the chain path, where a later chain
-    step may filter or even discard the merged frame so an observation
-    riding the final write could silently never fire — an up-front
-    inner-join probe at stage time (one extra join over the composed
-    view, the documented price of composing a general-ON MERGE into a
-    chain; sequential-statement semantics demand the ambiguity still
-    raise even if a later step discards the merge).
+    ONE cardinality check for any ON predicate: in the full-outer join
+    output, a target row is matched by more than one source row exactly
+    when the join rows carrying a target row (matched pairs + unmatched
+    target rows) outnumber the target rows. ``check`` compares the two
+    counts, which Observations collect during the execution of
+    ``result`` — `_write_version` calls it as its ``pre_commit_check``,
+    after the files are staged and before the manifest publishes.
+    ``check_now`` (transaction chains, where a later step may filter or
+    discard the merged frame) fills the same counts with one eager
+    aggregate job over the join first.
 
-    ``schema_evolution=True`` is MERGE WITH SCHEMA EVOLUTION (round 13 —
-    Delta's autoMerge): source-only columns extend ``base`` via the SAME
+    ``schema_evolution=True`` is MERGE WITH SCHEMA EVOLUTION (Delta's
+    autoMerge): source-only columns extend ``base`` via the SAME
     additive-union rule appends use (`_merge_schemas` — type changes
     still refuse loudly); existing target rows read the new columns as
     NULL, and the * forms then assign/insert them by name. The caller's
     commit records the evolved schema: the result's schema IS it."""
-    from pyspark.sql import Window as W
+    import uuid
+
+    from pyspark.errors import AnalysisException
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     if schema_evolution:
@@ -3557,9 +3479,6 @@ def _merge_result(
     t_cols = base.columns
     types = {f.name: f.dataType for f in base.schema.fields}
     always_ident = {c for c, sp in ident_specs.items() if sp.get("always")}
-
-    def _omitted(c: str) -> "F.Column":
-        return F.expr(dflt[c]) if c in dflt else F.lit(None)
 
     def _guard_payload(payload) -> None:
         if payload in ("*", None) or isinstance(payload, str):
@@ -3592,203 +3511,178 @@ def _merge_result(
             f"column(s) {star_ident_clash} from the source — drop them "
             "from the source frame (BY DEFAULT identity accepts this)"
         )
+    # generated columns a * clause copies from the source; the struct
+    # field _gs marks the rows whose value is source-supplied
+    supplied_gen = sorted(set(gen_cols) & set(source.columns))
 
-    def as_struct(df: DataFrame, alias: str) -> DataFrame:
-        return df.select(F.struct(*df.columns).alias(alias))
+    # The matrix is built as SQL text and parsed JVM-side in one
+    # selectExpr: Column objects cost a py4j round trip per column per
+    # clause.
+    def q(c: str) -> str:
+        return "`" + c.replace("`", "``") + "`"
 
-    equi_pairs = _equi_on_pairs(on)
-    if equi_pairs is not None:
-        # equi fast path (round 13): cardinality is a property of the
-        # join KEYS alone — check it up front with two digest-sized
-        # aggregates and skip the per-row window entirely. Abort here
-        # stages nothing at all.
-        missing_t = [tc for tc, _ in equi_pairs if tc not in set(t_cols)]
-        missing_s = [sc for _, sc in equi_pairs if sc not in set(source.columns)]
-        if missing_t or missing_s:
-            raise ValueError(
-                f"MERGE ON references unknown columns: target {missing_t}, "
-                f"source {missing_s}"
-            )
-        keyed = source.select(
-            *[F.col(sc).alias(f"_k{i}") for i, (_, sc) in enumerate(equi_pairs)]
-        )
-        dup_keys = (
-            keyed.groupBy(*[f"_k{i}" for i in range(len(equi_pairs))])
-            .count()
-            .where(F.col("count") > 1)
-        )
-        t_keys = base.select(
-            *[F.col(tc).alias(f"_k{i}") for i, (tc, _) in enumerate(equi_pairs)]
-        ).distinct()
-        ambiguous = (
-            dup_keys.join(
-                t_keys, [f"_k{i}" for i in range(len(equi_pairs))], "left_semi"
-            ).head(1)
-        )
-        if ambiguous:
-            raise ValueError(
-                "MERGE cardinality violation: a target row matched more "
-                "than one source row (detected before any write — nothing "
-                "was committed)"
-            )
-    t = as_struct(base, "t")
-    sdf = as_struct(source, "s")
-    if equi_pairs is None:
-        t = t.withColumn("_tid", F.monotonically_increasing_id())
-        if eager_general_check:
-            # chain path: the ambiguity probe runs NOW, against the
-            # composed view, with its own action — _tid only needs to
-            # be unique within this one job
-            amb = (
-                t.join(sdf, F.expr(on), "inner")
-                .groupBy("_tid")
-                .count()
-                .where(F.col("count") > 1)
-                .head(1)
-            )
-            if amb:
-                raise ValueError(
-                    "MERGE cardinality violation: a target row matched "
-                    "more than one source row (detected at stage time — "
-                    "nothing was committed)"
-                )
-    j = t.join(sdf, F.expr(on), "full_outer")
-    if equi_pairs is None and not eager_general_check:
-        # Delta's cardinality check, general-ON path: >1 source match
-        # for one target row is ambiguous. The window runs over the
-        # SAME join output that feeds the result, so _tid
-        # (nondeterministic) is evaluated exactly once.
-        j = j.withColumn(
-            "_nm",
-            # unmatched SOURCE rows all carry _tid null and would pool
-            # into one window partition — they are not a cardinality
-            # hazard, so the count only applies where a target row
-            # exists
-            F.when(
-                F.col("t").isNotNull(),
-                F.sum(F.when(F.col("s").isNotNull(), 1).otherwise(0)).over(
-                    W.partitionBy("_tid")
-                ),
-            ).otherwise(F.lit(0)),
-        )
+    def row(values: dict, star: bool) -> str:
+        fields = [
+            f"CAST({values[c]} AS {types[c].simpleString()}) AS {q(c)}"
+            for c in t_cols
+        ]
+        if supplied_gen:
+            fields.append(f"{str(star).lower()} AS _gs")
+        return f"struct({', '.join(fields)})"
 
-    def assignments(payload) -> list["F.Column"]:
+    def omitted(c: str) -> str:
+        return f"({dflt[c]})" if c in dflt else "NULL"
+
+    def assignments(payload) -> str:
         if payload == "*":
-            # generated columns never copy from the source under * —
-            # they keep the target value here and recompute from their
-            # expressions after the clause matrix
-            src_cols = set(source.columns) - set(gen_cols)
-
-            def star_val(c: str):
-                if c in src_cols:
-                    return F.expr(f"s.{c}")
+            def star_val(c: str) -> str:
+                if c in source.columns:
+                    return f"s.{q(c)}"
                 if c in gen_cols or c in ident_specs:
                     # an updated row KEEPS its identity; generated
                     # recomputes after the matrix (null-filling either
                     # would corrupt the row's stable id / invariant)
-                    return F.expr(f"t.{c}")
-                return F.lit(None)
+                    return f"t.{q(c)}"
+                return "NULL"
 
-            return [
-                star_val(c).cast(types[c]).alias(c) for c in t_cols
-            ]
+            return row({c: star_val(c) for c in t_cols}, True)
         exprs = dict(payload)
         unknown = [c for c in exprs if c not in types]
         if unknown:
             raise ValueError(f"assignment targets unknown columns: {unknown}")
-        return [
-            (F.expr(exprs[c]) if c in exprs else F.expr(f"t.{c}"))
-            .cast(types[c])
-            .alias(c)
-            for c in t_cols
-        ]
+        return row(
+            {c: f"({exprs[c]})" if c in exprs else f"t.{q(c)}" for c in t_cols},
+            False,
+        )
 
-    def inserts(payload) -> "F.Column":
+    def inserts(payload) -> str:
         if payload == "*":
-            src_cols = set(source.columns) - set(gen_cols)
-            fields = [
-                (
-                    F.expr(f"s.{c}") if c in src_cols else _omitted(c)
-                ).cast(types[c]).alias(c)
-                for c in t_cols
-            ]
-        else:
-            exprs = dict(payload)
-            unknown = [c for c in exprs if c not in types]
-            if unknown:
-                raise ValueError(f"INSERT targets unknown columns: {unknown}")
-            fields = [
-                (F.expr(exprs[c]) if c in exprs else _omitted(c))
-                .cast(types[c])
-                .alias(c)
-                for c in t_cols
-            ]
-        return F.struct(*fields)
-
-    def cond(c: str | None) -> "F.Column":
-        return F.lit(True) if c is None else F.coalesce(
-            F.expr(c).cast("boolean"), F.lit(False)
+            return row(
+                {c: f"s.{q(c)}" if c in source.columns else omitted(c) for c in t_cols},
+                True,
+            )
+        exprs = dict(payload)
+        unknown = [c for c in exprs if c not in types]
+        if unknown:
+            raise ValueError(f"INSERT targets unknown columns: {unknown}")
+        return row(
+            {c: f"({exprs[c]})" if c in exprs else omitted(c) for c in t_cols},
+            False,
         )
 
-    keep_t = F.struct(*[F.expr(f"t.{c}").alias(c) for c in t_cols])
-    # matched rows: first true clause wins; no clause -> keep target row
-    out_matched = keep_t
-    for c, action, payload in reversed(matched):
-        this = (
-            F.lit(None) if action == "delete" else F.struct(*assignments(payload))
+    def first_true(branches: list, otherwise: str) -> str:
+        # the first clause whose condition is TRUE wins (NULL is not)
+        if not branches:
+            return otherwise
+        whens = " ".join(
+            f"WHEN {'true' if c is None else f'coalesce(CAST(({c}) AS BOOLEAN), false)'}"
+            f" THEN {v}"
+            for c, v in branches
         )
-        out_matched = F.when(cond(c), this).otherwise(out_matched)
-    # unmatched source rows: first true insert clause, else drop
-    out_insert = F.lit(None)
-    for c, payload in reversed(not_matched):
-        out_insert = F.when(cond(c), inserts(payload)).otherwise(out_insert)
-    # target rows with no source match: NOT MATCHED BY SOURCE clauses
-    # (expressions see t only — s is all-null here), else keep
-    out_nmbs = keep_t
-    for c, action, payload in reversed(not_matched_by_source):
-        this = (
-            F.lit(None) if action == "delete" else F.struct(*assignments(payload))
-        )
-        out_nmbs = F.when(cond(c), this).otherwise(out_nmbs)
+        return f"CASE {whens} ELSE {otherwise} END"
+
+    def update_or_delete(action: str, payload) -> str:
+        return "NULL" if action == "delete" else assignments(payload)
+
+    keep_t = row({c: f"t.{q(c)}" for c in t_cols}, False)
     out = (
-        F.when(F.col("t").isNull(), out_insert)
-        .when(F.col("s").isNull(), out_nmbs)
-        .otherwise(out_matched)
-        .alias("_out")
+        "CASE WHEN t IS NULL THEN "
+        # unmatched source rows: first true insert clause, else drop
+        + first_true([(c, inserts(p)) for c, p in not_matched], "NULL")
+        # target rows with no source match: NOT MATCHED BY SOURCE
+        # clauses (expressions see t only — s is all-null here), else keep
+        + " WHEN s IS NULL THEN "
+        + first_true(
+            [(c, update_or_delete(a, p)) for c, a, p in not_matched_by_source],
+            keep_t,
+        )
+        # matched rows: first true clause wins; no clause -> keep target
+        + " ELSE "
+        + first_true([(c, update_or_delete(a, p)) for c, a, p in matched], keep_t)
+        + " END AS _out"
     )
-    pre_commit_check = None
-    if equi_pairs is not None or eager_general_check:
-        result = (
-            j.select(out).where(F.col("_out").isNotNull()).select("_out.*")
-        )
-    else:
-        from pyspark.sql import Observation
 
-        import uuid as _uuid
+    def finish(rows: DataFrame) -> DataFrame:
+        # flat clause-matrix rows -> table rows: generated columns
+        # recompute unless a * clause supplied them from the source
+        if not gen_cols:
+            return rows
 
-        obs = Observation(f"merge-card-{_uuid.uuid4().hex[:8]}")
-        result = (
-            j.select(out, "_nm")
-            .observe(obs, F.max(F.coalesce(F.col("_nm"), F.lit(0))).alias("max_nm"))
-            .where(F.col("_out").isNotNull())
-            .select("_out.*")
+        def val(c: str) -> str:
+            g = f"CAST(({gen_cols[c]}) AS {types[c].simpleString()})"
+            return f"CASE WHEN _gs THEN {q(c)} ELSE {g} END" if c in supplied_gen else g
+
+        return rows.selectExpr(
+            *[f"{val(c)} AS {q(c)}" if c in gen_cols else q(c) for c in t_cols]
         )
 
-        def pre_commit_check() -> None:
-            if int(obs.get["max_nm"] or 0) > 1:
-                raise ValueError(
-                    "MERGE cardinality violation: a target row matched more "
-                    "than one source row (the staged attempt was aborted "
-                    "before its manifest published — nothing was committed)"
-                )
+    t = base.selectExpr("struct(*) AS t")
+    sdf = source.selectExpr("struct(*) AS s")
+    tag = uuid.uuid4().hex[:8]
+    n_target = Observation(f"merge-target-{tag}")
+    n_joined = Observation(f"merge-joined-{tag}")
+    try:
+        observed = (
+            t.observe(n_target, F.count(F.lit(1)).alias("n"))
+            .join(sdf, F.expr(on), "full_outer")
+            .observe(n_joined, F.count("t").alias("n"))
+        )
+    except AnalysisException as e:
+        if (e.getCondition() or "").startswith(
+            ("UNRESOLVED_COLUMN", "FIELD_NOT_FOUND")
+        ):
+            raise ValueError(
+                f"MERGE ON references unknown columns: {on!r} "
+                f"({e.getMessageParameters()})"
+            ) from e
+        raise
+    result = finish(
+        observed.selectExpr(out).where("_out IS NOT NULL").select("_out.*")
+    )
+
+    def check() -> None:
+        # an empty target side reports no count (AQE drops the empty
+        # join input from the final plan), but then no join row carries
+        # a target row either
+        joined = int(n_joined.get["n"])
+        if joined and joined > int(n_target.get["n"]):
+            raise ValueError(
+                "MERGE cardinality violation: a target row matched more "
+                "than one source row (nothing was committed)"
+            )
+
+    def check_now() -> None:
+        observed.agg(F.count(F.lit(1))).collect()
+        check()
+
+    def changes() -> DataFrame:
+        # Delta CDF change set: a won DELETE clause retracts t, a won
+        # UPDATE that actually changed the row emits the
+        # update_preimage/update_postimage pair, an insert clause emits
+        # 'insert'. It reads an unobserved join, so writing it never
+        # fills the check.
+        ch = t.join(sdf, F.expr(on), "full_outer").selectExpr("t", out)
+        new = ", ".join(f"_out.{q(c)} AS {q(c)}" for c in t_cols)
+        deleted = ch.where("t IS NOT NULL AND _out IS NULL").selectExpr(
+            "t.*", "'delete' AS _change_type"
+        )
+        updated = ch.where(
+            f"t IS NOT NULL AND _out IS NOT NULL AND NOT t <=> struct({new})"
+        )
+        pre = updated.selectExpr("t.*", "'update_preimage' AS _change_type")
+        post = finish(updated.select("_out.*")).withColumn(
+            "_change_type", F.lit("update_postimage")
+        )
+        inserted = finish(
+            ch.where("t IS NULL AND _out IS NOT NULL").select("_out.*")
+        ).withColumn("_change_type", F.lit("insert"))
+        return deleted.unionByName(pre).unionByName(post).unionByName(inserted)
 
     return {
         "result": result,
-        "pre_commit_check": pre_commit_check,
-        "join": j,
-        "out": out,
-        "types": types,
-        "t_cols": t_cols,
+        "changes": changes,
+        "check": check,
+        "check_now": check_now,
     }
 
 
@@ -3804,9 +3698,9 @@ def merge_into_table(
     schema_evolution: bool = False,
     txn: dict | None = None,
 ) -> int:
-    """General conditional MERGE — the full Delta MERGE INTO clause
-    matrix (round 12; `merge_upsert_table` stays as the fast SCD-1
-    special case):
+    """THE MERGE of a versioned table — the full Delta MERGE INTO
+    clause matrix. `merge_upsert_table`, the SQL MERGE statement and
+    transactional MERGE all run it:
 
         merge_into_table(spark, path, updates,
             on="t.id = s.id",
@@ -3825,77 +3719,37 @@ def merge_into_table(
     rows with NO source match — update assignments may reference ``t``
     only — enabling full-sync merges (delete everything the source no
     longer carries).
-    ``schema_evolution=True`` (round 13 — Delta's autoMerge / MERGE
-    WITH SCHEMA EVOLUTION): source-only columns extend the target
-    schema additively in the same commit; existing rows (and old
-    files) read them as NULL, and ``*`` forms assign/insert them by
-    name. Type changes on existing columns still refuse.
+    ``schema_evolution=True`` (Delta's autoMerge / MERGE WITH SCHEMA
+    EVOLUTION): source-only columns extend the target schema
+    additively in the same commit; existing rows (and old files) read
+    them as NULL, and ``*`` forms assign/insert them by name. Type
+    changes on existing columns still refuse.
+    GENERATED columns are never assignable: ``*`` writes a value the
+    source carries (the gen_ CHECK refuses a wrong one), and every
+    other row recomputes them. ALWAYS identity columns refuse explicit
+    assignment; identity columns on inserted rows allocate from the
+    water mark. Column DEFAULTS fill omitted plain columns of INSERT
+    clauses. ``change_data=True`` writes the Delta CDF change rows;
+    a matched row the clauses leave unchanged emits none.
     A target row matched by MORE THAN ONE source row is ambiguous and
-    raises — the Delta cardinality check — and the check NEVER
-    publishes the ambiguous result (round 13; Delta fails the
-    operation without committing). Two strategies by ON shape:
-
-    - PURE EQUI-ON (``t.a = s.a [AND ...]``, `_equi_on_pairs`): a
-      target row can multi-match iff some source key occurring >1
-      times also exists in the target — checked BEFORE anything is
-      staged by two digest-sized key aggregates (source keys grouped
-      and counted, semi-joined to distinct target keys; both scans
-      column-pruned to the keys). No per-row window, no corpus-row
-      exchange for the check.
-    - GENERAL ON: the count rides the join as a window over a per-row
-      id + an ``Observation``, evaluated after the data files are
-      staged but BEFORE the manifest publishes (`_write_version`'s
-      ``pre_commit_check``) — an ambiguous merge aborts, leaving only
-      a vacuumable attempt dir; no reader (or crash window) can ever
-      observe the ambiguous snapshot.
+    raises — the Delta cardinality check, one count identity for any
+    ON shape (`_merge_result`), whose counts ride the write and are
+    compared after the data files are staged but BEFORE the manifest
+    publishes (`_write_version`'s ``pre_commit_check``): an ambiguous
+    merge aborts, leaving only a vacuumable attempt dir.
 
     Scale shape: ONE full-outer join on the ON predicate (equi-ON
     plans a hash/SMJ join; give it an equi conjunct), the clause
     matrix is a pure CASE projection over (t, s) structs, and the
-    result commits through the standard copy-on-write rewrite. All
+    result commits through the standard copy-on-write rewrite. The
+    manifest and file list are read once (`_snapshot_frame`). All
     assigned/inserted values cast to the target column types."""
-    from pyspark.sql import functions as F
-
     cur = latest_version(spark, table_path)
     if cur is None:
         raise ValueError(f"not a versioned table (no log): {table_path}")
-    base = read_table(spark, table_path, cur)
-    # GENERATED / IDENTITY interplay (round 14): generated columns are
-    # never assignable through MERGE — every surviving row's value is
-    # RECOMPUTED from its expression after the clause matrix (so the
-    # gen_ invariant holds by construction); ALWAYS identity columns
-    # refuse explicit assignment (Delta's contract), while BY DEFAULT
-    # keeps supplied values; identity columns on rows a NOT MATCHED
-    # INSERT creates allocate from the water mark (`_assign_identity`
-    # fill_nulls through `_write_version`). Column DEFAULTS (round 15)
-    # fill OMITTED plain columns in INSERT clauses. All of it — and the
-    # clause matrix itself — lives in `_merge_result`, shared with the
-    # transaction-chain composition (round 17).
-    m_meta = _read_manifest(spark, table_path, cur)
-    gen_cols = m_meta.get("generated") or {}
-    ident_specs = m_meta.get("identity") or {}
-    dflt = m_meta.get("defaults") or {}
-    not_matched = not_matched or []
-    mr = _merge_result(
-        spark, base, source, on, matched, not_matched,
-        not_matched_by_source, gen_cols=gen_cols, ident_specs=ident_specs,
-        dflt=dflt, schema_evolution=schema_evolution,
-    )
-    result = mr["result"]
-    pre_commit_check = mr["pre_commit_check"]
-    j, out, types = mr["join"], mr["out"], mr["types"]
-    if gen_cols:
-        # recompute EVERY surviving row's generated columns from their
-        # expressions (round 14): the clause matrix may change the base
-        # columns an expression reads, and the gen_ CHECK invariant
-        # riding the write refuses anything inconsistent — recomputing
-        # uniformly makes the invariant hold by construction (kept rows
-        # recompute to their existing values, a no-op)
-        for gcol, gexpr in sorted(gen_cols.items()):
-            result = result.withColumn(
-                gcol, F.expr(gexpr).cast(types[gcol])
-            )
-    changes_files = None
+    m = _read_manifest(spark, table_path, cur)
+    base = _snapshot_frame(spark, _resolve_files(spark, table_path, cur), m)
+    ident_specs = m.get("identity") or {}
     if change_data and ident_specs and not_matched:
         raise ValueError(
             "row-level change_data for a MERGE that can INSERT into an "
@@ -3904,47 +3758,19 @@ def merge_into_table(
             "staged — use the stream's file-diff CDF reconstruction "
             "(it reads the final files) or drop the insert clauses"
         )
+    mr = _merge_result(
+        spark, base, source, on, matched, not_matched, not_matched_by_source,
+        gen_cols=m.get("generated") or {}, ident_specs=ident_specs,
+        dflt=m.get("defaults") or {}, schema_evolution=schema_evolution,
+    )
+    changes_files = None
     if change_data:
-        # row-level CDF for the general merge (round 12): the change
-        # classification is a pure projection of (t, _out) — a won
-        # DELETE clause retracts t, a won UPDATE that actually changed
-        # the row emits the Delta update_preimage/update_postimage
-        # pair, an insert clause emits 'insert'. Second pass over the
-        # join (same cost class as the CoW rewrite itself). Generated
-        # columns recompute in the change projections exactly as in
-        # the snapshot result.
-        ch = j.select(F.col("t"), out)
-        deleted = ch.where(
-            F.col("t").isNotNull() & F.col("_out").isNull()
-        ).select(F.expr("t.*"), F.lit("delete").alias("_change_type"))
-        updated = ch.where(
-            F.col("t").isNotNull()
-            & F.col("_out").isNotNull()
-            & ~F.col("t").eqNullSafe(F.col("_out"))
-        )
-        pre = updated.select(
-            F.expr("t.*"), F.lit("update_preimage").alias("_change_type")
-        )
-        post = updated.select(
-            F.expr("_out.*"), F.lit("update_postimage").alias("_change_type")
-        )
-        inserted = ch.where(
-            F.col("t").isNull() & F.col("_out").isNotNull()
-        ).select(F.expr("_out.*"), F.lit("insert").alias("_change_type"))
-        for gcol, gexpr in sorted(gen_cols.items()):
-            post = post.withColumn(gcol, F.expr(gexpr).cast(types[gcol]))
-            inserted = inserted.withColumn(
-                gcol, F.expr(gexpr).cast(types[gcol])
-            )
         changes_files = _write_change_data(
-            deleted.unionByName(pre).unionByName(post).unionByName(inserted),
-            table_path,
-            cur + 1,
-            column_map=_read_manifest(spark, table_path, cur).get("column_map"),
+            mr["changes"](), table_path, cur + 1, column_map=m.get("column_map")
         )
     return _write_version(
-        result, table_path, cur + 1, "merge", expect_latest=cur,
-        changes_files=changes_files, pre_commit_check=pre_commit_check,
+        mr["result"], table_path, cur + 1, "merge", expect_latest=cur,
+        changes_files=changes_files, pre_commit_check=mr["check"],
         identity_fill_nulls=bool(ident_specs and not_matched),
         txn=txn,
     )

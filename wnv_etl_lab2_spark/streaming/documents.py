@@ -511,21 +511,3 @@ def multimodal_txn_batch_processor(
 
     return _process
 
-
-def streaming_multimodal_txn_curation(
-    multimodal_stream: DataFrame,
-    docs_index_dir: str,
-    media_index_dir: str,
-    docs_table: str,
-    media_table: str,
-    txn_log: str,
-    **kwargs,
-):
-    """The writeStream wrapper of `multimodal_txn_batch_processor`.
-    Returns a DataStreamWriter ready to ``.start()``."""
-    return multimodal_stream.writeStream.foreachBatch(
-        multimodal_txn_batch_processor(
-            docs_index_dir, media_index_dir, docs_table, media_table,
-            txn_log, **kwargs,
-        )
-    ).outputMode("append")
