@@ -162,3 +162,49 @@ def test_zero_step_refuses(spark, tmp_path):
             str(tmp_path / "z"),
             identity={"rid": {"start": 1, "step": 0}},
         )
+
+
+@pytest.mark.parametrize("always", [True, False])
+def test_merge_cardinality_on_identity_table(spark, tmp_path, always):
+    """A MERGE that can INSERT into an IDENTITY table allocates ids on
+    the same write that carries the cardinality counts, and a source
+    key matching one target row twice still refuses and commits
+    nothing — upsert, SQL MERGE and a multi-clause merge alike."""
+    from wnv_etl_lab2_spark.sources.delta_sql import DeltaSql
+    from wnv_etl_lab2_spark.sources.versioned import (
+        merge_into_table,
+        merge_upsert_table,
+    )
+
+    path = str(tmp_path / "im")
+    create_table(
+        spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"),
+        path,
+        identity={"rid": {"start": 1, "step": 1, "always": always}},
+    )
+    v0 = latest_version(spark, path)
+    dup = spark.createDataFrame([(1, "x"), (1, "y"), (5, "n")], "k long, v string")
+    with pytest.raises(ValueError, match="cardinality"):
+        merge_upsert_table(dup, path, "k")
+    assert latest_version(spark, path) == v0
+    with pytest.raises(ValueError, match="cardinality"):
+        merge_into_table(
+            spark, path, dup, on="t.k = s.k",
+            matched=[("s.v <> 'q'", "update", {"v": "s.v"})],
+            not_matched=[(None, {"k": "s.k", "v": "s.v"})],
+        )
+    assert latest_version(spark, path) == v0
+    dup.createOrReplaceTempView("dup_src")
+    with pytest.raises(ValueError, match="cardinality"):
+        DeltaSql(spark, {"im": path}).run(
+            "MERGE INTO im t USING dup_src s ON t.k = s.k "
+            "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+        )
+    assert latest_version(spark, path) == v0
+    merge_upsert_table(
+        spark.createDataFrame([(1, "x"), (5, "n")], "k long, v string"), path, "k"
+    )
+    got = sorted((r.k, r.v) for r in read_table(spark, path).collect())
+    assert got == [(1, "x"), (2, "b"), (5, "n")]
+    ids = _ids(spark, path)
+    assert len(ids) == len(set(ids)) == 3

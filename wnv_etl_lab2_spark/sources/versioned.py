@@ -3437,9 +3437,12 @@ def _merge_result(
     counts, which Observations collect during the execution of
     ``result`` — `_write_version` calls it as its ``pre_commit_check``,
     after the files are staged and before the manifest publishes.
-    ``check_now`` (transaction chains, where a later step may filter or
-    discard the merged frame) fills the same counts with one eager
-    aggregate job over the join first.
+    ``check_now`` fills the same counts first, with one eager aggregate
+    job over the join that reads and shuffles only the ON columns:
+    transaction chains use it (a later step may filter or discard the
+    merged frame), and so does a merge whose inserts allocate IDENTITY
+    values (the allocation runs its own action on the result before
+    the write).
 
     ``schema_evolution=True`` is MERGE WITH SCHEMA EVOLUTION (Delta's
     autoMerge): source-only columns extend ``base`` via the SAME
@@ -3616,16 +3619,20 @@ def _merge_result(
             *[f"{val(c)} AS {q(c)}" if c in gen_cols else q(c) for c in t_cols]
         )
 
-    t = base.selectExpr("struct(*) AS t")
     sdf = source.selectExpr("struct(*) AS s")
     tag = uuid.uuid4().hex[:8]
     n_target = Observation(f"merge-target-{tag}")
     n_joined = Observation(f"merge-joined-{tag}")
     try:
+        # _tr marks the join rows that carry a target row: counting it
+        # rather than the t struct, with the target count taken below
+        # the struct, lets check_now's aggregate scan and shuffle only
+        # the ON columns
         observed = (
-            t.observe(n_target, F.count(F.lit(1)).alias("n"))
+            base.observe(n_target, F.count(F.lit(1)).alias("n"))
+            .selectExpr("struct(*) AS t", "true AS _tr")
             .join(sdf, F.expr(on), "full_outer")
-            .observe(n_joined, F.count("t").alias("n"))
+            .observe(n_joined, F.count("_tr").alias("n"))
         )
     except AnalysisException as e:
         if (e.getCondition() or "").startswith(
@@ -3661,7 +3668,11 @@ def _merge_result(
         # update_preimage/update_postimage pair, an insert clause emits
         # 'insert'. It reads an unobserved join, so writing it never
         # fills the check.
-        ch = t.join(sdf, F.expr(on), "full_outer").selectExpr("t", out)
+        ch = (
+            base.selectExpr("struct(*) AS t")
+            .join(sdf, F.expr(on), "full_outer")
+            .selectExpr("t", out)
+        )
         new = ", ".join(f"_out.{q(c)} AS {q(c)}" for c in t_cols)
         deleted = ch.where("t IS NOT NULL AND _out IS NULL").selectExpr(
             "t.*", "'delete' AS _change_type"
@@ -3736,7 +3747,9 @@ def merge_into_table(
     ON shape (`_merge_result`), whose counts ride the write and are
     compared after the data files are staged but BEFORE the manifest
     publishes (`_write_version`'s ``pre_commit_check``): an ambiguous
-    merge aborts, leaving only a vacuumable attempt dir.
+    merge aborts, leaving only a vacuumable attempt dir. A merge that
+    can insert into an IDENTITY table fills the counts in one eager
+    job before the write instead.
 
     Scale shape: ONE full-outer join on the ON predicate (equi-ON
     plans a hash/SMJ join; give it an equi conjunct), the clause
@@ -3768,11 +3781,17 @@ def merge_into_table(
         changes_files = _write_change_data(
             mr["changes"](), table_path, cur + 1, column_map=m.get("column_map")
         )
+    fill_ids = bool(ident_specs and not_matched)
+    if fill_ids:
+        # `_assign_identity` checkpoints the result and runs the first
+        # action over it before the write, so the counts cannot ride
+        # the write: fill them in their own job first
+        mr["check_now"]()
     return _write_version(
         mr["result"], table_path, cur + 1, "merge", expect_latest=cur,
-        changes_files=changes_files, pre_commit_check=mr["check"],
-        identity_fill_nulls=bool(ident_specs and not_matched),
-        txn=txn,
+        changes_files=changes_files,
+        pre_commit_check=None if fill_ids else mr["check"],
+        identity_fill_nulls=fill_ids, txn=txn,
     )
 
 
