@@ -298,6 +298,40 @@ def test_txn_chain_respects_constraints_and_identity(spark, tmp_path):
     assert sorted((r.id, r.v) for r in read_table(spark, t).collect()) == rows
 
 
+def test_txn_chain_validates_supplied_generated_values(spark, tmp_path):
+    """A chain keeps its steps' generated columns: a wrong supplied
+    value from an append or a MERGE ``*`` step is refused by the gen_
+    CHECK, as `append_table` and a single MERGE refuse it (the chain
+    used to recompute it silently), and an omitted one is computed."""
+    t, log = str(tmp_path / "t"), str(tmp_path / "txn")
+    create_table(
+        spark.createDataFrame([(1, 7)], "id long, amount int"), t,
+        generated={"total": "amount * 2"},
+    )
+
+    def chain(*steps):
+        return commit_transaction(
+            spark, log, [TxnWrite(None, t, "chain", chain=steps)]
+        )
+
+    wrong = spark.createDataFrame([(1, 7, 999)], "id long, amount int, total int")
+    upsert = dict(on="t.id = s.id", matched=[(None, "update", "*")],
+                  not_matched=[(None, "*")])
+    for step in (
+        {"op": "append", "df": wrong},
+        {"op": "merge", "df": wrong, "merge_kwargs": upsert},
+    ):
+        with pytest.raises(ValueError, match="gen_total"):
+            chain(step)
+        assert latest_version(spark, t) == 0
+        assert [tuple(r) for r in read_table(spark, t).collect()] == [(1, 7, 14)]
+    ok = spark.createDataFrame([(9, 1)], "id long, amount int")
+    assert chain({"op": "append", "df": ok}) == {t: 1}
+    assert sorted(tuple(r) for r in read_table(spark, t).collect()) == [
+        (1, 7, 14), (9, 1, 2),
+    ]
+
+
 # ----------------------------------------------------- SQL views
 
 

@@ -517,3 +517,117 @@ def test_recover_pending_sweeps_only_undecided(spark, tmp_path, monkeypatch):
     assert append_table(_df(spark, [(3, "a3")]), a) == 2
     assert _ids(spark, a) == {0, 1, 3}
     assert _ids(spark, b) == {0}
+
+
+# ------------------------------------- one writer: verb vs. transaction
+
+
+def test_txn_append_upcasts_narrow_batch_like_append_table(spark, tmp_path):
+    """An INT batch into a BIGINT column casts up and commits, as
+    `append_table` does (the transactional append used to refuse it as
+    an incompatible schema change)."""
+    t, log = str(tmp_path / "t"), str(tmp_path / "txn")
+    create_table(_df(spark, [(0, "a")]), t)
+    narrow = _df(spark, [(1, "b")], "id int, v string")
+    assert commit_transaction(spark, log, [TxnWrite(narrow, t, "append")]) == {
+        t: 1
+    }
+    assert latest_version(spark, t) == 1
+    out = read_table(spark, t)
+    assert dict(out.dtypes)["id"] == "bigint"
+    assert sorted((r.id, r.v) for r in out.collect()) == [(0, "a"), (1, "b")]
+
+
+def test_txn_overwrite_drops_default_of_dropped_column(spark, tmp_path):
+    """A transactional overwrite that drops a defaulted column takes
+    the DEFAULT with it, as `overwrite_table` does (it used to keep a
+    stale ``defaults`` entry)."""
+    from wnv_etl_lab2_spark.sources.versioned import column_defaults
+
+    t, log = str(tmp_path / "t"), str(tmp_path / "txn")
+    create_table(
+        spark.createDataFrame([(0, "a")], "id long, s string"), t,
+        defaults={"s": "'zz'"},
+    )
+    assert column_defaults(spark, t) == {"s": "'zz'"}
+    commit_transaction(
+        spark, log, [TxnWrite(spark.range(3), t, "overwrite")]
+    )
+    assert latest_version(spark, t) == 1
+    assert column_defaults(spark, t) == {}
+    assert "defaults" not in _read_manifest(spark, t, 1)
+    assert _ids(spark, t) == {0, 1, 2}
+
+
+def _every_declaration_table(spark, path):
+    """A table declaring everything a write must honor: partitioning,
+    a renamed column (column map), a generated column, an identity
+    column, a CHECK, a DEFAULT and stats columns."""
+    from wnv_etl_lab2_spark.sources.versioned import (
+        add_check_constraint,
+        rename_column,
+    )
+
+    create_table(
+        spark.createDataFrame(
+            [("a", 5, "x"), ("b", 7, "y")], "p string, amount int, label string"
+        ),
+        path,
+        partition_by=["p"],
+        generated={"total": "amount * 2"},
+        identity={"id": {"start": 1, "step": 1}},
+        defaults={"label": "'none'"},
+        stats_cols=["amount"],
+    )
+    add_check_constraint(spark, path, "pos", "amount >= 0")
+    rename_column(spark, path, "label", "tag")
+
+
+def _normalized(spark, path, version):
+    """Manifest ``version`` of ``path`` without what differs between two
+    equal writes: the commit time, the transaction stamp, the table
+    root, attempt-dir tokens and Spark's per-job file uuids."""
+    import json
+    import re
+
+    m = _read_manifest(spark, path, version)
+    s = json.dumps(
+        {k: v for k, v in m.items() if k not in ("ts_ms", "txn")}, sort_keys=True
+    )
+    s = s.replace(path, "<root>")
+    s = re.sub(r"/v(\d+)-[0-9a-f]{8}/", r"/v\1-<attempt>/", s)
+    s = re.sub(r"part-(\d+)-[0-9a-f-]{36}", r"part-\1-<job>", s)
+    return json.loads(s)
+
+
+def test_txn_writes_equal_single_table_verbs(spark, tmp_path):
+    """One writer: the same append and the same overwrite, once through
+    `append_table` / `overwrite_table` and once as a one-write
+    transaction, give equal rows and equal manifests on a table with
+    every declaration."""
+    from wnv_etl_lab2_spark.sources.versioned import overwrite_table
+
+    verb, txn, log = (str(tmp_path / n) for n in ("verb", "txn", "log"))
+    for path in (verb, txn):
+        _every_declaration_table(spark, path)
+    v0 = latest_version(spark, verb)
+    assert latest_version(spark, txn) == v0
+    batch = spark.createDataFrame(
+        [("a", 1, "p"), ("c", 2, None)], "p string, amount int, tag string"
+    )
+    snapshot = spark.createDataFrame(
+        [("b", 3, "q"), ("d", 4, "r")], "p string, amount int, tag string"
+    )
+
+    def rows(path):
+        cols = ("id", "p", "amount", "total", "tag")
+        return sorted(tuple(r) for r in read_table(spark, path).select(*cols).collect())
+
+    for op, df, single in (
+        ("append", batch, append_table),
+        ("overwrite", snapshot, overwrite_table),
+    ):
+        v = single(df, verb)
+        assert commit_transaction(spark, log, [TxnWrite(df, txn, op)]) == {txn: v}
+        assert rows(verb) == rows(txn)
+        assert _normalized(spark, verb, v) == _normalized(spark, txn, v)

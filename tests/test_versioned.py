@@ -329,7 +329,8 @@ def test_manifest_paths_fully_qualified_and_legacy_scheme_less_still_work(
     """Manifests record fully-qualified URIs (scheme kept, so the
     protocol survives a non-default filesystem); legacy scheme-less
     manifests written before round 9 still read, and vacuum's
-    reference count treats both spellings as the same file."""
+    reference count treats both spellings as the same file — data
+    files, deletion vectors and change-data files alike."""
     import json as _json
     import os
 
@@ -339,20 +340,42 @@ def test_manifest_paths_fully_qualified_and_legacy_scheme_less_still_work(
     m = versioned._read_manifest(spark, path, 0)
     assert all(f.startswith("file:/") for f in m["files"])
     assert read_table(spark, path).count() == 20
-    # rewrite the manifest in the legacy scheme-less form
-    overwrite_table(base.where(F.col("id") < 5), path)  # v1, qualified
-    mpath = os.path.join(path, "_log", "00000001.json")
-    m1 = _json.load(open(mpath))
-    m1["files"] = [f.removeprefix("file:") for f in m1["files"]]
-    with open(mpath, "w") as f:
-        _json.dump(m1, f)
-    crc = os.path.join(path, "_log", ".00000001.json.crc")
-    if os.path.exists(crc):  # ChecksumFileSystem sidecar from the commit
-        os.remove(crc)
+
+    def legacy(v):
+        """Rewrite manifest ``v`` in the legacy scheme-less form."""
+        mpath = os.path.join(path, "_log", f"{v:08d}.json")
+        mv = _json.load(open(mpath))
+        for key in ("files", "dv", "changes"):
+            if key in mv:
+                mv[key] = [f.removeprefix("file:") for f in mv[key]]
+        with open(mpath, "w") as f:
+            _json.dump(mv, f)
+        crc = os.path.join(path, "_log", f".{v:08d}.json.crc")
+        if os.path.exists(crc):  # ChecksumFileSystem sidecar from the commit
+            os.remove(crc)
+        return mv
+
+    # v1, qualified, then legacy; several files so later DML touches some
+    overwrite_table(base.where(F.col("id") < 5).repartition(5, "id"), path)
+    legacy(1)
     assert read_table(spark, path).count() == 5  # legacy form reads
-    # vacuum must NOT delete the files the legacy-form manifest keeps
+    # v2: a change-data UPDATE; v3: a merge-on-read DELETE (a DV)
+    versioned.update_table(
+        spark, path, {"score": "score + 1"}, "id = 1", change_data=True
+    )
+    versioned.delete_from_table(spark, path, "id = 0", mode="merge_on_read")
+    m2, m3 = legacy(2), legacy(3)
+    assert m2["changes"] and m3["dv"]
+    # vacuum must NOT delete the files, DVs or change files the
+    # legacy-form manifests keep
+    vacuum_table(spark, path, keep_last=2)
+    assert sorted(r.id for r in read_table(spark, path).collect()) == [1, 2, 3, 4]
+    for f in m2["changes"] + m3["dv"] + m3["files"]:
+        assert os.path.exists(f), f
     vacuum_table(spark, path, keep_last=1)
-    assert read_table(spark, path).count() == 5
+    assert sorted(r.id for r in read_table(spark, path).collect()) == [1, 2, 3, 4]
+    assert all(os.path.exists(f) for f in m3["dv"] + m3["files"])
+    assert not any(os.path.exists(f) for f in m2["changes"])
 
 
 def test_optimize_zorder_prunes_on_both_dimensions(spark, tmp_path):

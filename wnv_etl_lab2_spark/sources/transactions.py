@@ -7,10 +7,13 @@ commit N tables' next versions ALL-OR-NOTHING.
 The protocol, composed from the primitives the single-table path
 already trusts:
 
-1. STAGE: each participating write puts its data files under a unique
-   attempt dir and builds its next-version manifest EXACTLY as the
-   single-table append/overwrite would — plus a ``txn`` stamp
-   ``{"id": <uuid>, "log": <shared txn-log dir>}``.
+1. STAGE: each participating write runs the single-table verb's own
+   stage part — `versioned._stage_append` for an append,
+   `versioned._stage_rewrite` for an overwrite or a chain — which puts
+   its data files under a unique attempt dir and builds its
+   next-version manifest; the transaction only adds a ``txn`` stamp
+   ``{"id": <uuid>, "log": <shared txn-log dir>}``. A transactional
+   write is an ordinary write plus a commit stamp, as in Delta.
 2. PUBLISH PENDING: each manifest is committed with the same
    exclusive-create protocol as any single-table write, which ATOMICALLY
    claims that table's next version slot (a concurrent independent
@@ -56,23 +59,14 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from wnv_etl_lab2_spark.sources.table_manifest import (
-    DECLARATIONS,
-    FILE_METADATA,
-    inherit,
-    put,
-)
 from wnv_etl_lab2_spark.sources.versioned import (
-    _footer_row_count,
-    _attempt_dir,
     _commit,
-    _data_files,
     _fs,
     _list_versions,
-    _maintain_stats,
-    _merge_schemas,
     _qualify,
     _read_manifest,
+    _stage_append,
+    _stage_rewrite,
     latest_version,
 )
 
@@ -98,8 +92,11 @@ class TxnWrite:
     committer (`versioned._commit_partial_rewrite`), and every other
     file carries by reference. A MERGE is `merge_into_table`'s clause
     matrix — an upsert is its clauses from `versioned._upsert_clauses`.
-    For ``df``: plain writes carry the rows to write; "merge" carries
-    the SOURCE frame; "delete"/"update" carry None."""
+    A plain write ("append", "overwrite", "chain") stages through the
+    single-table verb's stage part (`_stage`), so it casts, computes,
+    checks and evolves exactly as `append_table` / `overwrite_table`
+    do. For ``df``: plain writes carry the rows to write; "merge"
+    carries the SOURCE frame; "delete"/"update" carry None."""
 
     df: DataFrame | None
     table_path: str
@@ -134,33 +131,44 @@ def _compose_chain(
     """The chain's composed result frame over the committed snapshot —
     sequential statement semantics as ONE lazy plan (Catalyst fuses
     the filters/projections; the corpus is scanned once at stage
-    time). Generated columns are dropped for recompute. DELETE and
-    UPDATE steps apply the verbs' own row transform
+    time). Each step gets its single-statement verb's row semantics,
+    so generated columns stay in the frame and the gen_ CHECK riding
+    the one write validates them, as on every single-statement
+    surface. An append or overwrite step's frame gets the append
+    preparation (`versioned._prepare_append`: declared-type up-cast,
+    a missing generated column computed, a supplied one kept for the
+    CHECK). DELETE and UPDATE steps apply the verbs' own row transform
     (`versioned._dml_rows`: keep-predicate, SET validation, CASE-WHEN
-    projection, nondeterminism refusal); MERGE steps (round 17) apply
-    the shared clause matrix (`versioned._merge_result`) over the
-    composed view, and its one cardinality identity is evaluated
-    EAGERLY at stage time (one aggregate job over the step's join): a
-    count riding the final write could silently never fire if a later
-    step filtered or discarded the merged frame, and sequential-
-    statement semantics demand the ambiguity raise regardless."""
+    projection, generated recompute, nondeterminism refusal); MERGE
+    steps (round 17) apply the shared clause matrix
+    (`versioned._merge_result`) over the composed view, and its one
+    cardinality identity is evaluated EAGERLY at stage time (one
+    aggregate job over the step's join): a count riding the final
+    write could silently never fire if a later step filtered or
+    discarded the merged frame, and sequential-statement semantics
+    demand the ambiguity raise regardless."""
     from wnv_etl_lab2_spark.sources.versioned import (
+        _declared_types,
         _dml_rows,
         _merge_result,
+        _prepare_append,
         read_table,
     )
 
-    generated = prev0.get("generated") or {}
+    declared_types = _declared_types(prev0)
     # pin the base to the CAS'd version: a concurrent commit landing
     # between the version check and this read must lose at OUR publish
     # (slot taken), never silently become the chain's base
     view = read_table(spark, w.table_path, base_version)
     for step in w.chain:
         op = step["op"]
-        if op == "append":
-            view = view.unionByName(step["df"], allowMissingColumns=True)
-        elif op == "overwrite":
-            view = step["df"]
+        if op in ("append", "overwrite"):
+            rows = _prepare_append(step["df"], prev0, declared_types)
+            view = (
+                view.unionByName(rows, allowMissingColumns=True)
+                if op == "append"
+                else rows
+            )
         elif op in ("delete", "update"):
             view = _dml_rows(
                 view, prev0, op, step["condition"], step.get("set_exprs")
@@ -178,7 +186,8 @@ def _compose_chain(
                 spark, view, step["df"], kw.pop("on"),
                 kw.pop("matched", None), kw.pop("not_matched", None),
                 kw.pop("not_matched_by_source", None),
-                gen_cols=generated, ident_specs=prev0.get("identity") or {},
+                gen_cols=prev0.get("generated") or {},
+                ident_specs=prev0.get("identity") or {},
                 dflt=prev0.get("defaults") or {},
                 **kw,
             )
@@ -186,10 +195,7 @@ def _compose_chain(
             view = mr["result"]
         else:
             raise ValueError(f"unsupported chain step op: {op!r}")
-    # generated columns recompute from the composed row (update/merge
-    # semantics — the gen_ CHECK invariant then holds by construction)
-    gone = [c for c in generated if c in view.columns]
-    return view.drop(*gone) if gone else view
+    return view
 
 
 def _run_dml(spark: SparkSession, w: TxnWrite, txn: dict) -> int:
@@ -297,11 +303,12 @@ def read_outcome(spark: SparkSession, txn_log: str, txn_id: str) -> str | None:
 
 
 def _stage(spark: SparkSession, w: TxnWrite, txn_id: str, txn_log: str):
-    """Write ``w``'s data files and build its next-version manifest
-    (not yet published). Mirrors the single-table append/overwrite
-    manifest shapes exactly, so every existing reader — resolve walk,
-    CDF, streaming source, schema evolution — consumes transactional
-    versions with zero special cases once they are visible."""
+    """Stage ``w``'s data files and build its next-version manifest, not
+    yet published: the single-table stage part (`versioned._stage_append`
+    for an append, `versioned._stage_rewrite` for an overwrite or a
+    chain) plus the ``txn`` stamp. Every reader — resolve walk, CDF,
+    streaming source, schema evolution — then consumes a transactional
+    version with no special case once it is visible."""
     cur = latest_version(spark, w.table_path)
     if cur is None:
         raise ValueError(f"not a versioned table (no log): {w.table_path}")
@@ -314,128 +321,26 @@ def _stage(spark: SparkSession, w: TxnWrite, txn_id: str, txn_log: str):
         raise ValueError(
             f"transactional op must be append|overwrite|chain, got {w.op!r}"
         )
-    version = cur + 1
-    prev0 = _read_manifest(spark, w.table_path, cur)
-    from wnv_etl_lab2_spark.sources.versioned import (
-        _advance_identity,
-        _apply_generated,
-        _assign_identity,
-        _enforce_constraints,
-        _evolve_column_map,
-        _to_physical,
-    )
-
-    constraints = prev0.get("constraints", {})
-    generated = prev0.get("generated")
-    identity = prev0.get("identity")
-    declared_types: dict = {}
-    if "schema" in prev0:
-        import json as _json
-
-        from pyspark.sql.types import StructType as _ST
-
-        declared_types = {
-            f.name: f.dataType
-            for f in _ST.fromJson(_json.loads(prev0["schema"])).fields
-        }
-    # generated/identity columns compute-if-missing through
-    # transactional stages exactly like the single-table verbs (r13);
-    # declared-type casts + ALWAYS-identity refusal like the r14
-    # single-table write paths (txn stages are user-facing writes).
-    # A CHAIN's composed frame carries surviving rows' identity values
-    # legitimately (internal-rewrite semantics, like MERGE): keep
-    # them, allocate for inserted rows' nulls.
-    base_df = (
-        _compose_chain(spark, w, prev0, cur) if w.op == "chain" else w.df
-    )
-    wdf = _assign_identity(
-        _apply_generated(base_df, generated, declared_types),
-        identity,
-        declared_types,
-        forbid_supplied=(w.op != "chain"),
-        fill_nulls=(w.op == "chain"),
-    )
-    # partitioning + column mapping travel through transactional stages
-    # exactly like the single-table verbs (round 13)
-    partition_by = prev0.get("partition_by")
-    if partition_by:
-        missing = [c for c in partition_by if c not in wdf.columns]
-        if missing:
-            raise ValueError(
-                f"txn write to partitioned {w.table_path} must carry its "
-                f"partition columns; missing: {missing}"
-            )
-    cmap = dict(prev0.get("column_map", {}))
-    dropped = list(prev0.get("dropped_physical", []))
-    evolved = (
-        _merge_schemas(prev0.get("schema"), wdf.schema)
-        if w.op == "append"
-        else wdf.schema.json()
-    )
-    if cmap or dropped:
-        import json as _json
-
-        cmap = _evolve_column_map(
-            [f["name"] for f in _json.loads(evolved)["fields"]], cmap, dropped
-        )
-    df, check = _enforce_constraints(
-        wdf, constraints, f"txn {w.op} -> {w.table_path}"
-    )
-    vdir = _attempt_dir(w.table_path, version)
-    writer = _to_physical(df, cmap).write.mode("error")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(vdir)
-    try:
-        check()
-    except ValueError:
-        fs, jvm = _fs(spark, w.table_path)
-        fs.delete(jvm.org.apache.hadoop.fs.Path(vdir), True)
-        raise
-    files = _data_files(spark, vdir)
-    n_new = 0
-    if files:
-        n_new = _footer_row_count(files)
-        if n_new is None:
-            n_new = spark.read.parquet(vdir).count()
-    if identity and files:
-        identity = _advance_identity(identity, spark, vdir, cmap, files=files)
+    prev = _read_manifest(spark, w.table_path, cur)
     if w.op == "append":
-        # an append inherits the declarations and the per-file metadata
-        # like the single-table append (round 13; dropping the metadata
-        # silently resurrected MoR-deleted rows and reset stats/bloom
-        # skipping after a transactional append)
-        manifest = {
-            **inherit(prev0, DECLARATIONS, FILE_METADATA),
-            "version": version,
-            "op": "append",
-            "parent": cur,
-            "add": files,
-            "n_rows": int(prev0["n_rows"]) + n_new,
-        }
+        version, manifest, _vdir = _stage_append(
+            w.df, w.table_path, cur, prev, w.batch_id, w.writer_id
+        )
     else:
         # a CHAIN commits as an overwrite (the composed result IS the
-        # new snapshot — every consumer's rewrite semantics apply
-        # unchanged); the step ops are recorded for history forensics.
-        # A full rewrite inherits the declarations except `widened`
-        # (every file is freshly written at the declared types).
-        manifest = {
-            **inherit(prev0, DECLARATIONS, skip=("widened",)),
-            "version": version,
-            "op": "overwrite",
-            "files": files,
-            "n_rows": n_new,
-        }
-        if w.op == "chain":
+        # new snapshot — every consumer's rewrite semantics apply); its
+        # frame carries surviving rows' identity values, so they are
+        # kept and only inserted rows' nulls allocate. The step ops are
+        # recorded for history forensics.
+        chain = w.op == "chain"
+        version, manifest = _stage_rewrite(
+            _compose_chain(spark, w, prev, cur) if chain else w.df,
+            w.table_path, cur + 1, "overwrite", prev,
+            identity_fill_nulls=chain, batch_id=w.batch_id,
+            writer_id=w.writer_id,
+        )
+        if chain:
             manifest["txn_ops"] = [step["op"] for step in w.chain]
-    manifest["schema"] = evolved
-    put(manifest, "column_map", {k: v for k, v in cmap.items() if k != v})
-    put(manifest, "identity", identity)
-    _maintain_stats(manifest, files)
-    if w.batch_id is not None:
-        manifest["batch_id"] = int(w.batch_id)
-        if w.writer_id is not None:
-            manifest["writer_id"] = w.writer_id
     manifest["txn"] = {"id": txn_id, "log": txn_log}
     return version, manifest
 

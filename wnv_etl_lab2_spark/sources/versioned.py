@@ -1488,7 +1488,15 @@ def _write_version(
     defaults: dict | None = None,
     txn: dict | None = None,
 ) -> int:
-    """``txn`` (round 16 — transactional DML): a cross-table
+    """Commit ``df`` as a FULL rewrite of the table: create, replace,
+    overwrite, full-snapshot DML and MERGE, OPTIMIZE, column DDL. It
+    splits where it publishes: the CAS on ``expect_latest`` picks the
+    declarations (the parent manifest's, or this call's on create and
+    replace), the stage part (`_stage_rewrite`, which transactional
+    overwrites and chains share) writes the files and builds the
+    manifest, and the publish part is the one `_commit`.
+
+    ``txn`` (round 16 — transactional DML): a cross-table
     transaction stamp ``{"id": ..., "log": ...}``. When set, the
     committed manifest carries it, making the version PENDING —
     invisible to every reader until the transaction's outcome marker
@@ -1536,82 +1544,110 @@ def _write_version(
             f"optimistic concurrency check failed: expected latest={expect_latest}, "
             f"found {current} — re-read and retry"
         )
-    constraints = dict(constraints or {})
-    cmap: dict = {}
-    dropped: list = []
-    declared_types: dict = {}
     if current is not None and not replace:
-        # a FULL rewrite inherits the parent's DECLARATIONS except
-        # `widened`: every surviving file is freshly written with the
-        # declared (post-widening) types, so the narrow-file marker
-        # normalizes away (`table_manifest`). The written frame defines
-        # the schema; only a column DDL's rewrite path passes its own
-        # stats_cols. Per-file stats are recomputed for the new files
-        # from stats_cols (WRITE-TIME stats maintenance, round 12 —
-        # Delta's indexed-columns contract), so file skipping never goes
-        # stale behind a write.
-        prev = inherit(
-            _read_manifest(spark, table_path, current), DECLARATIONS,
-            skip=("widened",),
-        )
-        constraints = prev.get("constraints", {})
-        properties = prev.get("properties")
-        partition_by = prev.get("partition_by")
-        generated = prev.get("generated")
-        identity = prev.get("identity")
-        defaults = prev.get("defaults")
-        cmap = dict(prev.get("column_map", {}))
-        dropped = list(prev.get("dropped_physical", []))
-        if "schema" in prev:
-            from pyspark.sql.types import StructType as _ST
-
-            declared_types = {
-                f.name: f.dataType
-                for f in _ST.fromJson(json.loads(prev["schema"])).fields
-            }
-        if stats_cols is None:
-            stats_cols = prev.get("stats_cols")
-    elif generated:
-        # creation declares the invariant once; every later write
-        # enforces it through the ordinary constraint machinery
-        constraints = dict(constraints)
-        for gcol, gexpr in sorted(generated.items()):
-            constraints[f"gen_{gcol}"] = f"{gcol} <=> ({gexpr})"
-    df = _apply_generated(df, generated, declared_types)
-    # ALWAYS-identity enforcement only where USER rows enter whole
-    # (overwrite = INSERT OVERWRITE); internal rewrites (delete/update/
-    # merge/optimize) re-write existing rows and legitimately carry the
-    # column. append_table enforces its own path.
-    df = _assign_identity(
-        df, identity, declared_types, forbid_supplied=(op == "overwrite"),
-        fill_nulls=identity_fill_nulls,
+        decl = _read_manifest(spark, table_path, current)
+    else:
+        # a create or replace declares the table afresh; the generated
+        # columns' invariants are declared once, as CHECKs every later
+        # write enforces through the ordinary constraint machinery
+        decl = {
+            "constraints": {
+                **(constraints or {}),
+                **{
+                    f"gen_{gcol}": f"{gcol} <=> ({gexpr})"
+                    for gcol, gexpr in (generated or {}).items()
+                },
+            },
+            "properties": properties,
+            "partition_by": list(partition_by) if partition_by else None,
+            "generated": generated,
+            "identity": identity,
+            "defaults": defaults,
+        }
+    version, manifest = _stage_rewrite(
+        df, table_path, version, op, decl, stats_cols=stats_cols,
+        pre_commit_check=pre_commit_check,
+        identity_fill_nulls=identity_fill_nulls,
+        batch_id=batch_id, writer_id=writer_id, stamp=stamp,
     )
-    partition_by = list(partition_by) if partition_by else None
-    if partition_by:
-        missing = [c for c in partition_by if c not in df.columns]
-        if missing:
-            raise ValueError(
-                f"partition columns missing from the written frame: {missing}"
-            )
-    # full-rewrite ops DEFINE the snapshot schema: the map keeps every
-    # surviving logical column's stable physical name and drops entries
-    # for columns the rewrite no longer carries (tombstones persist)
-    logical_schema_json = df.schema.json()
-    if defaults:
-        # a DEFAULT declaration only makes sense for a column the new
-        # snapshot still has — a rewrite that drops the column takes
-        # its default with it (round 15 review fix: a stale key would
-        # survive invisibly and resurrect on a later re-add)
-        defaults = {c: e for c, e in defaults.items() if c in df.columns}
-        defaults = defaults or None
-    if cmap or dropped:
-        cmap = _evolve_column_map(df.columns, cmap, dropped)
-    df, check = _enforce_constraints(df, constraints, f"{op} -> {table_path}")
+    if changes_files is not None:
+        manifest["changes"] = changes_files
+    if txn is not None:
+        manifest["txn"] = dict(txn)
+    _commit(spark, table_path, version, manifest)
+    return version
+
+
+def _declared_types(m: dict) -> dict:
+    """{column: declared Spark type} of manifest ``m``'s schema ({} when
+    it records none)."""
+    if "schema" not in m:
+        return {}
+    from pyspark.sql.types import StructType
+
+    return {
+        f.name: f.dataType
+        for f in StructType.fromJson(json.loads(m["schema"])).fields
+    }
+
+
+def _put_ledger(
+    manifest: dict, batch_id: int | None, writer_id: str | None, stamp=None
+) -> None:
+    """The idempotence-ledger keys of a commit: a streaming sink's
+    ``batch_id`` or a matview's ``stamp``, and the ``writer_id`` that
+    scopes them."""
+    if batch_id is not None:
+        manifest["batch_id"] = int(batch_id)
+    if stamp is not None:
+        manifest["stamp"] = stamp
+    if writer_id is not None and (batch_id is not None or stamp is not None):
+        manifest["writer_id"] = writer_id
+
+
+def _require_partition_columns(df: DataFrame, partition_by, table_path: str):
+    missing = [c for c in partition_by or () if c not in df.columns]
+    if missing:
+        raise ValueError(
+            f"a write to partitioned {table_path} must carry its partition "
+            f"columns; missing: {missing}"
+        )
+
+
+def _stage_files(
+    df: DataFrame,
+    table_path: str,
+    version: int,
+    constraints: dict,
+    cmap: dict,
+    partition_by,
+    context: str,
+    pre_commit_check=None,
+    identity: dict | None = None,
+) -> tuple[str, list[str], int, dict | None]:
+    """Stage one version's data files: the one data write of the
+    protocol. Every commit that writes rows stages through here —
+    `_stage_append` and `_stage_rewrite` (and so every transactional
+    write), and `_commit_partial_rewrite`.
+
+    ``df`` is written under a fresh attempt dir (`_attempt_dir`) at the
+    column map's physical names, hive-partitioned by ``partition_by``
+    (partition columns are never renamable, so their physical names
+    are their logical names). The CHECK audit (`_enforce_constraints`)
+    rides that write; it and the optional ``pre_commit_check`` (e.g.
+    MERGE's cardinality) run after it, and a refusal (``ValueError``)
+    deletes the attempt dir before any manifest names it.
+
+    Returns ``(vdir, files, n_rows, identity)``: the attempt dir, its
+    data files (none for an empty partitioned write: the hive layout
+    has nowhere to place zero rows), their row count from the parquet
+    footers (one count job when a footer cannot be read) and
+    ``identity``'s water marks advanced past the written values."""
+    spark = df.sparkSession
+    df, check = _enforce_constraints(df, constraints, context)
     vdir = _attempt_dir(table_path, version)
     writer = _to_physical(df, cmap).write.mode("error")
     if partition_by:
-        # partition columns are never renamable (refused by the DDL
-        # verbs), so their physical names are their logical names
         writer = writer.partitionBy(*partition_by)
     writer.parquet(vdir)
     try:
@@ -1623,10 +1659,6 @@ def _write_version(
         fs.delete(jvm.org.apache.hadoop.fs.Path(vdir), True)
         raise
     files = _data_files(spark, vdir)
-    # an empty partitionBy write produces no files at all (hive layout
-    # has no rows to place anywhere): record the honest zero. Row count
-    # and identity water marks come from the written files' FOOTERS
-    # (metadata-only) instead of a second full read of the output.
     n_rows = 0
     if files:
         n_rows = _footer_row_count(files)
@@ -1634,37 +1666,83 @@ def _write_version(
             n_rows = spark.read.parquet(vdir).count()
     if identity and files:
         identity = _advance_identity(identity, spark, vdir, cmap, files=files)
-    # full-rewrite ops (create/overwrite/delete/merge/optimize) DEFINE
-    # the snapshot: the written frame's schema is the version's schema
+    return vdir, files, n_rows, identity
+
+
+def _stage_rewrite(
+    df: DataFrame,
+    table_path: str,
+    version: int,
+    op: str,
+    decl: dict,
+    stats_cols: list[str] | None = None,
+    pre_commit_check=None,
+    identity_fill_nulls: bool = False,
+    batch_id: int | None = None,
+    writer_id: str | None = None,
+    stamp=None,
+) -> tuple[int, dict]:
+    """The stage part of a FULL rewrite: stage ``df``'s files as
+    ``version`` and return ``(version, manifest)``, unpublished. Its
+    publish part is `_write_version`'s `_commit`; a transactional
+    overwrite or chain (`transactions._stage`) stamps the manifest
+    instead and publishes it pending.
+
+    ``decl`` carries the declarations the version is written under:
+    the parent manifest, or a create/replace's fresh ones. A full
+    rewrite inherits them except ``widened`` (every file is freshly
+    written at the declared types, `table_manifest`), and the written
+    frame DEFINES the snapshot schema: the column map keeps every
+    surviving column's stable physical name and drops the rest
+    (tombstones persist), and a DEFAULT leaves with its column (round
+    15 review fix: a stale key would resurrect on a later re-add).
+    Per-file stats are recomputed for the new files from
+    ``stats_cols`` (default: the declared ones — round 12, Delta's
+    indexed-columns contract). A missing generated column computes;
+    a supplied one is checked by its gen_ CHECK. A missing IDENTITY
+    column allocates; ``identity_fill_nulls`` (a frame carrying
+    existing rows: MERGE inserts, transaction chains) allocates its
+    nulls instead, and only an overwrite of user rows refuses supplied
+    GENERATED ALWAYS values."""
+    decl = inherit(decl, DECLARATIONS, skip=("widened",))
+    declared_types = _declared_types(decl)
+    df = _apply_generated(df, decl.get("generated"), declared_types)
+    df = _assign_identity(
+        df, decl.get("identity"), declared_types,
+        forbid_supplied=(op == "overwrite" and not identity_fill_nulls),
+        fill_nulls=identity_fill_nulls,
+    )
+    partition_by = decl.get("partition_by")
+    _require_partition_columns(df, partition_by, table_path)
+    cmap = dict(decl.get("column_map", {}))
+    dropped = decl.get("dropped_physical")
+    if cmap or dropped:
+        cmap = _evolve_column_map(df.columns, cmap, list(dropped or []))
+    schema_json = df.schema.json()
+    _vdir, files, n_rows, identity = _stage_files(
+        df, table_path, version, decl.get("constraints", {}), cmap,
+        partition_by, f"{op} -> {table_path}", pre_commit_check,
+        decl.get("identity"),
+    )
     manifest = {
+        **decl,
         "version": version,
         "op": op,
         "files": files,
         "n_rows": n_rows,
-        "schema": logical_schema_json,
+        "schema": schema_json,
     }
-    put(manifest, "partition_by", partition_by)
     put(manifest, "column_map", {k: v for k, v in cmap.items() if k != v})
-    put(manifest, "dropped_physical", dropped)
-    if batch_id is not None:
-        manifest["batch_id"] = int(batch_id)
-    if stamp is not None:
-        manifest["stamp"] = stamp
-    if writer_id is not None and (batch_id is not None or stamp is not None):
-        manifest["writer_id"] = writer_id
-    if changes_files is not None:
-        manifest["changes"] = changes_files
-    put(manifest, "constraints", constraints)
-    put(manifest, "generated", generated)
     put(manifest, "identity", identity)
-    put(manifest, "properties", properties)
-    put(manifest, "defaults", defaults)
-    put(manifest, "stats_cols", list(stats_cols or []))
+    put(manifest, "defaults", {
+        c: e for c, e in (decl.get("defaults") or {}).items() if c in df.columns
+    })
+    put(manifest, "stats_cols", list(
+        stats_cols if stats_cols is not None else decl.get("stats_cols") or []
+    ))
+    _put_ledger(manifest, batch_id, writer_id, stamp)
     _maintain_stats(manifest, files)
-    if txn is not None:
-        manifest["txn"] = dict(txn)
-    _commit(spark, table_path, version, manifest)
-    return version
+    return version, manifest
 
 
 def _norm_identity(identity: dict | None, generated: dict | None) -> dict | None:
@@ -2023,6 +2101,95 @@ def replace_table(
     )
 
 
+def _prepare_append(df: DataFrame, m: dict, declared_types: dict) -> DataFrame:
+    """A batch readied for appending to the table of manifest ``m``,
+    the preparation every append gets (`_stage_append`, and each append
+    or overwrite step of a transaction chain): a column NARROWER than
+    its declared type (int into a widened-to-long column) casts up
+    in-plan instead of tripping the type-change check — lossless by
+    the `_safe_widening` lattice the ALTER verb enforces (round 14, the
+    write half of type widening) — and a missing generated column is
+    computed; a supplied one is validated by its gen_ CHECK riding the
+    write."""
+    from pyspark.sql import functions as F
+
+    ups = {
+        f.name: declared_types[f.name]
+        for f in df.schema.fields
+        if f.name in declared_types
+        and f.dataType != declared_types[f.name]
+        and _safe_widening(f.dataType, declared_types[f.name])
+    }
+    if ups:
+        df = df.select(
+            *[F.col(c).cast(ups[c]) if c in ups else F.col(c) for c in df.columns]
+        )
+    return _apply_generated(df, m.get("generated"), declared_types)
+
+
+def _stage_append(
+    df: DataFrame,
+    table_path: str,
+    cur: int,
+    prev: dict,
+    batch_id: int | None = None,
+    writer_id: str | None = None,
+) -> tuple[int, dict, str]:
+    """The stage part of an APPEND of ``df`` onto version ``cur``
+    (manifest ``prev``): stage the batch's files as version ``cur + 1``
+    and return ``(version, manifest, attempt dir)``, unpublished. Its
+    publish parts are `append_table`'s rebase loop and a transaction's
+    pending publish (`transactions._stage`).
+
+    The batch gets the append preparation (`_prepare_append`); a
+    missing IDENTITY column allocates from the water mark, and a
+    supplied one is kept only under BY DEFAULT. Schema evolution is
+    additive-only (`_merge_schemas`), checked before any data is
+    written; new logical columns extend the column map (round 13: new
+    files always store the stable physical names). The manifest
+    records only the ADDED files and the parent: an append keeps every
+    old file, so it inherits the declarations and the per-file
+    metadata (stats/blooms/DVs stay valid — files are immutable;
+    appended files have no entry and always scan). Dropping the
+    per-file metadata cost the next collect_stats/collect_blooms a
+    whole-table rescan, and dropping dv_counts degraded
+    purge_deletion_vectors' fraction heuristic (rounds 12 and 15)."""
+    declared_types = _declared_types(prev)
+    df = _prepare_append(df, prev, declared_types)
+    df = _assign_identity(
+        df, prev.get("identity"), declared_types, forbid_supplied=True
+    )
+    evolved = _merge_schemas(prev.get("schema"), df.schema)
+    partition_by = prev.get("partition_by")
+    _require_partition_columns(df, partition_by, table_path)
+    cmap = dict(prev.get("column_map", {}))
+    dropped = prev.get("dropped_physical")
+    if cmap or dropped:
+        cmap = _evolve_column_map(
+            [f["name"] for f in json.loads(evolved)["fields"]], cmap,
+            list(dropped or []),
+        )
+    version = cur + 1
+    vdir, files, n_new, identity = _stage_files(
+        df, table_path, version, prev.get("constraints", {}), cmap,
+        partition_by, f"append -> {table_path}", identity=prev.get("identity"),
+    )
+    manifest = {
+        **inherit(prev, DECLARATIONS, FILE_METADATA),
+        "version": version,
+        "op": "append",
+        "parent": cur,
+        "add": files,
+        "n_rows": int(prev["n_rows"]) + n_new,
+        "schema": evolved,
+    }
+    put(manifest, "column_map", {k: v for k, v in cmap.items() if k != v})
+    put(manifest, "identity", identity)
+    _put_ledger(manifest, batch_id, writer_id)
+    _maintain_stats(manifest, files)
+    return version, manifest, vdir
+
+
 def append_table(
     df: DataFrame,
     table_path: str,
@@ -2047,113 +2214,22 @@ def append_table(
     schema; old files read as null for them) but a type change on an
     existing column raises — see `_merge_schemas`. ``extra_manifest``
     lets append-family verbs (COPY INTO's load ledger) ride the SAME
-    atomic commit — protocol keys are reserved and rejected."""
+    atomic commit — protocol keys are reserved and rejected.
+
+    The verb splits where it publishes: the stage part
+    (`_stage_append`, which a transactional append shares) writes the
+    files and builds the manifest; the publish part here commits it,
+    rebasing past winning appends, then writes the post-commit
+    checkpoint."""
     spark = df.sparkSession
     cur = latest_version(spark, table_path)
     if cur is None:
         raise ValueError(f"not a versioned table (no log): {table_path}")
-    version = cur + 1
     prev = _read_manifest(spark, table_path, cur)
-    declared_types: dict = {}
-    if "schema" in prev:
-        from pyspark.sql.types import StructType as _ST
-
-        declared_types = {
-            f.name: f.dataType
-            for f in _ST.fromJson(json.loads(prev["schema"])).fields
-        }
-        # implicit up-cast on write (round 14, the write half of type
-        # widening): a batch column NARROWER than the declared type
-        # (int into a widened-to-long column) casts up in-plan instead
-        # of tripping the type-change check — lossless by the same
-        # `_safe_widening` lattice the ALTER verb enforces
-        from pyspark.sql import functions as F
-
-        ups = {
-            c: declared_types[c]
-            for c, t in ((f.name, f.dataType) for f in df.schema.fields)
-            if c in declared_types
-            and t != declared_types[c]
-            and _safe_widening(t, declared_types[c])
-        }
-        if ups:
-            df = df.select(
-                *[
-                    F.col(c).cast(ups[c]) if c in ups else F.col(c)
-                    for c in df.columns
-                ]
-            )
-    generated = prev.get("generated")
-    df = _apply_generated(df, generated, declared_types)  # compute-if-
-    # missing; provided values are validated by the gen_ CHECK
-    # invariant riding the write
-    identity = prev.get("identity")
-    df = _assign_identity(
-        df, identity, declared_types, forbid_supplied=True
-    )  # allocate-if-missing from the water mark; supplied values
-    # (BY DEFAULT declarations only) advance the mark post-write
-    evolved = _merge_schemas(prev.get("schema"), df.schema)
-    constraints = prev.get("constraints", {})
-    partition_by = prev.get("partition_by")
-    if partition_by:
-        missing = [c for c in partition_by if c not in df.columns]
-        if missing:
-            raise ValueError(
-                f"append to a partitioned table must carry its partition "
-                f"columns; missing: {missing}"
-            )
-    # column mapping (round 13): new files always store the stable
-    # PHYSICAL names; a batch introducing new logical columns extends
-    # the map (fresh physical on tombstone collision)
-    cmap = dict(prev.get("column_map", {}))
-    dropped = list(prev.get("dropped_physical", []))
-    if cmap or dropped:
-        cmap = _evolve_column_map(
-            [f["name"] for f in json.loads(evolved)["fields"]], cmap, dropped
-        )
-    df, check = _enforce_constraints(df, constraints, f"append -> {table_path}")
-    vdir = _attempt_dir(table_path, version)
-    writer = _to_physical(df, cmap).write.mode("error")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(vdir)
-    try:
-        check()
-    except ValueError:
-        fs, jvm = _fs(spark, table_path)
-        fs.delete(jvm.org.apache.hadoop.fs.Path(vdir), True)
-        raise
-    new_files = _data_files(spark, vdir)
-    n_new = 0
-    if new_files:
-        n_new = _footer_row_count(new_files)
-        if n_new is None:
-            n_new = spark.read.parquet(vdir).count()
-    if identity and new_files:
-        identity = _advance_identity(identity, spark, vdir, cmap, files=new_files)
-    # an append keeps every old file: it inherits the declarations and
-    # the per-file metadata (stats/blooms/DVs stay valid — files are
-    # immutable; appended files simply have no entry and always scan)
-    # and states only what it changes — dropping per-file metadata cost
-    # the next collect_stats/collect_blooms a whole-table rescan, and
-    # dropping dv_counts degraded purge_deletion_vectors' fraction
-    # heuristic (rounds 12 and 15)
-    manifest = {
-        **inherit(prev, DECLARATIONS, FILE_METADATA),
-        "version": version,
-        "op": "append",
-        "parent": cur,
-        "add": new_files,
-        "n_rows": int(prev["n_rows"]) + n_new,
-        "schema": evolved,
-    }
-    put(manifest, "column_map", {k: v for k, v in cmap.items() if k != v})
-    put(manifest, "identity", identity)
-    if batch_id is not None:
-        manifest["batch_id"] = int(batch_id)
-        if writer_id is not None:
-            manifest["writer_id"] = writer_id
-    _maintain_stats(manifest, new_files)
+    version, manifest, vdir = _stage_append(
+        df, table_path, cur, prev, batch_id, writer_id
+    )
+    n_new = int(manifest["n_rows"]) - int(prev["n_rows"])
     if extra_manifest:
         clash = set(extra_manifest) & set(manifest)
         if clash:
@@ -3169,23 +3245,13 @@ def _commit_partial_rewrite(
     winning appends instead."""
     version = cur + 1
     gone = {file_key(f) for f in doomed}
-    live, check = _enforce_constraints(
-        live, m.get("constraints", {}), f"{op} -> {table_path}"
-    )
-    vdir = _attempt_dir(table_path, version)
-    new_files: list[str] = []
+    vdir, new_files, written = None, [], 0
     if doomed:
-        writer = _to_physical(live, m.get("column_map", {})).write.mode("error")
-        if m.get("partition_by"):
-            writer = writer.partitionBy(*m["partition_by"])
-        writer.parquet(vdir)
-        try:
-            check()
-        except ValueError:
-            fs, jvm = _fs(spark, table_path)
-            fs.delete(jvm.org.apache.hadoop.fs.Path(vdir), True)
-            raise
-        new_files = _data_files(spark, vdir)
+        vdir, new_files, written, _ = _stage_files(
+            live, table_path, version, m.get("constraints", {}),
+            m.get("column_map", {}), m.get("partition_by"),
+            f"{op} -> {table_path}",
+        )
     n_rows = int(m["n_rows"])
     if op == "delete" and doomed:
         doomed_phys = _footer_row_count(doomed)
@@ -3197,9 +3263,6 @@ def _commit_partial_rewrite(
                 for f, n in (m.get("dv_counts") or {}).items()
                 if file_key(manifest_path(f)) in gone
             )
-        written = _footer_row_count(new_files) if new_files else 0
-        if written is None:
-            written = spark.read.parquet(vdir).count()
         n_rows = n_rows - doomed_logical + written
     manifest = {
         **inherit(m, DECLARATIONS),
@@ -4023,13 +4086,9 @@ def vacuum_table(
     if dry_run:
         return drop  # preview only: nothing deleted, no checkpoint written
     fs, jvm = _fs(spark, table_path)
-    # resolve kept versions WHILE their parent manifests still exist,
-    # qualified on both sides of the reference count (manifests may mix
-    # pre-round-9 scheme-less entries with current qualified URIs)
+    # resolve kept versions WHILE their parent manifests still exist
     kept_resolved = {v: _resolve_files(spark, table_path, v) for v in kept}
-    kept_files: set[str] = set()
-    for files in kept_resolved.values():
-        kept_files.update(_qualify(fs, jvm, f) for f in files)
+    kept_m = {v: _read_manifest(spark, table_path, v) for v in kept}
     # every kept version whose append-chain walk passes through a
     # dropped manifest gets a checkpoint BEFORE those manifests go:
     # with contiguous drops (keep_last) that is just the oldest kept
@@ -4039,7 +4098,7 @@ def vacuum_table(
     if drop:
         dropset = set(drop)
         for v in kept:
-            m_v = _read_manifest(spark, table_path, v)
+            m_v = kept_m[v]
             walks_through_drop = v == kept[0] or (
                 "files" not in m_v
                 and "files_ref" not in m_v
@@ -4060,104 +4119,58 @@ def vacuum_table(
         )
         # a dropped version's checkpoint (either format) is garbage too
         _delete_checkpoint(spark, table_path, v)
-    # one reference-counted garbage pass over the data dirs: a dir is
-    # deletable iff its attempt version is <= the newest kept version
-    # (in-flight writers target latest+1 — never touched) AND no kept
-    # manifest references a file inside it. This single rule covers
-    # dropped versions' own dirs, crashed-writer attempt dirs, and
-    # commit-race losers, while an append chain's shared dirs survive
-    # as long as any kept snapshot lists their files.
+    # one reference-counted garbage pass over the attempt dirs of data
+    # files, row-level change data (round 11), deletion vectors (round
+    # 11) and bloom sidecars (round 12): a dir is deletable iff its
+    # attempt version is <= the newest kept version (in-flight writers
+    # target latest+1 — never touched) AND no kept manifest references
+    # a file inside it. This single rule covers dropped versions' own
+    # dirs, crashed-writer attempt dirs, commit-race losers and
+    # superseded DVs or sidecars, while an append chain's shared dirs
+    # survive as long as any kept snapshot lists their files. Both
+    # sides compare by `file_key`, so manifests mixing pre-round-9
+    # scheme-less entries with qualified URIs count alike.
     latest = versions[-1]
-    ddir = jvm.org.apache.hadoop.fs.Path(posixpath.join(table_path, _DATA_DIR))
-    if fs.exists(ddir):
-        for st in fs.listStatus(ddir):
+    kept_refs = {
+        _DATA_DIR: [f for files in kept_resolved.values() for f in files],
+        _CHANGES_DIR: [f for m in kept_m.values() for f in m.get("changes", [])],
+        _DV_DIR: [f for m in kept_m.values() for f in m.get("dv", [])],
+        _BLOOM_DIR: [
+            f
+            for m in kept_m.values()
+            for f in (m.get("blooms_ref") or {}).get("files", [])
+        ],
+    }
+    for sub, refs in kept_refs.items():
+        keys = {file_key(f) for f in refs}
+        sdir = jvm.org.apache.hadoop.fs.Path(posixpath.join(table_path, sub))
+        if not fs.exists(sdir):
+            continue
+        for st in fs.listStatus(sdir):
             n = _attempt_version(st.getPath().getName())
             if n is None or n > latest:
                 continue
-            vpath = fs.makeQualified(st.getPath()).toString()
-            if not any(f.startswith(vpath + "/") for f in kept_files):
+            prefix = file_key(fs.makeQualified(st.getPath()).toString()) + "/"
+            if not any(k.startswith(prefix) for k in keys):
                 fs.delete(st.getPath(), True)
-    # same reference-counted rule for row-level change-data dirs: a
-    # kept manifest's "changes" list is the only live reference; a
-    # dropped version's change files (or a crashed change-data write
-    # attempt) are garbage once the version slot is decided (round 11)
-    kept_changes: set[str] = set()
-    for v in kept:
-        m = _read_manifest(spark, table_path, v)
-        kept_changes.update(_qualify(fs, jvm, f) for f in m.get("changes", []))
-    cdir = jvm.org.apache.hadoop.fs.Path(posixpath.join(table_path, _CHANGES_DIR))
-    if fs.exists(cdir):
-        for st in fs.listStatus(cdir):
-            n = _attempt_version(st.getPath().getName())
-            if n is None or n > latest:
-                continue
-            vpath = fs.makeQualified(st.getPath()).toString()
-            if not any(f.startswith(vpath + "/") for f in kept_changes):
-                fs.delete(st.getPath(), True)
-    # and for deletion-vector dirs: kept manifests' "dv" lists are the
-    # live references (round 11) — a vacuumed version's DVs, or a
-    # compaction-reset chain's stale DVs, are garbage
-    kept_dv: set[str] = set()
-    for v in kept:
-        m = _read_manifest(spark, table_path, v)
-        kept_dv.update(_qualify(fs, jvm, f) for f in m.get("dv", []))
-    dvdir = jvm.org.apache.hadoop.fs.Path(posixpath.join(table_path, _DV_DIR))
-    if fs.exists(dvdir):
-        for st in fs.listStatus(dvdir):
-            n = _attempt_version(st.getPath().getName())
-            if n is None or n > latest:
-                continue
-            vpath = fs.makeQualified(st.getPath()).toString()
-            if not any(f.startswith(vpath + "/") for f in kept_dv):
-                fs.delete(st.getPath(), True)
-    # and for bloom SIDECAR dirs: kept manifests' "blooms_ref" file
-    # lists are the live references (round 12) — a vacuumed version's
-    # sidecar, or a superseded recollection's, is garbage
-    kept_blooms: set[str] = set()
-    for v in kept:
-        m = _read_manifest(spark, table_path, v)
-        kept_blooms.update(
-            _qualify(fs, jvm, f) for f in m.get("blooms_ref", {}).get("files", [])
-        )
-    bdir = jvm.org.apache.hadoop.fs.Path(posixpath.join(table_path, _BLOOM_DIR))
-    if fs.exists(bdir):
-        for st in fs.listStatus(bdir):
-            n = _attempt_version(st.getPath().getName())
-            if n is None or n > latest:
-                continue
-            vpath = fs.makeQualified(st.getPath()).toString()
-            if not any(f.startswith(vpath + "/") for f in kept_blooms):
-                fs.delete(st.getPath(), True)
-    # file-list SIDECARS are reference-counted like DV/bloom sidecars
-    # (round 16): metadata-only commits share their parent's sidecar,
-    # so a sidecar lives while ANY kept manifest's files_ref points at
-    # it; a dropped version's (or a crashed writer's) sidecar is
-    # garbage once its version slot is decided. In-flight writers
-    # target latest+1 — their names sort above `latest` and are never
-    # touched.
-    kept_refs: set[str] = set()
-    kept_stats_refs: set[str] = set()
-    for v in kept:
-        m_v = _read_manifest(spark, table_path, v)
-        ref = m_v.get("files_ref")
-        if ref:
-            kept_refs.add(_qualify(fs, jvm, ref["path"]))
-        sref = m_v.get("stats_ref")
-        if sref:
-            kept_stats_refs.add(_qualify(fs, jvm, sref["path"]))
+    # file-list and stats SIDECARS are reference-counted the same way
+    # (rounds 16 and 17): metadata-only commits, appends and partial
+    # rewrites share their parent's sidecar by reference, so one lives
+    # while ANY kept manifest points at it; a dropped version's (or a
+    # crashed writer's) sidecar is garbage once its version slot is
+    # decided
+    live_sidecars = {
+        prefix: {
+            file_key(m[key]["path"]) for m in kept_m.values() if m.get(key)
+        }
+        for prefix, key in (("files-", "files_ref"), ("stats-", "stats_ref"))
+    }
     log_dir = jvm.org.apache.hadoop.fs.Path(posixpath.join(table_path, _LOG_DIR))
     if fs.exists(log_dir):
         for st in fs.listStatus(log_dir):
             name = st.getPath().getName()
-            # STATS sidecars (round 17) reference-count exactly like
-            # file-list sidecars: appends and partial rewrites share
-            # them by reference, so one lives while ANY kept manifest's
-            # stats_ref points at it
-            if name.startswith("files-") and name.endswith(".parquet"):
-                prefix, live = "files-", kept_refs
-            elif name.startswith("stats-") and name.endswith(".parquet"):
-                prefix, live = "stats-", kept_stats_refs
-            else:
+            prefix = name.split("-", 1)[0] + "-"
+            if prefix not in live_sidecars or not name.endswith(".parquet"):
                 continue
             try:
                 n = int(name[len(prefix):len(prefix) + 8])
@@ -4165,7 +4178,8 @@ def vacuum_table(
                 continue
             if n > latest:
                 continue
-            if fs.makeQualified(st.getPath()).toString() not in live:
+            key = file_key(fs.makeQualified(st.getPath()).toString())
+            if key not in live_sidecars[prefix]:
                 fs.delete(st.getPath(), True)
     return drop
 
