@@ -66,3 +66,42 @@ def test_bucketed_groupby_needs_no_exchange(spark, bucketed_tables):
     df = spark.table(lt).groupBy("custkey").agg(F.count(F.lit(1)).alias("n"))
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan  # aggregation reuses the bucket layout
+
+
+def test_upsert_bucketed_partition_leaves_session_conf_alone(
+    spark, tmp_path, monkeypatch
+):
+    """Replacing one partition of a bucketed index never sets the
+    session-global ``partitionOverwriteMode``, and keeps every other
+    partition."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from wnv_etl_lab2_spark.sources.bucketing import upsert_bucketed_partition
+
+    table, path = "b_upsert_conf", str(tmp_path / "idx")
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    keys = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        keys.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    try:
+        for batch, ids in ((1, (1, 2)), (2, (3,)), (1, (4,))):
+            upsert_bucketed_partition(
+                spark.createDataFrame(
+                    [(i, f"s{i}") for i in ids], "band_id long, band_sig string"
+                ),
+                table=table,
+                path=path,
+                partition_col="batch_id",
+                partition_value=batch,
+                bucket_keys=["band_id", "band_sig"],
+            )
+        got = sorted((r.batch_id, r.band_id) for r in spark.table(table).collect())
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+    assert [k for k in keys if "partitionOverwriteMode" in k] == []
+    assert got == [(1, 4), (2, 3)]  # batch 1 replaced, batch 2 kept

@@ -1,0 +1,88 @@
+"""Every versioned-table verb publishes through `versioned._publish`, so
+a commit that loses its version slot fails the same way on every verb:
+one ``optimistic concurrency check failed`` ValueError, no temp file
+left in the log, and a `with_retries` re-run of the same closure
+commits on the new tip."""
+
+from __future__ import annotations
+
+import glob
+import os
+
+import pytest
+
+import wnv_etl_lab2_spark.sources.versioned as V
+from wnv_etl_lab2_spark.sources.versioned import (
+    add_check_constraint,
+    append_table,
+    create_table,
+    delete_from_table,
+    latest_version,
+    read_table,
+    set_table_properties,
+    table_constraints,
+    table_properties,
+    with_retries,
+)
+
+_SCHEMA = "id long, s string"
+
+# verb under test -> (closure over (spark, path), check of its effect)
+_VERBS = {
+    "set_table_properties": (
+        lambda spark, path: set_table_properties(spark, path, {"k": "v"}),
+        lambda spark, path: table_properties(spark, path).get("k") == "v",
+    ),
+    "add_check_constraint": (
+        lambda spark, path: add_check_constraint(spark, path, "pos", "id >= 0"),
+        lambda spark, path: "pos" in table_constraints(spark, path),
+    ),
+    "merge_on_read_delete": (
+        lambda spark, path: delete_from_table(
+            spark, path, "id = 1", mode="merge_on_read"
+        ),
+        lambda spark, path: 1 not in _ids(spark, path),
+    ),
+    "touched_files_delete": (
+        lambda spark, path: delete_from_table(spark, path, "id = 3"),
+        lambda spark, path: 3 not in _ids(spark, path),
+    ),
+}
+
+
+def _ids(spark, path) -> set[int]:
+    return {r.id for r in read_table(spark, path).collect()}
+
+
+@pytest.mark.parametrize("verb", sorted(_VERBS))
+def test_lost_slot_raises_the_one_race_error(spark, tmp_path, monkeypatch, verb):
+    """A concurrent append wins the slot inside the verb's commit; the
+    verb refuses with the race error (not a raw JVM exception), and the
+    retried closure lands on top of the winner."""
+    path = str(tmp_path / "t")
+    create_table(spark.createDataFrame([(1, "a"), (2, "b")], _SCHEMA), path)
+    # three data files, so the touched-files DELETE rewrites one of them
+    append_table(spark.createDataFrame([(3, "c")], _SCHEMA), path)
+    append_table(spark.createDataFrame([(4, "d")], _SCHEMA), path)
+    run, effect = _VERBS[verb]
+
+    real_commit = V._commit
+    fired = []
+
+    def racing_commit(sp, tp, version, manifest):
+        if tp == path and not fired:
+            fired.append(version)
+            monkeypatch.setattr(V, "_commit", real_commit)
+            append_table(spark.createDataFrame([(100, "race")], _SCHEMA), path)
+        return real_commit(sp, tp, version, manifest)
+
+    monkeypatch.setattr(V, "_commit", racing_commit)
+    with pytest.raises(ValueError, match="optimistic concurrency"):
+        run(spark, path)
+    assert fired == [3]
+    assert latest_version(spark, path) == 3  # only the winner landed
+    assert glob.glob(os.path.join(path, "_log", ".tmp-*")) == []
+
+    assert with_retries(lambda: run(spark, path)) == 4
+    assert effect(spark, path)
+    assert 100 in _ids(spark, path)

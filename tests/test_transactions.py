@@ -82,12 +82,13 @@ def test_crash_mid_transaction_leaves_prior_versions(spark, tmp_path, monkeypatc
     outcome decided: both tables must still read their prior state;
     abort_transaction recovers the slots."""
     import wnv_etl_lab2_spark.sources.transactions as tx
+    import wnv_etl_lab2_spark.sources.versioned as V
 
     a, b, log = str(tmp_path / "a"), str(tmp_path / "b"), str(tmp_path / "txn")
     create_table(_df(spark, [(0, "a0")]), a)
     create_table(_df(spark, [(0, "b0")]), b)
 
-    real_commit = tx._commit
+    real_commit = V._commit
     calls = {"n": 0}
 
     def crashing_commit(s, path, version, manifest):
@@ -96,7 +97,7 @@ def test_crash_mid_transaction_leaves_prior_versions(spark, tmp_path, monkeypatc
         if calls["n"] == 1:
             raise RuntimeError("simulated crash between manifest publishes")
 
-    monkeypatch.setattr(tx, "_commit", crashing_commit)
+    monkeypatch.setattr(V, "_commit", crashing_commit)
     captured_id = {}
     real_stage = tx._stage
 
@@ -184,12 +185,13 @@ def test_slot_conflict_aborts_whole_transaction(spark, tmp_path, monkeypatch):
     between staging and publish, the WHOLE transaction aborts — table
     A (whose pending manifest already landed) rolls back."""
     import wnv_etl_lab2_spark.sources.transactions as tx
+    import wnv_etl_lab2_spark.sources.versioned as V
 
     a, b, log = str(tmp_path / "a"), str(tmp_path / "b"), str(tmp_path / "txn")
     create_table(_df(spark, [(0, "a0")]), a)
     create_table(_df(spark, [(0, "b0")]), b)
 
-    real_commit = tx._commit
+    real_commit = V._commit
     fired = {"n": 0}
 
     def racing_commit(s, path, version, manifest):
@@ -198,7 +200,7 @@ def test_slot_conflict_aborts_whole_transaction(spark, tmp_path, monkeypatch):
             append_table(_df(spark, [(99, "race")]), b)  # takes slot 1
         real_commit(s, path, version, manifest)
 
-    monkeypatch.setattr(tx, "_commit", racing_commit)
+    monkeypatch.setattr(V, "_commit", racing_commit)
     with pytest.raises(Exception):
         commit_transaction(
             spark,

@@ -1455,9 +1455,9 @@ def type_widening_lifecycle(spark, sf_dir):
     from wnv_etl_lab2_spark.sources.delta_sql import DeltaSql
     from wnv_etl_lab2_spark.sources.versioned import (
         _read_manifest,
+        _tip,
         append_table,
         create_table,
-        latest_version,
         read_table,
     )
 
@@ -1475,7 +1475,7 @@ def type_widening_lifecycle(spark, sf_dir):
         DeltaSql(spark, {"t": tbl}).run(
             "ALTER TABLE t ALTER COLUMN n_chars TYPE BIGINT"
         )
-        m = _read_manifest(spark, tbl, latest_version(spark, tbl))
+        m = _tip(spark, tbl)[1]
         if m["files"] != files_before:
             raise AssertionError("type widening rewrote data files")
         if "type_widening" not in m.get("features", []):

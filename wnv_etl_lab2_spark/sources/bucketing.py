@@ -55,31 +55,32 @@ def upsert_bucketed_partition(
     table: str,
     path: str,
     partition_col: str,
+    partition_value,
     bucket_keys: list[str],
     buckets: int = 8,
 ) -> None:
-    """Idempotently (re)write ONE partition of a partitioned+bucketed
-    EXTERNAL table — the accumulating-index write shape (e.g. the
-    streaming near-dup band index: partitioned by micro-batch id,
-    bucketed by the join keys so the per-batch state join never
-    exchanges the index side, and a retried batch REPLACES its own
-    partition via dynamic partition overwrite instead of
-    double-appending).
+    """Idempotently (re)write partition ``partition_col =
+    partition_value`` of a partitioned+bucketed EXTERNAL table with the
+    rows of ``df`` (the table's data columns) — the accumulating-index
+    write shape (e.g. the streaming near-dup band index: partitioned by
+    micro-batch id, bucketed by the join keys so the per-batch state
+    join never exchanges the index side, and a retried batch REPLACES
+    its own partition instead of double-appending).
 
     First call creates the table at ``path`` (external — the files
     stay at the caller's location and remain readable as plain
-    parquet); later calls ``insertInto`` with
-    partitionOverwriteMode=dynamic, so only the partitions present in
-    ``df`` are replaced. ``df`` must carry exactly the table's
-    columns; they are reordered here to the positional layout
-    ``insertInto`` requires (data columns first, partition column
-    last)."""
+    parquet); later calls run ``INSERT OVERWRITE ... PARTITION
+    (partition_col = partition_value)``: a static partition spec
+    replaces exactly that partition, and leaves the session's conf
+    alone (``partitionOverwriteMode`` is a session-global setting, and
+    ``insertInto`` ignores the per-write option)."""
     import os
 
+    from pyspark.sql import functions as F
+
     spark = df.sparkSession
-    data_cols = [c for c in df.columns if c != partition_col]
-    ordered = df.select(*data_cols, partition_col)
     if not spark.catalog.tableExists(table):
+        ordered = df.withColumn(partition_col, F.lit(partition_value))
         if os.path.isdir(path) and any(
             d.startswith(f"{partition_col}=") for d in os.listdir(path)
         ):
@@ -109,12 +110,13 @@ def upsert_bucketed_partition(
                 .saveAsTable(table)
             )
             return
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        ordered.write.mode("overwrite").insertInto(table)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    cols = ", ".join(f"`{c}`" for c in df.columns)
+    spark.sql(
+        f"INSERT OVERWRITE TABLE {table} PARTITION ({partition_col} = {{pv}}) "
+        f"SELECT {cols} FROM {{src}}",
+        pv=partition_value,
+        src=df,
+    )
 
 
 def colocated_join(

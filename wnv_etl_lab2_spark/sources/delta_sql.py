@@ -536,10 +536,7 @@ class DeltaSql:
                     # bare COMPUTE STATISTICS: every top-level primitive
                     # column that can carry a min/max (hive partition
                     # columns live in the path, not the footers)
-                    from wnv_etl_lab2_spark.sources.versioned import (
-                        _read_manifest,
-                        latest_version,
-                    )
+                    from wnv_etl_lab2_spark.sources.versioned import _tip
 
                     sch = table_schema(self.spark, path)
                     if sch is None:
@@ -547,11 +544,7 @@ class DeltaSql:
                             "ANALYZE without a column list needs a "
                             "schema-recording table"
                         )
-                    pby = set(
-                        _read_manifest(
-                            self.spark, path, latest_version(self.spark, path)
-                        ).get("partition_by") or []
-                    )
+                    pby = set(_tip(self.spark, path)[1].get("partition_by") or [])
                     cols = [
                         f.name
                         for f in sch.fields
@@ -918,14 +911,9 @@ class DeltaSql:
                         f"arity {len(col_list)}"
                     )
                 keep = set(col_list)
-                from wnv_etl_lab2_spark.sources.versioned import (
-                    _read_manifest,
-                    latest_version,
-                )
+                from wnv_etl_lab2_spark.sources.versioned import _tip
 
-                mf = _read_manifest(
-                    self.spark, path, latest_version(self.spark, path)
-                )
+                mf = _tip(self.spark, path)[1]
                 derived = set(mf.get("generated") or {}) | set(
                     mf.get("identity") or {}
                 )

@@ -32,10 +32,68 @@ inherits:
 A commit then states only what its own op changes. A value that is
 empty (``{}``, ``[]``, ``None``) is the same as an absent key. A new
 protocol key goes into exactly one class here, never into a per-verb
-list. The module is session-free.
+list. It also names the commit log's files and holds the reader's
+feature gate. The module is session-free.
 """
 
 from __future__ import annotations
+
+import posixpath
+
+# Version N of a table is the manifest ``<table>/_log/NNNNNNNN.json``;
+# every other entry of the log dir is a sidecar, a checkpoint or a
+# temp file.
+LOG_DIR = "_log"
+
+
+def manifest_file(table_path: str, version: int) -> str:
+    """The path of the manifest of version ``version``."""
+    return posixpath.join(table_path, LOG_DIR, f"{version:08d}.json")
+
+
+def manifest_version(name: str) -> int | None:
+    """The version whose manifest a log-dir entry named ``name`` is, or
+    None for any other entry."""
+    stem = name[: -len(".json")]
+    return int(stem) if name.endswith(".json") and stem.isdigit() else None
+
+
+# The reader's feature gate (Delta's table-features protocol): a
+# manifest that uses a feature an unaware reader would silently
+# mis-read lists it under ``features`` (stamped at commit from the
+# manifest's own content), and readers refuse a manifest requiring a
+# feature outside this set instead of returning wrong rows — a reader
+# ignoring the column map would surface physical names, one ignoring
+# deletion vectors would resurrect deleted rows. Legacy manifests carry
+# no field and read as ever.
+SUPPORTED_FEATURES = frozenset(
+    {
+        "column_mapping",
+        "deletion_vectors",
+        "partitioning",
+        "identity_columns",
+        "generated_columns",
+        "type_widening",
+        "check_constraints",
+        "column_defaults",
+        "file_list_sidecar",
+        "stats_sidecar",
+    }
+)
+
+
+def require_features(m: dict, table_path: str, version: int) -> dict:
+    """``m``, the manifest of ``table_path`` version ``version``, when
+    this reader implements every feature it requires; raises otherwise."""
+    unknown = set(m.get("features", [])) - SUPPORTED_FEATURES
+    if unknown:
+        raise ValueError(
+            f"cannot read {table_path} v{version}: the snapshot requires "
+            f"table feature(s) {sorted(unknown)} this reader does not "
+            "implement — refusing rather than mis-reading (upgrade the "
+            "reader; a reader without the feature would return wrong rows)"
+        )
+    return m
 
 DECLARATIONS = (
     "schema",

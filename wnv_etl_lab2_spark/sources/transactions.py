@@ -14,15 +14,17 @@ already trusts:
    next-version manifest; the transaction only adds a ``txn`` stamp
    ``{"id": <uuid>, "log": <shared txn-log dir>}``. A transactional
    write is an ordinary write plus a commit stamp, as in Delta.
-2. PUBLISH PENDING: each manifest is committed with the same
-   exclusive-create protocol as any single-table write, which ATOMICALLY
-   claims that table's next version slot (a concurrent independent
-   writer or second transaction targeting the slot loses loudly — at
-   most one transaction can ever be pending per table). Stamped
+2. PUBLISH PENDING: each manifest is published through
+   `versioned._publish` with no conflict rule, like any single-table
+   commit; its exclusive create ATOMICALLY claims that table's next
+   version slot (a concurrent independent writer or second transaction
+   targeting the slot loses with the one optimistic-concurrency error —
+   at most one transaction can ever be pending per table). Stamped
    manifests are INVISIBLE: every reader (`latest_version`,
    `read_table`, batch-id ledgers, the Python streaming source) skips
    a ``txn``-stamped manifest until the transaction commits.
-3. COMMIT: one exclusive create of the single content-bearing marker
+3. COMMIT: one exclusive create (`versioned._create_exclusive`, the
+   commit log's own primitive) of the single content-bearing marker
    ``{txn_log}/{id}.final`` containing the decided outcome
    ("committed") — the single atomic action after which every
    participating table's new version is visible. Crash anywhere
@@ -59,15 +61,17 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from wnv_etl_lab2_spark.sources.table_manifest import manifest_file
 from wnv_etl_lab2_spark.sources.versioned import (
-    _commit,
+    _create_exclusive,
     _fs,
     _list_versions,
+    _publish,
     _qualify,
     _read_manifest,
     _stage_append,
     _stage_rewrite,
-    latest_version,
+    _tip,
 )
 
 
@@ -229,9 +233,9 @@ def _marker(jvm, txn_log: str, txn_id: str):
 def resolve_outcome(
     spark: SparkSession, txn_log: str, txn_id: str, outcome: str
 ) -> str:
-    """Decide a transaction's fate, EXACTLY ONCE: publish
-    ``{txn_id}.final`` containing "committed" or "aborted" via
-    temp-write + fail-if-exists rename (the `_commit` protocol — the
+    """Decide a transaction's fate, EXACTLY ONCE: create
+    ``{txn_id}.final`` containing "committed" or "aborted" with
+    `versioned._create_exclusive`, the commit log's own primitive (the
     content is never observable half-written, and two racing deciders
     get exactly one winner). Returns the WINNING outcome, which may be
     the other decider's: a committer that loses to an abort sees
@@ -245,32 +249,14 @@ def resolve_outcome(
     raises instead of reporting the caller's intended outcome as
     decided — otherwise `commit_transaction` would acknowledge a
     commit with no durable marker, leaving every participant
-    invisible-pending forever (`_commit` at versioned.py re-raises on
-    the same condition; this mirrors it)."""
-    import uuid as _uuid
-
+    invisible-pending forever (`versioned._publish` treats a failed
+    manifest create the same way)."""
     fs, jvm = _fs(spark, txn_log)
-    fs.mkdirs(jvm.org.apache.hadoop.fs.Path(txn_log))
     dst = _marker(jvm, txn_log, txn_id)
     if not fs.exists(dst):
-        tmp = jvm.org.apache.hadoop.fs.Path(
-            posixpath.join(txn_log, f".tmp-{txn_id}-{_uuid.uuid4().hex[:8]}")
-        )
-        out = fs.create(tmp, True)
         try:
-            out.write(outcome.encode("utf-8"))
-        finally:
-            out.close()
-        fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
-            fs.getUri(), spark._jsc.hadoopConfiguration()
-        )
-        rename_enum = getattr(jvm.org.apache.hadoop.fs, "Options$Rename")
-        opts = spark._sc._gateway.new_array(rename_enum, 1)
-        opts[0] = rename_enum.NONE
-        try:
-            fc.rename(tmp, dst, opts)
+            _create_exclusive(spark, dst.toString(), outcome)
         except Exception:
-            fs.delete(tmp, False)
             if not fs.exists(dst):
                 # transient rename failure, NOT a lost race: the txn is
                 # still undecided — raise so the caller retries or
@@ -309,9 +295,7 @@ def _stage(spark: SparkSession, w: TxnWrite, txn_id: str, txn_log: str):
     chain) plus the ``txn`` stamp. Every reader — resolve walk, CDF,
     streaming source, schema evolution — then consumes a transactional
     version with no special case once it is visible."""
-    cur = latest_version(spark, w.table_path)
-    if cur is None:
-        raise ValueError(f"not a versioned table (no log): {w.table_path}")
+    cur, prev = _tip(spark, w.table_path)
     if w.expect_latest is not None and cur != w.expect_latest:
         raise ValueError(
             f"optimistic concurrency check failed for {w.table_path}: "
@@ -321,7 +305,6 @@ def _stage(spark: SparkSession, w: TxnWrite, txn_id: str, txn_log: str):
         raise ValueError(
             f"transactional op must be append|overwrite|chain, got {w.op!r}"
         )
-    prev = _read_manifest(spark, w.table_path, cur)
     if w.op == "append":
         version, manifest, _vdir = _stage_append(
             w.df, w.table_path, cur, prev, w.batch_id, w.writer_id
@@ -355,12 +338,7 @@ def _delete_pending(spark: SparkSession, table_path: str, txn_id: str) -> None:
         m = _read_manifest(spark, table_path, v)
         txn = m.get("txn")
         if txn is not None and txn["id"] == txn_id:
-            fs.delete(
-                jvm.org.apache.hadoop.fs.Path(
-                    posixpath.join(table_path, "_log", f"{v:08d}.json")
-                ),
-                False,
-            )
+            fs.delete(jvm.org.apache.hadoop.fs.Path(manifest_file(table_path, v)), False)
             continue
         if _txn_visible(spark, m):
             return  # below the pending tip: nothing of ours further down
@@ -407,8 +385,9 @@ def commit_transaction(
             if w.op in _DML_OPS:
                 versions[w.table_path] = _run_dml(spark, w, txn)
         for w, version, manifest in staged:
-            _commit(spark, w.table_path, version, manifest)
-            versions[w.table_path] = version
+            versions[w.table_path] = _publish(
+                spark, w.table_path, version, manifest
+            )
     except Exception:
         # a slot claim (or a DML validation) failed: decide "aborted"
         # (nobody else can decide this txn_id — it never escaped this

@@ -63,6 +63,16 @@ plus MERGE schema evolution (``merge_into_table(schema_evolution=)``)
 and a pre-publish MERGE cardinality check (one count identity riding
 the write: the staged attempt aborts before its manifest publishes —
 no commit-then-restore window).
+
+Every commit crosses two seams. `_stage_files` stages the data files
+of any version that writes rows; `_publish` publishes a manifest built
+on the tip the verb read (`_tip`). `_publish` is the only caller of
+`_commit` (the exclusive create, `_create_exclusive`), so it alone
+decides a lost race: it raises the one ``optimistic concurrency check
+failed`` error, or — for the verbs that carry a conflict rule (append,
+partition-scoped OPTIMIZE, DV purge) — renames the attempt dir under
+the next version and re-commits the rebased manifest, at most
+`_PUBLISH_ATTEMPTS` times.
 """
 
 from __future__ import annotations
@@ -75,9 +85,14 @@ from pyspark.sql import DataFrame, SparkSession
 from wnv_etl_lab2_spark.sources.table_manifest import (
     DECLARATIONS,
     FILE_METADATA,
+    LOG_DIR,
     STATS,
+    SUPPORTED_FEATURES,  # noqa: F401 — the gate's vocabulary, next to _FEATURE_KEYS
     inherit,
+    manifest_file,
+    manifest_version,
     put,
+    require_features,
 )
 from wnv_etl_lab2_spark.sources.table_paths import (
     file_key,
@@ -88,7 +103,6 @@ from wnv_etl_lab2_spark.sources.table_paths import (
     partition_values,
 )
 
-_LOG_DIR = "_log"
 _DATA_DIR = "data"
 _CHANGES_DIR = "_changes"
 _DV_DIR = "_dv"
@@ -121,7 +135,7 @@ def _fs(spark: SparkSession, path: str):
 
 
 def _list_versions(spark: SparkSession, table_path: str) -> list[int]:
-    log_dir = posixpath.join(table_path, _LOG_DIR)
+    log_dir = posixpath.join(table_path, LOG_DIR)
     lp = local_path(log_dir)
     if lp is not None:
         import os as _os
@@ -130,23 +144,15 @@ def _list_versions(spark: SparkSession, table_path: str) -> list[int]:
             names = _os.listdir(lp)
         except (FileNotFoundError, NotADirectoryError):
             return []
-        return sorted(
-            int(n[: -len(".json")])
-            for n in names
-            if n.endswith(".json") and n[: -len(".json")].isdigit()
-        )
-    fs, jvm = _fs(spark, table_path)
-    log = jvm.org.apache.hadoop.fs.Path(log_dir)
-    if not fs.exists(log):
-        return []
-    out = []
-    for st in fs.listStatus(log):
-        name = st.getPath().getName()
-        # only NNNNNNNN.json entries are versions; checkpoints
-        # (_ckpt-*.json) and temp files are protocol sidecars
-        if name.endswith(".json") and name[: -len(".json")].isdigit():
-            out.append(int(name[: -len(".json")]))
-    return sorted(out)
+    else:
+        fs, jvm = _fs(spark, table_path)
+        log = jvm.org.apache.hadoop.fs.Path(log_dir)
+        if not fs.exists(log):
+            return []
+        names = [st.getPath().getName() for st in fs.listStatus(log)]
+    return sorted(
+        v for v in map(manifest_version, names) if v is not None
+    )
 
 
 # A checkpoint (the Delta-style log compaction this protocol cited as
@@ -177,13 +183,13 @@ CHECKPOINT_EVERY = 10
 def _ckpt_path(jvm, table_path: str, version: int):
     """Legacy JSON checkpoint file (read-compat only)."""
     return jvm.org.apache.hadoop.fs.Path(
-        posixpath.join(table_path, _LOG_DIR, f"_ckpt-{version:08d}.json")
+        posixpath.join(table_path, LOG_DIR, f"_ckpt-{version:08d}.json")
     )
 
 
 def _ckpt_parquet_dir(table_path: str, version: int) -> str:
     return posixpath.join(
-        table_path, _LOG_DIR, f"ckpt-{version:08d}.parquet"
+        table_path, LOG_DIR, f"ckpt-{version:08d}.parquet"
     )
 
 
@@ -288,7 +294,7 @@ def _write_file_list(
         for f in sorted(set(files))
     ]
     tmp = posixpath.join(
-        table_path, _LOG_DIR, f".tmplist-{_uuid.uuid4().hex[:8]}"
+        table_path, LOG_DIR, f".tmplist-{_uuid.uuid4().hex[:8]}"
     )
     # a handful of KB-sized row groups per million files: enough
     # parallelism for the executor-side scan, no small-file storm
@@ -357,7 +363,7 @@ def _files_sidecar_dir(table_path: str, version: int) -> str:
 
     return posixpath.join(
         table_path,
-        _LOG_DIR,
+        LOG_DIR,
         f"files-{version:08d}-{_uuid.uuid4().hex[:8]}.parquet",
     )
 
@@ -429,7 +435,7 @@ def _stats_sidecar_dir(table_path: str, version: int) -> str:
 
     return posixpath.join(
         table_path,
-        _LOG_DIR,
+        LOG_DIR,
         f"stats-{version:08d}-{_uuid.uuid4().hex[:8]}.parquet",
     )
 
@@ -462,7 +468,7 @@ def _write_stats_sidecar(spark: SparkSession, table_path: str, dst_dir: str, row
     import uuid as _uuid
 
     tmp = posixpath.join(
-        table_path, _LOG_DIR, f".tmpstats-{_uuid.uuid4().hex[:8]}"
+        table_path, LOG_DIR, f".tmpstats-{_uuid.uuid4().hex[:8]}"
     )
     rows_df.write.mode("overwrite").parquet(tmp)
     if not fs.rename(jp(tmp), dst):
@@ -602,30 +608,20 @@ def latest_version(spark: SparkSession, table_path: str) -> int | None:
     return None
 
 
-# The reader/writer feature-gate vocabulary (round 14 — Delta's table-
-# features protocol): every manifest that USES a feature an unaware
-# reader would silently mis-read lists it under ``features``; readers
-# refuse manifests requiring a feature outside this set instead of
-# returning wrong rows (an older reader of this format ignoring the
-# column map would surface physical names; one ignoring DVs would
-# resurrect deleted rows). Legacy manifests carry no field and read as
-# ever. The list is stamped AT COMMIT from the manifest's own content
-# (`_required_features`), so a feature is declared exactly when used.
-SUPPORTED_FEATURES = frozenset(
-    {
-        "column_mapping",
-        "deletion_vectors",
-        "partitioning",
-        "identity_columns",
-        "generated_columns",
-        "type_widening",
-        "check_constraints",
-        "column_defaults",
-        "file_list_sidecar",
-        "stats_sidecar",
-    }
-)
+def _tip(spark: SparkSession, table_path: str) -> tuple[int, dict]:
+    """``(version, manifest)`` of the newest visible version — what every
+    verb reads before it stages, and every commit builds on. Raises for
+    a path with no visible version."""
+    cur = latest_version(spark, table_path)
+    if cur is None:
+        raise ValueError(f"not a versioned table (no log): {table_path}")
+    return cur, _read_manifest(spark, table_path, cur)
 
+
+# The writer half of the feature gate (`table_manifest.require_features`
+# is the reader half): the feature list is stamped AT COMMIT from the
+# manifest's own content (`_required_features`), so a feature is
+# declared exactly when used.
 _FEATURE_KEYS = (
     (("column_map", "dropped_physical"), "column_mapping"),
     (("dv",), "deletion_vectors"),
@@ -662,7 +658,7 @@ _MANIFEST_TEXT_CACHE_MAX = 2048
 
 
 def _read_manifest(spark: SparkSession, table_path: str, version: int) -> dict:
-    mpath = posixpath.join(table_path, _LOG_DIR, f"{version:08d}.json")
+    mpath = manifest_file(table_path, version)
     lp = local_path(mpath)
     if lp is not None:
         import os as _os
@@ -684,16 +680,7 @@ def _read_manifest(spark: SparkSession, table_path: str, version: int) -> dict:
                 ]:
                     del _MANIFEST_TEXT_CACHE[k]
             _MANIFEST_TEXT_CACHE[key] = text
-        m = json.loads(text)
-        unknown = set(m.get("features", [])) - SUPPORTED_FEATURES
-        if unknown:
-            raise ValueError(
-                f"cannot read {table_path} v{version}: the snapshot requires "
-                f"table feature(s) {sorted(unknown)} this reader does not "
-                "implement — refusing rather than mis-reading (upgrade the "
-                "reader; a reader without the feature would return wrong rows)"
-            )
-        return m
+        return require_features(json.loads(text), table_path, version)
     fs, jvm = _fs(spark, table_path)
     p = jvm.org.apache.hadoop.fs.Path(mpath)
     if not fs.exists(p):
@@ -711,31 +698,20 @@ def _read_manifest(spark: SparkSession, table_path: str, version: int) -> dict:
         m = json.loads(bytes(data).decode("utf-8"))
     finally:
         stream.close()
-    unknown = set(m.get("features", [])) - SUPPORTED_FEATURES
-    if unknown:
-        raise ValueError(
-            f"cannot read {table_path} v{version}: the snapshot requires "
-            f"table feature(s) {sorted(unknown)} this reader does not "
-            "implement — refusing rather than mis-reading (upgrade the "
-            "reader; a reader without the feature would return wrong rows)"
-        )
-    return m
+    return require_features(m, table_path, version)
 
 
 def _commit(spark: SparkSession, table_path: str, version: int, manifest: dict) -> None:
-    """The atomic commit point: write the manifest CONTENT to a hidden
-    temp file (fully written + closed, never listable as a version —
-    `_list_versions` only matches ``NNNNNNNN.json``), then publish it
-    with a fail-if-exists rename (``FileContext.rename`` +
-    ``Options.Rename.NONE`` — the same protocol as Delta's
-    HDFSLogStore). A writer that crashes mid-content-write leaves only
-    an invisible temp file (vacuumable noise), never a truncated
+    """The atomic commit point, called only by `_publish`: finish the
+    manifest (commit timestamp, sidecar swaps, feature stamp — it
+    MUTATES ``manifest``) and create ``_log/{version:08d}.json`` with
+    `_create_exclusive`. A writer that crashes mid-content-write leaves
+    only an invisible temp file (vacuumable noise), never a truncated
     manifest squatting on the version number and wedging the table; a
     concurrent writer that already committed this version makes the
-    rename throw, so race losers still lose loudly and their data dirs
-    stay reference-counted garbage for vacuum."""
+    create throw, so race losers lose loudly and their data dirs stay
+    reference-counted garbage for vacuum."""
     import time
-    import uuid
 
     # commit wall-clock (ms) — the TIMESTAMP AS OF / retention anchor
     # (round 12). Stamped at the atomic publish, never replayed:
@@ -822,18 +798,33 @@ def _commit(spark: SparkSession, table_path: str, version: int, manifest: dict) 
         manifest["features"] = feats
     else:
         manifest.pop("features", None)
-    fs, jvm = _fs(spark, table_path)
-    log_dir = jvm.org.apache.hadoop.fs.Path(posixpath.join(table_path, _LOG_DIR))
-    fs.mkdirs(log_dir)
-    tmp = jvm.org.apache.hadoop.fs.Path(
-        posixpath.join(table_path, _LOG_DIR, f".tmp-{version:08d}-{uuid.uuid4().hex[:8]}")
+    _create_exclusive(
+        spark,
+        manifest_file(table_path, version),
+        json.dumps(manifest, sort_keys=True),
     )
-    dst = jvm.org.apache.hadoop.fs.Path(
-        posixpath.join(table_path, _LOG_DIR, f"{version:08d}.json")
-    )
+
+
+def _create_exclusive(spark: SparkSession, path: str, text: str) -> None:
+    """Create the file ``path`` holding ``text`` if and only if it does
+    not exist yet — the one atomic primitive of the commit log and of
+    the transaction outcome markers. The text goes to a hidden temp file
+    in the same dir first (fully written and closed; never a version
+    name), then a fail-if-exists rename (``FileContext.rename`` +
+    ``Options.Rename.NONE``, Delta's HDFSLogStore protocol) publishes
+    it. A concurrent creator that got there first makes the rename
+    throw; the temp file is removed either way."""
+    import uuid
+
+    fs, jvm = _fs(spark, path)
+    jp = jvm.org.apache.hadoop.fs.Path
+    parent, name = posixpath.split(path)
+    fs.mkdirs(jp(parent))
+    stem = name.rsplit(".", 1)[0]
+    tmp = jp(posixpath.join(parent, f".tmp-{stem}-{uuid.uuid4().hex[:8]}"))
     out = fs.create(tmp, True)
     try:
-        out.write(json.dumps(manifest, sort_keys=True).encode("utf-8"))
+        out.write(text.encode("utf-8"))
     finally:
         out.close()
     fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
@@ -843,10 +834,87 @@ def _commit(spark: SparkSession, table_path: str, version: int, manifest: dict) 
     opts = spark._sc._gateway.new_array(rename_enum, 1)
     opts[0] = rename_enum.NONE
     try:
-        fc.rename(tmp, dst, opts)
+        fc.rename(tmp, jp(path), opts)
     except Exception:
         fs.delete(tmp, False)  # lost the race (or rename failed): no litter
         raise
+
+
+# A lost commit race is re-published at most this many times before the
+# caller's `with_retries` closure re-runs the whole verb.
+_PUBLISH_ATTEMPTS = 5
+
+
+def _publish(
+    spark: SparkSession,
+    table_path: str,
+    version: int,
+    manifest: dict,
+    vdir: str | None = None,
+    rebase=None,
+) -> int:
+    """Publish ``manifest`` as ``version``; return the version it
+    landed at. This is the one caller of `_commit`, so the one place a
+    commit is won or lost.
+
+    A failed create is a LOST RACE when another writer's manifest holds
+    the slot; any other failure (this very manifest having landed
+    included) re-raises as is. A lost race raises the one ``optimistic
+    concurrency check failed`` error, unless the verb passed a conflict
+    rule: ``rebase(staged, winners, files)`` gets the manifest that
+    lost, the winning manifests ``{version: manifest}`` up to the tip,
+    and the staged data files under their new names, and returns the
+    manifest rebased onto the tip, or None to refuse.
+
+    Before the rule runs, the attempt dir ``vdir`` (when the verb staged
+    files) is renamed under the next version, since vacuum never
+    collects dirs named above the latest version. A pending transaction
+    among the winners, or a dir gone to a racing vacuum, refuses the
+    rebase. The publisher stamps the rebased slot: ``version``, an
+    append's ``parent``, and a fresh ``ts_ms`` (the lost attempt's stamp
+    would let TIMESTAMP AS OF resolve to a version stamped before its
+    predecessor). At most `_PUBLISH_ATTEMPTS` commits are tried."""
+    attempt = 1
+    while True:
+        try:
+            _commit(spark, table_path, version, manifest)
+            return version
+        except Exception as e:
+            top = max(_list_versions(spark, table_path), default=-1)
+            if top < version or _read_manifest(
+                spark, table_path, version
+            ) == json.loads(json.dumps(manifest)):
+                raise  # the slot is free, or holds this manifest: no race
+            lost = ValueError(
+                f"optimistic concurrency check failed: {table_path} "
+                f"v{version} was committed concurrently — re-read and retry"
+            )
+            if rebase is None or attempt == _PUBLISH_ATTEMPTS:
+                raise lost from e
+            winners = {
+                v: _read_manifest(spark, table_path, v)
+                for v in range(version, top + 1)
+            }
+            if not all(_txn_visible(spark, w) for w in winners.values()):
+                raise lost from e  # a pending transaction: serialize
+            files: list[str] = []
+            if vdir is not None:
+                new_vdir = _attempt_dir(table_path, top + 1)
+                fs, jvm = _fs(spark, table_path)
+                jp = jvm.org.apache.hadoop.fs.Path
+                if not fs.rename(jp(vdir), jp(new_vdir)):
+                    raise lost from e  # dir gone (racing vacuum): re-run
+                vdir = new_vdir
+                files = _data_files(spark, vdir)
+            rebased = rebase(manifest, winners, files)
+            if rebased is None:
+                raise lost from e
+            rebased.pop("ts_ms", None)
+            version = rebased["version"] = top + 1
+            if "parent" in rebased:
+                rebased["parent"] = top
+            manifest = rebased
+            attempt += 1
 
 
 def _data_files(spark: SparkSession, version_dir: str) -> list[str]:
@@ -1494,7 +1562,7 @@ def _write_version(
     declarations (the parent manifest's, or this call's on create and
     replace), the stage part (`_stage_rewrite`, which transactional
     overwrites and chains share) writes the files and builds the
-    manifest, and the publish part is the one `_commit`.
+    manifest, and the publish part is `_publish` with no conflict rule.
 
     ``txn`` (round 16 — transactional DML): a cross-table
     transaction stamp ``{"id": ..., "log": ...}``. When set, the
@@ -1574,8 +1642,7 @@ def _write_version(
         manifest["changes"] = changes_files
     if txn is not None:
         manifest["txn"] = dict(txn)
-    _commit(spark, table_path, version, manifest)
-    return version
+    return _publish(spark, table_path, version, manifest)
 
 
 def _declared_types(m: dict) -> dict:
@@ -1684,7 +1751,7 @@ def _stage_rewrite(
 ) -> tuple[int, dict]:
     """The stage part of a FULL rewrite: stage ``df``'s files as
     ``version`` and return ``(version, manifest)``, unpublished. Its
-    publish part is `_write_version`'s `_commit`; a transactional
+    publish part is `_write_version`'s `_publish`; a transactional
     overwrite or chain (`transactions._stage`) stamps the manifest
     instead and publishes it pending.
 
@@ -2051,8 +2118,7 @@ def convert_to_versioned(
         }
     put(manifest, "stats_cols", list(stats_cols or []))
     _maintain_stats(manifest, files)
-    _commit(spark, table_path, 0, manifest)
-    return 0
+    return _publish(spark, table_path, 0, manifest)
 
 
 def replace_table(
@@ -2138,8 +2204,9 @@ def _stage_append(
     """The stage part of an APPEND of ``df`` onto version ``cur``
     (manifest ``prev``): stage the batch's files as version ``cur + 1``
     and return ``(version, manifest, attempt dir)``, unpublished. Its
-    publish parts are `append_table`'s rebase loop and a transaction's
-    pending publish (`transactions._stage`).
+    publish parts are `append_table` (`_publish` with the append
+    conflict rule) and a transaction's pending publish
+    (`transactions._stage`).
 
     The batch gets the append preparation (`_prepare_append`); a
     missing IDENTITY column allocates from the water mark, and a
@@ -2218,14 +2285,11 @@ def append_table(
 
     The verb splits where it publishes: the stage part
     (`_stage_append`, which a transactional append shares) writes the
-    files and builds the manifest; the publish part here commits it,
-    rebasing past winning appends, then writes the post-commit
-    checkpoint."""
+    files and builds the manifest; the publish part here hands it to
+    `_publish` with the append conflict rule, then writes the
+    post-commit checkpoint."""
     spark = df.sparkSession
-    cur = latest_version(spark, table_path)
-    if cur is None:
-        raise ValueError(f"not a versioned table (no log): {table_path}")
-    prev = _read_manifest(spark, table_path, cur)
+    cur, prev = _tip(spark, table_path)
     version, manifest, vdir = _stage_append(
         df, table_path, cur, prev, batch_id, writer_id
     )
@@ -2238,7 +2302,7 @@ def append_table(
             )
         manifest.update(extra_manifest)
 
-    def _rebase_after_lost_race(staged: dict):
+    def _rebase(staged: dict, winners: dict, files: list[str]):
         """Write-write CONFLICT MATRIX, append row (round 14 — r13
         verdict "what's missing" #6): an append is BLIND — it reads no
         existing row — so losing the commit race to a winner that left
@@ -2249,37 +2313,20 @@ def append_table(
         batch write" (the `with_retries` closure re-run, O(batch) data
         work + a garbage attempt dir) into an O(1)-data retry — the
         difference between a streaming sink hiccuping and a streaming
-        sink rewriting every contended micro-batch. Falls back to the
-        closure re-run (returns None) whenever a winner could make the
-        staged batch semantically stale:
+        sink rewriting every contended micro-batch. Refuses (the
+        closure re-runs) whenever a winner could make the staged batch
+        semantically stale:
 
-        - any intervening commit is txn-pending (the barrier),
         - the tip changed schema / constraints / partitioning / column
           map / generated / identity / properties / widened / stats
           declarations (the batch was validated against the old ones),
         - the table declares IDENTITY at all (this batch allocated
           from a now-stale water mark — re-running re-allocates),
-        - both writers merged a COPY INTO ledger (set-union conflict).
-
-        The staged attempt dir is RENAMED under the new version number
-        before the re-commit, preserving vacuum's in-flight protection
-        (dirs named above the latest version are never collected). A
-        zero-retention VACUUM racing a contended append can still
-        collect the staged dir in the instant the race is lost — the
-        rename then fails and the closure re-run writes fresh files;
-        the same "don't vacuum at zero retention under concurrent
-        writers" guidance real formats document."""
-        nonlocal vdir
-        new_cur = latest_version(spark, table_path)
-        all_vs = _list_versions(spark, table_path)
-        if new_cur is None or not all_vs or max(all_vs) != new_cur:
-            return None  # pending txn holds the next slot: serialize
+        - both writers merged a COPY INTO ledger (set-union conflict),
+        - a winner is the same idempotence-ledger writer (below)."""
         if prev.get("identity"):
             return None
-        for v in range(staged["parent"] + 1, new_cur + 1):
-            w = _read_manifest(spark, table_path, v)
-            if not _txn_visible(spark, w):
-                return None
+        for w in winners.values():
             if "copy_ledger" in w and "copy_ledger" in staged:
                 return None
             if (
@@ -2295,53 +2342,21 @@ def append_table(
                 # twice — the closure re-run consults the ledger and
                 # skips (the sink's exactly-once contract)
                 return None
-        tip = _read_manifest(spark, table_path, new_cur)
+        tip = winners[max(winners)]
         if inherit(tip, DECLARATIONS) != inherit(prev, DECLARATIONS):
             return None
-        new_version = new_cur + 1
-        files = staged["add"]
-        if files:
-            new_vdir = _attempt_dir(table_path, new_version)
-            fs, jvm = _fs(spark, table_path)
-            jp = jvm.org.apache.hadoop.fs.Path
-            if not fs.rename(jp(vdir), jp(new_vdir)):
-                return None  # dir gone (racing vacuum): re-run rewrites
-            vdir = new_vdir
-            files = _data_files(spark, new_vdir)
-        # the tip's per-file metadata replaces the staged parent's; the
-        # failed attempt's `ts_ms` goes too — the rebased commit must
-        # stamp when IT becomes visible, or TIMESTAMP AS OF would
-        # resolve to a version stamped before its predecessor (r14
-        # review fix)
-        m2 = {
-            k: v
-            for k, v in staged.items()
-            if k not in FILE_METADATA and k != "ts_ms"
-        }
+        # the tip's per-file metadata replaces the staged parent's
+        m2 = {k: v for k, v in staged.items() if k not in FILE_METADATA}
         m2.update(inherit(tip, FILE_METADATA))
-        m2["version"] = new_version
-        m2["parent"] = new_cur
         m2["add"] = files
         m2["n_rows"] = int(tip["n_rows"]) + n_new
         _maintain_stats(m2, files)
-        return new_version, m2
+        return m2
 
-    rebases = 0
-    while True:
-        try:
-            _commit(spark, table_path, version, manifest)
-            break
-        except Exception:
-            vs_now = _list_versions(spark, table_path)
-            lost_race = bool(vs_now) and max(vs_now) >= version
-            rebases += 1
-            if not lost_race or rebases >= 5:
-                raise  # infra failure, or pathological contention —
-                # the caller's with_retries loop re-runs the closure
-            rebased = _rebase_after_lost_race(manifest)
-            if rebased is None:
-                raise  # semantic conflict: re-run validates afresh
-            version, manifest = rebased
+    version = _publish(
+        spark, table_path, version, manifest,
+        vdir=vdir if manifest["add"] else None, rebase=_rebase,
+    )
     if version % CHECKPOINT_EVERY == 0:
         # after the commit, never inside it: a checkpoint is a read
         # accelerator, not a correctness artifact — so a checkpoint
@@ -2493,9 +2508,7 @@ def copy_into(
     "files_skipped"}`` (``version`` is None when nothing qualified)."""
     from pyspark.sql import functions as F
 
-    cur = latest_version(spark, table_path)
-    if cur is None:
-        raise ValueError(f"not a versioned table (no log): {table_path}")
+    cur, m_cur = _tip(spark, table_path)
     fs, jvm = _fs(spark, source)
     glob = posixpath.join(source, pattern or "*")
     statuses = fs.globStatus(jvm.org.apache.hadoop.fs.Path(glob))
@@ -2533,7 +2546,6 @@ def copy_into(
                 f"schema: {extra} (drop or rename them in the source, or "
                 f"evolve the target first via add_column/append)"
             )
-        m_cur = _read_manifest(spark, table_path, cur)
         derived = set(m_cur.get("generated") or {}) | set(
             m_cur.get("identity") or {}
         )
@@ -2695,15 +2707,14 @@ def read_table(
     any file is opened: a one-partition read of a 100 TB table scans
     one directory's files."""
     if version is None:
-        version = latest_version(spark, table_path)
-        if version is None:
-            raise ValueError(f"not a versioned table (no log): {table_path}")
-    elif not _txn_visible(spark, _read_manifest(spark, table_path, version)):
-        raise ValueError(
-            f"version {version} belongs to an uncommitted transaction — "
-            "not readable until its .committed marker lands"
-        )
-    m = _read_manifest(spark, table_path, version)
+        version, m = _tip(spark, table_path)
+    else:
+        m = _read_manifest(spark, table_path, version)
+        if not _txn_visible(spark, m):
+            raise ValueError(
+                f"version {version} belongs to an uncommitted transaction — "
+                "not readable until its .committed marker lands"
+            )
     if partition_filter:
         if not m.get("partition_by"):
             raise ValueError(f"table is not partitioned: {table_path}")
@@ -2735,10 +2746,9 @@ def table_schema(spark: SparkSession, table_path: str, version: int | None = Non
     from pyspark.sql.types import StructType
 
     if version is None:
-        version = latest_version(spark, table_path)
-        if version is None:
-            raise ValueError(f"not a versioned table (no log): {table_path}")
-    m = _read_manifest(spark, table_path, version)
+        version, m = _tip(spark, table_path)
+    else:
+        m = _read_manifest(spark, table_path, version)
     return StructType.fromJson(json.loads(m["schema"])) if "schema" in m else None
 
 
@@ -2850,8 +2860,7 @@ def _delete_merge_on_read(
         manifest["changes"] = changes_files
     if txn is not None:
         manifest["txn"] = dict(txn)
-    _commit(spark, table_path, cur + 1, manifest)
-    return cur + 1
+    return _publish(spark, table_path, cur + 1, manifest)
 
 
 def _partition_predicate_files(
@@ -3103,10 +3112,7 @@ def _dml(
     strategy (`_delete_merge_on_read`) over the same reads."""
     from pyspark.sql import functions as F
 
-    cur = latest_version(spark, table_path)
-    if cur is None:
-        raise ValueError(f"not a versioned table (no log): {table_path}")
-    m = _read_manifest(spark, table_path, cur)
+    cur, m = _tip(spark, table_path)
     files = _resolve_files(spark, table_path, cur)
     if merge_on_read:
         return _delete_merge_on_read(
@@ -3276,19 +3282,8 @@ def _commit_partial_rewrite(
     if txn is not None:
         manifest["txn"] = dict(txn)
     _carry_file_metadata(spark, table_path, m, manifest, gone, new_files)
-    if op != "optimize":
-        if latest_version(spark, table_path) != cur:
-            raise ValueError(
-                f"optimistic concurrency check failed: expected latest={cur} "
-                "— re-read and retry"
-            )
-        _commit(spark, table_path, version, manifest)
-        return version
-    rewritten_files = [new_files]  # 1-slot cell: the rebase helper
-    # updates it after renaming the attempt dir, so a SECOND rebase
-    # iteration sees the current paths
 
-    def _rebase_after_lost_race(staged: dict):
+    def _rebase(staged: dict, winners: dict, nf: list[str]):
         """Conflict-matrix row 2 (round 14): a SUBSET rewrite — it
         touches exactly the ``doomed`` files — COMMUTES with pure
         appends (they only add files), so losing the commit race to an
@@ -3298,52 +3293,26 @@ def _commit_partial_rewrite(
         This is Delta's OPTIMIZE-vs-append no-conflict rule — at 100 TB
         compaction always races ingest, and re-running the compaction
         scan per lost race would make maintenance starve under load.
-        Falls back to the closure re-run when any winner is not a
-        plain visible append, changed any declaration, or when this
-        rewrite consolidated DV / bloom sidecars (their version-named
-        artifacts would need re-staging — the rare case serializes)."""
-        nonlocal vdir
+        Refuses (the closure re-runs) when any winner is not a plain
+        append, changed any declaration, or when this rewrite
+        consolidated DV / bloom sidecars (their version-named artifacts
+        would need re-staging — the rare case serializes)."""
         if staged.get("dv") != m.get("dv") or (
             staged.get("blooms_ref") != m.get("blooms_ref")
         ):
             return None
-        new_cur = latest_version(spark, table_path)
-        all_vs = _list_versions(spark, table_path)
-        if (
-            new_cur is None
-            or not all_vs
-            or max(all_vs) != new_cur
-            or new_cur <= cur
-        ):
+        if any(w.get("op") != "append" for w in winners.values()):
             return None
-        for v in range(cur + 1, new_cur + 1):
-            w = _read_manifest(spark, table_path, v)
-            if not _txn_visible(spark, w) or w.get("op") != "append":
-                return None
-        tip = _read_manifest(spark, table_path, new_cur)
+        tip_v = max(winners)
+        tip = winners[tip_v]
         # the rebase recomputes the stats below; every other inherited
         # key must be the one this rewrite was staged against
         if inherit(tip, DECLARATIONS, FILE_METADATA, skip=STATS) != inherit(
             m, DECLARATIONS, FILE_METADATA, skip=STATS
         ):
             return None
-        nv = new_cur + 1
-        nf = rewritten_files[0]  # this attempt's new files (tracked —
-        # NOT a positional slice of staged["files"], which goes stale
-        # after the first rebase iteration)
-        if nf:
-            new_vdir = _attempt_dir(table_path, nv)
-            fs2, jvm2 = _fs(spark, table_path)
-            jp = jvm2.org.apache.hadoop.fs.Path
-            if not fs2.rename(jp(vdir), jp(new_vdir)):
-                return None  # racing vacuum collected it: re-run rewrites
-            vdir = new_vdir
-            nf = _data_files(spark, new_vdir)
-            rewritten_files[0] = nf
-        tip_files = _resolve_files(spark, table_path, new_cur)
+        tip_files = _resolve_files(spark, table_path, tip_v)
         m2 = dict(staged)
-        m2.pop("ts_ms", None)  # fresh visibility stamp (see append rebase)
-        m2["version"] = nv
         m2["files"] = [f for f in tip_files if file_key(f) not in gone] + nf
         m2["n_rows"] = int(tip["n_rows"])
         put(m2, "stats", {
@@ -3351,23 +3320,14 @@ def _commit_partial_rewrite(
         })
         _maintain_stats(m2, nf)
         put(m2, "stats_ref", dict(tip.get("stats_ref") or {}))
-        return nv, m2
+        return m2
 
-    rebases = 0
-    while True:
-        try:
-            _commit(spark, table_path, version, manifest)
-            break
-        except Exception:
-            vs_now = _list_versions(spark, table_path)
-            rebases += 1
-            if not vs_now or max(vs_now) < version or rebases >= 5:
-                raise
-            rebased = _rebase_after_lost_race(manifest)
-            if rebased is None:
-                raise  # caller's with_retries closure re-runs
-            version, manifest = rebased
-    return version
+    # a DML rewrite read its rows at ``cur``: any winner invalidates it
+    return _publish(
+        spark, table_path, version, manifest,
+        vdir=vdir if new_files else None,
+        rebase=_rebase if op == "optimize" else None,
+    )
 
 
 def delete_from_table(
@@ -3820,10 +3780,7 @@ def merge_into_table(
     result commits through the standard copy-on-write rewrite. The
     manifest and file list are read once (`_snapshot_frame`). All
     assigned/inserted values cast to the target column types."""
-    cur = latest_version(spark, table_path)
-    if cur is None:
-        raise ValueError(f"not a versioned table (no log): {table_path}")
-    m = _read_manifest(spark, table_path, cur)
+    cur, m = _tip(spark, table_path)
     base = _snapshot_frame(spark, _resolve_files(spark, table_path, cur), m)
     ident_specs = m.get("identity") or {}
     if change_data and ident_specs and not_matched:
@@ -3940,10 +3897,7 @@ def optimize_table(
     files are (today's ingest partition), never rewriting the
     petabytes that are already well-laid-out. Returns None when no
     file matches (no commit)."""
-    cur = latest_version(spark, table_path)
-    if cur is None:
-        raise ValueError(f"not a versioned table (no log): {table_path}")
-    m = _read_manifest(spark, table_path, cur)
+    cur, m = _tip(spark, table_path)
     partition_by = m.get("partition_by")
     if partition_filter is not None:
         if not partition_by:
@@ -3986,10 +3940,7 @@ def purge_deletion_vectors(
     reclaimed by `vacuum_table` once the older versions drop."""
     import pyarrow.parquet as pq
 
-    cur = latest_version(spark, table_path)
-    if cur is None:
-        raise ValueError(f"not a versioned table (no log): {table_path}")
-    m = _read_manifest(spark, table_path, cur)
+    cur, m = _tip(spark, table_path)
     dv_files = m.get("dv") or []
     if not dv_files:
         return None
@@ -4111,12 +4062,7 @@ def vacuum_table(
                     m_v.get("partition_by"),
                 )
     for v in drop:
-        fs.delete(
-            jvm.org.apache.hadoop.fs.Path(
-                posixpath.join(table_path, _LOG_DIR, f"{v:08d}.json")
-            ),
-            False,
-        )
+        fs.delete(jvm.org.apache.hadoop.fs.Path(manifest_file(table_path, v)), False)
         # a dropped version's checkpoint (either format) is garbage too
         _delete_checkpoint(spark, table_path, v)
     # one reference-counted garbage pass over the attempt dirs of data
@@ -4165,7 +4111,7 @@ def vacuum_table(
         }
         for prefix, key in (("files-", "files_ref"), ("stats-", "stats_ref"))
     }
-    log_dir = jvm.org.apache.hadoop.fs.Path(posixpath.join(table_path, _LOG_DIR))
+    log_dir = jvm.org.apache.hadoop.fs.Path(posixpath.join(table_path, LOG_DIR))
     if fs.exists(log_dir):
         for st in fs.listStatus(log_dir):
             name = st.getPath().getName()
@@ -4253,10 +4199,7 @@ def collect_stats(spark: SparkSession, table_path: str, stat_cols: list[str]) ->
     files, + "stats"). Kept as an explicit step — like Delta's
     OPTIMIZE/ANALYZE — so stats cost is paid when asked for, and older
     manifests stay byte-identical."""
-    cur = latest_version(spark, table_path)
-    if cur is None:
-        raise ValueError(f"not a versioned table (no log): {table_path}")
-    m = _read_manifest(spark, table_path, cur)
+    cur, m = _tip(spark, table_path)
     files = _resolve_files(spark, table_path, cur)
     cmap = m.get("column_map", {})
     manifest = _same_files_manifest(
@@ -4269,8 +4212,7 @@ def collect_stats(spark: SparkSession, table_path: str, stat_cols: list[str]) ->
         stats_cols=list(stat_cols),
     )
     manifest.pop("stats_ref", None)  # the fresh stats replace the sidecar
-    _commit(spark, table_path, cur + 1, manifest)
-    return cur + 1
+    return _publish(spark, table_path, cur + 1, manifest)
 
 
 _BLOOM_M_BITS = 1024
@@ -4377,10 +4319,7 @@ def collect_blooms(
     stats. `read_table_bloom_pruned` is the consumer."""
     from pyspark.sql import functions as F
 
-    cur = latest_version(spark, table_path)
-    if cur is None:
-        raise ValueError(f"not a versioned table (no log): {table_path}")
-    m = _read_manifest(spark, table_path, cur)
+    cur, m = _tip(spark, table_path)
     files = _resolve_files(spark, table_path, cur)
     # INCREMENTAL by default: files already covered by the previous
     # bloom collection (same m/k, all requested cols present) reuse
@@ -4462,8 +4401,7 @@ def collect_blooms(
         ),
     )
     manifest.pop("blooms", None)  # the fresh sidecar replaces them
-    _commit(spark, table_path, cur + 1, manifest)
-    return cur + 1
+    return _publish(spark, table_path, cur + 1, manifest)
 
 
 def read_table_bloom_pruned(
@@ -4482,10 +4420,9 @@ def read_table_bloom_pruned(
     from pyspark.sql import functions as F
 
     if version is None:
-        version = latest_version(spark, table_path)
-        if version is None:
-            raise ValueError(f"not a versioned table (no log): {table_path}")
-    m = _read_manifest(spark, table_path, version)
+        version, m = _tip(spark, table_path)
+    else:
+        m = _read_manifest(spark, table_path, version)
     files = _resolve_files(spark, table_path, version)
     meta = _load_blooms(spark, m)
     per_file = meta.get("files", {})
@@ -4566,10 +4503,7 @@ def table_detail(spark: SparkSession, table_path: str) -> DataFrame:
     protocol features are active (DVs, blooms, declared stats columns,
     constraints). Driver-side manifest + FileSystem metadata only —
     no data scan at any table size."""
-    cur = latest_version(spark, table_path)
-    if cur is None:
-        raise ValueError(f"not a versioned table (no log): {table_path}")
-    m = _read_manifest(spark, table_path, cur)
+    cur, m = _tip(spark, table_path)
     files = _resolve_files(spark, table_path, cur)
     fs, jvm = _fs(spark, table_path)
     size = 0
@@ -4609,10 +4543,9 @@ def table_partitions(
     driver-side string parsing, zero files opened, any table size.
     Raises on an unpartitioned table (Delta/Hive parity)."""
     if version is None:
-        version = latest_version(spark, table_path)
-        if version is None:
-            raise ValueError(f"not a versioned table (no log): {table_path}")
-    m = _read_manifest(spark, table_path, version)
+        version, m = _tip(spark, table_path)
+    else:
+        m = _read_manifest(spark, table_path, version)
     pby = m.get("partition_by")
     if not pby:
         raise ValueError(f"table is not partitioned: {table_path}")
@@ -4669,10 +4602,7 @@ def fsck_repair_table(
     "n_rows": repaired count or None}. Existence checks are O(files)
     driver-side metadata calls; the only data-shaped work is the
     survivors' footer-count."""
-    cur = latest_version(spark, table_path)
-    if cur is None:
-        raise ValueError(f"not a versioned table (no log): {table_path}")
-    m = _read_manifest(spark, table_path, cur)
+    cur, m = _tip(spark, table_path)
     files = _resolve_files(spark, table_path, cur)
     fs, jvm = _fs(spark, table_path)
     jp = jvm.org.apache.hadoop.fs.Path
@@ -4733,7 +4663,7 @@ def fsck_repair_table(
     manifest["n_rows"] = (
         _scan_snapshot_files(spark, keep, manifest).count() if keep else 0
     )
-    _commit(spark, table_path, cur + 1, manifest)
+    _publish(spark, table_path, cur + 1, manifest)
     return {
         "missing": sorted(missing),
         "version": cur + 1,
@@ -4770,8 +4700,7 @@ def restore_table(spark: SparkSession, table_path: str, version: int) -> int:
         op="restore",
         restored_from=version,
     )
-    _commit(spark, table_path, cur + 1, manifest)
-    return cur + 1
+    return _publish(spark, table_path, cur + 1, manifest)
 
 
 def clone_table(
@@ -4848,8 +4777,7 @@ def clone_table(
         # the clone owns its file list: never the source's sidecar,
         # which the source's vacuum reference-counts on its own
         manifest["files"] = _resolve_files(spark, source_path, src_v)
-    _commit(spark, target_path, new_v, manifest)
-    return new_v
+    return _publish(spark, target_path, new_v, manifest)
 
 
 def show_create_table(
@@ -4864,10 +4792,7 @@ def show_create_table(
     tests/test_delta_sql.py): running it against a fresh path yields a
     table with identical declarations (identity restarts at its
     declared START — the high-water mark is table state, not DDL)."""
-    cur = latest_version(spark, table_path)
-    if cur is None:
-        raise ValueError(f"not a versioned table (no log): {table_path}")
-    m = _read_manifest(spark, table_path, cur)
+    cur, m = _tip(spark, table_path)
     if "schema" not in m:
         raise ValueError("pre-r9 table records no schema to render")
     from pyspark.sql.types import StructType
@@ -4918,11 +4843,12 @@ def table_constraints(
     latest) — {name: SQL boolean expression}. Constraints travel in
     the manifest like the schema does (every write copies them
     forward), so they are versioned, time-travelable state."""
-    if version is None:
-        version = latest_version(spark, table_path)
-        if version is None:
-            raise ValueError(f"not a versioned table (no log): {table_path}")
-    return dict(_read_manifest(spark, table_path, version).get("constraints", {}))
+    m = (
+        _tip(spark, table_path)[1]
+        if version is None
+        else _read_manifest(spark, table_path, version)
+    )
+    return dict(m.get("constraints", {}))
 
 
 def add_check_constraint(
@@ -4938,10 +4864,7 @@ def add_check_constraint(
     (an `Observation` rides the write; zero extra scans) and refuses
     to commit a violating version: the constraint is an invariant of
     the table from this version on, not advice."""
-    cur = latest_version(spark, table_path)
-    if cur is None:
-        raise ValueError(f"not a versioned table (no log): {table_path}")
-    m = _read_manifest(spark, table_path, cur)
+    cur, m = _tip(spark, table_path)
     cons = dict(m.get("constraints", {}))
     if name in cons:
         raise ValueError(f"constraint {name!r} already exists: {cons[name]!r}")
@@ -4964,18 +4887,14 @@ def add_check_constraint(
         op="analyze",  # the generic metadata-only op: same files
         constraints=cons,
     )
-    _commit(spark, table_path, cur + 1, manifest)
-    return cur + 1
+    return _publish(spark, table_path, cur + 1, manifest)
 
 
 def drop_check_constraint(spark: SparkSession, table_path: str, name: str) -> int:
     """DROP CONSTRAINT ``name`` as a metadata-only version. Raises if
     the constraint does not exist (dropping a typo'd name silently
     would leave the caller believing enforcement stopped)."""
-    cur = latest_version(spark, table_path)
-    if cur is None:
-        raise ValueError(f"not a versioned table (no log): {table_path}")
-    m = _read_manifest(spark, table_path, cur)
+    cur, m = _tip(spark, table_path)
     cons = dict(m.get("constraints", {}))
     if name not in cons:
         raise ValueError(f"no such constraint: {name!r}")
@@ -4992,8 +4911,7 @@ def drop_check_constraint(spark: SparkSession, table_path: str, name: str) -> in
         op="analyze",
         constraints=cons,
     )
-    _commit(spark, table_path, cur + 1, manifest)
-    return cur + 1
+    return _publish(spark, table_path, cur + 1, manifest)
 
 
 def _flip_nullability(schema_json: str, col: str, nullable: bool) -> str:
@@ -5018,11 +4936,12 @@ def table_properties(
     (`delta_sql` — the Delta ``deletedFileRetentionDuration`` shape);
     everything else is caller-defined metadata (owners, pipelines,
     quality tiers)."""
-    if version is None:
-        version = latest_version(spark, table_path)
-        if version is None:
-            raise ValueError(f"not a versioned table (no log): {table_path}")
-    return dict(_read_manifest(spark, table_path, version).get("properties", {}))
+    m = (
+        _tip(spark, table_path)[1]
+        if version is None
+        else _read_manifest(spark, table_path, version)
+    )
+    return dict(m.get("properties", {}))
 
 
 def set_table_properties(
@@ -5033,10 +4952,7 @@ def set_table_properties(
     overwrite, others persist)."""
     if not props:
         raise ValueError("SET TBLPROPERTIES needs at least one key")
-    cur = latest_version(spark, table_path)
-    if cur is None:
-        raise ValueError(f"not a versioned table (no log): {table_path}")
-    m = _read_manifest(spark, table_path, cur)
+    cur, m = _tip(spark, table_path)
     manifest = _same_files_manifest(
         spark, table_path, cur, m, version=cur + 1, op="analyze"
     )
@@ -5044,8 +4960,7 @@ def set_table_properties(
         **m.get("properties", {}),
         **{str(k): str(v) for k, v in props.items()},
     }
-    _commit(spark, table_path, cur + 1, manifest)
-    return cur + 1
+    return _publish(spark, table_path, cur + 1, manifest)
 
 
 def unset_table_properties(
@@ -5054,10 +4969,7 @@ def unset_table_properties(
     """ALTER TABLE ... UNSET TBLPROPERTIES: metadata-only commit
     removing ``keys`` (raises on a key that is not set — silently
     unsetting a typo would leave the caller believing it's gone)."""
-    cur = latest_version(spark, table_path)
-    if cur is None:
-        raise ValueError(f"not a versioned table (no log): {table_path}")
-    m = _read_manifest(spark, table_path, cur)
+    cur, m = _tip(spark, table_path)
     props = dict(m.get("properties", {}))
     missing = [k for k in keys if k not in props]
     if missing:
@@ -5068,8 +4980,7 @@ def unset_table_properties(
         spark, table_path, cur, m, version=cur + 1, op="analyze"
     )
     put(manifest, "properties", props)
-    _commit(spark, table_path, cur + 1, manifest)
-    return cur + 1
+    return _publish(spark, table_path, cur + 1, manifest)
 
 
 def set_not_null(spark: SparkSession, table_path: str, col: str) -> int:
@@ -5085,10 +4996,7 @@ def set_not_null(spark: SparkSession, table_path: str, col: str) -> int:
     SQL CHECK's null-passes rule cannot let one through)."""
     from pyspark.sql import functions as F
 
-    cur = latest_version(spark, table_path)
-    if cur is None:
-        raise ValueError(f"not a versioned table (no log): {table_path}")
-    m = _read_manifest(spark, table_path, cur)
+    cur, m = _tip(spark, table_path)
     cons = dict(m.get("constraints", {}))
     name = f"nn_{col}"
     if name in cons:
@@ -5112,18 +5020,14 @@ def set_not_null(spark: SparkSession, table_path: str, col: str) -> int:
         constraints=cons,
         schema=new_schema,
     )
-    _commit(spark, table_path, cur + 1, manifest)
-    return cur + 1
+    return _publish(spark, table_path, cur + 1, manifest)
 
 
 def drop_not_null(spark: SparkSession, table_path: str, col: str) -> int:
     """ALTER TABLE ... ALTER COLUMN ``col`` DROP NOT NULL: one
     metadata-only commit relaxes the declared nullability and removes
     the ``nn_<col>`` enforcing constraint."""
-    cur = latest_version(spark, table_path)
-    if cur is None:
-        raise ValueError(f"not a versioned table (no log): {table_path}")
-    m = _read_manifest(spark, table_path, cur)
+    cur, m = _tip(spark, table_path)
     cons = dict(m.get("constraints", {}))
     name = f"nn_{col}"
     if name not in cons:
@@ -5136,8 +5040,7 @@ def drop_not_null(spark: SparkSession, table_path: str, col: str) -> int:
         schema=_flip_nullability(m["schema"], col, True),
     )
     put(manifest, "constraints", cons)
-    _commit(spark, table_path, cur + 1, manifest)
-    return cur + 1
+    return _publish(spark, table_path, cur + 1, manifest)
 
 
 def set_column_default(
@@ -5161,10 +5064,7 @@ def set_column_default(
     first INSERT."""
     from pyspark.sql.types import StructType
 
-    cur = latest_version(spark, table_path)
-    if cur is None:
-        raise ValueError(f"not a versioned table (no log): {table_path}")
-    m = _read_manifest(spark, table_path, cur)
+    cur, m = _tip(spark, table_path)
     if "schema" not in m:
         raise ValueError(
             "metadata column DDL needs a schema-recording manifest "
@@ -5182,8 +5082,7 @@ def set_column_default(
     defaults = dict(m.get("defaults", {}))
     defaults[name] = expr
     manifest["defaults"] = defaults
-    _commit(spark, table_path, cur + 1, manifest)
-    return cur + 1
+    return _publish(spark, table_path, cur + 1, manifest)
 
 
 def drop_column_default(
@@ -5192,10 +5091,7 @@ def drop_column_default(
     """ALTER TABLE ... ALTER COLUMN ``name`` DROP DEFAULT — the
     metadata-only inverse of `set_column_default`; omitted columns go
     back to null-filling. Raises if no default is declared."""
-    cur = latest_version(spark, table_path)
-    if cur is None:
-        raise ValueError(f"not a versioned table (no log): {table_path}")
-    m = _read_manifest(spark, table_path, cur)
+    cur, m = _tip(spark, table_path)
     defaults = dict(m.get("defaults", {}))
     if name not in defaults:
         raise ValueError(f"column {name!r} has no declared DEFAULT")
@@ -5204,17 +5100,13 @@ def drop_column_default(
         spark, table_path, cur, m, version=cur + 1, op="drop_default"
     )
     put(manifest, "defaults", defaults)
-    _commit(spark, table_path, cur + 1, manifest)
-    return cur + 1
+    return _publish(spark, table_path, cur + 1, manifest)
 
 
 def column_defaults(spark: SparkSession, table_path: str) -> dict[str, str]:
     """The table's declared column defaults ({column: SQL expression},
     possibly empty) — the read side write-expansion consumers use."""
-    cur = latest_version(spark, table_path)
-    if cur is None:
-        raise ValueError(f"not a versioned table (no log): {table_path}")
-    return dict(_read_manifest(spark, table_path, cur).get("defaults", {}))
+    return dict(_tip(spark, table_path)[1].get("defaults", {}))
 
 
 def read_table_pruned(
@@ -5249,10 +5141,9 @@ def read_table_pruned(
     from pyspark.sql import functions as F
 
     if version is None:
-        version = latest_version(spark, table_path)
-        if version is None:
-            raise ValueError(f"not a versioned table (no log): {table_path}")
-    m = _read_manifest(spark, table_path, version)
+        version, m = _tip(spark, table_path)
+    else:
+        m = _read_manifest(spark, table_path, version)
     stats = m.get("stats", {})
     pcol = _physical_of(m, col)  # stats are keyed physical (round 13)
 
@@ -5364,10 +5255,7 @@ def drop_column(
     actually removes the bytes). Raises if the column does not exist,
     is the table's last column, is a partition column, or is referenced
     by a CHECK constraint."""
-    cur = latest_version(spark, table_path)
-    if cur is None:
-        raise ValueError(f"not a versioned table (no log): {table_path}")
-    m = _read_manifest(spark, table_path, cur)
+    cur, m = _tip(spark, table_path)
     import re as _re
 
     gen = dict(m.get("generated") or {})
@@ -5459,8 +5347,7 @@ def drop_column(
         # later re-add of the same logical name)
         del dflt[name]
         put(manifest, "defaults", dflt)
-    _commit(spark, table_path, cur + 1, manifest)
-    return cur + 1
+    return _publish(spark, table_path, cur + 1, manifest)
 
 
 def rename_column(
@@ -5476,10 +5363,7 @@ def rename_column(
     keeps the round-12 copy-on-write path. Raises on a missing source,
     an existing target, a partition column, or a constraint referencing
     the old name (it would silently stop matching rows)."""
-    cur = latest_version(spark, table_path)
-    if cur is None:
-        raise ValueError(f"not a versioned table (no log): {table_path}")
-    m = _read_manifest(spark, table_path, cur)
+    cur, m = _tip(spark, table_path)
     import re as _re
 
     offenders = [
@@ -5548,8 +5432,7 @@ def rename_column(
         # (round 15 review fix: a stale key would orphan the default)
         dflt[new] = dflt.pop(old)
         manifest["defaults"] = dflt
-    _commit(spark, table_path, cur + 1, manifest)
-    return cur + 1
+    return _publish(spark, table_path, cur + 1, manifest)
 
 
 def add_column(
@@ -5563,10 +5446,7 @@ def add_column(
     DDL. If the logical name was previously metadata-dropped, the new
     column gets a fresh physical name so the dropped bytes never
     resurface. Raises if the column already exists."""
-    cur = latest_version(spark, table_path)
-    if cur is None:
-        raise ValueError(f"not a versioned table (no log): {table_path}")
-    m = _read_manifest(spark, table_path, cur)
+    cur, m = _tip(spark, table_path)
     if "schema" not in m:
         raise ValueError(
             "metadata column DDL needs a schema-recording manifest "
@@ -5590,8 +5470,7 @@ def add_column(
         list(m.get("dropped_physical", [])),
     )
     put(manifest, "column_map", {k: v for k, v in cmap.items() if k != v})
-    _commit(spark, table_path, cur + 1, manifest)
-    return cur + 1
+    return _publish(spark, table_path, cur + 1, manifest)
 
 
 def alter_column_type(
@@ -5612,10 +5491,7 @@ def alter_column_type(
     refuse). Old versions time-travel under their old types (their
     manifests keep the old schema). Appends may keep writing the
     narrower type — the write path up-casts in-plan."""
-    cur = latest_version(spark, table_path)
-    if cur is None:
-        raise ValueError(f"not a versioned table (no log): {table_path}")
-    m = _read_manifest(spark, table_path, cur)
+    cur, m = _tip(spark, table_path)
     if "schema" not in m:
         raise ValueError(
             "metadata column DDL needs a schema-recording manifest "
@@ -5685,8 +5561,7 @@ def alter_column_type(
             manifest["blooms_ref"] = _write_bloom_sidecar(
                 spark, table_path, cur + 1, kept, meta["m_bits"], meta["k"]
             )
-    _commit(spark, table_path, cur + 1, manifest)
-    return cur + 1
+    return _publish(spark, table_path, cur + 1, manifest)
 
 
 def with_retries(op, attempts: int = 5):
@@ -5704,9 +5579,9 @@ def with_retries(op, attempts: int = 5):
     for _ in range(attempts):
         try:
             return op()
-        except Exception as e:  # noqa: BLE001 — race losses surface as
-            # ValueError (optimistic check) or the JVM's exclusive-create
-            # IOException; anything else also deserves the bounded retry
-            # because the closure re-derives all state from the table
+        except Exception as e:  # noqa: BLE001 — a lost race surfaces as
+            # `_publish`'s optimistic-concurrency ValueError; anything
+            # else also deserves the bounded retry because the closure
+            # re-derives all state from the table
             last = e
     raise last

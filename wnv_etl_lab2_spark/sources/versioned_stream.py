@@ -76,14 +76,18 @@ import os
 
 from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 
+from wnv_etl_lab2_spark.sources.table_manifest import (
+    LOG_DIR,
+    manifest_file,
+    manifest_version,
+    require_features,
+)
 from wnv_etl_lab2_spark.sources.table_paths import (
     filter_str,
     local_path,
     manifest_path,
     partition_values,
 )
-
-_LOG_DIR = "_log"
 
 # sentinel change_type for partitions whose file IS a change file:
 # each row carries its own _change_type column (row-level CDF mode)
@@ -100,38 +104,18 @@ def _local(path: str) -> str:
 
 
 def _py_list_versions(table_path: str) -> list[int]:
-    log = os.path.join(_local(table_path), _LOG_DIR)
+    log = os.path.join(_local(table_path), LOG_DIR)
     if not os.path.isdir(log):
         return []
-    out = []
-    for name in os.listdir(log):
-        stem = name[: -len(".json")]
-        if name.endswith(".json") and stem.isdigit():
-            out.append(int(stem))
-    return sorted(out)
+    return sorted(
+        v for v in map(manifest_version, os.listdir(log)) if v is not None
+    )
 
 
 def _py_read_manifest(table_path: str, version: int) -> dict:
-    p = os.path.join(_local(table_path), _LOG_DIR, f"{version:08d}.json")
-    with open(p) as f:
-        m = json.load(f)
-    # the same reader feature gate the JVM path enforces (round 14 —
-    # `versioned._read_manifest`): the streaming source must refuse a
-    # snapshot requiring an unknown table feature rather than silently
-    # mis-reading it (lazy import keeps this module JVM-session-free;
-    # the worker already has the package on its path)
-    feats = m.get("features")
-    if feats:
-        from wnv_etl_lab2_spark.sources.versioned import SUPPORTED_FEATURES
-
-        unknown = set(feats) - SUPPORTED_FEATURES
-        if unknown:
-            raise ValueError(
-                f"cannot stream {table_path} v{version}: the snapshot "
-                f"requires table feature(s) {sorted(unknown)} this reader "
-                "does not implement"
-            )
-    return m
+    with open(manifest_file(_local(table_path), version)) as f:
+        # the same reader feature gate `versioned._read_manifest` applies
+        return require_features(json.load(f), table_path, version)
 
 
 def _py_visible(m: dict) -> bool:
@@ -195,11 +179,11 @@ def _py_resolve_files(table_path: str, version: int) -> list[str]:
         # legacy JSON second; pyarrow's dataset reader skips the
         # _-prefixed Spark marker files by default
         ckpq = os.path.join(
-            _local(table_path), _LOG_DIR, f"ckpt-{v:08d}.parquet"
+            _local(table_path), LOG_DIR, f"ckpt-{v:08d}.parquet"
         )
         if os.path.isdir(ckpq):
             return sorted(set(_py_file_list(ckpq)).union(adds))
-        ckpt = os.path.join(_local(table_path), _LOG_DIR, f"_ckpt-{v:08d}.json")
+        ckpt = os.path.join(_local(table_path), LOG_DIR, f"_ckpt-{v:08d}.json")
         if os.path.exists(ckpt):
             with open(ckpt) as f:
                 return sorted({_local(p) for p in json.load(f)["files"]}.union(adds))

@@ -187,7 +187,7 @@ def neardup_batch_processor(
 
     The band index is a partitioned + BUCKETED external table at
     ``index_dir``: partitioned by ``batch_id`` (idempotent retry —
-    dynamic partition overwrite replaces exactly the retried batch's
+    a static-partition overwrite replaces exactly the retried batch's
     partition, and ``batch_id < N`` state reads prune to earlier
     partitions), bucketed + bucket-sorted on the state-join keys
     ``(band_id, band_sig)``, so the per-batch semi-join reads the
@@ -269,10 +269,11 @@ def text_batch_survivors(
     dropped_ids = intra if dropped is None else intra.union(dropped)
     survivors = kept_q.join(dropped_ids.distinct(), "doc_id", "left_anti")
     upsert_bucketed_partition(
-        bands_new.withColumn("batch_id", F.lit(batch_id).cast("long")),
+        bands_new,
         table=index_table,
         path=index_dir,
         partition_col="batch_id",
+        partition_value=batch_id,
         bucket_keys=["band_id", "band_sig"],
     )
     return survivors
@@ -411,10 +412,11 @@ def image_batch_survivors(
     dropped_ids = intra if dropped is None else intra.union(dropped)
     survivors = batch_df.join(dropped_ids.distinct(), "doc_id", "left_anti")
     upsert_bucketed_partition(
-        bands_new.withColumn("batch_id", F.lit(batch_id).cast("long")),
+        bands_new,
         table=index_table,
         path=index_dir,
         partition_col="batch_id",
+        partition_value=batch_id,
         bucket_keys=["band_id", "band_val"],
     )
     return survivors
@@ -463,7 +465,7 @@ def multimodal_txn_batch_processor(
     a replayed batch whose id already committed is skipped — the
     transaction is atomic, so "docs committed but media not" cannot
     exist and ONE table's ledger answers for both; (3) the band-index
-    upserts are batch_id-idempotent (dynamic partition overwrite), so
+    upserts are batch_id-idempotent (static-partition overwrite), so
     a replay recomputes the identical survivor set. Input rows carry
     the documents schema plus a binary ``payload`` column; media-side
     columns are (doc_id, payload)."""
