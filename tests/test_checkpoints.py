@@ -11,7 +11,7 @@ import os
 
 from wnv_etl_lab2_spark.sources.versioned import (
     CHECKPOINT_EVERY,
-    _CKPT_CACHE,
+    _FILE_LIST_CACHE,
     _ckpt_parquet_dir,
     _resolve_files,
     _resolve_files_pruned,
@@ -63,7 +63,7 @@ def test_append_chain_writes_parquet_checkpoint(spark, tmp_path):
         range(CHECKPOINT_EVERY + 1)
     )
     # resolution through the checkpoint is cached (immutable content)
-    assert _ckpt_parquet_dir(path, v) in _CKPT_CACHE
+    assert _ckpt_parquet_dir(path, v) in _FILE_LIST_CACHE
     # appends above the checkpoint accumulate on top of it
     append_table(spark.createDataFrame([(99,)], "id long").coalesce(1), path)
     files2 = _resolve_files(spark, path, v + 1)
@@ -82,10 +82,10 @@ def test_legacy_json_checkpoint_still_readable(spark, tmp_path):
         os.path.join(path, "_log", f"_ckpt-{v:08d}.json"), "w"
     ) as f:
         json.dump({"version": v, "files": reduced}, f)
-    _CKPT_CACHE.clear()
+    _FILE_LIST_CACHE.clear()
     assert _resolve_files(spark, path, v) == sorted(reduced)
     # pruned resolution falls back to driver-side pruning on JSON
-    _CKPT_CACHE.clear()
+    _FILE_LIST_CACHE.clear()
 
 
 def test_partition_filter_pushed_into_checkpoint_scan(spark, tmp_path):
@@ -125,7 +125,7 @@ def test_vacuum_writes_and_collects_parquet_checkpoints(spark, tmp_path):
     assert os.path.isdir(_ckpt_parquet_dir(path, auto_v))
     dropped = vacuum_table(spark, path, keep_last=1)
     assert auto_v in dropped
-    _CKPT_CACHE.clear()
+    _FILE_LIST_CACHE.clear()
     # the dropped version's checkpoint went with it; the kept tip got
     # one (that is what makes dropping its parents safe) — and reads
     # resolve through it

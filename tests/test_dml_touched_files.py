@@ -87,6 +87,16 @@ def test_empty_match_delete_is_metadata_only(spark, tmp_path):
     m1 = _read_manifest(spark, path, 1)
     assert m1["n_rows"] == 40
     assert read_table(spark, path).count() == 40
+    # a snapshot with no data file (an empty partitioned write): both
+    # DELETE strategies commit an empty version
+    empty = str(tmp_path / "empty")
+    create_table(
+        spark.createDataFrame([], "id long, p int"), empty, partition_by=["p"]
+    )
+    for mode in ("merge_on_read", "copy_on_write"):
+        v = delete_from_table(spark, empty, "id = 1", mode=mode)
+        assert _read_manifest(spark, empty, v)["n_rows"] == 0
+    assert read_table(spark, empty).count() == 0
 
 
 def test_dv_interaction_no_resurrection(spark, tmp_path):

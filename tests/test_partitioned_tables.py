@@ -521,8 +521,10 @@ def test_adversarial_partition_values_read_like_spark(spark, tmp_path):
 def test_adversarial_partition_values_dml_routes_agree(spark, tmp_path):
     """One DELETE and one UPDATE through every DML route over the
     adversarial partition values — partition path, witness scan, full
-    rewrite (predicates that touch every file) and a transaction —
-    after a merge-on-read delete, so deletion vectors ride each route.
+    rewrite (predicates that touch every file), a transaction, and a
+    merge-on-read DELETE whose partition-only predicate narrows its
+    scan from the paths — after a merge-on-read delete, so deletion
+    vectors ride each route.
     All routes give the same rows, the recorded row counts match the
     data, and each version's change rows are its row diff."""
     from collections import Counter
@@ -534,8 +536,8 @@ def test_adversarial_partition_values_dml_routes_agree(spark, tmp_path):
         commit_transaction,
     )
 
-    t = {r: str(tmp_path / r) for r in ("part", "wit", "full", "txn")}
-    for r in ("part", "wit", "txn"):
+    t = {r: str(tmp_path / r) for r in ("part", "wit", "full", "txn", "mor")}
+    for r in ("part", "wit", "txn", "mor"):
         _adv_table(spark, t[r])
     # one file per partition, each with a sentinel row (id >= 200) the
     # full-rewrite DELETE also removes, so its predicate touches every file
@@ -558,12 +560,16 @@ def test_adversarial_partition_values_dml_routes_agree(spark, tmp_path):
     for r in t:
         delete_from_table(spark, t[r], mor, change_data=True, mode="merge_on_read")
     delete_from_table(spark, t["part"], _p_in(doomed), change_data=True)
+    delete_from_table(
+        spark, t["mor"], _p_in(doomed), change_data=True, mode="merge_on_read"
+    )
     delete_from_table(spark, t["wit"], _ids_in(doomed), change_data=True)
     delete_from_table(
         spark, t["full"], f"{_ids_in(doomed)} OR id >= 200", change_data=True
     )
     update_table(spark, t["part"], bump, _p_in(bumped), change_data=True)
     update_table(spark, t["wit"], bump, _ids_in(bumped), change_data=True)
+    update_table(spark, t["mor"], bump, _ids_in(bumped), change_data=True)
     update_table(
         spark, t["full"], {"s": f"IF({_ids_in(bumped)}, s + 1000, s)"}, "true",
         change_data=True,

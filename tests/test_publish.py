@@ -18,6 +18,7 @@ from wnv_etl_lab2_spark.sources.versioned import (
     create_table,
     delete_from_table,
     latest_version,
+    optimize_table,
     read_table,
     set_table_properties,
     table_constraints,
@@ -86,3 +87,47 @@ def test_lost_slot_raises_the_one_race_error(spark, tmp_path, monkeypatch, verb)
     assert with_retries(lambda: run(spark, path)) == 4
     assert effect(spark, path)
     assert 100 in _ids(spark, path)
+
+
+def test_full_optimize_rebases_onto_a_racing_append(spark, tmp_path, monkeypatch):
+    """A full OPTIMIZE commits through the same rewrite committer as a
+    partition-scoped one, so it has the same conflict rule: losing its
+    slot to a concurrent append re-commits on top of the winner, whose
+    rows stay readable. A table with no data file has nothing to
+    compact: no commit."""
+    path = str(tmp_path / "t")
+
+    def one_file(rows):
+        return spark.createDataFrame(rows, _SCHEMA).coalesce(1)
+
+    create_table(one_file([(1, "a"), (2, "b")]), path)
+    append_table(one_file([(3, "c")]), path)
+    append_table(one_file([(4, "d")]), path)
+    assert len(V._resolve_files(spark, path, 2)) == 3
+
+    real_commit = V._commit
+    fired = []
+
+    def racing_commit(sp, tp, version, manifest):
+        if tp == path and not fired:
+            fired.append(version)
+            monkeypatch.setattr(V, "_commit", real_commit)
+            append_table(one_file([(100, "race")]), path)
+        return real_commit(sp, tp, version, manifest)
+
+    monkeypatch.setattr(V, "_commit", racing_commit)
+    assert optimize_table(spark, path) == 4
+    assert fired == [3]
+    m = V._read_manifest(spark, path, 4)
+    assert (m["op"], m["n_rows"]) == ("optimize", 5)
+    assert _ids(spark, path) == {1, 2, 3, 4, 100}
+    # the three compacted files became one; the winner's file carries
+    assert len(V._resolve_files(spark, path, 4)) == 2
+    assert glob.glob(os.path.join(path, "_log", ".tmp-*")) == []
+
+    empty = str(tmp_path / "empty")
+    # an empty partitioned write has nowhere to place a file
+    create_table(spark.createDataFrame([], _SCHEMA), empty, partition_by=("s",))
+    assert V._resolve_files(spark, empty, 0) == []
+    assert optimize_table(spark, empty) is None
+    assert latest_version(spark, empty) == 0

@@ -18,10 +18,10 @@ from wnv_etl_lab2_spark.sources.table_manifest import (
     DECLARATIONS,
     FILE_LIST,
     FILE_METADATA,
+    SUPPORTED_FEATURES,
 )
 from wnv_etl_lab2_spark.sources.versioned import (
     _FEATURE_KEYS,
-    SUPPORTED_FEATURES,
     _read_manifest,
     alter_column_type,
     append_table,

@@ -21,13 +21,13 @@ inherits:
   RESTORE, shallow CLONE): declarations, per-file metadata and the
   file list;
 - **append**: declarations and per-file metadata;
-- **partial rewrite** (touched-files DML, partition-scoped OPTIMIZE,
-  DV purge): declarations; the kept files' per-file metadata is
-  carried file by file;
-- **full rewrite** (overwrite, full-snapshot DML, OPTIMIZE, deep
-  CLONE): declarations except ``widened`` (every file is freshly
-  written at the declared types); per-file stats are recomputed from
-  ``stats_cols``.
+- **touched-set rewrite** (copy-on-write DELETE/UPDATE, OPTIMIZE,
+  DV purge — some files or all): declarations; the kept files'
+  per-file metadata is carried file by file. ``widened`` drops when
+  no file is kept (all are freshly written at the declared types);
+- **full rewrite** (create, replace, overwrite, MERGE, deep CLONE,
+  column DDL): declarations except ``widened``; per-file stats are
+  recomputed from ``stats_cols``.
 
 A commit then states only what its own op changes. A value that is
 empty (``{}``, ``[]``, ``None``) is the same as an absent key. A new

@@ -91,10 +91,10 @@ class TxnWrite:
     until the transaction's single outcome marker decides "committed"
     — so `DELETE FROM corpus` + `INSERT INTO audit` land atomically,
     or neither does. A DELETE or UPDATE takes the plain verb's
-    touched-files route (`versioned._dml`): only the files holding
-    matching rows are rewritten, through the one partial-rewrite
-    committer (`versioned._commit_partial_rewrite`), and every other
-    file carries by reference. A MERGE is `merge_into_table`'s clause
+    route (`versioned._dml`): only the files holding matching rows are
+    rewritten — all of them when every file matches — through the one
+    rewrite committer (`versioned._commit_partial_rewrite`), and every
+    other file carries by reference. A MERGE is `merge_into_table`'s clause
     matrix — an upsert is its clauses from `versioned._upsert_clauses`.
     A plain write ("append", "overwrite", "chain") stages through the
     single-table verb's stage part (`_stage`), so it casts, computes,

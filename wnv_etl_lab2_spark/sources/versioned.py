@@ -87,7 +87,6 @@ from wnv_etl_lab2_spark.sources.table_manifest import (
     FILE_METADATA,
     LOG_DIR,
     STATS,
-    SUPPORTED_FEATURES,  # noqa: F401 — the gate's vocabulary, next to _FEATURE_KEYS
     inherit,
     manifest_file,
     manifest_version,
@@ -240,7 +239,6 @@ def _read_checkpoint(spark: SparkSession, table_path: str, version: int) -> dict
 # a few tables' file lists.
 _FILE_LIST_CACHE: dict[str, list[str]] = {}
 _FILE_LIST_CACHE_MAX = 8
-_CKPT_CACHE = _FILE_LIST_CACHE  # back-compat alias (tests)
 
 
 def _scan_file_list(spark: SparkSession, d: str):
@@ -1556,8 +1554,10 @@ def _write_version(
     defaults: dict | None = None,
     txn: dict | None = None,
 ) -> int:
-    """Commit ``df`` as a FULL rewrite of the table: create, replace,
-    overwrite, full-snapshot DML and MERGE, OPTIMIZE, column DDL. It
+    """Commit ``df`` as a write that DEFINES the snapshot: create,
+    replace, overwrite, MERGE, deep clone and column DDL (DML and
+    OPTIMIZE rewrite only their touched files, through
+    `_commit_partial_rewrite`, even when they touch every file). It
     splits where it publishes: the CAS on ``expect_latest`` picks the
     declarations (the parent manifest's, or this call's on create and
     replace), the stage part (`_stage_rewrite`, which transactional
@@ -2785,84 +2785,6 @@ def read_table_as_of_timestamp(
     return read_table(spark, table_path, version_as_of_timestamp(spark, table_path, ts_ms))
 
 
-def _delete_merge_on_read(
-    spark: SparkSession,
-    table_path: str,
-    cur: int,
-    m_prev: dict,
-    files: list[str],
-    condition: str,
-    change_data: bool,
-    txn: dict | None,
-) -> int:
-    """DELETE as DELETION VECTORS (Delta DV, round 11): instead of
-    rewriting every file (copy-on-write scans AND rewrites the whole
-    snapshot to drop one row), record the doomed rows' (file,
-    row_index) positions in a DV file and commit a manifest that keeps
-    the SAME data files plus the cumulative DV list — O(deleted rows)
-    written, zero data files rewritten. Readers subtract the DV at
-    scan time (`_apply_dv`); the next full-rewrite op (overwrite /
-    merge / update / optimize / CoW delete) materializes through
-    `read_table` and RESETS the DV — Delta's compaction contract.
-    ``dv_add`` records this version's own DV files so the change-feed
-    stream can emit exactly the deleted rows. ``m_prev`` and ``files``
-    are the manifest and file list of version ``cur``, read once by
-    `_dml`."""
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    prev_dv = list(m_prev.get("dv", []))
-    # the shared snapshot scan (round 13) already subtracts the prior
-    # DVs, re-attaches partition columns from the paths, and projects
-    # physical -> logical, so the condition evaluates against the
-    # table's LOGICAL schema while _f/_ri keep the physical positions
-    raw = _scan_snapshot_files(spark, files, m_prev, keep_meta=True)
-    doomed = raw.where(_dml_hit(condition))
-    _refuse_nondeterministic(raw, doomed, "DELETE", {"WHERE": condition})
-    doomed = doomed.localCheckpoint()
-    n_del = doomed.count()
-    dv_dir = posixpath.join(table_path, _DV_DIR, f"v{cur + 1}-{uuid.uuid4().hex[:8]}")
-    doomed.select(
-        F.col("_f").alias("file"), F.col("_ri").alias("row_index")
-    ).coalesce(1).write.mode("error").parquet(dv_dir)
-    dv_add = _data_files(spark, dv_dir)
-    # per-file deleted-row counts, cumulative across MoR deletes
-    # (round 12): metadata for purge_deletion_vectors' rewrite-back
-    # decision — which files crossed the deleted-fraction threshold —
-    # without re-reading the DV files.
-    dv_counts = dict(m_prev.get("dv_counts", {}))
-    for r in doomed.groupBy("_f").count().collect():
-        dv_counts[r["_f"]] = dv_counts.get(r["_f"], 0) + int(r["count"])
-    changes_files = None
-    if change_data:
-        data_cols = [c for c in doomed.columns if c not in ("_f", "_ri")]
-        changes_files = _write_change_data(
-            doomed.select(*data_cols).withColumn("_change_type", F.lit("delete")),
-            table_path,
-            cur + 1,
-            column_map=m_prev.get("column_map"),
-        )
-    # same data files as the parent snapshot: per-file stats/blooms stay
-    # valid (deletes only make them conservative — false positives
-    # prune less, never wrong); dropping them cost every post-MoR-delete
-    # read its min/max and bloom skipping (round-12 advisory fix)
-    manifest = _same_files_manifest(
-        spark, table_path, cur, m_prev,
-        version=cur + 1,
-        op="delete",
-        n_rows=int(m_prev["n_rows"]) - int(n_del),
-        dv=prev_dv + dv_add,
-        dv_add=dv_add,
-        dv_counts=dv_counts,
-    )
-    if changes_files is not None:
-        manifest["changes"] = changes_files
-    if txn is not None:
-        manifest["txn"] = dict(txn)
-    return _publish(spark, table_path, cur + 1, manifest)
-
-
 def _partition_predicate_files(
     spark: SparkSession, files: list[str], m: dict, condition: str
 ) -> list[str] | None:
@@ -2949,32 +2871,30 @@ def _partition_predicate_files(
 
 def _find_touched_files(
     spark: SparkSession, files: list[str], m: dict, condition: str
-) -> list[str] | None:
+) -> list[str]:
     """Delta's find-touched-files pass (guide §2.4 — do strictly less
-    IO): ONE witness scan of the snapshot attributes every row matching
-    ``condition`` to its data file, so a DML rewrite can touch exactly
-    those files and carry the rest by reference. Returns the manifest
-    entries (subset of ``files``) that contain at least one matching
-    row, or None when pruning cannot help (0/1-file snapshots, or every
-    file matched). At 100 TB this scan is the difference between
-    rewriting a snapshot and rewriting a partition: the predicate
-    pushes into the parquet scan (footer/row-group stats prune
-    non-matching files to metadata reads), while the old full-snapshot
-    rewrite paid a write of every byte the table owns."""
+    IO): the manifest entries (a subset of ``files``, in order) that
+    hold at least one row matching ``condition``, so a DML rewrite
+    touches exactly those files and carries the rest by reference. A
+    partition-only predicate is decided from the paths
+    (`_partition_predicate_files`, zero jobs); any other runs ONE
+    witness scan that attributes each matching row to its data file —
+    the predicate pushes into the parquet scan, so footer/row-group
+    stats prune non-matching files to metadata reads. A 0/1-file
+    snapshot has nothing to prune and returns ``files`` with no scan;
+    so does a predicate that matches in every file, and the rewrite
+    then touches them all through the same committer."""
     if len(files) <= 1:
-        return None
+        return files
     doomed = _partition_predicate_files(spark, files, m, condition)
     if doomed is not None:
-        return doomed if len(doomed) < len(files) else None
+        return doomed
     scan = _scan_snapshot_files(spark, files, m, keep_meta=True)
     touched = {
         file_key(manifest_path(r["_f"]))
         for r in scan.where(_dml_hit(condition)).select("_f").distinct().collect()
     }
-    doomed = [f for f in files if file_key(f) in touched]
-    if len(doomed) == len(files):
-        return None  # nothing prunable: the full-rewrite path is cheaper
-    return doomed
+    return [f for f in files if file_key(f) in touched]
 
 
 def _dml_hit(condition: str):
@@ -3073,20 +2993,25 @@ def _dml_rows(
     return out
 
 
-def _snapshot_frame(spark: SparkSession, files: list[str], m: dict) -> DataFrame:
-    """The logical rows of ``files`` under manifest ``m``; an EMPTY
-    snapshot (explicit-schema CREATE TABLE, empty hive write) is zero
-    rows under the declared schema — tables predating schema recording
-    have nothing to type it with and refuse."""
+def _snapshot_frame(
+    spark: SparkSession, files: list[str], m: dict, keep_meta: bool = False
+) -> DataFrame:
+    """The logical rows of ``files`` under manifest ``m`` (``keep_meta``:
+    plus their ``_f``/``_ri`` positions); an EMPTY snapshot
+    (explicit-schema CREATE TABLE, empty hive write) is zero rows under
+    the declared schema — tables predating schema recording have
+    nothing to type it with and refuse."""
     if files:
-        return _scan_snapshot_files(spark, files, m)
+        return _scan_snapshot_files(spark, files, m, keep_meta=keep_meta)
     if "schema" not in m:
         raise ValueError(
             f"version {m.get('version')} lists no files and records no schema"
         )
     from pyspark.sql.types import StructType
 
-    return spark.createDataFrame([], StructType.fromJson(json.loads(m["schema"])))
+    empty = spark.createDataFrame([], StructType.fromJson(json.loads(m["schema"])))
+    meta = ("CAST(NULL AS STRING) AS _f", "CAST(NULL AS BIGINT) AS _ri")
+    return empty.selectExpr("*", *meta) if keep_meta else empty
 
 
 def _dml(
@@ -3102,52 +3027,57 @@ def _dml(
     """The one route of a versioned-table DELETE or UPDATE: the Python
     verbs, the SQL surface and transactional DML (``txn``) all arrive
     here. It reads the latest manifest and file list once, decides the
-    touched files (`_find_touched_files`: partition paths, else one
-    witness scan, else None = every file), applies the row transform
-    (`_dml_rows`) to just those files — or the snapshot — and builds
-    the change rows from that same frame. A partial rewrite commits
-    through `_commit_partial_rewrite`, O(touched) write IO (no file
-    touched: a metadata-only version); the full route through
-    `_write_version`. A merge-on-read DELETE keeps its deletion-vector
-    strategy (`_delete_merge_on_read`) over the same reads."""
+    touched files, applies the row transform (`_dml_rows`, which also
+    refuses nondeterministic expressions) to just those files and
+    builds the change rows from that same frame. Copy-on-write takes
+    the touched files from `_find_touched_files` and commits their
+    post-op rows through `_commit_partial_rewrite` — O(touched) write
+    IO; none touched is a metadata-only version. A merge-on-read
+    DELETE keeps every file, so only a partition-only predicate
+    narrows its scan (`_partition_predicate_files`, from the paths),
+    and `_commit_deletion_vector` records the matching positions."""
     from pyspark.sql import functions as F
 
     cur, m = _tip(spark, table_path)
     files = _resolve_files(spark, table_path, cur)
     if merge_on_read:
-        return _delete_merge_on_read(
-            spark, table_path, cur, m, files, condition, change_data, txn
-        )
-    doomed = _find_touched_files(spark, files, m, condition)
-    frame = _snapshot_frame(spark, doomed or files, m)
-    if doomed == []:  # no file holds a matching row: metadata-only
+        touched = _partition_predicate_files(spark, files, m, condition)
+        touched = files if touched is None else touched
+    else:
+        touched = _find_touched_files(spark, files, m, condition)
+    frame = _snapshot_frame(spark, touched or files, m, keep_meta=merge_on_read)
+    if not touched:  # no file holds a matching row: metadata-only
         frame = frame.where(F.lit(False))
     live = _dml_rows(frame, m, op, condition, set_exprs)
+    if change_data or merge_on_read:  # building the frame costs an analysis
+        hits = frame.where(_dml_hit(condition))
+        if merge_on_read:
+            # the DV, its counts and the change rows all read these rows
+            hits = hits.localCheckpoint()
     changes_files = None
     if change_data:
         # Delta CDF vocabulary: a DELETE retracts each selected row; an
         # UPDATE emits its pre- and post-image (round-12 advisory fix)
-        hits = frame.where(_dml_hit(condition))
+        rows = hits.drop("_f", "_ri")
         if op == "delete":
-            changes = hits.withColumn("_change_type", F.lit("delete"))
+            changes = rows.withColumn("_change_type", F.lit("delete"))
         else:
-            changes = hits.withColumn(
+            changes = rows.withColumn(
                 "_change_type", F.lit("update_preimage")
             ).unionByName(
-                _dml_rows(hits, m, op, condition, set_exprs).withColumn(
+                _dml_rows(rows, m, op, condition, set_exprs).withColumn(
                     "_change_type", F.lit("update_postimage")
                 )
             )
         changes_files = _write_change_data(
             changes, table_path, cur + 1, column_map=m.get("column_map")
         )
-    if doomed is None:
-        return _write_version(
-            live, table_path, cur + 1, op, expect_latest=cur,
-            changes_files=changes_files, txn=txn,
+    if merge_on_read:
+        return _commit_deletion_vector(
+            spark, table_path, cur, m, hits, changes_files, txn
         )
     return _commit_partial_rewrite(
-        spark, table_path, cur, m, files, doomed, live, op,
+        spark, table_path, cur, m, files, touched, live, op,
         changes_files=changes_files, txn=txn,
     )
 
@@ -3158,22 +3088,21 @@ def _carry_file_metadata(
     m: dict,
     manifest: dict,
     gone: set[str],
-    new_files: list[str],
 ) -> None:
-    """The PER-FILE METADATA (`table_manifest.FILE_METADATA`) of a
-    PARTIAL rewrite, for `_commit_partial_rewrite` (DML and maintenance
-    alike), which inherits only the declarations wholesale: ``manifest`` (version
-    ``manifest["version"]``) replaces the files whose `file_key` is in
-    ``gone`` with ``new_files`` and carries every other file of ``m``,
-    file by file.
+    """The PER-FILE METADATA (`table_manifest.FILE_METADATA`) of the
+    files a rewrite KEEPS, for `_commit_partial_rewrite` (DML and
+    maintenance alike), which inherits only the declarations wholesale
+    and calls this only when some file of ``m`` is kept: ``manifest``
+    (version ``manifest["version"]``) drops the files whose `file_key`
+    is in ``gone`` and carries every other file of ``m``, file by file.
 
     - deletion vectors: positions of rewritten files were materialized
       by the rewrite and drop; when none of them carries a position the
       sidecar is still exact and carries by reference, otherwise the
       kept files' positions re-consolidate into one fresh DV file;
-    - footer stats: kept files' entries carry, new files get theirs
-      from their footers; a stats sidecar carries by reference (stale
-      rows for removed paths match nothing — paths are never reused);
+    - footer stats: kept files' entries carry; a stats sidecar carries
+      by reference (stale rows for removed paths match nothing — paths
+      are never reused);
     - blooms: kept files' bitmaps carry into a fresh sidecar."""
     import uuid as _uuid
 
@@ -3209,7 +3138,6 @@ def _carry_file_metadata(
     put(manifest, "stats", {
         f: v for f, v in m.get("stats", {}).items() if file_key(f) not in gone
     })
-    _maintain_stats(manifest, new_files)
     old_blooms = _load_blooms(spark, m)
     if old_blooms:
         pruned = {
@@ -3236,21 +3164,23 @@ def _commit_partial_rewrite(
     changes_files: list[str] | None = None,
     txn: dict | None = None,
 ) -> int:
-    """Commit a PARTIAL rewrite of version ``cur`` (manifest ``m``, file
-    list ``files``): ``live``, the post-op rows of exactly the
-    ``doomed`` files, replaces them; every other file carries by
-    reference. The one committer for touched-files DML (``op`` delete /
-    update, `_dml`) and the data-neutral ``optimize`` rewrites
-    (partition-scoped `optimize_table`, `purge_deletion_vectors`). It
-    inherits the DECLARATIONS wholesale — ``widened`` included, kept
-    files keep their narrow types — and the PER-FILE METADATA file by
-    file (`_carry_file_metadata`). CHECK constraints ride the write;
-    only a DELETE recounts rows (doomed files' logical rows leave, the
-    written rows enter); ``txn`` stamps the manifest pending. A DML
-    refuses a commit that landed after ``cur``; OPTIMIZE rebases past
-    winning appends instead."""
+    """Commit a rewrite of version ``cur`` (manifest ``m``, file list
+    ``files``): ``live``, the post-op rows of exactly the ``doomed``
+    files — none, some or all — replaces them; every other file
+    carries by reference. The one committer for copy-on-write DML
+    (``op`` delete / update, `_dml`) and the data-neutral ``optimize``
+    rewrites (`optimize_table`, `purge_deletion_vectors`). It inherits
+    the DECLARATIONS and the kept files' PER-FILE METADATA
+    (`_carry_file_metadata`); new files get footer stats. When no file
+    is kept, ``widened`` drops (every file is written at the declared
+    types), no per-file metadata is read and the written rows are the
+    row count; otherwise only a DELETE recounts rows. CHECK constraints
+    ride the write; ``txn`` stamps the manifest pending. A DML refuses
+    a commit that landed after ``cur``; OPTIMIZE rebases past winning
+    appends instead."""
     version = cur + 1
     gone = {file_key(f) for f in doomed}
+    kept = [f for f in files if file_key(f) not in gone]
     vdir, new_files, written = None, [], 0
     if doomed:
         vdir, new_files, written, _ = _stage_files(
@@ -3259,7 +3189,9 @@ def _commit_partial_rewrite(
             f"{op} -> {table_path}",
         )
     n_rows = int(m["n_rows"])
-    if op == "delete" and doomed:
+    if not kept:
+        n_rows = written
+    elif op == "delete" and doomed:
         doomed_phys = _footer_row_count(doomed)
         if doomed_phys is None:
             doomed_logical = _scan_snapshot_files(spark, doomed, m).count()
@@ -3271,21 +3203,23 @@ def _commit_partial_rewrite(
             )
         n_rows = n_rows - doomed_logical + written
     manifest = {
-        **inherit(m, DECLARATIONS),
+        **inherit(m, DECLARATIONS, skip=() if kept else ("widened",)),
         "version": version,
         "op": op,
-        "files": [f for f in files if file_key(f) not in gone] + new_files,
+        "files": kept + new_files,
         "n_rows": int(n_rows),
     }
     if changes_files is not None:
         manifest["changes"] = changes_files
     if txn is not None:
         manifest["txn"] = dict(txn)
-    _carry_file_metadata(spark, table_path, m, manifest, gone, new_files)
+    if kept:
+        _carry_file_metadata(spark, table_path, m, manifest, gone)
+    _maintain_stats(manifest, new_files)
 
     def _rebase(staged: dict, winners: dict, nf: list[str]):
-        """Conflict-matrix row 2 (round 14): a SUBSET rewrite — it
-        touches exactly the ``doomed`` files — COMMUTES with pure
+        """Conflict-matrix row 2 (round 14): a rewrite touches exactly
+        the ``doomed`` files, so it COMMUTES with pure
         appends (they only add files), so losing the commit race to an
         append chain re-commits against the new tip: kept files = tip
         files minus doomed, row count = the tip's (the rewrite is
@@ -3330,6 +3264,52 @@ def _commit_partial_rewrite(
     )
 
 
+def _commit_deletion_vector(
+    spark: SparkSession,
+    table_path: str,
+    cur: int,
+    m: dict,
+    hits: DataFrame,
+    changes_files: list[str] | None,
+    txn: dict | None,
+) -> int:
+    """The merge-on-read commit of `_dml`'s DELETE (Delta deletion
+    vectors, round 11): ``hits``, the matching rows of version ``cur``
+    with their ``_f``/``_ri`` positions, become one (file, row_index)
+    DV file — O(deleted rows) written — over the SAME data files
+    (`_same_files_manifest`; stats and blooms stay valid, only
+    conservative). Readers subtract the DVs (`_apply_dv`); ``dv_add``
+    lets the change feed emit exactly this version's deletes, and the
+    cumulative ``dv_counts`` drive `purge_deletion_vectors`."""
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    dv_dir = posixpath.join(table_path, _DV_DIR, f"v{cur + 1}-{uuid.uuid4().hex[:8]}")
+    hits.select(
+        F.col("_f").alias("file"), F.col("_ri").alias("row_index")
+    ).coalesce(1).write.mode("error").parquet(dv_dir)
+    dv_add = _data_files(spark, dv_dir)
+    added = {r["_f"]: int(r["count"]) for r in hits.groupBy("_f").count().collect()}
+    dv_counts = dict(m.get("dv_counts", {}))
+    for f, n in added.items():
+        dv_counts[f] = dv_counts.get(f, 0) + n
+    manifest = _same_files_manifest(
+        spark, table_path, cur, m,
+        version=cur + 1,
+        op="delete",
+        n_rows=int(m["n_rows"]) - sum(added.values()),
+        dv=list(m.get("dv", [])) + dv_add,
+        dv_add=dv_add,
+        dv_counts=dv_counts,
+    )
+    if changes_files is not None:
+        manifest["changes"] = changes_files
+    if txn is not None:
+        manifest["txn"] = dict(txn)
+    return _publish(spark, table_path, cur + 1, manifest)
+
+
 def delete_from_table(
     spark: SparkSession,
     table_path: str,
@@ -3350,12 +3330,13 @@ def delete_from_table(
     reconstruct O(rewritten files) from the file diff (round 11;
     Delta's enableChangeDataFeed write path).
 
-    ``mode="merge_on_read"`` (round 11) records the doomed rows'
-    positions as DELETION VECTORS subtracted at read time instead of
-    rewriting any file (`_delete_merge_on_read`) — O(deleted rows)
-    write cost, the right trade when deletes are sparse; compaction
-    folds the vectors back in. ``txn`` (round 16) stamps the commit
-    pending inside a cross-table transaction; the route is the same."""
+    ``mode="merge_on_read"`` (round 11) is the same route's other
+    commit strategy: the doomed rows' positions become DELETION VECTORS
+    subtracted at read time instead of rewriting any file
+    (`_commit_deletion_vector`) — O(deleted rows) write cost, the right
+    trade when deletes are sparse; compaction folds the vectors back
+    in. ``txn`` (round 16) stamps the commit pending inside a
+    cross-table transaction; the route is the same."""
     if mode not in ("copy_on_write", "merge_on_read"):
         raise ValueError(f"mode must be copy_on_write|merge_on_read, got {mode!r}")
     return _dml(
@@ -3870,16 +3851,18 @@ def optimize_table(
     zorder_by: tuple[str, ...] | None = None,
     partition_filter: dict | None = None,
 ) -> int | None:
-    """OPTIMIZE: rewrite the latest snapshot into ``target_files``
-    files as a new version. Content-identical by construction (same
-    rows, new layout); the old small-file version remains time-
-    travelable until vacuum.
+    """OPTIMIZE: rewrite the target files of the latest snapshot — all,
+    or the matching partitions' — into ``target_files`` files
+    (`_compact_frame`) through the one rewrite committer,
+    `_commit_partial_rewrite`, which rebases past a winning append.
+    Content-identical by construction (same rows, new layout); the old
+    version remains time-travelable until vacuum. Returns None when
+    there is no target file (no commit).
 
     ``zorder_by=(colA, colB, ...)`` is OPTIMIZE ZORDER BY — any number
     of keys since round 11 (n x 16 bits must fit a BIGINT, so up to 3
-    at the default grid; the layout helper documents the trade) —
-    (round 9,
-    composing `sources/layout.py` into the version protocol): instead
+    at the default grid; the layout helper documents the trade; round
+    9 composed `sources/layout.py` into the version protocol): instead
     of a plain coalesce, rows are range-partitioned on the Morton
     interleave of the two keys and sorted within partitions, so every
     written file owns a contiguous curve segment and BOTH columns'
@@ -3890,33 +3873,30 @@ def optimize_table(
     schema (and content) is unchanged.
 
     ``partition_filter`` (round 13 — Delta's ``OPTIMIZE ... WHERE``):
-    compact ONLY the matching partitions as a partial rewrite — every
-    other partition's files are carried untouched with their per-file
-    stats/bloom/DV metadata intact. At 100 TB this is the only
-    OPTIMIZE that exists in practice: compaction runs where the small
-    files are (today's ingest partition), never rewriting the
-    petabytes that are already well-laid-out. Returns None when no
-    file matches (no commit)."""
+    compact ONLY the matching partitions — every other partition's
+    files are carried untouched with their per-file stats/bloom/DV
+    metadata intact. At 100 TB this is the only OPTIMIZE that exists
+    in practice: compaction runs where the small files are (today's
+    ingest partition), never rewriting the petabytes that are already
+    well-laid-out."""
     cur, m = _tip(spark, table_path)
     partition_by = m.get("partition_by")
-    if partition_filter is not None:
-        if not partition_by:
-            raise ValueError(
-                "OPTIMIZE with a partition filter needs a partitioned table "
-                f"({table_path} declares no partition_by)"
-            )
-        files = _resolve_files(spark, table_path, cur)
-        target = _prune_partition_files(files, partition_by, partition_filter)
-        if not target:
-            return None
-        live = _scan_snapshot_files(spark, target, m)
-        compacted = _compact_frame(live, partition_by, zorder_by, target_files)
-        return _commit_partial_rewrite(
-            spark, table_path, cur, m, files, target, compacted, "optimize"
+    if partition_filter is not None and not partition_by:
+        raise ValueError(
+            "OPTIMIZE with a partition filter needs a partitioned table "
+            f"({table_path} declares no partition_by)"
         )
-    base = read_table(spark, table_path, cur)
-    compacted = _compact_frame(base, partition_by, zorder_by, target_files)
-    return _write_version(compacted, table_path, cur + 1, "optimize", expect_latest=cur)
+    files = _resolve_files(spark, table_path, cur)
+    target = files
+    if partition_filter is not None:
+        target = _prune_partition_files(files, partition_by, partition_filter)
+    if not target:
+        return None
+    live = _scan_snapshot_files(spark, target, m)
+    compacted = _compact_frame(live, partition_by, zorder_by, target_files)
+    return _commit_partial_rewrite(
+        spark, table_path, cur, m, files, target, compacted, "optimize"
+    )
 
 
 def purge_deletion_vectors(
