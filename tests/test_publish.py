@@ -131,3 +131,37 @@ def test_full_optimize_rebases_onto_a_racing_append(spark, tmp_path, monkeypatch
     assert V._resolve_files(spark, empty, 0) == []
     assert optimize_table(spark, empty) is None
     assert latest_version(spark, empty) == 0
+
+
+def test_local_create_exclusive_has_one_winner_per_slot(tmp_path):
+    """The commit primitive under a real race, no Spark involved: two
+    threads released together by a barrier create the same fresh local
+    ``_log/NNNNNNNN.json`` slot, 300 times. Exactly one wins each slot,
+    the slot holds the winner's text, and no temp file is left."""
+    import threading
+
+    log = tmp_path / "_log"
+    slots = 300
+    barrier = threading.Barrier(2, timeout=60)
+    won: dict[int, list[str]] = {v: [] for v in range(slots)}
+
+    def racer(name: str) -> None:
+        for v in range(slots):
+            barrier.wait()
+            try:
+                V._create_exclusive(None, str(log / f"{v:08d}.json"), f"{name}-{v}")
+            except FileExistsError:
+                continue
+            won[v].append(name)
+
+    threads = [threading.Thread(target=racer, args=(n,)) for n in ("a", "b")]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert all(len(w) == 1 for w in won.values()), {
+        v: w for v, w in won.items() if len(w) != 1
+    }
+    for v, (winner,) in won.items():
+        assert (log / f"{v:08d}.json").read_text() == f"{winner}-{v}"
+    assert sorted(os.listdir(log)) == [f"{v:08d}.json" for v in range(slots)]

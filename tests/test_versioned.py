@@ -1753,3 +1753,90 @@ def test_sql_merge_with_schema_evolution(spark, tmp_path):
     )
     got = {(r.id, r.v, r.extra) for r in read_table(spark, tbl).collect()}
     assert got == {(1, "A", 10), (2, "b", 20)}
+
+
+# ---- metadata verbs on the driver ------------------------------------
+
+
+def test_no_match_merge_on_read_delete_writes_no_deletion_vector(spark, tmp_path):
+    """A merge-on-read DELETE that matches no row commits the parent's
+    files and deletion vectors unchanged: no DV file is written or
+    listed, so reads plan no anti-join, and rows, DESCRIBE DETAIL and
+    history agree with a table that was never deleted from."""
+    import os
+
+    from wnv_etl_lab2_spark.sources.versioned import (
+        _read_manifest,
+        delete_from_table,
+        table_detail,
+        table_history,
+    )
+
+    tbl = str(tmp_path / "tbl")
+    create_table(spark.range(100).selectExpr("id", "id % 7 AS g").coalesce(1), tbl)
+    before = _content(read_table(spark, tbl))
+    for _ in range(3):
+        delete_from_table(spark, tbl, "id > 1000", mode="merge_on_read")
+    assert latest_version(spark, tbl) == 3
+    m = _read_manifest(spark, tbl, 3)
+    assert len(m["files"]) == 1
+    assert not m.get("dv") and not m.get("dv_add") and not m.get("dv_counts")
+    assert not os.path.exists(os.path.join(tbl, "_dv"))
+    df = read_table(spark, tbl)
+    assert "LeftAnti" not in df._jdf.queryExecution().executedPlan().toString()
+    assert _content(df) == before
+    assert table_detail(spark, tbl).first()["num_rows"] == 100
+    hist = table_history(spark, tbl).collect()
+    assert [r.op for r in hist] == ["create"] + ["delete"] * 3
+    assert {(r.n_rows, r.n_files, r.has_dv) for r in hist} == {(100, 1, False)}
+
+
+def _jobs_of(spark, group: str, fn) -> int:
+    """Spark jobs launched by ``fn()`` on this thread."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_metadata_verbs_launch_no_spark_job(spark, tmp_path):
+    """DESCRIBE HISTORY / DETAIL, SHOW PARTITIONS and a vacuum whose
+    oldest kept version is a full-snapshot manifest are driver-side
+    metadata work: manifest reads, FileSystem calls and LocalRelation
+    results. None of them may launch a Spark job, and that vacuum
+    writes no checkpoint (the kept manifest's inline file list already
+    ends every walk)."""
+    import glob
+
+    from wnv_etl_lab2_spark.sources.versioned import (
+        append_table,
+        delete_from_table,
+        table_detail,
+        table_history,
+        table_partitions,
+    )
+
+    tbl = str(tmp_path / "tbl")
+    rows = spark.range(60).selectExpr("id", "IF(id % 3 = 0, 'de', 'en') AS lang")
+    create_table(rows, tbl, partition_by=("lang",))
+    append_table(
+        spark.range(60, 90).selectExpr("id", "'fr' AS lang"), tbl
+    )
+    delete_from_table(spark, tbl, "id % 5 = 0")  # full-snapshot manifest
+    verbs = {
+        "history": lambda: table_history(spark, tbl).collect(),
+        "detail": lambda: table_detail(spark, tbl).collect(),
+        "partitions": lambda: table_partitions(spark, tbl).collect(),
+        "vacuum": lambda: vacuum_table(spark, tbl, keep_last=1),
+    }
+    jobs = {name: _jobs_of(spark, f"zero-job-{name}", fn) for name, fn in verbs.items()}
+    assert jobs == {name: 0 for name in verbs}
+    assert glob.glob(f"{tbl}/_log/ckpt-*.parquet") == []
+    assert latest_version(spark, tbl) == 2
+    assert read_table(spark, tbl).count() == 90 - 18
+    assert [r.lang for r in table_partitions(spark, tbl).collect()] == ["de", "en", "fr"]

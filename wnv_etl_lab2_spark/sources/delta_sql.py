@@ -93,6 +93,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from wnv_etl_lab2_spark.sources.versioned import (
+    _local_frame,
     add_check_constraint,
     append_table,
     create_table,
@@ -467,8 +468,8 @@ class DeltaSql:
                 from wnv_etl_lab2_spark.sources.versioned import table_properties
 
                 props = table_properties(self.spark, self._path(m.group(1)))
-                return self.spark.createDataFrame(
-                    sorted(props.items()) or [], "key string, value string"
+                return _local_frame(
+                    self.spark, sorted(props.items()), "key string, value string"
                 )
             m = re.fullmatch(
                 rf"SHOW\s+CREATE\s+TABLE\s+({_IDENT})", s, re.IGNORECASE
@@ -481,12 +482,13 @@ class DeltaSql:
                 stmt = show_create_table(
                     self.spark, self._path(m.group(1)), name=m.group(1)
                 )
-                return self.spark.createDataFrame(
-                    [(stmt,)], "createtab_stmt string"
+                return _local_frame(
+                    self.spark, [(stmt,)], "createtab_stmt string"
                 )
             if re.fullmatch(r"SHOW\s+VIEWS", s, re.IGNORECASE):
-                return self.spark.createDataFrame(
-                    sorted(self._views.items()) or [],
+                return _local_frame(
+                    self.spark,
+                    sorted(self._views.items()),
                     "name string, definition string",
                 )
             m = re.fullmatch(
@@ -504,8 +506,8 @@ class DeltaSql:
                 stmt = (
                     f"CREATE OR REPLACE VIEW {name} AS {self._views[name]}"
                 )
-                return self.spark.createDataFrame(
-                    [(stmt,)], "createtab_stmt string"
+                return _local_frame(
+                    self.spark, [(stmt,)], "createtab_stmt string"
                 )
             raise ValueError(f"unsupported SHOW statement: {sql!r}")
         if head == "ANALYZE":
@@ -788,7 +790,8 @@ class DeltaSql:
             out = fsck_repair_table(
                 self.spark, self._path(m.group(1)), dry_run=bool(m.group(2))
             )
-            return self.spark.createDataFrame(
+            return _local_frame(
+                self.spark,
                 [(len(out["missing"]), out["version"], out["n_rows"])],
                 "n_missing int, version int, n_rows long",
             )

@@ -244,7 +244,7 @@ def resolve_outcome(
     file is the entire commit/abort race — there is no two-marker
     interleaving where both sides win.
 
-    A rename failure is only "lost the race" if the winner's marker
+    A failed create is only "lost the race" if the winner's marker
     actually EXISTS; a transient I/O failure (no marker present)
     raises instead of reporting the caller's intended outcome as
     decided — otherwise `commit_transaction` would acknowledge a
@@ -258,7 +258,7 @@ def resolve_outcome(
             _create_exclusive(spark, dst.toString(), outcome)
         except Exception:
             if not fs.exists(dst):
-                # transient rename failure, NOT a lost race: the txn is
+                # transient create failure, NOT a lost race: the txn is
                 # still undecided — raise so the caller retries or
                 # aborts instead of treating its own intent as durable
                 raise

@@ -133,6 +133,29 @@ def _fs(spark: SparkSession, path: str):
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
 
 
+def _local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """``rows`` (tuples in the order of the DDL ``schema``) as a
+    DataFrame over a LocalRelation: the rows travel as one
+    ``pyarrow.Table``, so collecting, filtering or writing the frame
+    plans a LocalTableScan on the driver. ``spark.createDataFrame`` of a
+    Python list builds a parallelized LogicalRDD instead, whose every
+    action is a real multi-partition job (0.24 s of a 0.27 s
+    `table_history` on a 4-core host). A ``pyarrow.Table`` input takes
+    this path whatever ``spark.sql.execution.arrow.pyspark.enabled``
+    says."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(struct)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, struct)
+
+
 def _list_versions(spark: SparkSession, table_path: str) -> list[int]:
     log_dir = posixpath.join(table_path, LOG_DIR)
     lp = local_path(log_dir)
@@ -274,9 +297,10 @@ def _write_file_list(
     partition_by=None,
 ) -> None:
     """Write a (path, parts) parquet file-list directory via a Spark
-    job, renamed into place whole — a reader never sees a half-written
-    list listable as one. Idempotent: content is deterministic for a
-    given destination, so an existing dir is left alone."""
+    write of a driver-built frame (`_local_frame`), renamed into place
+    whole — a reader never sees a half-written list listable as one.
+    Idempotent: content is deterministic for a given destination, so an
+    existing dir is left alone."""
     import uuid as _uuid
 
     fs, jvm = _fs(spark, table_path)
@@ -298,7 +322,7 @@ def _write_file_list(
     # parallelism for the executor-side scan, no small-file storm
     n_part = max(1, min(32, len(rows) // 100_000 + 1))
     (
-        spark.createDataFrame(rows, "path string, parts map<string,string>")
+        _local_frame(spark, rows, "path string, parts map<string,string>")
         .repartition(n_part)
         .write.mode("overwrite")
         .parquet(tmp)
@@ -808,18 +832,44 @@ def _create_exclusive(spark: SparkSession, path: str, text: str) -> None:
     not exist yet — the one atomic primitive of the commit log and of
     the transaction outcome markers. The text goes to a hidden temp file
     in the same dir first (fully written and closed; never a version
-    name), then a fail-if-exists rename (``FileContext.rename`` +
-    ``Options.Rename.NONE``, Delta's HDFSLogStore protocol) publishes
-    it. A concurrent creator that got there first makes the rename
-    throw; the temp file is removed either way."""
+    name), then one atomic step publishes it under ``path``; a
+    concurrent creator that got there first makes that step throw, and
+    the temp file is removed either way.
+
+    On a local path (`table_paths.local_path`) the temp file is created
+    ``O_EXCL`` and ``link(2)``-ed to ``path``: the kernel refuses the
+    link if the name exists, so exactly one racer wins. Hadoop's local
+    rename is not exclusive: it checks that the target is absent and
+    then renames, so two racers can both pass the check and the later
+    rename silently replaces the first manifest (2 threads x 900 slots
+    lost 3 commits that way). It also cost ~37 ms of py4j per commit.
+    Other schemes publish with a fail-if-exists rename
+    (``FileContext.rename`` + ``Options.Rename.NONE``, Delta's
+    HDFSLogStore protocol), which their filesystems make atomic."""
     import uuid
 
+    stem = posixpath.basename(path).rsplit(".", 1)[0]
+    tmp_name = f".tmp-{stem}-{uuid.uuid4().hex[:8]}"
+    lp = local_path(path)
+    if lp is not None:
+        import os
+
+        parent = os.path.dirname(lp)
+        os.makedirs(parent, exist_ok=True)
+        tmp = os.path.join(parent, tmp_name)
+        fd = os.open(tmp, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o644)
+        try:
+            with os.fdopen(fd, "wb") as out:
+                out.write(text.encode("utf-8"))
+            os.link(tmp, lp)  # FileExistsError: lost the race
+        finally:
+            os.unlink(tmp)
+        return
     fs, jvm = _fs(spark, path)
     jp = jvm.org.apache.hadoop.fs.Path
-    parent, name = posixpath.split(path)
+    parent = posixpath.dirname(path)
     fs.mkdirs(jp(parent))
-    stem = name.rsplit(".", 1)[0]
-    tmp = jp(posixpath.join(parent, f".tmp-{stem}-{uuid.uuid4().hex[:8]}"))
+    tmp = jp(posixpath.join(parent, tmp_name))
     out = fs.create(tmp, True)
     try:
         out.write(text.encode("utf-8"))
@@ -2796,15 +2846,16 @@ def _partition_predicate_files(
     and the witness scan is skipped entirely — a partition-scoped
     UPDATE/DELETE of a 100 TB table goes straight to rewriting that
     partition with zero read of any other. The predicate is evaluated
-    once per DISTINCT partition tuple over a LocalRelation: the tuple's
-    values are decoded by the same codec as the snapshot reader
-    (`table_paths`), written as binary literals, and cast to the
-    declared types, so null partitions and type coercion behave as in
-    the witness scan. Returns None when the predicate references any
-    data column (analysis fails on the partition-only frame) or the
-    table is unpartitioned — callers fall back to the witness scan. A
-    nondeterministic predicate is refused by the DML route's row
-    transform (`_dml_rows`) before anything is written."""
+    once per DISTINCT partition tuple over a LocalRelation
+    (`_local_frame`, zero jobs): the tuple's values are decoded by the
+    same codec as the snapshot reader (`table_paths`), carried as
+    strings and cast to the declared types, so null partitions and
+    type coercion behave as in the witness scan. Returns None when the
+    predicate references any data column (analysis fails on the
+    partition-only frame) or the table is unpartitioned — callers fall
+    back to the witness scan. A nondeterministic predicate is refused
+    by the DML route's row transform (`_dml_rows`) before anything is
+    written."""
     import re as _re
 
     from pyspark.sql.types import StructType
@@ -2840,30 +2891,17 @@ def _partition_predicate_files(
         vals = partition_values(f, part_by)
         by_tuple.setdefault(tuple(vals.get(c) for c in part_by), []).append(f)
     keys = list(by_tuple)
-    # an inline VALUES relation (NOT createDataFrame, which builds a
-    # parallelized LogicalRDD and turns this probe into a real
-    # 32-partition job — measured 0.27 s): Catalyst's
-    # ConvertToLocalRelation constant-folds the filter over a true
-    # LocalRelation, so the collect returns driver-side with ZERO jobs.
-    # Each value is a UTF-8 binary literal cast to STRING: nothing to
-    # quote, whatever the value or the parser's escaping flags.
-    def lit(v: str | None) -> str:
-        return "NULL" if v is None else f"CAST(X'{v.encode().hex()}' AS STRING)"
-
-    rows_sql = ", ".join(
-        f"({i}, " + ", ".join(map(lit, k)) + ")" for i, k in enumerate(keys)
-    )
-    cast_cols = ", ".join(
-        f"CAST(`{c}` AS {types[c].simpleString()}) AS `{c}`" for c in part_by
-    )
-    raw_cols = ", ".join(f"`{c}`" for c in part_by)
-    q = (
-        f"SELECT _pt_i FROM (SELECT _pt_i, {cast_cols} FROM "
-        f"(VALUES {rows_sql}) AS t(_pt_i, {raw_cols})) "
-        f"WHERE coalesce(CAST(({condition}) AS BOOLEAN), false)"
-    )
     try:
-        matched = [r["_pt_i"] for r in spark.sql(q).collect()]
+        frame = _local_frame(
+            spark,
+            [(i, *k) for i, k in enumerate(keys)],
+            "_pt_i int, " + ", ".join(f"`{c}` string" for c in part_by),
+        ).selectExpr(
+            "_pt_i",
+            *(f"CAST(`{c}` AS {types[c].simpleString()}) AS `{c}`" for c in part_by),
+        )
+        hit = frame.where(f"coalesce(CAST(({condition}) AS BOOLEAN), false)")
+        matched = [r["_pt_i"] for r in hit.collect()]
     except Exception:
         return None  # references data columns (or uncastable values)
     return [f for i in matched for f in by_tuple[keys[i]]]
@@ -3280,28 +3318,34 @@ def _commit_deletion_vector(
     (`_same_files_manifest`; stats and blooms stay valid, only
     conservative). Readers subtract the DVs (`_apply_dv`); ``dv_add``
     lets the change feed emit exactly this version's deletes, and the
-    cumulative ``dv_counts`` drive `purge_deletion_vectors`."""
+    cumulative ``dv_counts`` drive `purge_deletion_vectors`. No matching
+    row writes no DV file: the commit keeps the parent's ``dv`` and
+    ``dv_counts``, so reads plan no anti-join for it."""
     import uuid
 
     from pyspark.sql import functions as F
 
-    dv_dir = posixpath.join(table_path, _DV_DIR, f"v{cur + 1}-{uuid.uuid4().hex[:8]}")
-    hits.select(
-        F.col("_f").alias("file"), F.col("_ri").alias("row_index")
-    ).coalesce(1).write.mode("error").parquet(dv_dir)
-    dv_add = _data_files(spark, dv_dir)
     added = {r["_f"]: int(r["count"]) for r in hits.groupBy("_f").count().collect()}
-    dv_counts = dict(m.get("dv_counts", {}))
-    for f, n in added.items():
-        dv_counts[f] = dv_counts.get(f, 0) + n
+    fields = {}
+    if added:
+        dv_dir = posixpath.join(
+            table_path, _DV_DIR, f"v{cur + 1}-{uuid.uuid4().hex[:8]}"
+        )
+        hits.select(
+            F.col("_f").alias("file"), F.col("_ri").alias("row_index")
+        ).coalesce(1).write.mode("error").parquet(dv_dir)
+        dv_add = _data_files(spark, dv_dir)
+        dv_counts = dict(m.get("dv_counts", {}))
+        for f, n in added.items():
+            dv_counts[f] = dv_counts.get(f, 0) + n
+        fields = {
+            "n_rows": int(m["n_rows"]) - sum(added.values()),
+            "dv": list(m.get("dv", [])) + dv_add,
+            "dv_add": dv_add,
+            "dv_counts": dv_counts,
+        }
     manifest = _same_files_manifest(
-        spark, table_path, cur, m,
-        version=cur + 1,
-        op="delete",
-        n_rows=int(m["n_rows"]) - sum(added.values()),
-        dv=list(m.get("dv", [])) + dv_add,
-        dv_add=dv_add,
-        dv_counts=dv_counts,
+        spark, table_path, cur, m, version=cur + 1, op="delete", **fields
     )
     if changes_files is not None:
         manifest["changes"] = changes_files
@@ -3988,7 +4032,16 @@ def vacuum_table(
     versions whose commit stamp is older than now - retain_hours,
     never the latest — time-based retention composes with
     ``keep_last`` (a version survives if EITHER rule keeps it).
-    Pre-stamp manifests read as timestamp 0 (always past retention)."""
+    Pre-stamp manifests read as timestamp 0 (always past retention).
+
+    Before any manifest goes, each kept APPEND (no ``files`` /
+    ``files_ref``) with no checkpoint whose parent is dropped gets a
+    parquet checkpoint, since its walk would otherwise cross a dropped
+    manifest; no other version gets one. So a vacuum whose kept
+    versions all end their walks inside the kept set (a full-snapshot
+    oldest version, as after any copy-on-write DML or OPTIMIZE) runs
+    no Spark job: the rest is manifest reads and FileSystem calls on
+    the driver."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1 (a table must keep its latest version)")
     versions = _list_versions(spark, table_path)
@@ -4013,34 +4066,28 @@ def vacuum_table(
             for v in drop
             if int(_read_manifest(spark, table_path, v).get("ts_ms", 0)) < cutoff
         ]
-    kept = [v for v in versions if v not in set(drop)]
+    dropset = set(drop)
+    kept = [v for v in versions if v not in dropset]
     if dry_run:
         return drop  # preview only: nothing deleted, no checkpoint written
     fs, jvm = _fs(spark, table_path)
     # resolve kept versions WHILE their parent manifests still exist
     kept_resolved = {v: _resolve_files(spark, table_path, v) for v in kept}
     kept_m = {v: _read_manifest(spark, table_path, v) for v in kept}
-    # every kept version whose append-chain walk passes through a
-    # dropped manifest gets a checkpoint BEFORE those manifests go:
-    # with contiguous drops (keep_last) that is just the oldest kept
-    # version; time-based retention (retain_hours) can drop
-    # NON-contiguous versions, so any kept log-structured append whose
-    # parent is dropped needs its own checkpoint too (round 12)
-    if drop:
-        dropset = set(drop)
-        for v in kept:
-            m_v = kept_m[v]
-            walks_through_drop = v == kept[0] or (
-                "files" not in m_v
-                and "files_ref" not in m_v
-                and not _has_checkpoint(spark, table_path, v)
-                and m_v.get("parent") in dropset
+    # the checkpoint rule above, applied BEFORE any manifest goes; under
+    # retain_hours the drops can be non-contiguous, so a later kept
+    # append can need one too
+    for v in kept:
+        m_v = kept_m[v]
+        if (
+            "files" not in m_v
+            and "files_ref" not in m_v
+            and m_v.get("parent") in dropset
+            and not _has_checkpoint(spark, table_path, v)
+        ):
+            _write_checkpoint(
+                spark, table_path, v, kept_resolved[v], m_v.get("partition_by")
             )
-            if walks_through_drop:
-                _write_checkpoint(
-                    spark, table_path, v, kept_resolved[v],
-                    m_v.get("partition_by"),
-                )
     for v in drop:
         fs.delete(jvm.org.apache.hadoop.fs.Path(manifest_file(table_path, v)), False)
         # a dropped version's checkpoint (either format) is garbage too
@@ -4271,8 +4318,8 @@ def _write_bloom_sidecar(
     bdir = posixpath.join(
         table_path, _BLOOM_DIR, f"v{version}-{uuid.uuid4().hex[:8]}"
     )
-    spark.createDataFrame(
-        rows, "file string, col string, word int, bits long"
+    _local_frame(
+        spark, rows, "file string, col string, word int, bits long"
     ).coalesce(1).write.mode("error").parquet(bdir)
     return {"files": _data_files(spark, bdir), "m_bits": m_bits, "k": k}
 
@@ -4436,8 +4483,9 @@ def table_history(spark: SparkSession, table_path: str) -> DataFrame:
     (version, op, n_rows, n_files, and which protocol features the
     manifest carries: batch/writer stamps, change files, deletion
     vectors, constraints, clone/restore provenance). Driver-side
-    manifest reads only (KBs each), returned as a DataFrame so the
-    audit composes with everything else."""
+    manifest reads only (KBs each), returned as a LocalRelation
+    DataFrame (`_local_frame`) so the audit composes with everything
+    else and collecting it runs no Spark job."""
     versions = _list_versions(spark, table_path)
     if not versions:
         raise ValueError(f"not a versioned table (no log): {table_path}")
@@ -4467,7 +4515,8 @@ def table_history(spark: SparkSession, table_path: str) -> DataFrame:
                 m.get("ts_ms"),
             )
         )
-    return spark.createDataFrame(
+    return _local_frame(
+        spark,
         rows,
         "version int, op string, n_rows long, n_files int, batch_id long, "
         "writer_id string, has_change_data boolean, has_dv boolean, "
@@ -4504,7 +4553,8 @@ def table_detail(spark: SparkSession, table_path: str) -> DataFrame:
         dict(m.get("properties", {})),
         list(m.get("features", [])),
     )
-    return spark.createDataFrame(
+    return _local_frame(
+        spark,
         [row],
         "location string, version int, ts_ms long, num_files int, "
         "num_rows long, size_bytes long, num_versions int, has_dv boolean, "
@@ -4542,7 +4592,7 @@ def table_partitions(
         )
     ]
     schema = ", ".join(f"{c} string" for c in pby) + ", n_files int"
-    return spark.createDataFrame(rows, schema)
+    return _local_frame(spark, rows, schema)
 
 
 def fsck_repair_table(
