@@ -651,6 +651,19 @@ def test_show_create_table_round_trips(spark, tmp_path):
     assert mb["generated"] == ma["generated"]
     assert mb["partition_by"] == ma["partition_by"]
 
+    # nested types keep their struct field names' case
+    nested_src, nested_dst = str(tmp_path / "c"), str(tmp_path / "d")
+    sql = DeltaSql(spark, {"c": nested_src, "d": nested_dst})
+    sql.run(
+        "CREATE TABLE c (s STRUCT<inner_x: INT, y: STRING>, m MAP<STRING, INT>)"
+    )
+    stmt = sql.run("SHOW CREATE TABLE c").collect()[0]["createtab_stmt"]
+    sql.run(stmt.replace("TABLE c", "TABLE d"))
+    assert (
+        table_schema(spark, nested_dst).json()
+        == table_schema(spark, nested_src).json()
+    )
+
 
 def test_shallow_clone_version_as_of(spark, tmp_path):
     from wnv_etl_lab2_spark.sources.versioned import read_table

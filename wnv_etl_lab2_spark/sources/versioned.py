@@ -4810,6 +4810,24 @@ def clone_table(
     return _publish(spark, target_path, new_v, manifest)
 
 
+def _type_ddl(dt) -> str:
+    """A column type as DDL that parses back to the same type: keywords
+    upper-cased, nested struct field names kept as written."""
+    from pyspark.sql.types import ArrayType, MapType, StructType
+
+    if isinstance(dt, StructType):
+        return "STRUCT<" + ", ".join(
+            f"`{f.name.replace('`', '``')}`: {_type_ddl(f.dataType)}"
+            + ("" if f.nullable else " NOT NULL")
+            for f in dt.fields
+        ) + ">"
+    if isinstance(dt, ArrayType):
+        return f"ARRAY<{_type_ddl(dt.elementType)}>"
+    if isinstance(dt, MapType):
+        return f"MAP<{_type_ddl(dt.keyType)}, {_type_ddl(dt.valueType)}>"
+    return dt.simpleString().upper()
+
+
 def show_create_table(
     spark: SparkSession, table_path: str, name: str = "t"
 ) -> str:
@@ -4835,7 +4853,7 @@ def show_create_table(
     cols = []
     for f in sch.fields:
         c = f.name
-        part = f"  {c} {f.dataType.simpleString().upper()}"
+        part = f"  {c} {_type_ddl(f.dataType)}"
         if c in ident:
             kw = "ALWAYS" if ident[c].get("always") else "BY DEFAULT"
             part += (
